@@ -1,566 +1,117 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.sources.Tables
 
 /** Per-round benchmark: one JSON line with per-query seconds.
   *
-  * Methodology:
-  *  - queries run in sorted name order after a warmup pass (tables
-  *    counted + one full query) so JVM/codegen warmup isn't attributed
-  *    to whichever query happens to run first;
+  *  - queries run in sorted name order after a warm-up (every table
+  *    counted, one full query), so JVM and codegen warm-up is charged to
+  *    no query;
   *  - results are materialized with a noop-format write, which evaluates
   *    every output column — `count()` would let Catalyst prune the very
-  *    expressions being benchmarked;
-  *  - each query runs 3× and reports the MEDIAN (total = sum of medians).
-  *    The r6 single-shot snapshot charged ~10 s of one transient machine
-  *    stall to whichever queries were running (q75-q78 showed 4-10× an
-  *    isolated re-run with a comments-only code diff) and would have
-  *    triggered a false regression hunt. BENCH_LOCAL.json additionally
-  *    records min/max of the 3 runs per query so future rounds can
-  *    separate noise (wide min-max spread) from regression (tight spread
-  *    at a new level) without a judge re-run.
-  *  - two contamination-adjudication layers guard the committed number:
-  *    a per-query in-place retry (median >2× the committed pin), and a
-  *    SUITE-level guard (min-sum >8% over the pins' shared surface)
-  *    that reruns the top absolute regressors in a fresh session — both
-  *    keep the better set as headline and record the replaced one (a
-  *    kept-rerun whose suite median sat >2× its pin is flagged
-  *    "review"), so a loaded host cannot silently inflate the artifact
-  *    and a real regression still shows (it repeats on rerun);
-  *  - the regression pins live in BENCH_PINS.json: the per-query MIN
-  *    over committed history, min-merged after every run — a degraded
-  *    host can only tighten a pin, never inflate it (the r16 pins were
-  *    a degraded run's medians, ~25% high, and blunted every mechanism
-  *    keyed off them). A deliberate cost-raising query redefinition
-  *    re-pins by editing the file in the same commit.
+  *    expressions being timed;
+  *  - each query runs `SPARK_GRAFT_TRIALS` times (default 3) and reports
+  *    the median; `value` is the sum of medians. `BENCH_LOCAL.json` also
+  *    records each query's min and max;
+  *  - a query that throws on any trial is an `err` and is never timed, so
+  *    a crash cannot improve the total.
+  *
+  * The harness reports; it does not adjudicate host noise. Same-host
+  * before/after comparisons go through `perfbench/run.py` and
+  * `perfbench/compare.py`, which alternate parent and change runs.
+  *
+  * Env: `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_TRIALS`, `SPARK_GRAFT_ONLY`
+  * (comma-separated name prefixes, a dev subset) and `SPARK_GRAFT_CPUS`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Session-startup INFO lines (BlockManager ports, heap size) land in
-    // the same bounded stdout/stderr tail the JSON result line must
-    // survive, and they are machine-specific noise in a committed
-    // artifact (ADVICE r11). The r12 programmatic setRootLevel was NOT
-    // enough: Spark re-applies its default log4j2 config (rootLogger=
-    // INFO) during SparkContext init when no user configuration exists
-    // (ADVICE r12) — so select a bench-only config FILE before any
-    // log4j/Spark class initializes. The name is non-default on purpose:
-    // library consumers' log4j discovery never finds it, so this remains
-    // Bench `main` behavior only.
+    // Spark re-applies its default log4j2 config (rootLogger=INFO) during
+    // SparkContext init when no user configuration exists, and its INFO
+    // lines land in the bounded stdout/stderr tail the JSON line must
+    // survive — so select a bench-only config file before any log4j or
+    // Spark class initializes. The non-default name keeps library
+    // consumers' log4j discovery from ever finding it.
     if (!sys.props.contains("log4j2.configurationFile"))
       System.setProperty("log4j2.configurationFile",
         "classpath:graft-bench-log4j2.properties")
     // backstop for a classpath layout that drops the resource
     org.apache.logging.log4j.core.config.Configurator.setRootLevel(
       org.apache.logging.log4j.Level.ERROR)
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .config("spark.sql.adaptive.enabled", "true")
-        // Static conf, default 100: the suite compiles thousands of
-        // distinct codegen units (a single trained-IVF-PQ query's ~55
-        // stages alone approach the default), so trials 2-3 and every
-        // recurring subplan were paying full Janino recompiles after
-        // cache eviction. Sized for the whole 150-query mix — the same
-        // knob a long-lived production driver running a repeated query
-        // mix would raise. Applies to the process-wide cache at first
-        // session creation; mid-bench fresh sessions inherit it.
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      // ERROR, not WARN: unpersisting locally-checkpointed RDDs between
-      // queries emits one "cannot be recomputed after unpersisting" WARN per
-      // block, which floods the same bounded stdout/stderr tail the JSON
-      // result line has to survive.
-      s.sparkContext.setLogLevel("ERROR")
-      s
-    }
-    var spark = newSession()
+    val spark = Session.local()
 
-    // Dev-only subset filter (comma-separated name prefixes); the driver
-    // sets neither env var and always benches the full surface.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.exists(n.startsWith)))
+    val trials = sys.env.get("SPARK_GRAFT_TRIALS").map(_.toInt).getOrElse(3)
+    require(trials >= 1, s"SPARK_GRAFT_TRIALS must be >= 1, got $trials")
 
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
 
-    // Release a query's localCheckpoint blocks before the next one runs:
-    // 91 queries' worth of accumulated executor-memory blocks otherwise
-    // turn the bench tail into a GC measurement (the r3 run showed q82+
-    // inflated 3-4× vs an isolated run for exactly this reason). Runs
-    // OUTSIDE the per-query timer — block release is cleanup, not query.
-    // blocking=true: async unpersist defers block removal into the NEXT
-    // query's timed window — the exact contamination release() exists to
-    // prevent. The wait happens outside the timer, so it costs nothing.
+    // Release a query's cached and locally-checkpointed blocks before the
+    // next one runs, outside the timer: accumulated blocks otherwise turn
+    // the suite's tail into a GC measurement. blocking=true, because an
+    // async unpersist defers the removal into the next query's timed
+    // window. The GC nudges the ContextCleaner, which frees shuffle files
+    // and broadcasts only once their driver-side objects are collected.
     def release(): Unit = {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       spark.catalog.clearCache()
-      // Nudge the ContextCleaner: shuffle files and finished broadcasts
-      // are freed when their driver-side objects are GC'd (weak-reference
-      // queue) — across 111 queries × 3 trials nothing may trigger a GC,
-      // so shuffle dirs and broadcast blocks accumulate and squeeze the
-      // very storage/execution memory the late-alphabet queries then
-      // measure. Prime suspect for the recurring in-suite-vs-isolated
-      // inflation (r12: q95 50.9 s in-suite, 2.2 s in a fresh session —
-      // VERDICT r12 #2). Runs OUTSIDE the per-query timer.
       System.gc()
     }
 
-    // Ambient host load swings the total 42-62 s at identical code
-    // (measured round 7); snapshotting /proc/loadavg at run start/end
-    // lets a later round adjudicate noise vs regression from the
-    // committed artifact alone, without a judge re-run.
-    def loadavg(): String =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg"))).trim.split(" ").take(3).mkString(" ")
-      catch { case _: Exception => "" }
-    def load1(): Double =
-      loadavg().split(" ").headOption.flatMap(_.toDoubleOption).getOrElse(0.0)
-
-    // Loadavg GATE (VERDICT r12 #2): two consecutive rounds' headline
-    // totals were contaminated by ambient host load (r12 started at
-    // loadavg 4.57). Before timing anything, wait — bounded — for the
-    // 1-min load to settle below the gate; the wait length is recorded
-    // in the artifact so a still-elevated start is self-documenting
-    // rather than silently polluting the committed number. 1-min load
-    // decays with τ=60 s, so the 180 s cap rides out a just-finished
-    // compile burst but cannot stall the driver on a genuinely busy host.
-    // 2.0, not the former 3.0: the r15 driver run exhausted a 35 s wait
-    // and started timing at loadavg exactly 3.0 — inside the gate but
-    // still inflated (recorded 151 s where four builder runs at the same
-    // head measured 131-141 s). With τ=60 s decay the tighter gate costs
-    // ~25 s more settling on a just-busy host and still cannot stall the
-    // driver past the 180 s cap.
-    val loadGate = sys.env.get("SPARK_GRAFT_LOADGATE").flatMap(_.toDoubleOption).getOrElse(2.0)
-    var gateWaitSec = 0
-    while (gateWaitSec < 180 && load1() > loadGate) {
-      Thread.sleep(5000); gateWaitSec += 5
-    }
-    val loadStart = loadavg()
-
-    // Fixed-work CPU probe: single-thread SHA-256 over a deterministic
-    // 8 MiB buffer × 24 passes — the identical instruction stream every
-    // round, so probe seconds measure HOST THROUGHPUT and nothing else.
-    // Sampled at bench start and end, OUTSIDE every per-query timer, and
-    // published on both artifact lines. Motivation (r15/r16): the r15
-    // driver run recorded 151 s where four same-head builder runs
-    // measured 131-141 s, and in r16 the same host ran the full test
-    // suite 2.0× slower than the r15 judge's fresh run (1006 s vs 514 s
-    // at near-identical test surface) — host speed swings of that size
-    // dwarf any per-query regression, and loadavg alone cannot prove
-    // them because a co-tenant VM's load is invisible to this guest.
-    // BASELINE.md §cpu-probe records the committed calibration value; a
-    // round whose total moved with the probe is host weather, a round
-    // whose total moved against it is a real regression.
-    def shaPasses(passes: Int): Unit = {
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      val buf = new Array[Byte](8 << 20)
-      java.util.Arrays.fill(buf, 0x5a.toByte)
-      var i = 0
-      while (i < passes) { md.update(buf); i += 1 }
-      md.digest()
-    }
-    // (single-thread sec, all-cores sec): the single-thread figure moves
-    // with clock/steal throttling; the all-cores figure (one 48-pass
-    // worker per CPU, wall time) additionally moves with co-tenant core
-    // contention — the mode that slows a 32-thread Spark suite while a
-    // 1-thread probe stays flat.
-    def cpuProbe(): (Double, Double) = {
-      val t0 = System.nanoTime()
-      shaPasses(96)
-      val st = (System.nanoTime() - t0) / 1e9
-      val threads = (0 until cpus.toInt).map(_ => new Thread(() => shaPasses(48)))
-      val t1 = System.nanoTime()
-      threads.foreach(_.start()); threads.foreach(_.join())
-      val mt = (System.nanoTime() - t1) / 1e9
-      (math.rint(st * 1000) / 1000, math.rint(mt * 1000) / 1000)
-    }
-    val probeStart = { shaPasses(24); cpuProbe() } // first call pays JIT
-
-    // warmup: touch every table (schema-declared, timestamp-unit-aware
-    // readers — see Tables.tsReadPlan), exercise codegen once
-    import graft.sources.Tables
-    def warmTables(): Unit =
-      Seq(Tables.region _, Tables.nation _, Tables.customer _, Tables.supplier _,
-        Tables.part _, Tables.orders _, Tables.lineitem _, Tables.events _,
-        Tables.documents _, Tables.embeddings _)
-        .foreach(t => t(spark, sfDir).count())
-    warmTables()
-    run(names.min)
+    Seq(Tables.region _, Tables.nation _, Tables.customer _, Tables.supplier _,
+      Tables.part _, Tables.orders _, Tables.lineitem _, Tables.events _,
+      Tables.documents _, Tables.embeddings _)
+      .foreach(t => t(spark, sfDir).count())
+    names.headOption.foreach(run)
     release()
 
-    // Anchor BENCH_LOCAL.json at the repo root (the dir holding build.sbt),
-    // not the cwd — `sbt run` forks with cwd = base dir, but a bare
-    // java invocation may not.
+    def timed(name: String): Either[String, Double] = {
+      val t0 = System.nanoTime()
+      try { run(name); Right((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
+      } finally release()
+    }
+    val results: Seq[(String, Either[String, Seq[Double]])] = names.map { name =>
+      val runs = Seq.fill(trials)(timed(name))
+      name -> runs.collectFirst { case Left(err) => err }.toLeft(runs.collect { case Right(v) => v })
+    }
+
+    def median(vs: Seq[Double]): Double = vs.sorted.apply(vs.size / 2)
+    def ms(v: Double): Double = math.rint(v * 1000) / 1000
+    // Short keys with 3-decimal medians on stdout (the line must fit the
+    // driver's bounded tail capture); full names with {sec, min, max} in
+    // BENCH_LOCAL.json.
+    def entries(short: Boolean): String = results.map { case (k, r) =>
+      val key = if (short) k.takeWhile(_ != '_') else k
+      val v = r match {
+        case Right(vs) if short => ms(median(vs)).toString
+        case Right(vs) => s"""{"sec":${median(vs)},"min":${vs.min},"max":${vs.max}}"""
+        case Left(err) => s"""{"err":"${err.replaceAll("[\"\\\\\\n\\r\\t]", " ")}"}"""
+      }
+      s""""$key":$v"""
+    }.mkString("{", ",", "}")
+    val total = ms(results.collect { case (_, Right(vs)) => median(vs) }.sum)
+    val nErr = results.count(_._2.isLeft)
+    // the scalars come after the queries map: the driver keeps only the
+    // last ~2000 chars of stdout, which can start mid-map
+    def line(short: Boolean) =
+      s"""{"metric":"total","unit":"sec","queries":${entries(short)},"value":$total,"n_err":$nErr,"sf":"$sfDir"}"""
+
+    // anchored at the repo root (the dir holding build.sbt), not the cwd:
+    // `sbt run` forks with cwd = base dir, a bare java invocation may not
     val repoRoot = Iterator.iterate(
         java.nio.file.Paths.get(sys.props("user.dir")).toAbsolutePath)(_.getParent)
       .takeWhile(_ != null).take(8)
       .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
       .getOrElse(java.nio.file.Paths.get(sys.props("user.dir")))
-
-    // Regression pins (VERDICT r16 "what's wrong" #3): the r15/r16 pins
-    // were the LAST committed run's medians — committed from a degraded
-    // host they ran ~25% high and blunted every mechanism keyed off them
-    // (>2× retry, force-isolation, suite guard). The pin is now the
-    // per-query MIN over committed history (BASELINE.md names `min` the
-    // contamination-resistant comparator), kept in BENCH_PINS.json and
-    // min-merged after every run — host weather can only TIGHTEN a pin,
-    // never inflate it. A deliberate query redefinition that legitimately
-    // raises cost re-pins by editing BENCH_PINS.json in the same commit
-    // (the entry is plain `name: seconds`). Queries whose in-suite median
-    // moves >2× the pin are retried in place and FORCE-included in the
-    // isolated pass — r10's q92 moved 0.39→1.65 s at unchanged code but
-    // missed the 8-slot rank-merge cut, leaving the elevation
-    // unadjudicated (VERDICT r10 "what's wrong" #1).
-    def parseNum(s: String): Option[Double] =
-      try Some(s.toDouble) catch { case _: Exception => None }
-    val pinsPath = repoRoot.resolve("BENCH_PINS.json")
-    val committedPins: Map[String, Double] = try {
-      if (java.nio.file.Files.exists(pinsPath)) {
-        val txt = new String(java.nio.file.Files.readAllBytes(pinsPath), "UTF-8")
-        "\"(q[0-9]+[A-Za-z0-9_]*)\":([-0-9.Ee+]+)".r
-          .findAllMatchIn(txt)
-          .flatMap(m => parseNum(m.group(2)).map(m.group(1) -> _)).toMap
-      } else Map.empty
-    } catch { case _: Exception => Map.empty }
-    // bootstrap / second source: the committed BENCH_LOCAL.json profile's
-    // per-query min fields (incl. the isolated blocks — every "min" key
-    // inside the query's object is an achieved time)
-    val localMins: Map[String, Double] = try {
-      val p = repoRoot.resolve("BENCH_LOCAL.json")
-      if (java.nio.file.Files.exists(p)) {
-        val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        "\"(q[0-9]+[A-Za-z0-9_]*)\":\\{".r.findAllMatchIn(txt).flatMap { m =>
-          // scan to the matching close brace of this query's object,
-          // skipping braces inside JSON string literals — an "err"
-          // message containing '{' would otherwise shift the boundary
-          // and pull a neighboring query's min into the wrong pin
-          var depth = 0; var i = m.end - 1; var end = txt.length
-          var inStr = false; var esc = false
-          while (i < txt.length && end == txt.length) {
-            val c = txt.charAt(i)
-            if (inStr) {
-              if (esc) esc = false
-              else if (c == '\\') esc = true
-              else if (c == '"') inStr = false
-            } else c match {
-              case '"' => inStr = true
-              case '{' => depth += 1
-              case '}' => depth -= 1; if (depth == 0) end = i
-              case _ =>
-            }
-            i += 1
-          }
-          val body = txt.substring(m.end - 1, math.min(end + 1, txt.length))
-          val mins = "\"(?:min|sec)\":([-0-9.Ee+]+)".r.findAllMatchIn(body)
-            .flatMap(mm => parseNum(mm.group(1))).toSeq
-          if (mins.isEmpty) None else Some(m.group(1) -> mins.min)
-        }.toMap
-      } else Map.empty
-    } catch { case _: Exception => Map.empty }
-    val priorSec: Map[String, Double] =
-      (committedPins.keySet ++ localMins.keySet).map { k =>
-        k -> math.min(
-          committedPins.getOrElse(k, Double.MaxValue),
-          localMins.getOrElse(k, Double.MaxValue))
-      }.toMap.filter(_._2 > 0)
-
-    def median(vs: Seq[Double]): Double = {
-      val s = vs.sorted
-      s(s.size / 2) // odd trial counts: the true median; even: upper-median
-    }
-
-    // A failed query must surface as an err entry, never as a (fast) time —
-    // a silent catch would let a crash *improve* the bench total. A query
-    // that fails on ANY of its 3 runs is an err (partial medians would
-    // quietly drop the slow-failing run).
-    val trials = sys.env.get("SPARK_GRAFT_TRIALS").map(_.toInt).getOrElse(3)
-    require(trials >= 1, s"SPARK_GRAFT_TRIALS must be >= 1, got $trials")
-    def trialSet(name: String): Either[String, Seq[Double]] = {
-      val runs: Seq[Either[String, Double]] = (1 to trials).map { _ =>
-        val t0 = System.nanoTime()
-        val r = try {
-          run(name)
-          Right((System.nanoTime() - t0) / 1e9)
-        } catch {
-          case e: Throwable =>
-            Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-        }
-        release()
-        r
-      }
-      runs.collectFirst { case Left(err) => err }
-        .toLeft(runs.collect { case Right(v) => v })
-    }
-    // In-place RETRY for >2×-moved queries (VERDICT r12 #2): when a
-    // query's trial-set median lands >2× its committed prior-round level,
-    // the whole trial set runs once more and the BETTER set becomes the
-    // headline number. A transient contamination (ambient burst, block-
-    // manager state the isolated pass kept adjudicating after the fact)
-    // gets one second chance INSIDE the suite — the committed total stays
-    // honest without a judge re-run — while a real regression repeats on
-    // the retry and keeps its new level. Retried names are recorded in
-    // the artifact so the adjudication is visible.
-    var retried = Set.empty[String]
-    val results: Seq[(String, Either[String, Seq[Double]])] = names.map { name =>
-      val first = trialSet(name)
-      val adjudicated = first match {
-        case Right(vs) if priorSec.get(name).exists(p => p > 0 && median(vs) / p > 2.0) =>
-          retried += name
-          trialSet(name) match {
-            case Right(vs2) if median(vs2) < median(vs) => Right(vs2)
-            case _ => first
-          }
-        case _ => first
-      }
-      name -> adjudicated
-    }
-
-    // Isolated second pass: re-time the k widest-relative-spread queries
-    // in a FRESH SparkSession (accumulated block-manager/GC state gone),
-    // so a "regression" that is really in-suite contamination or an
-    // ambient-load spike is adjudicable from the committed artifact alone
-    // — r7/r8 needed a judge re-run for exactly this (q71/q84/q91).
-    // SPARK_GRAFT_ISOLATED overrides the count (0 disables). Runs after
-    // the main pass so it cannot perturb the headline numbers; its
-    // results go into BENCH_LOCAL.json only (the stdout line must stay
-    // inside the driver's bounded tail capture).
-    // 8 slots: the top-3 medians always fit plus enough spread slots
-    // that the whole ~2 s span family (q95/q96/q98/q99/q101) stays
-    // covered when one of them ranks by cost rather than spread
-    val isolatedK = sys.env.get("SPARK_GRAFT_ISOLATED").map(_.toInt).getOrElse(8)
-    // each isolated entry carries the loadavg sampled as its trials
-    // finish: r10's q96 published an isolated median (7.41 s) WORSE than
-    // its in-suite one with no way to tell ambient spike from real — the
-    // annotation makes the artifact self-adjudicating (VERDICT r10 #2)
-    val isolated: Map[String, (Seq[Double], String)] =
-      if (isolatedK <= 0) Map.empty
-      else {
-        val eligible = results.collect {
-          case (k, Right(vs)) if median(vs) >= 0.3 => (k, vs)
-        }
-        // cost rank and spread rank are different suspicions — r9's q95
-        // ran 5.18 s in-suite with no isolated figure because its
-        // max/min spread missed the top-5 cut — so rank each query in
-        // BOTH orderings and isolate the k best-ranked either way
-        val bySpread = eligible
-          .sortBy { case (_, vs) => -(vs.max / vs.min.max(1e-9)) }
-          .map(_._1).zipWithIndex.toMap
-        val byMedian = eligible
-          .sortBy { case (_, vs) => -median(vs) }
-          .map(_._1).zipWithIndex.toMap
-        val moved = eligible.collect {
-          case (n, vs) if priorSec.get(n).exists(p => p > 0 && median(vs) / p > 2.0) => n
-        }
-        // the span family is PINNED always-isolated (VERDICT r12 #5):
-        // it is the recurring in-suite-inflation suspect two rounds
-        // running, and r12's q95 only entered the isolated pass via the
-        // moved->2× rule — adjudication must never depend on rank luck.
-        // Pinned names skip the 0.3 s eligibility floor on purpose: a
-        // cheap round still records the fresh-session figure.
-        val pinned = Seq("q95_span_dedup", "q96_span_trim",
-          "q99_span_dedup_staged", "q101_span_gate_sharded",
-          "q103_span_gate_shuffled",
-          // r13: the two heaviest non-span queries inflated in-suite
-          // (q112 9.8 s vs 6.5 s fresh, q111 5.5 s vs 3.1 s) without
-          // tripping the moved->2× rule — pin them so the fresh-session
-          // figure is always on record
-          "q111_spatial_join", "q112_ivfpq_trained",
-          // r14: the new span-family member and the drift audit (the
-          // round's heaviest addition, ~1.5 q112s) join the pin set
-          "q126_span_runs", "q127_pq_drift").filter(names.contains)
-        val suspects = (eligible.map(_._1)
-          .sortBy(n => math.min(bySpread(n), byMedian(n)))
-          .take(isolatedK) ++ moved ++ pinned).distinct
-        if (suspects.isEmpty) Map.empty
-        else {
-          // Nothing in this pass may lose the (already complete) main
-          // results: a suspect that fails transiently in the fresh
-          // session is simply dropped from the isolated map — the main
-          // pass already recorded its err-or-median.
-          try {
-            spark.stop()
-            spark = newSession()
-            // same TABLE + codegen/JIT warmup as the main pass — the r9
-            // version skipped the table touch, so the first isolated
-            // suspect absorbed schema/reader init and read slightly high
-            warmTables()
-            run(names.min)
-            release()
-            suspects.flatMap { name =>
-              try {
-                val runs = (1 to trials).map { _ =>
-                  val t0 = System.nanoTime()
-                  run(name)
-                  val dt = (System.nanoTime() - t0) / 1e9
-                  release()
-                  dt
-                }
-                Some(name -> (runs, loadavg()))
-              } catch { case _: Throwable => release(); None }
-            }.toMap
-          } catch { case _: Throwable => Map.empty[String, (Seq[Double], String)] }
-        }
-      }
-
-    // SUITE-LEVEL load-adjudication guard (VERDICT r15 #2): the r15
-    // driver run recorded a total 8-15% above four same-head builder
-    // runs because ambient host load inflated EVERY query a little —
-    // uniform inflation never trips the per-query >2× retry rule. When
-    // the shared-surface total lands more than guardFactor above the
-    // committed prior round's (and by > 5 s absolute), the top-K
-    // absolute regressors get ONE full trial-set rerun in the fresh
-    // isolated session, and — exactly the in-place retry's rule — the
-    // BETTER set becomes the headline. Both sets and the trigger
-    // arithmetic are recorded in the artifact (suite_guard block +
-    // raw_total on the short line), so the adjudication is visible, not
-    // a silent replacement. A real structural regression repeats on the
-    // rerun and keeps its new level; only contamination is reclaimed.
-    val guardFactor = sys.env.get("SPARK_GRAFT_SUITEGUARD")
-      .flatMap(_.toDoubleOption).getOrElse(1.08)
-    val sharedNames = results.collect {
-      case (k, Right(_)) if priorSec.contains(k) => k }
-    val sharedPrior = sharedNames.map(priorSec).sum
-    // min-vs-min: the pins are historical MINs, so the comparable
-    // current-side figure is this run's per-query min, not its median —
-    // a median-vs-min-pin sum would trip the guard on every healthy run
-    // (medians naturally sit 10-20% above mins)
-    val sharedCur = sharedNames.map(k => results.toMap.apply(k) match {
-      case Right(vs) => vs.min; case _ => 0.0 }).sum
-    val guardTriggered = guardFactor > 0 && sharedNames.nonEmpty &&
-      sharedPrior > 0 && sharedCur > guardFactor * sharedPrior &&
-      sharedCur - sharedPrior > 5.0
-    val guardReruns: Map[String, (Seq[Double], Seq[Double])] =
-      if (!guardTriggered) Map.empty
-      else {
-        val regressors = results.collect {
-          case (k, Right(vs)) if priorSec.contains(k) =>
-            (k, vs, median(vs) - priorSec(k))
-        }.filter(_._3 > 0).sortBy(-_._3).take(12)
-        try {
-          if (isolated.isEmpty) { // no fresh session warmed yet
-            spark.stop(); spark = newSession(); warmTables()
-            run(names.min); release()
-          }
-          regressors.flatMap { case (name, vs, _) =>
-            try {
-              val runs = (1 to trials).map { _ =>
-                val t0 = System.nanoTime()
-                run(name)
-                val dt = (System.nanoTime() - t0) / 1e9
-                release(); dt
-              }
-              Some(name -> (vs, runs))
-            } catch { case _: Throwable => release(); None }
-          }.toMap
-        } catch { case _: Throwable => Map.empty[String, (Seq[Double], Seq[Double])] }
-      }
-    // headline per-query sets after guard adjudication (better median wins)
-    val finalResults: Seq[(String, Either[String, Seq[Double]])] = results.map {
-      case (k, Right(vs)) => guardReruns.get(k) match {
-        case Some((_, rerun)) if median(rerun) < median(vs) => k -> Right(rerun)
-        case _ => k -> Right(vs)
-      }
-      case other => other
-    }
-    val rawTotal = math.rint(results.collect {
-      case (_, Right(vs)) => median(vs) }.sum * 1000) / 1000
-
-    // Short keys get 3-decimal median times (the stdout line must fit the
-    // driver's bounded tail capture); full-name entries carry
-    // {sec: median, min, max} (+ the isolated re-run where taken) for the
-    // committed BENCH_LOCAL.json profile.
-    def entries(short: Boolean): String = finalResults.map {
-      case (k, Right(vs)) =>
-        if (short)
-          "\"" + k.takeWhile(_ != '_') + "\":" + (math.rint(median(vs) * 1000) / 1000)
-        else {
-          val iso = isolated.get(k).map { case (ivs, ld) =>
-            ",\"isolated\":{\"sec\":" + median(ivs) + ",\"min\":" + ivs.min +
-              ",\"max\":" + ivs.max + ",\"loadavg\":\"" + ld + "\"}" }.getOrElse("")
-          "\"" + k + "\":{\"sec\":" + median(vs) + ",\"min\":" + vs.min +
-            ",\"max\":" + vs.max + iso + "}"
-        }
-      case (k, Left(err)) =>
-        val key = if (short) k.takeWhile(_ != '_') else k
-        "\"" + key + "\":{\"err\":\"" + err.replaceAll("[\"\\\\\\n\\r\\t]", " ") + "\"}"
-    }.mkString("{", ",", "}")
-    val total = math.rint(finalResults.collect { case (_, Right(vs)) => median(vs) }.sum * 1000) / 1000
-    val nErr = finalResults.count(_._2.isLeft)
-    val loadEnd = loadavg()
-    val probeEnd = cpuProbe()
-    // retried/gate fields only in the committed full artifact — the
-    // stdout short line must stay inside the driver's bounded tail
-    def line(short: Boolean) = {
-      val adjud = if (short) "" else
-        s""""retried":[${retried.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}],"""
-      // short line gets the guard's raw_total only when it fired (a few
-      // bytes); the full artifact carries the whole adjudication block
-      val guard =
-        if (!guardTriggered) ""
-        else if (short) s""""raw_total":$rawTotal,"""
-        else {
-          val reruns = guardReruns.toSeq.sortBy(_._1).map { case (k, (suite, rerun)) =>
-            val kept = if (median(rerun) < median(suite)) "rerun" else "suite"
-            // a kept-rerun whose SUITE median sat >2× the pin is the
-            // one-sided-adjudication case (ADVICE r16): a lucky-fast
-            // rerun may be suppressing a real regression — flag it for
-            // review instead of silently keeping the better number
-            val flag = if (kept == "rerun" &&
-                priorSec.get(k).exists(p => p > 0 && median(suite) / p > 2.0))
-              ",\"flag\":\"review\"" else ""
-            "\"" + k + "\":{\"suite\":" + median(suite) + ",\"rerun\":" +
-              median(rerun) + ",\"kept\":\"" + kept + "\"" + flag + "}"
-          }.mkString("{", ",", "}")
-          s""""suite_guard":{"raw_total":$rawTotal,"shared_prior":${math.rint(sharedPrior * 1000) / 1000},"shared_raw":${math.rint(sharedCur * 1000) / 1000},"factor":$guardFactor,"reruns":$reruns},"""
-        }
-      // gate_wait_sec rides BOTH lines (VERDICT r14 #1c): the settle wait
-      // happens before any timed query, so `value` never includes it —
-      // publishing it in the driver-captured short line makes that
-      // exclusion auditable from BENCH_r{N}.json alone.
-      // Adjudication scalars come AFTER the queries map (VERDICT r17 #2):
-      // the driver keeps only the LAST ~2000 chars of stdout, which lands
-      // mid-queries for a 150-entry map — anything before the map is
-      // truncated out of BENCH_r{N}.json (the r17 artifact lost value/
-      // cpu_probe/raw_total this way). JSON object order is arbitrary, so
-      // emitting the few dozen scalar bytes at the end makes the driver's
-      // own artifact self-adjudicating.
-      val tailFields =
-        s""""value":$total,"n_err":$nErr,"gate_wait_sec":$gateWaitSec,$guard"cpu_probe":[[${probeStart._1},${probeStart._2}],[${probeEnd._1},${probeEnd._2}]],"sf":"$sfDir""""
-      s"""{"metric":"total","unit":"sec",$adjud"loadavg_start":"$loadStart","loadavg_end":"$loadEnd","queries":${entries(short)},$tailFields}"""
-    }
-    // Full query names → BENCH_LOCAL.json (committed per round); the stdout
-    // line uses the qNN short keys and 3-decimal times so the whole line
-    // fits the driver's bounded stdout-tail capture (the r2/r3 full-name
-    // line overflowed it and parsed as null — see BASELINE.md §keys).
     java.nio.file.Files.write(
       repoRoot.resolve("BENCH_LOCAL.json"),
       (line(short = false) + "\n").getBytes("UTF-8"))
-    // Min-merge this run's achieved times into the committed pins:
-    // every source (suite trials, isolated pass, guard reruns) can only
-    // TIGHTEN a pin. Queries not run this time (SPARK_GRAFT_ONLY subsets)
-    // keep their existing pins.
-    val runMins: Map[String, Double] = finalResults.collect {
-      case (k, Right(vs)) =>
-        k -> (vs ++ isolated.get(k).map(_._1).getOrElse(Nil) ++
-          guardReruns.get(k).toSeq.flatMap(r => r._1 ++ r._2)).min
-    }.toMap
-    val newPins = (priorSec.keySet ++ runMins.keySet).map { k =>
-      k -> math.min(
-        priorSec.getOrElse(k, Double.MaxValue),
-        runMins.getOrElse(k, Double.MaxValue))
-    }.toSeq.sortBy(_._1)
-    java.nio.file.Files.write(pinsPath,
-      (newPins.map { case (k, v) =>
-        "\"" + k + "\":" + math.rint(v * 1e6) / 1e6
-      }.mkString("{", ",", "}") + "\n").getBytes("UTF-8"))
     println(line(short = true))
     spark.stop()
   }

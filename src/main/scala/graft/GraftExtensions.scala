@@ -7,7 +7,7 @@ import graft.functions.expressions.{MinhashSigExpr, NgramRepExpr, RpMarginExpr, 
 
 /** Session extensions: registers the engine's native expressions.
   * Activate with `.config("spark.sql.extensions", "graft.GraftExtensions")`
-  * (done by Verify, Bench, and the test harness). */
+  * (done by [[graft.Session]], which every tool and the test harness use). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private type Expr = org.apache.spark.sql.catalyst.expressions.Expression

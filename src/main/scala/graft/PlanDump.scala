@@ -1,14 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named queries to text files — the
   * optimization-round evidence trail (plans/rNN/<query>_{before,after}.txt).
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> <query> [<query> ...]
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32)
-  * — the same session shape as [[Bench]] so the captured plans are the
-  * plans the bench actually runs. */
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS — the
+  * [[Session]] every tool runs on, so the captured plans are the plans
+  * [[Bench]] and [[Verify]] actually run. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <query>...")
@@ -16,16 +14,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     java.nio.file.Files.createDirectories(outDir)
     for (q <- names) {
       val df = SparkEntry.queries(q)(spark, sfDir)

@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Curation, Geo, Materialize, Similarity, Temporal}
 import graft.sources.Tables
 
-/** Dev tool (PlanAudit's sibling): time the BOUNDED variants of the
+/** Dev tool (PlanDump's sibling): time the BOUNDED variants of the
   * queries the sf1 smoke measured as super-linear — the probe-budget ANN
   * family ([[Similarity.annRecallFrom]]) and corpus-proportional-k
   * SemDeDup ([[Curation.semDedupK]]) — so BASELINE.md's "the scale answer
@@ -19,14 +18,7 @@ import graft.sources.Tables
 object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
     val emb = Tables.embeddings(spark, sfDir)
     val n = emb.count()

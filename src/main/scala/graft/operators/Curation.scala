@@ -715,7 +715,7 @@ object Curation {
     * Scale shape: the unigram table is vocabulary-sized → broadcast
     * (same Zipf argument as TF-IDF). The token explode feeds THREE
     * consumers (the total-count scalar, the LM build, the scoring join),
-    * so it is materialized once — r6's PlanAudit showed the
+    * so it is materialized once — r6's plan audit showed the
     * unmaterialized plan scanning documents.parquet 3×; with the
     * checkpoint the corpus is read once and the branches re-read token
     * rows. */
@@ -846,7 +846,7 @@ object Curation {
     * Scale shape: each stage makes one pass of the corpus *rows* and no
     * stage materializes an intermediate corpus copy — but the stages are
     * separate sub-plans joined back on doc_id, so the executed plan
-    * (PlanAudit r6) tokenize-explodes the corpus three times (gate,
+    * (r6's plan audit) tokenize-explodes the corpus three times (gate,
     * decontaminate, and the funnel's own n_toks/fp pass). The
     * composition stays shuffle-sane: gate flags join back doc-aligned,
     * the contamination set is a broadcast anti-join-shaped left join
@@ -2525,7 +2525,7 @@ object Curation {
     * granularity. The median over per-doc doubles is exact interpolated
     * percentile on both engines over identical values (q85 rule).
     * The gate and the LM are derived from ONE shared checkpointed token
-    * table (r6's PlanAudit showed the compose-by-name version re-scanning
+    * table (r6's plan audit showed the compose-by-name version re-scanning
     * documents.parquet per sub-plan); only the doc_id→source projection
     * reads the corpus a second time. */
   def filterCalibration(spark: SparkSession, dir: String): DataFrame = {

@@ -56,12 +56,12 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("parquet stage dirs are deleted when their session ends, not at JVM exit") {
-    // Bench's isolated pass restarts the session inside one JVM; exit-only
-    // cleanup accumulated every session's stage dirs (r10 advice). The
-    // ApplicationEnd listener now deletes the owning session's dirs at
-    // spark.stop(); its exact body (Materialize.releaseStages) is driven
-    // here directly because this suite shares its session with every
-    // other spec and must not stop it.
+    // A JVM that restarts its session would accumulate every session's
+    // stage dirs under exit-only cleanup (r10 advice). The ApplicationEnd
+    // listener deletes the owning session's dirs — parquet stages and
+    // shared artifacts alike — at spark.stop(); its exact body
+    // (Materialize.releaseStages) is driven here directly because this
+    // suite shares its session with every other spec and must not stop it.
     val tmp = java.nio.file.Files.createTempDirectory("graft_stage_end").toString
     spark.conf.set("graft.materialize.dir", tmp)
     try withStrategy(Some("parquet")) {
@@ -69,14 +69,19 @@ class MaterializeSpec extends SparkSpec {
       val before = Materialize.pendingStages(appId).toSet
       Materialize.stage(spark.range(7).toDF("id")).count()
       Materialize.stage(spark.range(3).toDF("id")).count()
+      Materialize.shared(spark, s"materialize-spec-end-${System.nanoTime}") {
+        spark.range(4).toDF("id")
+      }.count()
       // earlier tests' dirs may still be tracked (their files already
       // cleaned by their own finally blocks) — assert on OURS only
       val fresh = Materialize.pendingStages(appId).toSet -- before
-      assert(fresh.size == 2, s"expected 2 new tracked stage dirs, got $fresh")
+      assert(fresh.size == 3, s"expected 3 new tracked dirs, got $fresh")
+      assert(fresh.count(_.getName.startsWith("graft_shared_")) == 1,
+        s"the shared build's dir is not tracked: $fresh")
       assert(fresh.forall(_.exists()), "tracked stage dir missing on disk")
       Materialize.releaseStages(appId) // what onApplicationEnd runs at stop
       assert(Materialize.pendingStages(appId).isEmpty, "dirs still tracked")
-      assert(fresh.forall(!_.exists()), "stage dir survived session end")
+      assert(fresh.forall(!_.exists()), "stage or shared dir survived session end")
     } finally {
       spark.conf.unset("graft.materialize.dir")
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))

@@ -1,7 +1,7 @@
 package graft
 
 /** Automated plan-shape guard: pins the invariants the round-6/7 manual
-  * `PlanAudit` sessions established, so a future edit can't silently
+  * `PlanDump` sessions established, so a future edit can't silently
   * regress them. Plans are built but not executed (construction still runs
   * the deliberate localCheckpoint sites — cheap at sf0.001).
   */
