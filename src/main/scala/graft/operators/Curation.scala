@@ -61,9 +61,8 @@ object Curation {
 
   /** The exploded (doc_id, token) table the token-level operators share.
     * Callers composing several of them (q90) materialize this ONCE
-    * ([[Materialize.stage]] — strategy via `graft.materialize`) so each
-    * operator re-reads the token rows instead of re-scanning +
-    * re-exploding the corpus. */
+    * ([[Materialize.stage]]) so each operator re-reads the token rows
+    * instead of re-scanning + re-exploding the corpus. */
   def tokenTable(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), explode(toks).as("token"))
 
@@ -1905,8 +1904,8 @@ object Curation {
     * so the ~per-query LSH cost is paid once (BASELINE.md documents the
     * repeated work as a per-query-isolation artifact — this entry point
     * is that claim as code, asserted equivalent in CurationSpec).
-    * Staging strategy via `graft.materialize` ([[Materialize.stage]]);
-    * for a stage that survives restarts use [[persistPairTable]]. */
+    * Staged once via [[Materialize.stage]]; for a stage that survives
+    * restarts use [[persistPairTable]]. */
   def pairTable(spark: SparkSession, dir: String): DataFrame =
     Dedup.lshNearDup(spark, dir).staged
 
@@ -2200,7 +2199,7 @@ object Curation {
   /** The shared SemDeDup pair/prune tail over any assignment table. */
   private def semDedupOver(asg: DataFrame): DataFrame = {
     // Materialize the assignment once — it feeds both self-join sides and
-    // the member count (3 subtree reuses); strategy via graft.materialize.
+    // the member count (3 subtree reuses) — Materialize.stage.
     val m = asg
       .select(col("cluster_id"), col("vec_id"), col("embedding"), col("nrm"))
       .staged
@@ -2584,7 +2583,7 @@ object Curation {
         s => s.getField("tok")), " ").as("chunk"))
       .select(col("doc_id"), sha2(col("chunk"), 256).as("f"))
       // materialized once — feeds the df census AND the join back
-      // (strategy via graft.materialize — Materialize.stage)
+      // (Materialize.stage)
       .staged
     val df = chunks.groupBy(col("f"))
       .agg(countDistinct(col("doc_id")).as("d"))

@@ -170,9 +170,8 @@ object Dedup {
     * so the two formulations can never drift. */
   private def jaccardOverShingleSets(ds0: DataFrame, threshold: Double,
                                      dfCap: Int): DataFrame = {
-    // Materialized once: feeds three branches (sizes ×2 via join, self-join).
-    // Strategy is the graft.materialize setting (Materialize.stage):
-    // localCheckpoint on local[n], persist/parquet for cluster fault modes.
+    // Materialized once (Materialize.stage): feeds three branches
+    // (sizes ×2 via join, self-join).
     val ds = ds0
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("s"))))
       .filter(col("df") <= dfCap)
@@ -487,7 +486,7 @@ object Dedup {
     * scale the pair space is pruned by the ANN bucket join first
     * (Similarity.annBucketed / rpLshAnn); this is the exact check. */
   def embeddingNearDup(spark: SparkSession, dir: String): DataFrame = {
-    // Feeds both join sides; strategy via graft.materialize (Materialize.stage).
+    // Feeds both join sides; materialized once (Materialize.stage).
     val emb = Tables.embeddings(spark, dir)
       .filter(col("vec_id") < PairProbeBound)
       .withColumn("nrm", Similarity.norm(col("embedding")))

@@ -1,10 +1,8 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets.UTF_8
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** R2 fetch stage + R17 per-parameter error isolation.
   *
@@ -49,16 +47,15 @@ object Fetch {
 
   /** GET every (parameter, url) in the request plan, isolating failures
     * per parameter — the reference's try/except loop. Staged bytes pass
-    * through `validate` (default [[containerGuard]]): a rejection is a
-    * per-parameter failure, same as an HTTP error. Connect/read timeouts
-    * bound every request so ONE stalled endpoint cannot hang the whole
-    * ingest — the timeout surfaces as that parameter's recorded error
-    * and the loop moves on (the reference inherits the same property
-    * from `requests`' timeout). Non-2xx statuses, redirects (followed by
+    * through [[containerGuard]]: a rejection is a per-parameter failure,
+    * same as an HTTP error. Connect/read timeouts bound every request so
+    * ONE stalled endpoint cannot hang the whole ingest — the timeout
+    * surfaces as that parameter's recorded error and the loop moves on
+    * (the reference inherits the same property from `requests`'
+    * timeout). Non-2xx statuses, redirects (followed by
     * the URL layer for same-protocol GETs), and connection failures all
     * resolve through the same Try. Never throws. */
   def fetchAll(plan: Seq[(String, String)],
-               validate: Array[Byte] => Option[String] = containerGuard,
                connectTimeoutMs: Int = 10000,
                readTimeoutMs: Int = 60000): Seq[FetchOutcome] =
     plan.map { case (param, url) =>
@@ -84,36 +81,21 @@ object Fetch {
         val in = conn.getInputStream
         try in.readAllBytes() finally in.close()
       } match {
-        case Success(bytes) => validate(bytes).toLeft(bytes)
+        case Success(bytes) => containerGuard(bytes).toLeft(bytes)
         case Failure(e) => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}")
       }
       FetchOutcome(param, url, result)
     }
-
-  /** Decode boundary for staged cube bytes. The offline stand-in for the
-    * NetCDF codec is a CSV cube (`time,x,y,value` header); everything
-    * downstream of the returned long-format frame is codec-agnostic. */
-  def decodeCsvCube(
-      spark: SparkSession, collection: String, parameter: String,
-      bytes: Array[Byte]): DataFrame = {
-    import spark.implicits._
-    val lines = spark.createDataset(new String(bytes, UTF_8).linesIterator.toSeq)
-    spark.read
-      .option("header", "true")
-      .schema("time TIMESTAMP, x DOUBLE, y DOUBLE, value DOUBLE")
-      .csv(lines)
-      .select(
-        lit(collection).as("collection"), lit(parameter).as("parameter"),
-        col("time"), col("x"), col("y"), col("value"))
-  }
 
   /** Format-sniffing decode — the engine dual of the reference's
     * `xarray.open_dataset(BytesIO(...))` (ingestor.py:200): classic
     * NetCDF magic (`CDF\x01|02|05`) routes to
     * [[graft.sources.NetCdf.decodeCube]], HDF5 magic (`\x89HDF`,
     * NetCDF-4) to the [[graft.sources.NetCdf4]] subset codec (whose parse
-    * rejects out-of-subset files explicitly rather than misparsing), and
-    * anything else falls back to the CSV cube stand-in. */
+    * rejects out-of-subset files explicitly rather than misparsing).
+    * Any other bytes — an HTML error page served with a 200, a truncated
+    * or empty body — throw, so [[fetchAndIngest]] records the parameter
+    * as skipped instead of publishing nothing for it as a success. */
   def decodeAuto(
       spark: SparkSession, collection: String, parameter: String,
       bytes: Array[Byte]): DataFrame =
@@ -121,27 +103,27 @@ object Fetch {
       graft.sources.NetCdf.decodeCube(spark, collection, parameter, bytes)
     else if (graft.sources.NetCdf4.isHdf5(bytes))
       graft.sources.NetCdf4.decodeCube(spark, collection, parameter, bytes)
-    else decodeCsvCube(spark, collection, parameter, bytes)
+    else throw new IllegalArgumentException(
+      "not a NetCDF stream: neither classic (CDF) nor NetCDF-4/HDF5 magic")
 
   /** Full fetch → ingest pipeline with R17 isolation: fetch every planned
     * parameter, decode and ingest ONLY the successes (their partitions are
     * the only ones dynamic overwrite truncates — a failed parameter's old
     * output survives, per the reference's ordering guarantee), and return
     * the manifest of what was written plus every outcome for telemetry.
-    * Decode failures (an HDF5 container, malformed classic bytes, an
-    * unsupported CF time unit) are isolated exactly like fetch failures:
-    * the outcome records the error and the other parameters still ingest.
+    * Decode failures (bytes of neither container, malformed classic
+    * bytes, an unsupported CF time unit) are isolated exactly like fetch
+    * failures: the outcome records the error and the other parameters
+    * still ingest.
     * No successes → no write at all, `None` manifest. */
   def fetchAndIngest(
       spark: SparkSession,
       cfg: Ingest.IngestConfig,
       plan: Seq[(String, String)],
-      outPath: String,
-      decode: (SparkSession, String, String, Array[Byte]) => DataFrame = decodeAuto)
-      : (Option[DataFrame], Seq[FetchOutcome]) = {
+      outPath: String): (Option[DataFrame], Seq[FetchOutcome]) = {
     val decoded = fetchAll(plan).map {
       case o @ FetchOutcome(param, url, Right(bytes)) =>
-        Try(decode(spark, cfg.collection, param, bytes)) match {
+        Try(decodeAuto(spark, cfg.collection, param, bytes)) match {
           case Success(df) => (o, Some(df))
           case Failure(e) => (FetchOutcome(param, url,
             Left(s"decode ${e.getClass.getSimpleName}: ${e.getMessage}")), None)

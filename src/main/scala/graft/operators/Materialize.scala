@@ -2,38 +2,16 @@ package graft.operators
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 /** The ONE materialization indirection for "this subtree feeds multiple
   * consumers — compute it once".
   *
-  * Every such site previously called `localCheckpoint()` directly with a
-  * per-site comment saying "substitute persist(DISK_ONLY) or a durable
-  * stage on a cluster"; this object makes the cluster story a SETTING
-  * instead of a comment. Strategy selection via the Spark conf
-  * `graft.materialize`:
-  *
-  *  - `localCheckpoint` (default) — eager executor-local RDD blocks.
-  *    Fastest on local[n] and correct whenever executors survive the job
-  *    (the driver bench's mode); blocks die with their executor, so a
-  *    multi-tenant cluster run prefers the next two.
-  *  - `persist` — `persist(StorageLevel.DISK_ONLY)` forced eager by a
-  *    count, so the staged subtree computes exactly once at the stage
-  *    point (matching localCheckpoint's eagerness) and recomputes from
-  *    lineage only on executor loss.
-  *  - `parquet` — write to a unique dir under `graft.materialize.dir`
-  *    (default: the JVM temp dir) and re-read: a stage that survives
-  *    executor loss outright, the [[Curation.persistPairTable]] shape
-  *    applied generically. Stage dirs are deleted when their session's
-  *    SparkContext ends (ApplicationEnd), with a JVM-exit hook as
-  *    backstop — nothing can reference one after the driver goes away,
-  *    so keeping them is a disk leak; a stage meant to OUTLIVE the job is
-  *    [[Curation.persistPairTable]]/[[Curation.persistSpanTable]] with a
-  *    caller-owned sink.
-  *
-  * All strategies are RESULT-EQUIVALENT (MaterializeSpec asserts it on a
-  * representative multi-consumer query); they trade re-use cost against
-  * fault tolerance. Deliberately NOT routed through here: the
+  * [[stage]] is an eager `localCheckpoint()`: executor-local RDD blocks,
+  * correct whenever executors survive the job. A subtree shared ACROSS
+  * queries is [[shared]] (parquet under `graft.materialize.dir`, deleted
+  * when its session ends); a stage meant to OUTLIVE the job is
+  * [[Curation.persistPairTable]]/[[Curation.persistSpanTable]] with a
+  * caller-owned sink. Deliberately NOT routed through here: the
   * per-iteration checkpoints inside [[Curation.nearDupClusters]]'s
   * fixpoint loop, where cutting lineage each round is algorithmic (an
   * un-truncated iterative plan grows without bound), not a re-use
@@ -41,11 +19,11 @@ import org.apache.spark.storage.StorageLevel
   */
 object Materialize {
 
-  // parquet-strategy stage dirs created by this JVM, deleted at exit —
-  // without this a bench/test run with graft.materialize=parquet leaks
-  // one full parquet copy of every staged subtree into the temp dir
-  // (r9 advice). A DELIBERATE stage that must outlive the JVM belongs in
-  // persistPairTable/persistSpanTable with a caller-owned sink, not here.
+  // shared-stage dirs created by this JVM, deleted at exit — without
+  // this every run leaks one full parquet copy of every shared artifact
+  // into the temp dir (r9 advice). A DELIBERATE stage that must outlive
+  // the JVM belongs in persistPairTable/persistSpanTable with a
+  // caller-owned sink, not here.
   private val stageDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
   // ... and ALSO keyed by the owning SparkContext, deleted when that
   // context ends: exit-only cleanup let a JVM that restarts its session
@@ -83,12 +61,12 @@ object Materialize {
       stageDirs.forEach(rm)
     }, "graft-materialize-cleanup"))
   }
-  /** A fresh `<prefix>_<uuid>` dir path under `graft.materialize.dir`
+  /** A fresh `graft_shared_<uuid>` dir path under `graft.materialize.dir`
     * (default: the JVM temp dir), deleted when `spark`'s SparkContext
     * ends (ApplicationEnd) or, as backstop, at JVM exit. */
-  private def trackedDir(spark: SparkSession, prefix: String): String = {
+  private def trackedDir(spark: SparkSession): String = {
     val base = spark.conf.get("graft.materialize.dir", sys.props("java.io.tmpdir"))
-    val dir = s"$base/${prefix}_${java.util.UUID.randomUUID}"
+    val dir = s"$base/graft_shared_${java.util.UUID.randomUUID}"
     cleanupHook
     val f = new java.io.File(dir)
     stageDirs.add(f)
@@ -106,22 +84,7 @@ object Materialize {
   }
 
   /** Materialize `df` once for multiple downstream consumers. */
-  def stage(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.get("graft.materialize", "localCheckpoint") match {
-      case "localCheckpoint" => df.localCheckpoint()
-      case "persist" =>
-        val p = df.persist(StorageLevel.DISK_ONLY)
-        p.count() // force now — the stage point, like localCheckpoint
-        p
-      case "parquet" =>
-        val dir = trackedDir(spark, "graft_stage")
-        df.write.parquet(dir)
-        spark.read.parquet(dir)
-      case other => throw new IllegalArgumentException(
-        s"graft.materialize=$other (expected localCheckpoint|persist|parquet)")
-    }
-  }
+  def stage(df: DataFrame): DataFrame = df.localCheckpoint()
 
   // shared-stage cells keyed by (applicationId, caller key) — see
   // [[shared]]. The map holds lazy CELLS rather than results so
@@ -146,8 +109,8 @@ object Materialize {
     * bench harness unpersists every persistent RDD between queries
     * (block-manager hygiene), which would destroy cross-query checkpoint
     * blocks — a parquet stage survives it, and its scan re-plans freshly
-    * per consumer (broadcast vs shuffle hints still apply). Dirs ride the
-    * same ApplicationEnd/exit cleanup as the parquet [[stage]] strategy;
+    * per consumer (broadcast vs shuffle hints still apply). Dirs are
+    * deleted when the session's SparkContext ends (JVM exit as backstop);
     * a fresh session (new applicationId) rebuilds, so a cold run always
     * measures the full build.
     *
@@ -160,7 +123,7 @@ object Materialize {
   def shared(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     val appId = spark.sparkContext.applicationId
     val cell = sharedStages.computeIfAbsent((appId, key), _ => new SharedCell(() => {
-      val d = trackedDir(spark, "graft_shared")
+      val d = trackedDir(spark)
       build.write.parquet(d)
       d
     }))

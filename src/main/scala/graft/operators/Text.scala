@@ -256,7 +256,7 @@ object Text {
     val dec = (c: Column) => floor(c * 1e9).cast("decimal(28,9)")
     // Materialized once: the vocab totals and the top-100 window both
     // re-read it, and the explode+agg behind it is the dominant cost
-    // (strategy via graft.materialize — Materialize.stage).
+    // (Materialize.stage).
     val freq = Tables.documents(spark, dir)
       .select(col("lang"), explode(toks).as("token"))
       .groupBy(col("lang"), col("token"))

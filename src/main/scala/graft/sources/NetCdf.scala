@@ -13,10 +13,11 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType, Timestam
 /** Pure-JVM classic NetCDF codec (CDF-1 / CDF-2 / CDF-5), written against
   * the public NetCDF classic-format specification — the engine-side dual of
   * the reference's in-memory `xarray.open_dataset(BytesIO(response.content))`
-  * (dmi_ingestor/ingestor.py:200). Closes the decode boundary that the CSV
-  * cube stand-in ([[graft.operators.Fetch.decodeCsvCube]]) previously held:
-  * staged DMI cube bytes in the classic layouts decode straight to the
-  * long-format frame the rest of the pipeline consumes.
+  * (dmi_ingestor/ingestor.py:200): staged DMI cube bytes in the classic
+  * layouts decode straight to the long-format frame the rest of the
+  * pipeline consumes. The CF rules of that decode ([[decodeCf]]) live here
+  * once and serve both containers; [[NetCdf4]] supplies only its HDF5
+  * reading and axes.
   *
   * Scope (honest): the three classic on-disk layouts — magic `CDF\x01`
   * (32-bit offsets), `CDF\x02` (64-bit offsets), `CDF\x05` (64-bit
@@ -354,149 +355,221 @@ object NetCdf {
   // CF cube decode → long-format DataFrame
   // ------------------------------------------------------------------
 
-  private val TimeNames = Set("time", "t")
-  private val XNames = Set("x", "lon", "longitude")
-  private val YNames = Set("y", "lat", "latitude")
-
   /** Decode staged classic-NetCDF cube bytes to the pipeline's long format
-    * — schema-identical to [[graft.operators.Fetch.decodeCsvCube]]:
     * `(collection, parameter, time TIMESTAMP, x DOUBLE, y DOUBLE,
-    * value DOUBLE)`. Picks the data variable (highest-rank non-coordinate
-    * var, preferring a name match on `parameter`), reads its time/y/x
-    * coordinates (CF `<unit> since <epoch>` time units; bare values are
-    * epoch seconds), and applies `scale_factor`/`add_offset` packing with
-    * `_FillValue`/`missing_value` masked to null — the xarray decode
-    * semantics the reference relies on. */
+    * value DOUBLE)` plus any CF auxiliary `lat`/`lon` columns. The classic
+    * container contributes only its axes — a variable's dims, each with
+    * the coordinate variable named after it — and every CF rule is
+    * [[decodeCf]]'s. */
   def decodeCube(
       spark: SparkSession, collection: String, parameter: String,
       bytes: Array[Byte]): DataFrame = {
     val f = parse(bytes)
-    val dimNames = f.dims.map(_.name).toSet
+    decodeCf(spark, collection, parameter, new CfSource[NcVar] {
+      def variables: Seq[NcVar] = f.vars.filter(_.ncType != NcChar)
+      def name(v: NcVar): String = v.name
+      def shape(v: NcVar): Seq[Int] = f.shape(v).map(_.toInt)
+      def text(v: NcVar, attr: String): Option[String] = v.attr(attr).map(_.text)
+      def num(v: NcVar, attr: String): Option[Double] = v.attr(attr).flatMap(_.first)
+      def values(v: NcVar): Array[Double] = readValues(f, v)
+      def axes(v: NcVar): Seq[CfAxis[NcVar]] = v.dimIds.map { id =>
+        val dim = f.dims(id).name
+        CfAxis(dim, f.variable(dim), Some(id.toLong))
+      }
+      def axisIds(v: NcVar): Seq[Option[Long]] = v.dimIds.map(id => Some(id.toLong))
+      def lookup(data: NcVar, name: String): Option[NcVar] = variables.find(_.name == name)
+    })
+  }
+
+  private[sources] val TimeNames = Set("time", "t")
+  private[sources] val XNames = Set("x", "lon", "longitude")
+  private[sources] val YNames = Set("y", "lat", "latitude")
+  private val CoordNames = TimeNames ++ XNames ++ YNames
+  // nested-group names are path-prefixed ("fc/temp") — CF-name matching
+  // goes by the LEAF segment, so a grouped cube's variables and
+  // coordinates resolve exactly like a flat one's
+  private[sources] def leafName(n: String): String =
+    n.substring(n.lastIndexOf('/') + 1).toLowerCase
+
+  /** One axis of a data variable as its container sees it: the name CF
+    * classification reads, the 1-D coordinate variable on the axis if
+    * there is one, and an identity two variables over the same axis share
+    * (classic: the dim id; HDF5: the dimension-scale address). */
+  private[sources] case class CfAxis[V](name: String, coord: Option[V], id: Option[Long])
+
+  /** The format-dependent half of a CF cube decode — what [[decodeCf]]
+    * reads from a parsed container. */
+  private[sources] trait CfSource[V] {
+    /** Numeric variables, any rank. */
+    def variables: Seq[V]
+    def name(v: V): String
+    def shape(v: V): Seq[Int]
+    def text(v: V, attr: String): Option[String]
+    def num(v: V, attr: String): Option[Double]
+    /** Raw external values, row-major. */
+    def values(v: V): Array[Double]
+    /** Per axis of the data variable `v`: name, coordinate, identity. */
+    def axes(v: V): Seq[CfAxis[V]]
+    /** Per axis of an auxiliary coordinate `v`: its identity, if known. */
+    def axisIds(v: V): Seq[Option[Long]]
+    /** A name listed in `data`'s CF `coordinates` attribute, resolved. */
+    def lookup(data: V, name: String): Option[V]
+  }
+
+  /** The CF half of a cube decode, shared by both containers (the
+    * reference's single `xarray.open_dataset`, ingestor.py:200):
+    *  - picks the data variable — the highest-rank gridded variable,
+    *    preferring a name match on `parameter`; CF coordinate names and
+    *    `coordinates`-listed variables are never data, and a rank-4+
+    *    match is rejected rather than decoded as a truncated subset;
+    *  - classifies its axes as time/y/x by axis name or the coordinate's
+    *    CF units (`<unit> since <epoch>`, `degrees_east`,
+    *    `degrees_north`), unclassified axes taking conventional (time, y,
+    *    x) places — so a (time, x, y) or (y, x, time) cube decodes with
+    *    the true strides instead of silently transposing;
+    *  - reads each axis's coordinate, or an index coordinate where the
+    *    axis has none;
+    *  - attaches CF `coordinates` 2-D lat/lon auxiliaries ([[auxCoords]]);
+    *  - applies `scale_factor`/`add_offset` packing, masks
+    *    `_FillValue`/`missing_value` to null, and converts CF time units
+    *    (bare time values are epoch seconds). */
+  private[sources] def decodeCf[V](
+      spark: SparkSession, collection: String, parameter: String,
+      src: CfSource[V]): DataFrame = {
+    def leaf(v: V): String = leafName(src.name(v))
+    def rank(v: V): Int = src.shape(v).size
     // variables listed in any CF `coordinates` attribute are coordinates,
     // not data — a 2-D lat(y,x) must never be picked as the data variable
-    val auxNames = f.vars.flatMap(_.attr("coordinates"))
-      .flatMap(_.text.trim.split("\\s+")).toSet
-    val gridded = f.vars.filter(v =>
-      v.ncType != NcChar && !dimNames.contains(v.name) &&
-        !auxNames.contains(v.name) && v.dimIds.size >= 2)
+    val auxListed = src.variables.flatMap(listedCoords(src, _)).map(_.toLowerCase).toSet
+    val gridded = src.variables.filter(v =>
+      !CoordNames.contains(leaf(v)) && !auxListed.contains(leaf(v)) && rank(v) >= 2)
     require(gridded.nonEmpty, "no gridded data variable in NetCDF stream")
+    def isParam(v: V): Boolean =
+      src.name(v).equalsIgnoreCase(parameter) || leaf(v) == parameter.toLowerCase
     // a rank-4+ variable (e.g. pressure-level output with a level axis)
     // cannot be flattened to the (time, x, y, value) frame — reject it
     // explicitly rather than decoding a truncated, mis-labeled subset
-    gridded.find(_.name.equalsIgnoreCase(parameter)).foreach { v =>
-      require(v.dimIds.size <= 3,
-        s"variable '$parameter' has rank ${v.dimIds.size}; decodeCube " +
+    gridded.find(isParam).foreach { v =>
+      require(rank(v) <= 3,
+        s"variable '$parameter' has rank ${rank(v)}; decodeCube " +
           "supports rank 2 (y,x) and rank 3 (time,y,x)")
     }
-    val candidates = gridded.filter(_.dimIds.size <= 3)
+    val candidates = gridded.filter(rank(_) <= 3)
     require(candidates.nonEmpty,
-      s"only rank-${gridded.map(_.dimIds.size).max} data variables " +
+      s"only rank-${gridded.map(rank).max} data variables " +
         "present; decodeCube supports rank 2 (y,x) and rank 3 (time,y,x)")
-    val data = candidates
-      .sortBy(v => (if (v.name.equalsIgnoreCase(parameter)) 0 else 1, -v.dimIds.size))
-      .head
+    val data = candidates.sortBy(v => (if (isParam(v)) 0 else 1, -rank(v))).head
+    val shape = src.shape(data)
+    val axes = src.axes(data)
 
-    val varDims = data.dimIds.map(f.dims(_))
-    val rank = data.dimIds.size
-    val shape = f.shape(data).map(_.toInt)
+    def units(a: CfAxis[V]): String = a.coord.flatMap(src.text(_, "units")).getOrElse("")
+    def isTime(a: CfAxis[V]) =
+      TimeNames.contains(leafName(a.name)) || units(a).contains(" since ")
+    def isX(a: CfAxis[V]) =
+      XNames.contains(leafName(a.name)) || units(a).startsWith("degrees_east")
+    def isY(a: CfAxis[V]) =
+      YNames.contains(leafName(a.name)) || units(a).startsWith("degrees_north")
+    val tPos =
+      if (shape.size == 3)
+        Some(axes.indexWhere(isTime) match {
+          // no time-classifiable axis: take the first axis that is NOT
+          // x/y-classified rather than blindly axis 0 — a (y, x, time)
+          // cube with a renamed, unitless time axis must not map
+          // latitudes into timestamps
+          case -1 => axes.indices.find(i => !isX(axes(i)) && !isY(axes(i))).getOrElse(0)
+          case i => i
+        })
+      else None
+    val rest = axes.indices.filterNot(tPos.contains)
+    // an x-classified axis pins x; else the LAST non-y axis is x
+    // (conventional row-major (…, y, x) order)
+    val xPos = rest.find(i => isX(axes(i)))
+      .orElse(rest.reverse.find(i => !isY(axes(i))))
+      .getOrElse(rest.last)
+    val yPos = rest.filterNot(_ == xPos).head
 
-    // Resolve each axis to its POSITION in the variable's dim list — by
-    // CF name where one matches, with the unnamed axes taking the
-    // remaining positions in conventional (time, y, x) order — then walk
-    // the raw values with the true strides. A cube declared (time, x, y)
-    // decodes correctly instead of silently transposing.
-    def namedPos(names: Set[String]): Option[Int] =
-      varDims.zipWithIndex.collectFirst {
-        case (d, i) if names.contains(d.name.toLowerCase) => i
-      }
-    val namedT = if (rank == 3) namedPos(TimeNames) else None
-    val namedY = namedPos(YNames)
-    val namedX = namedPos(XNames)
-    val free = (0 until rank).filterNot(
-      Set(namedT, namedY, namedX).flatten.contains).iterator
-    val tPos = if (rank == 3) Some(namedT.getOrElse(free.next())) else None
-    val yPos = namedY.getOrElse(free.next())
-    val xPos = namedX.getOrElse(free.next())
-
-    val strides = Array.fill(rank)(1)
-    var s = rank - 2
+    val strides = Array.fill(shape.size)(1)
+    var s = shape.size - 2
     while (s >= 0) { strides(s) = strides(s + 1) * shape(s + 1); s -= 1 }
 
-    def coordVals(pos: Int): (Array[Double], Option[NcVar]) = {
-      val cv = f.variable(varDims(pos).name)
-      val vals = cv.map(readValues(f, _))
-        .getOrElse(Array.tabulate(shape(pos))(_.toDouble))
-      (vals, cv)
-    }
-    val (timeVals, timeVar) = tPos.map(coordVals).getOrElse((Array(0.0), None))
-    val (yVals, _) = coordVals(yPos)
-    val (xVals, _) = coordVals(xPos)
-
+    def coordVals(pos: Int): Array[Double] = axes(pos).coord.map(src.values)
+      .getOrElse(Array.tabulate(shape(pos))(_.toDouble))
     val toEpochSec: Double => Double =
-      timeVar.flatMap(_.attr("units")).map(_.text) match {
+      tPos.flatMap(axes(_).coord).flatMap(src.text(_, "units")) match {
         case Some(u) if u.contains(" since ") => cfTimeToEpochSeconds(u)
         case _ => identity
       }
-
-    val scale = data.attr("scale_factor").flatMap(_.first).getOrElse(1.0)
-    val offset = data.attr("add_offset").flatMap(_.first).getOrElse(0.0)
-    val fill = data.attr("_FillValue").orElse(data.attr("missing_value")).flatMap(_.first)
-
-    val raw = readValues(f, data)
-    cubeFrame(spark, collection, parameter, timeVals, yVals, xVals, raw,
-      tPos.map(strides(_)).getOrElse(0), strides(yPos), strides(xPos),
-      scale, offset, fill, toEpochSec, auxCoords(f, data, yPos, xPos))
+    cubeFrame(spark, collection, parameter,
+      tPos.map(coordVals).getOrElse(Array(0.0)), coordVals(yPos), coordVals(xPos),
+      src.values(data), tPos.map(strides(_)).getOrElse(0), strides(yPos), strides(xPos),
+      src.num(data, "scale_factor").getOrElse(1.0),
+      src.num(data, "add_offset").getOrElse(0.0),
+      src.num(data, "_FillValue").orElse(src.num(data, "missing_value")),
+      toEpochSec, auxCoords(src, data, axes(yPos).id -> shape(yPos), axes(xPos).id -> shape(xPos)))
   }
+
+  private def listedCoords[V](src: CfSource[V], v: V): Seq[String] =
+    src.text(v, "coordinates").map(_.trim).filter(_.nonEmpty)
+      .map(_.split("\\s+").toSeq).getOrElse(Nil)
 
   /** CF `coordinates`-attribute auxiliary coordinates (CF §5.2 — what
     * `xarray.open_dataset` attaches as non-dimension coords,
-    * ingestor.py:200): a curvilinear native-CRS grid carries 2-D
-    * `lat(y,x)` / `lon(y,x)` variables beside its 1-D projection coords.
-    * Each listed variable that is a 2-D grid over the data variable's
-    * (y, x) dims becomes an extra `lat` / `lon` output column; the aux
-    * variable's OWN dim order drives the strides, so a transposed
-    * `lon(x,y)` decodes correctly. Named skips: non-geographic aux names
-    * (time bounds, cell measures, scalar coords) and aux grids over other
-    * dims — the long row model carries geography, not arbitrary extra
-    * rasters. */
-  private def auxCoords(f: NcFile, data: NcVar, yPos: Int, xPos: Int): Seq[AuxCoord] = {
-    val listed = data.attr("coordinates").map(_.text.trim).filter(_.nonEmpty)
-      .map(_.split("\\s+").toSeq).getOrElse(Seq.empty)
-    val yDim = data.dimIds(yPos); val xDim = data.dimIds(xPos)
-    listed.flatMap { nm =>
-      f.variable(nm).filter(v => v.dimIds.size == 2 && v.ncType != NcChar).flatMap { v =>
-        val u = v.attr("units").map(_.text).getOrElse("")
+    * ingestor.py:200): a curvilinear native-CRS grid — exactly what a
+    * `harmonie_*` grid looks like before the reference reprojects it —
+    * carries 2-D `lat(y,x)` / `lon(y,x)` variables beside its 1-D
+    * projection coords. Each listed variable that is a 2-D grid over the
+    * data variable's (y, x) axes becomes an extra `lat` / `lon` output
+    * column. The aux variable's OWN axis order drives the strides, so a
+    * transposed `lon(x,y)` decodes correctly: it is matched by axis
+    * identity where the aux and the data axes both have one, otherwise
+    * by shape against (ny, nx), a square grid taking conventional (y, x)
+    * order. Named skips: non-geographic aux names (time bounds, cell
+    * measures, scalar coords) and aux grids over other axes — the long
+    * row model carries geography, not arbitrary extra rasters. */
+  private def auxCoords[V](src: CfSource[V], data: V,
+                           y: (Option[Long], Int), x: (Option[Long], Int)): Seq[AuxCoord] = {
+    val (yId, nY) = y
+    val (xId, nX) = x
+    listedCoords(src, data).flatMap { nm =>
+      src.lookup(data, nm).filter(src.shape(_).size == 2).flatMap { v =>
+        val u = src.text(v, "units").getOrElse("")
         val ln = nm.toLowerCase
         val outCol =
           if (ln.startsWith("lat") || u.startsWith("degrees_north")) Some("lat")
           else if (ln.startsWith("lon") || u.startsWith("degrees_east")) Some("lon")
           else None
         outCol.flatMap { c =>
-          val sh = f.shape(v).map(_.toInt)
-          if (v.dimIds == Seq(yDim, xDim))
-            Some(AuxCoord(c, readValues(f, v), sh(1), 1))
-          else if (v.dimIds == Seq(xDim, yDim))
-            Some(AuxCoord(c, readValues(f, v), 1, sh(1)))
-          else None
+          val sh = src.shape(v)
+          val ids = src.axisIds(v)
+          val yMajor: Option[Boolean] =
+            if ((yId +: xId +: ids).forall(_.isDefined))
+              if (ids == Seq(yId, xId)) Some(true)
+              else if (ids == Seq(xId, yId)) Some(false)
+              else None
+            else if (sh == Seq(nY, nX)) Some(true)
+            else if (sh == Seq(nX, nY)) Some(false)
+            else None
+          yMajor.filter(m => sh == (if (m) Seq(nY, nX) else Seq(nX, nY))).map { m =>
+            if (m) AuxCoord(c, src.values(v), sh(1), 1)
+            else AuxCoord(c, src.values(v), 1, sh(1))
+          }
         }
       }
     }.distinctBy(_.name).sortBy(_.name) // canonical column order: lat, lon
   }
 
-  /** Shared long-frame builder for both container formats (classic here,
-    * HDF5 in [[NetCdf4]]): walk the raw row-major values with the
-    * caller-resolved axis strides, apply CF packing/fill/time semantics,
-    * and return the pipeline's `(collection, parameter, time, x, y,
-    * value)` frame. */
   /** One 2-D auxiliary coordinate (CF `coordinates` attribute, e.g. a
     * curvilinear grid's `lat(y,x)` / `lon(y,x)`): an extra double output
     * column `name` whose value at output cell (y, x) is
     * `vals(y*yStride + x*xStride)` — the caller resolves the aux
     * variable's own axis order into the strides. */
-  private[sources] case class AuxCoord(name: String, vals: Array[Double],
-                                       yStride: Int, xStride: Int)
+  private case class AuxCoord(name: String, vals: Array[Double],
+                              yStride: Int, xStride: Int)
 
-  private[sources] def cubeFrame(
+  /** Long-frame builder: walk the raw row-major values with the resolved
+    * axis strides, apply CF packing/fill/time semantics, and return the
+    * pipeline's `(collection, parameter, time, x, y, value)` frame. */
+  private def cubeFrame(
       spark: SparkSession, collection: String, parameter: String,
       timeVals: Array[Double], yVals: Array[Double], xVals: Array[Double],
       raw: Array[Double], tStride: Int, yStride: Int, xStride: Int,
@@ -562,6 +635,29 @@ object NetCdf {
     * path already does. For corpus-scale rasters use the partitioned
     * parquet or COG band sinks instead. */
   def encodeCube(df: DataFrame, parameter: String, version: Int = 2): Array[Byte] = {
+    val CubeGrid(times, ys, xs, grid) = cubeGrid(df)
+    write(
+      dims = Seq("time" -> 0L, "y" -> ys.length.toLong, "x" -> xs.length.toLong),
+      gattrs = Seq("Conventions" -> "CF-1.8"),
+      vars = Seq(
+        WriteVar("time", Seq("time"), NcDouble,
+          Seq("units" -> "seconds since 1970-01-01 00:00:00"),
+          times.map(_ / 1000.0)),
+        WriteVar("y", Seq("y"), NcDouble, Seq("units" -> "degrees_north"), ys),
+        WriteVar("x", Seq("x"), NcDouble, Seq("units" -> "degrees_east"), xs),
+        WriteVar(parameter, Seq("time", "y", "x"), NcDouble, Nil, grid)),
+      version = version,
+      numRecs = times.length.toLong)
+  }
+
+  /** One parameter's long frame `(time, x, y, value)` collected into sorted
+    * epoch-millisecond times, sorted y and x coordinates, and the row-major
+    * (time, y, x) grid both containers' `encodeCube` write — NaN where a
+    * cell is absent or null. */
+  private[sources] case class CubeGrid(
+      times: Array[Long], ys: Array[Double], xs: Array[Double], grid: Array[Double])
+
+  private[sources] def cubeGrid(df: DataFrame): CubeGrid = {
     val rows = df.select(col("time"), col("x"), col("y"), col("value")).collect()
     require(rows.nonEmpty, "empty cube")
     val times = rows.map(_.getTimestamp(0).getTime).distinct.sorted
@@ -576,18 +672,7 @@ object NetCdf {
         xs.length + xIdx(r.getDouble(1))
       grid(at) = if (r.isNullAt(3)) Double.NaN else r.getDouble(3)
     }
-    write(
-      dims = Seq("time" -> 0L, "y" -> ys.length.toLong, "x" -> xs.length.toLong),
-      gattrs = Seq("Conventions" -> "CF-1.8"),
-      vars = Seq(
-        WriteVar("time", Seq("time"), NcDouble,
-          Seq("units" -> "seconds since 1970-01-01 00:00:00"),
-          times.map(_ / 1000.0)),
-        WriteVar("y", Seq("y"), NcDouble, Seq("units" -> "degrees_north"), ys),
-        WriteVar("x", Seq("x"), NcDouble, Seq("units" -> "degrees_east"), xs),
-        WriteVar(parameter, Seq("time", "y", "x"), NcDouble, Nil, grid)),
-      version = version,
-      numRecs = times.length.toLong)
+    CubeGrid(times, ys, xs, grid)
   }
 
   /** CF time units: `<seconds|minutes|hours|days> since <date[ time]>` →

@@ -58,8 +58,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     (leaf names matching none of time/y/x) still decodes with the
   *     right axes; `REFERENCE_LIST` (vlen of compound) keeps its named
   *     skip, and files without `DIMENSION_LIST` fall back to
-  *     coordinate names + shape matching, the same convention
-  *     [[NetCdf.decodeCube]] applies.
+  *     coordinate names + shape matching; every CF rule after that is
+  *     the shared [[NetCdf.decodeCf]].
   * NESTED GROUPS are traversed (r18): a grouped product's variable
   * reads under its path ("grp/var", xarray's group addressing minus
   * the leading slash), for both v1 symbol-table and latest-format
@@ -1888,55 +1888,25 @@ object NetCdf4 {
 
   // -- CF cube decode → long-format DataFrame -------------------------
 
-  private val TimeNames = Set("time", "t")
-  private val XNames = Set("x", "lon", "longitude")
-  private val YNames = Set("y", "lat", "latitude")
-  private def coordNames = TimeNames ++ XNames ++ YNames
-  // nested-group names are path-prefixed ("fc/temp") — CF-name matching
-  // goes by the LEAF segment, so a grouped cube's variables and
-  // coordinates resolve exactly like a flat one's
-  private def leafName(n: String): String =
-    n.substring(n.lastIndexOf('/') + 1).toLowerCase
-
   /** Decode staged NetCDF-4 cube bytes to the pipeline's long format —
-    * schema- and semantics-identical to [[NetCdf.decodeCube]] (shared
-    * [[NetCdf.cubeFrame]] builder): same data-variable selection, CF time
-    * units, packing and fill masking, and the same CF
-    * `coordinates`-attribute handling (2-D lat/lon auxiliary coordinates
-    * become extra `lat`/`lon` columns). Axis positions resolve through
-    * the data variable's `DIMENSION_LIST` dimension scales where present
+    * schema- and semantics-identical to [[NetCdf.decodeCube]]: every CF
+    * rule is the shared [[NetCdf.decodeCf]]. This container supplies the
+    * HDF5 reading and, per axis of the data variable, its coordinate:
+    * the `DIMENSION_LIST` dimension scale where the variable carries one
     * (r19 — xarray's semantics, covering renamed/phony/transposed
-    * coords), else by matching coordinate-dataset lengths against the
+    * coords), else a coordinate found by CF name — inside the variable's
+    * own group first — and placed by matching its length against the
     * data shape (conventional (time, y, x) order on ties). */
   def decodeCube(
       spark: SparkSession, collection: String, parameter: String,
       bytes: Array[Byte]): DataFrame = {
     val f = parse(bytes)
-    // variables listed in any CF `coordinates` attribute are coordinates,
-    // not data — a 2-D lat(y,x) must never be picked as the data variable
-    val auxListed = f.datasets.flatMap(_.attr("coordinates"))
-      .flatMap(_.text.trim.split("\\s+")).map(_.toLowerCase).toSet
-    val gridded = f.datasets.filter(d =>
-      !coordNames.contains(leafName(d.name)) &&
-        !auxListed.contains(leafName(d.name)) && d.shape.size >= 2)
-    require(gridded.nonEmpty, "no gridded data variable in NetCDF-4 stream")
-    def isParam(v: H5Dataset): Boolean =
-      v.name.equalsIgnoreCase(parameter) || leafName(v.name) == parameter.toLowerCase
-    gridded.find(isParam).foreach { v =>
-      require(v.shape.size <= 3,
-        s"variable '$parameter' has rank ${v.shape.size}; decodeCube " +
-          "supports rank 2 (y,x) and rank 3 (time,y,x)")
-    }
-    val candidates = gridded.filter(_.shape.size <= 3)
-    require(candidates.nonEmpty,
-      s"only rank-${gridded.map(_.shape.size).max} data variables " +
-        "present; decodeCube supports rank 2 (y,x) and rank 3 (time,y,x)")
-    val data = candidates
-      .sortBy(v => (if (isParam(v)) 0 else 1, -v.shape.size))
-      .head
-    val rank = data.shape.size
-    val shape = data.shape.map(_.toInt)
-
+    val byAddr = f.datasets.map(d => d.headerAddr -> d).toMap
+    def groupPrefix(v: H5Dataset): String = v.name.substring(0, v.name.lastIndexOf('/') + 1)
+    // the per-axis scale addresses of a vlen-of-object-reference
+    // DIMENSION_LIST attribute, when it has one element per axis
+    def dimList(v: H5Dataset): Option[Seq[Option[Long]]] =
+      v.attr("DIMENSION_LIST").filter(_.refs.size == v.shape.size).map(_.refs.map(_.headOption))
     // netCDF-4 writes a phony dimension-scale dataset for every dim
     // that has no coordinate variable; its values are meaningless, so
     // the axis falls back to an index coordinate — xarray's behavior.
@@ -1944,167 +1914,64 @@ object NetCdf4 {
       d.attr("NAME").exists(_.text.startsWith(
         "This is a netCDF dimension but not a netCDF variable"))
 
-    // Axis resolution, DIMENSION_LIST first (xarray's dimension-scale
-    // semantics, ingestor.py:200 `xarray.open_dataset`): when the data
-    // variable carries the vlen-of-object-reference attribute, axis i's
-    // coordinate IS the dimension-scale dataset its i-th element
-    // references — whatever the scale is NAMED, which is exactly the
-    // shape (renamed coords) name matching cannot see. Classification
-    // of which referenced axis is time/y/x goes by leaf name or CF
-    // units (" since " / degrees_east / degrees_north), then falls to
-    // conventional (time, y, x) position on unclassifiable scales.
-    val dimScales: Option[Seq[Option[H5Dataset]]] =
-      data.attr("DIMENSION_LIST").filter(_.refs.size == rank).map { a =>
-        val byAddr = f.datasets.map(d => d.headerAddr -> d).toMap
-        val scales = a.refs.map(_.headOption.flatMap(byAddr.get).filterNot(phony))
-        scales.zipWithIndex.foreach { case (ds, i) =>
-          ds.foreach(sc => require(
-            sc.shape.size == 1 && sc.shape.head == shape(i),
-            s"DIMENSION_LIST scale '${sc.name}' shape ${sc.shape.mkString("x")} " +
-              s"does not match axis $i of data shape ${shape.mkString("x")}"))
-        }
-        scales
-      }
-    val (tPos, yPos, xPos, timeDs, yDs, xDs) = dimScales match {
-      case Some(scales) =>
-        def unitsOf(d: H5Dataset) = d.attr("units").map(_.text).getOrElse("")
-        def isTime(d: H5Dataset) =
-          TimeNames.contains(leafName(d.name)) || unitsOf(d).contains(" since ")
-        def isX(d: H5Dataset) =
-          XNames.contains(leafName(d.name)) || unitsOf(d).startsWith("degrees_east")
-        def isY(d: H5Dataset) =
-          YNames.contains(leafName(d.name)) || unitsOf(d).startsWith("degrees_north")
-        val tP =
-          if (rank == 3)
-            Some(scales.indexWhere(_.exists(isTime)) match {
-              // no time-classifiable scale: take the first axis whose
-              // scale is NOT X/Y-classified rather than blindly axis 0 —
-              // a (y, x, time) cube whose time scale is renamed and
-              // unitless must not map latitudes into timestamps
-              case -1 => (0 until rank).find(i =>
-                  !scales(i).exists(d => isX(d) || isY(d))).getOrElse(0)
-              case i => i
-            })
-          else None
-        val rest = (0 until rank).filterNot(tP.contains)
-        // an X-classified scale pins x; else the LAST non-Y axis is x
-        // (conventional row-major (…, y, x) order) — so a transposed
-        // (x, y) grid with classified scales decodes correctly too
-        val xP = rest.find(i => scales(i).exists(isX))
-          .orElse(rest.reverse.find(i => !scales(i).exists(isY)))
-          .getOrElse(rest.last)
-        val yP = rest.filterNot(_ == xP).head
-        (tP, yP, xP, tP.flatMap(scales(_)), scales(yP), scales(xP))
-      case None =>
-        // coordinates resolve inside the data variable's own group
-        // first (xarray's group= shape: coords live with their
-        // variables), then fall back to any group — root-level shared
-        // coords included
-        val groupPrefix = data.name.substring(0, data.name.lastIndexOf('/') + 1)
-        def coord(names: Set[String]): Option[H5Dataset] =
-          f.datasets.find(d => d.shape.size == 1 &&
-              d.name.startsWith(groupPrefix) && names.contains(leafName(d.name)))
-            .orElse(f.datasets.find(d =>
-              d.shape.size == 1 && names.contains(leafName(d.name))))
-        val timeDs0 = if (rank == 3) coord(TimeNames) else None
-        val yDs0 = coord(YNames)
-        val xDs0 = coord(XNames)
+    NetCdf.decodeCf(spark, collection, parameter, new NetCdf.CfSource[H5Dataset] {
+      def variables: Seq[H5Dataset] = f.datasets
+      def name(v: H5Dataset): String = v.name
+      def shape(v: H5Dataset): Seq[Int] = v.shape.map(_.toInt)
+      def text(v: H5Dataset, attr: String): Option[String] = v.attr(attr).map(_.text)
+      def num(v: H5Dataset, attr: String): Option[Double] = v.attr(attr).flatMap(_.first)
+      def values(v: H5Dataset): Array[Double] = readValues(f, v)
+      def axisIds(v: H5Dataset): Seq[Option[Long]] =
+        dimList(v).getOrElse(v.shape.map(_ => None))
+      def lookup(data: H5Dataset, name: String): Option[H5Dataset] =
+        f.datasets.find(_.name == groupPrefix(data) + name)
+          .orElse(f.datasets.find(d => NetCdf.leafName(d.name) == name.toLowerCase))
 
-        // Axis positions: every permutation consistent with the real
-        // coords' lengths, preferring conventional (time, y, x) order —
-        // shape ties (e.g. a square grid) resolve conventionally rather
-        // than failing.
-        val axes: Seq[(Option[H5Dataset], Int)] = // (coord, conventional position)
-          (timeDs0, yDs0, xDs0) match {
-            case _ if rank == 2 => Seq((yDs0, 0), (xDs0, 1))
-            case _ => Seq((timeDs0, 0), (yDs0, 1), (xDs0, 2))
+      def axes(v: H5Dataset): Seq[NetCdf.CfAxis[H5Dataset]] = {
+        val shape = this.shape(v)
+        dimList(v) match {
+          // axis i's coordinate IS the dimension-scale dataset its i-th
+          // reference names — whatever the scale is NAMED, which is
+          // exactly the shape (renamed coords) name matching cannot see
+          case Some(refs) => refs.zipWithIndex.map { case (ref, i) =>
+            val scale = ref.flatMap(byAddr.get).filterNot(phony)
+            scale.foreach(sc => require(
+              sc.shape.size == 1 && sc.shape.head == shape(i),
+              s"DIMENSION_LIST scale '${sc.name}' shape ${sc.shape.mkString("x")} " +
+                s"does not match axis $i of data shape ${shape.mkString("x")}"))
+            NetCdf.CfAxis(scale.fold("")(_.name), scale, ref)
           }
-        val perm = (0 until rank).permutations
-          .map(ps => ps.zip(axes))
-          .find(_.forall { case (pos, (ds, conv)) =>
-            ds.forall(_.shape.head == shape(pos)) && (ds.nonEmpty || pos == conv)
-          })
-          .getOrElse(throw new IllegalArgumentException(
-            s"coordinate lengths do not match data shape ${shape.mkString("x")}"))
-          .map(_._1)
-        if (rank == 2) (None, perm(0), perm(1), None, yDs0, xDs0)
-        else (Some(perm(0)), perm(1), perm(2), timeDs0, yDs0, xDs0)
-    }
-
-    // CF `coordinates` auxiliary coordinates — the [[NetCdf.decodeCube]]
-    // dual (xarray attaches these as non-dimension coords,
-    // ingestor.py:200): a curvilinear native-CRS cube — exactly what a
-    // `harmonie_*` grid looks like before the reference reprojects it —
-    // carries 2-D lat(y,x)/lon(y,x) beside its 1-D projection coords.
-    // Each listed variable that is a 2-D grid over the (y, x) axes
-    // becomes an extra `lat`/`lon` output column. Axis order resolves
-    // through the aux variable's own DIMENSION_LIST where present
-    // (exact), else by shape against (ny, nx) — square grids default to
-    // conventional (y, x) order. Named skips: non-geographic aux names
-    // and grids whose shape matches neither order.
-    val aux: Seq[NetCdf.AuxCoord] = {
-      val listed = data.attr("coordinates").map(_.text.trim).filter(_.nonEmpty)
-        .map(_.split("\\s+").toSeq).getOrElse(Seq.empty)
-      val groupPrefix = data.name.substring(0, data.name.lastIndexOf('/') + 1)
-      val byAddr = f.datasets.map(d => d.headerAddr -> d).toMap
-      val nYd = shape(yPos); val nXd = shape(xPos)
-      listed.flatMap { nm =>
-        f.datasets.find(_.name == groupPrefix + nm)
-          .orElse(f.datasets.find(d => leafName(d.name) == nm.toLowerCase))
-          .filter(_.shape.size == 2).flatMap { v =>
-            val u = v.attr("units").map(_.text).getOrElse("")
-            val ln = nm.toLowerCase
-            val outCol =
-              if (ln.startsWith("lat") || u.startsWith("degrees_north")) Some("lat")
-              else if (ln.startsWith("lon") || u.startsWith("degrees_east")) Some("lon")
-              else None
-            outCol.flatMap { c =>
-              val sh = v.shape.map(_.toInt)
-              val yMajor: Option[Boolean] =
-                v.attr("DIMENSION_LIST").filter(_.refs.size == 2).flatMap { a =>
-                  val s0 = a.refs.head.headOption.flatMap(byAddr.get).map(_.headerAddr)
-                  if (s0.isDefined && s0 == yDs.map(_.headerAddr)) Some(true)
-                  else if (s0.isDefined && s0 == xDs.map(_.headerAddr)) Some(false)
-                  else None
-                }.orElse {
-                  if (sh == Seq(nYd, nXd)) Some(true) // square: conventional
-                  else if (sh == Seq(nXd, nYd)) Some(false)
-                  else None
-                }
-              yMajor
-                .filter(m => sh == (if (m) Seq(nYd, nXd) else Seq(nXd, nYd)))
-                .map {
-                  case true  => NetCdf.AuxCoord(c, readValues(f, v), sh(1), 1)
-                  case false => NetCdf.AuxCoord(c, readValues(f, v), 1, sh(1))
-                }
+          case None =>
+            // coordinates resolve inside the data variable's own group
+            // first (xarray's group= shape: coords live with their
+            // variables), then fall back to any group — root-level
+            // shared coords included
+            def coord(names: Set[String]): Option[H5Dataset] =
+              f.datasets.find(d => d.shape.size == 1 &&
+                  d.name.startsWith(groupPrefix(v)) && names.contains(NetCdf.leafName(d.name)))
+                .orElse(f.datasets.find(d =>
+                  d.shape.size == 1 && names.contains(NetCdf.leafName(d.name))))
+            // in conventional (time, y, x) order
+            val coords =
+              (if (shape.size == 3) Seq(coord(NetCdf.TimeNames)) else Nil) ++
+                Seq(coord(NetCdf.YNames), coord(NetCdf.XNames))
+            // Axis positions: the first permutation consistent with the
+            // found coords' lengths, preferring conventional order —
+            // shape ties (e.g. a square grid) resolve conventionally
+            // rather than failing.
+            val perm = shape.indices.permutations
+              .find(_.zip(coords.zipWithIndex).forall { case (pos, (ds, conv)) =>
+                ds.forall(_.shape.head == shape(pos)) && (ds.nonEmpty || pos == conv)
+              })
+              .getOrElse(throw new IllegalArgumentException(
+                s"coordinate lengths do not match data shape ${shape.mkString("x")}"))
+            val atPos = perm.zip(coords).toMap
+            shape.indices.map { i =>
+              NetCdf.CfAxis(atPos(i).fold("")(_.name), atPos(i), atPos(i).map(_.headerAddr))
             }
-          }
-      }.distinctBy(_.name).sortBy(_.name) // canonical column order: lat, lon
-    }
-
-    val strides = Array.fill(rank)(1)
-    var s = rank - 2
-    while (s >= 0) { strides(s) = strides(s + 1) * shape(s + 1); s -= 1 }
-
-    def vals(ds: Option[H5Dataset], pos: Int): Array[Double] =
-      ds.map(readValues(f, _)).getOrElse(Array.tabulate(shape(pos))(_.toDouble))
-    val timeVals = tPos.map(p => vals(timeDs, p)).getOrElse(Array(0.0))
-    val yVals = vals(yDs, yPos)
-    val xVals = vals(xDs, xPos)
-
-    val toEpochSec: Double => Double =
-      timeDs.flatMap(_.attr("units")).map(_.text) match {
-        case Some(u) if u.contains(" since ") => NetCdf.cfTimeToEpochSeconds(u)
-        case _ => identity
+        }
       }
-    val scale = data.attr("scale_factor").flatMap(_.first).getOrElse(1.0)
-    val offset = data.attr("add_offset").flatMap(_.first).getOrElse(0.0)
-    val fill = data.attr("_FillValue").orElse(data.attr("missing_value")).flatMap(_.first)
-
-    NetCdf.cubeFrame(spark, collection, parameter, timeVals, yVals, xVals,
-      readValues(f, data),
-      tPos.map(strides(_)).getOrElse(0), strides(yPos), strides(xPos),
-      scale, offset, fill, toEpochSec, aux)
+    })
   }
 
   // -- writer (fixture + sink side) -----------------------------------
@@ -3417,21 +3284,7 @@ object NetCdf4 {
     * forms decode identically (NetCdf4Spec pins the parity). */
   def encodeCube(df: DataFrame, parameter: String,
                  chunked: Boolean = false, latest: Boolean = false): Array[Byte] = {
-    import org.apache.spark.sql.functions.col
-    val rows = df.select(col("time"), col("x"), col("y"), col("value")).collect()
-    require(rows.nonEmpty, "empty cube")
-    val times = rows.map(_.getTimestamp(0).getTime).distinct.sorted
-    val xs = rows.map(_.getDouble(1)).distinct.sorted
-    val ys = rows.map(_.getDouble(2)).distinct.sorted
-    val tIdx = times.zipWithIndex.toMap
-    val xIdx = xs.zipWithIndex.toMap
-    val yIdx = ys.zipWithIndex.toMap
-    val grid = Array.fill(times.length * ys.length * xs.length)(Double.NaN)
-    rows.foreach { r =>
-      val at = (tIdx(r.getTimestamp(0).getTime) * ys.length + yIdx(r.getDouble(2))) *
-        xs.length + xIdx(r.getDouble(1))
-      grid(at) = if (r.isNullAt(3)) Double.NaN else r.getDouble(3)
-    }
+    val NetCdf.CubeGrid(times, ys, xs, grid) = NetCdf.cubeGrid(df)
     val (chunk, filters) =
       if (chunked) {
         // (k, ny, nx) chunks with k sized so the chunk grid stays within

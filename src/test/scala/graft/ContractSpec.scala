@@ -48,4 +48,20 @@ class ContractSpec extends SparkSpec {
     finally walk.close()
     assert(builders.isEmpty, s"sessions built outside graft.Session: $builders")
   }
+
+  test("CF packing attributes are read in one file under src/main/scala") {
+    // one CF cube decoder serves both NetCDF containers; a second file
+    // naming these attributes is a second copy of the CF rules
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"$root not found from ${sys.props("user.dir")}")
+    val walk = java.nio.file.Files.walk(root)
+    val readers = try walk.iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .filter { p =>
+        val src = java.nio.file.Files.readString(p)
+        src.contains("\"scale_factor\"") || src.contains("\"missing_value\"")
+      }
+    finally walk.close()
+    assert(readers.size <= 1, s"CF packing attributes read in several files: $readers")
+  }
 }

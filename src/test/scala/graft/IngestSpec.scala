@@ -37,6 +37,17 @@ class IngestSpec extends SparkSpec {
 
   private val cfg = IngestConfig(bbox = (11.5, 55.5, 12.2, 56.1))
 
+  /** Classic NetCDF cube bytes holding `points` — (UTC "yyyy-MM-dd
+    * HH:mm:ss" time, x, y, value) — the fetch fixtures' payload. */
+  private def netcdf(points: Seq[(String, Double, Double, Double)]): Array[Byte] = {
+    import spark.implicits._
+    val utc = points.map { case (t, x, y, v) =>
+      (java.sql.Timestamp.from(java.time.LocalDateTime.parse(t.replace(' ', 'T'))
+        .toInstant(java.time.ZoneOffset.UTC)), x, y, v)
+    }
+    graft.sources.NetCdf.encodeCube(utc.toDF("time", "x", "y", "value"), "value")
+  }
+
   test("request plan builds EDR urls with the crs branch (R2/R7)") {
     val plan = Ingest.requestPlan(spark,
       cfg.copy(collection = "harmonie_dini_sf", parameters = Seq("wind-speed", "temperature")))
@@ -113,14 +124,14 @@ class IngestSpec extends SparkSpec {
     import graft.operators.Fetch
     val tmp = java.nio.file.Files.createTempDirectory("graft_fetch")
     val out = tmp.resolve("out").toString
-    def fixture(name: String, rows: Seq[String]): String = {
+    def fixture(name: String, points: Seq[(String, Double, Double, Double)]): String = {
       val f = tmp.resolve(name)
-      java.nio.file.Files.write(f, ("time,x,y,value" +: rows).mkString("\n").getBytes)
+      java.nio.file.Files.write(f, netcdf(points))
       f.toUri.toString // file:// URL
     }
     val cfg2 = cfg.copy(parameters = Seq("sea-mean-deviation", "wind-speed"))
-    val seaV1 = fixture("sea_v1.csv", Seq("2024-01-01 00:00:00,11.6,55.6,1.5"))
-    val windV1 = fixture("wind_v1.csv", Seq("2024-01-01 00:00:00,11.7,55.7,7.0"))
+    val seaV1 = fixture("sea_v1.nc", Seq(("2024-01-01 00:00:00", 11.6, 55.6, 1.5)))
+    val windV1 = fixture("wind_v1.nc", Seq(("2024-01-01 00:00:00", 11.7, 55.7, 7.0)))
 
     // round 1: both parameters fetch OK → both write
     val (mf1, o1) = Fetch.fetchAndIngest(spark, cfg2,
@@ -130,10 +141,10 @@ class IngestSpec extends SparkSpec {
     // round 2: sea's fetch FAILS (missing file); wind succeeds with a new
     // value for the same time band (same partition → truncated + replaced)
     // plus a new time band (fresh partition)
-    val windV2 = fixture("wind_v2.csv", Seq(
-      "2024-01-01 00:00:00,11.7,55.7,9.0",
-      "2024-01-01 06:00:00,11.7,55.7,9.5"))
-    val badUrl = tmp.resolve("missing.csv").toUri.toString
+    val windV2 = fixture("wind_v2.nc", Seq(
+      ("2024-01-01 00:00:00", 11.7, 55.7, 9.0),
+      ("2024-01-01 06:00:00", 11.7, 55.7, 9.5)))
+    val badUrl = tmp.resolve("missing.nc").toUri.toString
     val (mf2, o2) = Fetch.fetchAndIngest(spark, cfg2,
       Seq("sea-mean-deviation" -> badUrl, "wind-speed" -> windV2), out)
     val byParam = o2.map(o => o.parameter -> o.ok).toMap
@@ -210,10 +221,10 @@ class IngestSpec extends SparkSpec {
   }
 
   test("NetCDF-4/HDF5 bytes are skipped at the fetch boundary (R17)") {
-    // the DMI API can serve NetCDF-4; the classic codec can't decode it.
-    // R17 semantics: the parameter is SKIPPED at the fetch boundary (error
-    // recorded, job completes, old partitions intact) — never a mid-job
-    // decode throw.
+    // the DMI API can serve NetCDF-4; an HDF5 container outside the
+    // NetCdf4 subset codec (here: a bare superblock magic) is SKIPPED at
+    // the fetch boundary (error recorded, job completes, old partitions
+    // intact) — never a mid-job decode throw.
     import graft.operators.Fetch
     val tmp = java.nio.file.Files.createTempDirectory("graft_hdf5")
     val out = tmp.resolve("out").toString
@@ -223,12 +234,11 @@ class IngestSpec extends SparkSpec {
       f.toUri.toString
     }
     val cfg2 = cfg.copy(parameters = Seq("sea-mean-deviation", "wind-speed"))
-    val seaV1 = fixture("sea_v1.csv",
-      "time,x,y,value\n2024-01-01 00:00:00,11.6,55.6,1.5".getBytes)
+    val seaV1 = fixture("sea_v1.nc", netcdf(Seq(("2024-01-01 00:00:00", 11.6, 55.6, 1.5))))
     // round 1: both parameters publish classic-decodable output
     val (mf1, o1) = Fetch.fetchAndIngest(spark, cfg2,
-      Seq("sea-mean-deviation" -> seaV1, "wind-speed" -> fixture("wind_v1.csv",
-        "time,x,y,value\n2024-01-01 00:00:00,11.7,55.7,7.0".getBytes)), out)
+      Seq("sea-mean-deviation" -> seaV1, "wind-speed" -> fixture("wind_v1.nc",
+        netcdf(Seq(("2024-01-01 00:00:00", 11.7, 55.7, 7.0))))), out)
     assert(o1.forall(_.ok) && mf1.get.count() == 2)
     // round 2: sea now serves an HDF5 container (real HDF5 superblock
     // magic + filler), wind serves a new value
@@ -236,8 +246,8 @@ class IngestSpec extends SparkSpec {
       Array[Byte](0x89.toByte, 'H', 'D', 'F', '\r', '\n', 0x1a, '\n') ++
         Array.fill[Byte](64)(0))
     val (mf2, o2) = Fetch.fetchAndIngest(spark, cfg2,
-      Seq("sea-mean-deviation" -> hdf5, "wind-speed" -> fixture("wind_v2.csv",
-        "time,x,y,value\n2024-01-01 00:00:00,11.7,55.7,9.0".getBytes)), out)
+      Seq("sea-mean-deviation" -> hdf5, "wind-speed" -> fixture("wind_v2.nc",
+        netcdf(Seq(("2024-01-01 00:00:00", 11.7, 55.7, 9.0))))), out)
     // job completed; the HDF5 parameter is a recorded per-parameter skip
     val sea2 = o2.find(_.parameter == "sea-mean-deviation").get
     assert(!sea2.ok && sea2.result.left.exists(_.contains("NetCDF-4/HDF5")),
@@ -252,26 +262,65 @@ class IngestSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 
+  test("a junk 200 body (HTML error page) is a recorded skip, not a silent success (R17)") {
+    // a gateway or proxy error page served with status 200 reaches decode
+    // as bytes of neither container: the parameter must be recorded as
+    // skipped with its round-1 partitions untouched, like a failed fetch
+    import graft.operators.Fetch
+    val tmp = java.nio.file.Files.createTempDirectory("graft_junk")
+    val out = tmp.resolve("out").toString
+    def fixture(name: String, bytes: Array[Byte]): String = {
+      val f = tmp.resolve(name)
+      java.nio.file.Files.write(f, bytes)
+      f.toUri.toString
+    }
+    val cfg2 = cfg.copy(parameters = Seq("sea-mean-deviation", "wind-speed"))
+    // round 1: both parameters publish valid NetCDF cubes
+    val (mf1, o1) = Fetch.fetchAndIngest(spark, cfg2, Seq(
+      "sea-mean-deviation" -> fixture("sea_v1.nc",
+        netcdf(Seq(("2024-01-01 00:00:00", 11.6, 55.6, 1.5)))),
+      "wind-speed" -> fixture("wind_v1.nc",
+        netcdf(Seq(("2024-01-01 00:00:00", 11.7, 55.7, 7.0))))), out)
+    assert(o1.forall(_.ok) && mf1.get.count() == 2)
+    // round 2: sea's endpoint serves an HTML error page; wind a new value
+    val html = fixture("sea_v2.html",
+      "<html><head><title>502 Bad Gateway</title></head><body>upstream error</body></html>"
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val (mf2, o2) = Fetch.fetchAndIngest(spark, cfg2, Seq(
+      "sea-mean-deviation" -> html,
+      "wind-speed" -> fixture("wind_v2.nc",
+        netcdf(Seq(("2024-01-01 00:00:00", 11.7, 55.7, 9.0))))), out)
+    val sea2 = o2.find(_.parameter == "sea-mean-deviation").get
+    assert(!sea2.ok && sea2.result.left.exists(_.nonEmpty),
+      s"expected a recorded skip for the junk body, got $sea2")
+    assert(mf2.get.collect().map(_.getString(1)).sameElements(Array("wind-speed")))
+    val back = spark.read.parquet(out)
+    val sea = back.filter(col("parameter") === "sea-mean-deviation").collect()
+    assert(sea.length == 1 && sea(0).getAs[Double]("value") == 1.5)
+    assert(back.filter(col("parameter") === "wind-speed").head()
+      .getAs[Double]("value") == 9.0)
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+  }
+
   test("full reference-pipeline parity: fetch -> decode -> long -> parquet + COG bands + manifest") {
     import graft.operators.Fetch
     import graft.sources.GeoTiff
     val tmp = java.nio.file.Files.createTempDirectory("graft_e2e")
-    // a 2-time x 2x2-cell CSV cube fixture per parameter (the NetCDF
-    // stand-in; same long shape the edge decode stages)
+    // a 2-time x 2x2-cell NetCDF cube fixture per parameter
     def cube(name: String, base: Double): String = {
-      val rows = for {
+      val points = for {
         t <- Seq("2024-01-01 00:00:00", "2024-01-01 06:00:00")
         iy <- 0 until 2; ix <- 0 until 2
-      } yield s"$t,${11.6 + ix * 0.1},${55.6 + iy * 0.1},${base + ix + 10 * iy}"
+      } yield (t, 11.6 + ix * 0.1, 55.6 + iy * 0.1, base + ix + 10 * iy)
       val f = tmp.resolve(name)
-      java.nio.file.Files.write(f, ("time,x,y,value" +: rows).mkString("\n").getBytes)
+      java.nio.file.Files.write(f, netcdf(points))
       f.toUri.toString
     }
     val cfg2 = cfg.copy(parameters = Seq("sea-mean-deviation", "wind-speed"))
     val out = tmp.resolve("parquet").toString
     val (manifest, outcomes) = Fetch.fetchAndIngest(spark, cfg2,
-      Seq("sea-mean-deviation" -> cube("sea.csv", 0.0),
-        "wind-speed" -> cube("wind.csv", 100.0)), out)
+      Seq("sea-mean-deviation" -> cube("sea.nc", 0.0),
+        "wind-speed" -> cube("wind.nc", 100.0)), out)
     assert(outcomes.forall(_.ok))
     // manifest: {time_key -> public url} per parameter, like forecasts.json
     val mf = manifest.get.collect().map(r => r.getString(1) -> r.getString(2)).toMap

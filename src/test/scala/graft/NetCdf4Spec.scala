@@ -52,7 +52,7 @@ class NetCdf4Spec extends SparkSpec {
         (if (r.isNullAt(3)) null else r.getDouble(3))
     }.toMap
     assert(keyed(back) == expect) // 11 defined cells + the null hole
-    // schema parity with the CSV stand-in / classic decode
+    // schema parity with the classic decode
     assert(back.columns.toSeq ==
       Seq("collection", "parameter", "time", "x", "y", "value"))
   }
@@ -71,6 +71,62 @@ class NetCdf4Spec extends SparkSpec {
     val hdf5c = NetCdf4.decodeCube(spark, "c", "p",
       NetCdf4.encodeCube(df, "p", chunked = true))
     assert(keyed(hdf5c) == keyed(hdf5))
+
+    // off the encoder's path: stored (time, x, y) with distinct axis
+    // lengths, a fill hole, and curvilinear 2-D lat(y,x)/lon(y,x) listed
+    // in `coordinates` — the classic file resolves axes by dim, the HDF5
+    // one through DIMENSION_LIST scales; both must agree cell for cell
+    val (nT, nX, nY) = (2, 3, 4)
+    val times = Array(0.0, 6.0)
+    val xs = Array.tabulate(nX)(i => 1000.0 * (i + 1))
+    val ys = Array.tabulate(nY)(j => 2000.0 * (j + 1))
+    val vals = Array.tabulate(nT * nX * nY) { k => // value = t*100 + xi*10 + yi
+      if (k == 5) -999.0 else (k / (nX * nY)) * 100.0 + (k / nY % nX) * 10 + k % nY
+    }
+    val lat = Array.tabulate(nY * nX)(k => 55.0 + 0.1 * (k / nX) + 0.01 * (k % nX))
+    val lon = Array.tabulate(nY * nX)(k => 11.0 + 0.2 * (k % nX) + 0.02 * (k / nX))
+    val hours = "hours since 2024-01-01 00:00:00"
+    val dataAttrs = Seq("coordinates" -> "lat lon", "_FillValue" -> -999.0)
+    val classicCurvi = NetCdf.write(
+      dims = Seq("time" -> nT.toLong, "x" -> nX.toLong, "y" -> nY.toLong),
+      gattrs = Nil,
+      vars = Seq(
+        NetCdf.WriteVar("time", Seq("time"), NetCdf.NcDouble, Seq("units" -> hours), times),
+        NetCdf.WriteVar("x", Seq("x"), NetCdf.NcDouble, Nil, xs),
+        NetCdf.WriteVar("y", Seq("y"), NetCdf.NcDouble, Nil, ys),
+        NetCdf.WriteVar("lat", Seq("y", "x"), NetCdf.NcDouble,
+          Seq("units" -> "degrees_north"), lat),
+        NetCdf.WriteVar("lon", Seq("y", "x"), NetCdf.NcDouble,
+          Seq("units" -> "degrees_east"), lon),
+        NetCdf.WriteVar("v", Seq("time", "x", "y"), NetCdf.NcDouble, dataAttrs, vals)))
+    val hdf5Curvi = NetCdf4.write(Seq(
+      NetCdf4.WriteDs("time", Seq(nT.toLong), times, attrs = Seq("units" -> hours)),
+      NetCdf4.WriteDs("x", Seq(nX.toLong), xs),
+      NetCdf4.WriteDs("y", Seq(nY.toLong), ys),
+      NetCdf4.WriteDs("lat", Seq(nY.toLong, nX.toLong), lat,
+        attrs = Seq("units" -> "degrees_north",
+          "DIMENSION_LIST" -> NetCdf4.DimList(Seq("y", "x")))),
+      NetCdf4.WriteDs("lon", Seq(nY.toLong, nX.toLong), lon,
+        attrs = Seq("units" -> "degrees_east",
+          "DIMENSION_LIST" -> NetCdf4.DimList(Seq("y", "x")))),
+      NetCdf4.WriteDs("v", Seq(nT.toLong, nX.toLong, nY.toLong), vals,
+        attrs = dataAttrs :+
+          ("DIMENSION_LIST" -> NetCdf4.DimList(Seq("time", "x", "y"))))))
+    def keyedAux(d: DataFrame) = d.collect().map { r =>
+      (r.getTimestamp(2).getTime, r.getDouble(3), r.getDouble(4)) ->
+        ((if (r.isNullAt(5)) null else r.getDouble(5)), r.getDouble(6), r.getDouble(7))
+    }.toMap
+    val classicDf = NetCdf.decodeCube(spark, "c", "v", classicCurvi)
+    val hdf5Df = NetCdf4.decodeCube(spark, "c", "v", hdf5Curvi)
+    assert(classicDf.columns.toSeq == hdf5Df.columns.toSeq)
+    assert(hdf5Df.columns.toSeq.takeRight(2) == Seq("lat", "lon"))
+    val classicCells = keyedAux(classicDf)
+    assert(classicCells.size == nT * nX * nY)
+    assert(classicCells == keyedAux(hdf5Df))
+    // and the agreed frame is the TRUE one: t=1, xi=2, yi=3
+    val (v, la, lo) = classicCells((6 * 3600L * 1000 + 1704067200000L, 3000.0, 8000.0))
+    assert(v == 123.0 && math.abs(la - 55.32) < 1e-9 && math.abs(lo - 11.46) < 1e-9)
+    assert(classicCells.values.count(_._1 == null) == 1) // the fill hole
   }
 
   test("float32 datasets and CF packing attributes decode like the classic codec") {

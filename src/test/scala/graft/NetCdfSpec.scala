@@ -180,16 +180,21 @@ class NetCdfSpec extends SparkSpec {
     }
   }
 
-  test("decodeAuto sniffs NetCDF magic, rejects HDF5, falls back to CSV") {
+  test("decodeAuto sniffs NetCDF magic, rejects HDF5 and non-NetCDF bytes") {
     val nc = Fetch.decodeAuto(spark, "dkss_if", "sea_mean_deviation", cube(2, recordTime = true))
     assert(nc.count() == 24)
     val hdf5 = Array[Byte](0x89.toByte, 'H', 'D', 'F') ++ Array.fill[Byte](16)(0)
     val err = intercept[IllegalArgumentException](
       Fetch.decodeAuto(spark, "c", "p", hdf5))
     assert(err.getMessage.contains("HDF5"))
-    val csv = "time,x,y,value\n2024-01-01 00:00:00,11.51,55.51,7.5\n".getBytes
-    val df = Fetch.decodeAuto(spark, "dkss_if", "p", csv)
-    assert(df.collect().map(_.getDouble(5)).toSeq == Seq(7.5))
+    // bytes of neither container (the retired CSV stand-in, an empty
+    // body) are rejected by name — there is no fallback decode
+    for (junk <- Seq("time,x,y,value\n2024-01-01 00:00:00,11.51,55.51,7.5\n".getBytes,
+                     Array.emptyByteArray)) {
+      val e = intercept[IllegalArgumentException](
+        Fetch.decodeAuto(spark, "dkss_if", "p", junk))
+      assert(e.getMessage.contains("not a NetCDF stream"), e.getMessage)
+    }
   }
 
   test("encodeCube: encode∘decode is the identity on defined cells (R8 dual)") {
