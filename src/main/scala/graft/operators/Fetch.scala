@@ -32,13 +32,14 @@ object Fetch {
     * skip semantics say an undecodable parameter must be SKIPPED here
     * (error recorded, old partitions preserved), exactly like an HTTP
     * failure, rather than surfacing as a decode throw later in the job.
-    * HDF5 streams inside the [[graft.sources.NetCdf4]] subset (flat
-    * classic-model files — contiguous, compact, or chunked with
-    * deflate/shuffle) pass through to decode; the header-only probe
-    * rejects anything beyond the subset (exotic filters, "latest
-    * format", nested groups, …) with the probe's reason in the skip
-    * message. Returns the rejection message, or None when the bytes
-    * may proceed to decode. */
+    * HDF5 streams inside the [[graft.sources.NetCdf4]] subset (v0-v3
+    * superblocks including the "latest format", nested groups, and
+    * contiguous, compact or chunked layouts with deflate/shuffle/
+    * fletcher32) pass through to decode; the header-only probe rejects
+    * anything beyond the subset (szip and other filters, soft links,
+    * non-leading unlimited extensible-array dims, …) with the probe's
+    * reason in the skip message. Returns the rejection message, or None
+    * when the bytes may proceed to decode. */
   def containerGuard(bytes: Array[Byte]): Option[String] =
     if (graft.sources.NetCdf4.isHdf5(bytes))
       graft.sources.NetCdf4.probe(bytes).left.toOption.map(reason =>

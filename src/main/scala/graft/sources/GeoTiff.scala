@@ -357,19 +357,46 @@ object GeoTiff {
   def decode(bytes: Array[Byte]): Raster = decodeAll(bytes).head
 
   /** Assemble one band's (lon, lat, value) cell list into a regular grid
-    * raster; cells absent from the list become NaN (nodata). */
+    * raster; grid cells absent from the list — a single hole or a whole
+    * nodata column or row — become NaN (nodata). Cells are placed by
+    * position, not by rank: see [[GridAxis]]. */
   def rasterize(cells: Seq[(Double, Double, Double)]): Raster = {
-    val lons = cells.map(_._1).distinct.sorted
-    val lats = cells.map(_._2).distinct.sorted.reverse // row 0 = north
-    val dLon = if (lons.length > 1) (lons.last - lons.head) / (lons.length - 1) else 1.0
-    val dLat = if (lats.length > 1) (lats.head - lats.last) / (lats.length - 1) else 1.0
-    val colOf = lons.zipWithIndex.toMap
-    val rowOf = lats.zipWithIndex.toMap
-    val pixels = Array.fill(lons.length * lats.length)(Float.NaN)
-    cells.foreach { case (lon, lat, v) =>
-      pixels(rowOf(lat) * lons.length + colOf(lon)) = v.toFloat
+    val lon = new GridAxis(cells.map(_._1), "lon")
+    val lat = new GridAxis(cells.map(_._2), "lat")
+    val (width, height) = (lon.maxIndex + 1, lat.maxIndex + 1)
+    require(width.toDouble * height <= Int.MaxValue,
+      s"rasterize: a ${width}x$height grid exceeds one raster")
+    val pixels = Array.fill((width * height).toInt)(Float.NaN)
+    cells.foreach { case (x, y, v) =>
+      val row = lat.maxIndex - lat.index(y) // row 0 = north
+      pixels((row * width + lon.index(x)).toInt) = v.toFloat
     }
-    Raster(lons.length, lats.length, lons.head, lats.head, dLon, dLat, pixels)
+    Raster(width.toInt, height.toInt, lon.min, lat.max, lon.geoStep, lat.geoStep, pixels)
+  }
+
+  /** One raster axis from a band's coordinates. The placement `step` is
+    * the smallest gap between distinct values, and a value sits at index
+    * round((v − min)/step), so a missing column or row keeps every other
+    * cell in place. A value more than 1e-6 of a step off its index means
+    * the coordinates are no regular grid (e.g. an LCC band not regridded
+    * to lon/lat), which rejects by name before any raster is allocated.
+    * The georeference step is (max − min)/maxIndex: on a full regular
+    * grid that is the same double as (max − min)/(n − 1). */
+  private final class GridAxis(coords: Seq[Double], name: String) {
+    private val vs = coords.distinct.sorted.toArray
+    val min: Double = vs(0)
+    val max: Double = vs.last
+    val step: Double =
+      if (vs.length == 1) 1.0 else (1 until vs.length).map(i => vs(i) - vs(i - 1)).min
+    vs.foreach { v =>
+      val x = (v - min) / step
+      require(math.abs(x - math.round(x)) <= 1e-6,
+        s"rasterize: $name $v lies ${x - math.round(x)} steps off the regular grid " +
+          s"of step $step from $min (cells must be grid-aligned)")
+    }
+    def index(v: Double): Long = math.round((v - min) / step)
+    val maxIndex: Long = index(max)
+    val geoStep: Double = if (maxIndex == 0) 1.0 else (max - min) / maxIndex
   }
 
   /** R9+R10+R12 sink: band-split the long format and write one GeoTIFF per
@@ -377,7 +404,8 @@ object GeoTiff {
     * reference's per-band loop distributed. Returns the written manifest.
     * Cells must be grid-aligned (exactly repeating lon/lat doubles —
     * true for any staged cube; reprojected collections go through
-    * Geo.regrid first, the engine-side warp). outDir must be a shared
+    * Geo.regrid first, the engine-side warp); a band off a regular
+    * lon/lat grid fails its task by name ([[rasterize]]). outDir must be a shared
     * filesystem / object-store mount at cluster scale (same contract as
     * any Spark file sink). `bigTiff = true` writes the BigTIFF layout
     * for every band (the reference writes `BIGTIFF=YES` unconditionally,
@@ -403,8 +431,8 @@ object GeoTiff {
           path.toString, raster.width, raster.height, bytes.length.toLong)
       }
       .toDF("collection", "parameter", "time_key", "path", "width", "height", "n_bytes")
-    // run the .tif writes exactly once (every Materialize strategy is
-    // eager); the manifest itself is tiny
+    // run the .tif writes exactly once (Materialize.stage is an eager
+    // local checkpoint); the manifest itself is tiny
     graft.operators.Materialize.stage(written)
   }
 

@@ -26,9 +26,10 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType, Timestam
   * CF conventions a forecast cube actually uses: `scale_factor` /
   * `add_offset` packing, `_FillValue` masking, and `<unit> since <epoch>`
   * time coordinates. NetCDF-4 (HDF5 container, magic `\x89HDF`) is a
-  * different container format: the common flat contiguous-layout shape is
-  * handled by the [[NetCdf4]] subset codec, and anything beyond that
-  * subset is skipped at the fetch boundary
+  * different container format: its superblock v0-v3 files — nested
+  * groups, and contiguous, compact or chunked layouts under every chunk
+  * index — are handled by the [[NetCdf4]] subset codec, and anything
+  * beyond that subset is skipped at the fetch boundary
   * ([[graft.operators.Fetch.containerGuard]]) with R17 semantics.
   *
   * Scale note: decode runs at the edge on a single staged response

@@ -3,6 +3,7 @@ package graft
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.functions._
+import graft.functions.Lcc
 import graft.sources.GeoTiff
 import graft.sources.GeoTiff.Raster
 
@@ -134,6 +135,29 @@ class GeoTiffSpec extends SparkSpec {
     // the hole (ix=2, iy=1 → lat 55.6 → row 2) is the only NaN
     assert(r.pixels(2 * 5 + 2).isNaN)
     assert(r.pixels.count(_.isNaN) == 1)
+    // a whole nodata column (ix = 2) and row (iy = 1) keep the geography:
+    // cells are placed by position, not by rank among the distinct values
+    val gappy = for {
+      iy <- 0 until 4; ix <- 0 until 5
+      if ix != 2 && iy != 1
+    } yield (11.5 + ix * 0.1, 55.5 + iy * 0.1, ix + 10.0 * iy)
+    val g = GeoTiff.rasterize(gappy)
+    assert(g.width == 5 && g.height == 4)
+    assert(math.abs(g.dLon - 0.1) < 1e-9 && math.abs(g.dLat - 0.1) < 1e-9)
+    assert(g.originLon == 11.5 && g.originLat == 55.5 + 3 * 0.1)
+    assert((0 until 4).forall(row => g.pixels(row * 5 + 2).isNaN)) // the column
+    assert((0 until 5).forall(col => g.pixels(2 * 5 + col).isNaN)) // iy 1 = row 2
+    assert(g.pixels(4) == 34.0f && g.pixels(3 * 5 + 3) == 3.0f)
+    assert(g.pixels.count(_.isNaN) == 8)
+    // lon/lat of a regular LCC x/y grid (a harmonie band not regridded)
+    // are no regular lon/lat grid: rejected by name, never misplaced
+    val (x0, y0) = Lcc.forward(56.0, 12.0)
+    val lcc = for { j <- 0 until 4; i <- 0 until 5 } yield {
+      val (lon, lat) = Lcc.inverse(x0 + i * 2500.0, y0 + j * 2500.0)
+      (lon, lat, i + 10.0 * j)
+    }
+    val e = intercept[IllegalArgumentException](GeoTiff.rasterize(lcc))
+    assert(e.getMessage.contains("off the regular grid"), e.getMessage)
   }
 
   test("writeBands/readBands: executor-parallel band split round-trips (R9/R10/R12)") {

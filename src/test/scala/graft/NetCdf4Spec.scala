@@ -210,7 +210,7 @@ class NetCdf4Spec extends SparkSpec {
       val bytes = fixture(filters)
       val f = NetCdf4.parse(bytes)
       val ds = f.dataset("temp").get
-      assert(ds.chunk.nonEmpty)
+      assert(ds.chunk.exists(_.idxType == 0))
       assert(ds.filters.map(_.id) == filters)
       assert(NetCdf4.readValues(f, ds).toSeq == vals.toSeq,
         s"filters=$filters")
@@ -286,6 +286,48 @@ class NetCdf4Spec extends SparkSpec {
     assert(e.getMessage.contains("fletcher32 checksum mismatch"))
   }
 
+  test("per-chunk filter masks: a chunk whose mask skips shuffle reads unshuffled") {
+    // shuffle keeps a chunk's size, so chunk 0 can be patched in place to
+    // its unshuffled bytes; bit 0 of its index entry's filter mask then
+    // says pipeline entry 0 (shuffle) was skipped for that chunk only —
+    // in a v1 chunk B-tree and in a client-1 fixed array
+    import java.nio.{ByteBuffer, ByteOrder}
+    val vals = Array.tabulate(24)(i => i * 1.25 + 0.375)
+    val raw0 = ByteBuffer.allocate(96).order(ByteOrder.LITTLE_ENDIAN)
+    vals.take(12).foreach(raw0.putDouble) // chunk 0 = time step 0
+    val plain0 = raw0.array()
+    val shuffled0 = Array.tabulate(96)(k => plain0((k % 12) * 8 + k / 12))
+    for (latest <- Seq(false, true)) {
+      val bytes = NetCdf4.write(Seq(NetCdf4.WriteDs("v", Seq(2L, 3L, 4L), vals,
+        chunk = Some(Seq(1, 3, 4)), filters = Seq(2))), latest = latest)
+      assert(NetCdf4.parse(bytes).datasets.head.chunk
+        .exists(_.idxType == (if (latest) 3 else 0)), s"latest=$latest")
+      val at = bytes.indexOfSlice(shuffled0)
+      assert(at >= 0 && bytes.indexOfSlice(shuffled0, at + 1) < 0)
+      val patched = bytes.clone()
+      System.arraycopy(plain0, 0, patched, at, 96)
+      // without the mask bit the patched chunk is shuffled back into garbage
+      val unmasked = NetCdf4.parse(patched)
+      assert(NetCdf4.readValues(unmasked, unmasked.datasets.head).toSeq != vals.toSeq)
+      if (!latest) {
+        // the chunk B-tree leaf (node type 1): key 0 = u32 size, u32 mask
+        val tree = patched.indices.find(i => i + 5 <= patched.length &&
+          patched.slice(i, i + 4).sameElements("TREE".getBytes("US-ASCII")) &&
+          patched(i + 4) == 1).get
+        patched(tree + 24 + 4) = 1
+      } else {
+        // FADB element 0 = address(8), size(8), mask(4) after the 14-byte
+        // prefix; two 20-byte elements, then the block checksum
+        val fadb = patched.indexOfSlice("FADB".getBytes("US-ASCII"))
+        patched(fadb + 14 + 16) = 1
+        ByteBuffer.wrap(patched, fadb + 14 + 40, 4).order(ByteOrder.LITTLE_ENDIAN)
+          .putInt(NetCdf4.lookup3(patched, fadb, 14 + 40))
+      }
+      val f = NetCdf4.parse(patched)
+      assert(NetCdf4.readValues(f, f.datasets.head).toSeq == vals.toSeq, s"latest=$latest")
+    }
+  }
+
   test("multi-level chunk btrees read through the recursion path") {
     // the writer emits one leaf, so hand-build a 2-level index: a root
     // (level 1) whose two children are leaves (level 0) addressing one
@@ -316,7 +358,7 @@ class NetCdf4Spec extends SparkSpec {
     out.position(chunk2At); out.putDouble(3.0).putDouble(4.0)
     val ds = NetCdf4.H5Dataset("v", Seq(4L),
       NetCdf4.NumType(float = true, 8, bigEndian = false, signed = true),
-      -1L, 0L, None, Nil, chunk = Some((rootAt.toLong, Seq(2, 8))))
+      -1L, 0L, None, Nil, chunk = Some(NetCdf4.ChunkIndex(0, rootAt.toLong, Seq(2, 8))))
     val f = NetCdf4.H5File(Seq(ds), out.array())
     assert(NetCdf4.readValues(f, ds).toSeq == Seq(1.0, 2.0, 3.0, 4.0))
   }
@@ -413,9 +455,9 @@ class NetCdf4Spec extends SparkSpec {
     cases.foreach { case (chunk, filters, idx4, expectType, filteredSingle) =>
       val f = NetCdf4.parse(fixture(chunk, filters, idx4))
       val ds = f.dataset("temp").get
-      assert(ds.chunk.isEmpty && ds.chunk4.nonEmpty, s"case $chunk/$filters")
-      assert(ds.chunk4.get.idxType == expectType, s"case $chunk/$filters")
-      assert(ds.chunk4.get.singleFiltered.nonEmpty == filteredSingle)
+      assert(ds.chunk.exists(_.idxType != 0), s"case $chunk/$filters")
+      assert(ds.chunk.get.idxType == expectType, s"case $chunk/$filters")
+      assert(ds.chunk.get.singleFiltered.nonEmpty == filteredSingle)
       assert(NetCdf4.readValues(f, ds).toSeq == vals.toSeq,
         s"chunk=$chunk filters=$filters idx4=$idx4")
     }
@@ -432,7 +474,7 @@ class NetCdf4Spec extends SparkSpec {
         latest = true)
       val f = NetCdf4.parse(bytes)
       val ds = f.dataset("temp").get
-      assert(ds.chunk4.exists(_.idxType == 3), s"filters=$filters")
+      assert(ds.chunk.exists(_.idxType == 3), s"filters=$filters")
       assert(NetCdf4.readValues(f, ds).toSeq == vals.toSeq, s"filters=$filters")
       // flip a byte inside the SECOND page's element region — the page's
       // own checksum must reject before any chunk address is trusted
@@ -471,7 +513,7 @@ class NetCdf4Spec extends SparkSpec {
         latest = true)
       val f = NetCdf4.parse(bytes)
       val ds = f.dataset("temp").get
-      assert(ds.chunk4.exists(_.idxType == 5), s"filters=$filters")
+      assert(ds.chunk.exists(_.idxType == 5), s"filters=$filters")
       assert(NetCdf4.readValues(f, ds).toSeq == vals.toSeq, s"filters=$filters")
       // flip a byte inside a leaf record — the leaf checksum must fire
       val lf = bytes.indices.find(i =>
@@ -542,7 +584,7 @@ class NetCdf4Spec extends SparkSpec {
         s"filters=$filters")
       val f = NetCdf4.parse(bytes)
       val ds = f.dataset("temp").get
-      assert(ds.chunk4.exists(_.idxType == 5), s"filters=$filters")
+      assert(ds.chunk.exists(_.idxType == 5), s"filters=$filters")
       assert(NetCdf4.readValues(f, ds).toSeq == vals.toSeq, s"filters=$filters")
       // flip a byte inside an internal-node record — the BTIN checksum
       // must reject before any child pointer is trusted
@@ -614,7 +656,7 @@ class NetCdf4Spec extends SparkSpec {
         latest = true)
       val f = NetCdf4.parse(bytes)
       val ds = f.dataset("temp").get
-      assert(ds.chunk4.exists(_.idxType == 4), s"nT=$nT filters=$filters")
+      assert(ds.chunk.exists(_.idxType == 4), s"nT=$nT filters=$filters")
       assert(NetCdf4.readValues(f, ds).toSeq == vals.toSeq,
         s"nT=$nT filters=$filters")
     }
@@ -668,7 +710,7 @@ class NetCdf4Spec extends SparkSpec {
           eaPageBits = 6)), latest = true)
       val f = NetCdf4.parse(bytes)
       val ds = f.dataset("temp").get
-      assert(ds.chunk4.exists(_.idxType == 4), s"filters=$filters")
+      assert(ds.chunk.exists(_.idxType == 4), s"filters=$filters")
       assert(NetCdf4.readValues(f, ds).toSeq == vals.toSeq, s"filters=$filters")
       // flip a byte inside the LAST data block's first page (blocks lay
       // out in (u, j) order, so the last one is u=5 — paged): the
@@ -1051,7 +1093,7 @@ class NetCdf4Spec extends SparkSpec {
         Array.tabulate(12)(_.toDouble),
         chunk = Some(Seq(1, 2, 3)), filters = Seq(2, 1))), latest = true)
     assert(NetCdf4.parse(bytes).dataset("wind-speed")
-      .exists(_.chunk4.exists(_.idxType == 3)), "fixture must use a fixed array")
+      .exists(_.chunk.exists(_.idxType == 3)), "fixture must use a fixed array")
     assert(Fetch.containerGuard(bytes).isEmpty) // in-subset since r16
     val fixture = tmp.resolve("cube.nc4")
     java.nio.file.Files.write(fixture, bytes)
@@ -1081,7 +1123,7 @@ class NetCdf4Spec extends SparkSpec {
         chunk = Some(Seq(1, 2, 2)), filters = Seq(2, 1), idx4 = Some(4))),
       latest = true)
     assert(NetCdf4.parse(bytes).dataset("wind-speed")
-      .exists(_.chunk4.exists(_.idxType == 4)), "fixture must use an extensible array")
+      .exists(_.chunk.exists(_.idxType == 4)), "fixture must use an extensible array")
     assert(Fetch.containerGuard(bytes).isEmpty) // in-subset since r17
     val fixture = tmp.resolve("cube.nc4")
     java.nio.file.Files.write(fixture, bytes)
@@ -1141,7 +1183,7 @@ class NetCdf4Spec extends SparkSpec {
         maxDims = Some(Seq(-1L, -1L, 2L)))), latest = true)
     val parsed = NetCdf4.parse(bytes)
     assert(parsed.dataset("wind-speed")
-      .exists(_.chunk4.exists(_.idxType == 5)), "fixture must use a v2 B-tree")
+      .exists(_.chunk.exists(_.idxType == 5)), "fixture must use a v2 B-tree")
     assert(bytes.indices.exists(i => i + 4 <= bytes.length &&
       bytes(i) == 'B' && bytes(i + 1) == 'T' &&
       bytes(i + 2) == 'I' && bytes(i + 3) == 'N'),
