@@ -24,6 +24,20 @@ import graft.sources.Tables
   * (comma-separated name prefixes, a dev subset) and `SPARK_GRAFT_CPUS`.
   */
 object Bench {
+  /** The queries a run times, in sorted order: every name in `names`, or
+    * with `only` (comma-separated prefixes) those starting with one of
+    * them. A prefix that matches no name throws, naming it, so a typo
+    * can neither drop a query nor turn the run into an empty one that
+    * overwrites `BENCH_LOCAL.json`. */
+  def select(names: Seq[String], only: Option[String]): Seq[String] = {
+    val prefixes = only.map(_.split(",").toSeq).getOrElse(Seq(""))
+    val unmatched = prefixes.filterNot(p => names.exists(_.startsWith(p)))
+    if (unmatched.nonEmpty)
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_ONLY prefixes match no query: ${unmatched.mkString(",")}")
+    names.filter(n => prefixes.exists(n.startsWith)).sorted
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Spark re-applies its default log4j2 config (rootLogger=INFO) during
@@ -38,13 +52,12 @@ object Bench {
     // backstop for a classpath layout that drops the resource
     org.apache.logging.log4j.core.config.Configurator.setRootLevel(
       org.apache.logging.log4j.Level.ERROR)
-    val spark = Session.local()
-
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.exists(n.startsWith)))
+    // before any session is built: a bad selection must not cost a
+    // Spark start-up, nor reach the BENCH_LOCAL.json write
+    val names = select(SparkEntry.queries.keys.toSeq, sys.env.get("SPARK_GRAFT_ONLY"))
     val trials = sys.env.get("SPARK_GRAFT_TRIALS").map(_.toInt).getOrElse(3)
     require(trials >= 1, s"SPARK_GRAFT_TRIALS must be >= 1, got $trials")
+    val spark = Session.local()
 
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)

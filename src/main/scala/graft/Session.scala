@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place the program builds a SparkSession: Verify, Bench,
-  * PlanDump, ScaleCheck, StreamBench and the test harness all run on
-  * these confs, so a plan or a time captured by one tool is the plan or
+  * PlanDump and the test harness all run on these confs, so a plan or a time captured by one tool is the plan or
   * time the others see. */
 object Session {
 

@@ -556,8 +556,11 @@ object Dedup {
     * corpus — each already bounded by its own blocking structure), the
     * audit is one full-outer equi-join on the pair key, and the
     * threshold sweep is a 4-row broadcast against that join's output —
-    * flat at any corpus scale (the ScaleCheck `crossmodal_audit` row
-    * measures it). */
+    * flat at any corpus scale: BASELINE.md §"Round-15 additions
+    * (q132–q143 + declared-k q83) at 10×", row `crossmodal_audit_staged`
+    * (this audit over pre-staged pair tables), 0.45 s at sf0.1 and 0.52 s
+    * at sf1, 1.2×. The `crossmodal_audit` row's 5.0× is the in-query
+    * build of both pair tables, not the audit. */
   def crossModalAgreement(spark: SparkSession, dir: String): DataFrame =
     crossModalAgreementFrom(
       lshNearDup(spark, dir)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.MoneySum
 import graft.sources.Tables
@@ -10,7 +10,7 @@ import graft.sources.Tables
   * The reference's inner loop — split a cube per time step, upload each
   * band, accumulate a {time_key -> public_url} JSON manifest (reference
   * dmi_ingestor/ingestor.py:90-122, 219-227) — becomes one partitioned
-  * write plus one aggregation. The manifest agg is O(groups), not O(rows):
+  * write ([[Ingest.writeCube]]) plus one aggregation. The manifest agg is O(groups), not O(rows):
   * entries are collected per (small) group after a map-side combine.
   */
 object Manifest {
@@ -48,24 +48,4 @@ object Manifest {
         count(lit(1)).as("n_bands"),
         array_join(array_sort(collect_list(col("entry"))), ",").as("manifest"))
       .orderBy(col("event_type"))
-
-  /** R3+R10+R12 as a real sink: time-partitioned overwrite write. Dynamic
-    * partition overwrite truncates only the partitions being rewritten —
-    * the scalable version of the reference's delete-prefix-then-upload.
-    * Exercised by ManifestSpec (sinks are not hash-checkable). */
-  def writePartitioned(df: DataFrame, outPath: String, timeCol: String = "time_key"): Unit =
-    df.write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(timeCol)
-      .parquet(outPath)
-
-  /** Read-back manifest over a partitioned layout: one row per partition
-    * directory — O(partitions) metadata, no data scan of row contents
-    * beyond counts. */
-  def manifestOfWritten(spark: SparkSession, path: String, timeCol: String = "time_key"): DataFrame =
-    spark.read.parquet(path)
-      .groupBy(col(timeCol))
-      .agg(count(lit(1)).as("n_rows"))
-      .orderBy(col(timeCol))
 }

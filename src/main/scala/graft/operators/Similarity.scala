@@ -582,9 +582,10 @@ object Similarity {
     * Shape: ONE row per (vector, codebook entry) carrying all m subspace
     * distances as columns, aggregated by m independent struct-mins in a
     * single groupBy — versus the naive per-subspace explode this divides
-    * both the joined row count and the shuffled group count by m (the r12
-    * ScaleCheck measured the exploded form ~5× slower at 10× vectors,
-    * all of it this constant factor, not the linear term). */
+    * both the joined row count and the shuffled group count by m.
+    * BASELINE.md §"Round-12 additions (q106 PQ / q108 IVF-PQ) at 10×
+    * vectors": at sf1 (20k vectors) the q106 path took 10.5 s with the
+    * exploded form and 3.49 s with this one. */
   private[graft] def pqCodes(emb: DataFrame, cb: DataFrame, m: Int, dsub: Int): DataFrame = {
     val dCols = (0 until m).map(s =>
       subL2(col("embedding"), col("cvec"), s, dsub).as(s"d$s"))

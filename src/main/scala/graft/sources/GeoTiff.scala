@@ -402,10 +402,12 @@ object GeoTiff {
   /** R9+R10+R12 sink: band-split the long format and write one GeoTIFF per
     * (collection, parameter, time_key) from the EXECUTORS — the
     * reference's per-band loop distributed. Returns the written manifest.
-    * Cells must be grid-aligned (exactly repeating lon/lat doubles —
-    * true for any staged cube; reprojected collections go through
-    * Geo.regrid first, the engine-side warp); a band off a regular
-    * lon/lat grid fails its task by name ([[rasterize]]). outDir must be a shared
+    * Cells must be grid-aligned (exactly repeating lon/lat doubles) and
+    * a band off a regular lon/lat grid fails its task by name
+    * ([[rasterize]]). No warp onto a lon/lat grid exists yet, so a
+    * reprojected collection such as harmonie (an inverse-LCC lon/lat
+    * cloud) cannot be written as COGs; `Geo.regrid` (q28) is a
+    * statistics query over TPC-H rows, not a warp. outDir must be a shared
     * filesystem / object-store mount at cluster scale (same contract as
     * any Spark file sink). `bigTiff = true` writes the BigTIFF layout
     * for every band (the reference writes `BIGTIFF=YES` unconditionally,

@@ -945,7 +945,7 @@ object StreamOps {
   }
 
   /** Stream the windowed aggregation to a partitioned parquet sink with
-    * checkpointing — the streaming dual of Manifest.writePartitioned.
+    * checkpointing — the streaming dual of Ingest.writeCube.
     * Drains whatever the source currently has, then STOPS the query
     * (leaving it running would leak the query thread and keep the
     * checkpoint locked against any later run); a continuous deployment

@@ -38,30 +38,47 @@ class ContractSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 
-  test("SparkSession.builder appears in src/main only inside Session.scala") {
+  /** Every Scala file under src/main/scala, with its text. */
+  private def mainSources: Seq[(java.nio.file.Path, String)] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"$root not found from ${sys.props("user.dir")}")
     val walk = java.nio.file.Files.walk(root)
-    val builders = try walk.iterator().asScala.toSeq
-      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Session.scala")
-      .filter(p => java.nio.file.Files.readString(p).contains("SparkSession.builder"))
+    try walk.iterator().asScala.toList
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p -> java.nio.file.Files.readString(p))
     finally walk.close()
+  }
+
+  test("SparkSession.builder appears in src/main only inside Session.scala") {
+    val builders = mainSources.collect { case (p, src)
+      if p.getFileName.toString != "Session.scala" && src.contains("SparkSession.builder") => p }
     assert(builders.isEmpty, s"sessions built outside graft.Session: $builders")
+  }
+
+  test("the program's entry points are exactly Bench, PlanDump and Verify") {
+    // a new main is a new tool with its own session, trial loop and knobs;
+    // adding one is a deliberate change to this list
+    val mains = mainSources.collect { case (p, src)
+      if src.contains("def main(") || src.contains("extends App") => p.getFileName.toString }
+    assert(mains.sorted == Seq("Bench.scala", "PlanDump.scala", "Verify.scala"))
+  }
+
+  test("Bench.select rejects a prefix that matches no query, by name") {
+    val names = SparkEntry.queries.keys.toSeq
+    val e = intercept[IllegalArgumentException](Bench.select(names, Some("qbogus")))
+    assert(e.getMessage.contains("qbogus"))
+    // one mistyped prefix among good ones is rejected too, not dropped
+    val partial = intercept[IllegalArgumentException](Bench.select(names, Some("q01,qbogus")))
+    assert(partial.getMessage.endsWith(": qbogus"))
+    assert(Bench.select(names, Some("q01")) == Seq("q01_pricing_summary"))
+    assert(Bench.select(names, None) == names.sorted)
   }
 
   test("CF packing attributes are read in one file under src/main/scala") {
     // one CF cube decoder serves both NetCDF containers; a second file
     // naming these attributes is a second copy of the CF rules
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"$root not found from ${sys.props("user.dir")}")
-    val walk = java.nio.file.Files.walk(root)
-    val readers = try walk.iterator().asScala.toSeq
-      .filter(_.toString.endsWith(".scala"))
-      .filter { p =>
-        val src = java.nio.file.Files.readString(p)
-        src.contains("\"scale_factor\"") || src.contains("\"missing_value\"")
-      }
-    finally walk.close()
+    val readers = mainSources.collect { case (p, src)
+      if src.contains("\"scale_factor\"") || src.contains("\"missing_value\"") => p }
     assert(readers.size <= 1, s"CF packing attributes read in several files: $readers")
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Events, Manifest}
+import graft.operators.{Events, Ingest, Manifest}
 import graft.sources.Tables
 
 class EventsSpec extends SparkSpec {
@@ -48,18 +48,28 @@ class EventsSpec extends SparkSpec {
   test("partitioned overwrite sink writes one dir per time_key and reads back") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_sink").toString
     val df = Tables.events(spark, sfDir)
+      .withColumn("collection", lit("events"))
+      .withColumn("parameter", lit("value"))
       .withColumn("time_key", date_format(col("ts"), "yyyyMMdd'T'HH"))
-    Manifest.writePartitioned(df, tmp)
-    val back = Manifest.manifestOfWritten(spark, tmp)
+    def counts(): Map[String, Long] = spark.read.parquet(tmp).groupBy("time_key").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    Ingest.writeCube(df, tmp)
     val expected = df.groupBy("time_key").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val got = back.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got == expected)
+    assert(counts() == expected)
     // partition dirs on disk named time_key=...
-    val dirs = new java.io.File(tmp).listFiles().filter(_.isDirectory).map(_.getName)
+    val dirs = new java.io.File(tmp, "collection=events/parameter=value")
+      .listFiles().filter(_.isDirectory).map(_.getName)
     assert(dirs.forall(_.startsWith("time_key=")))
     assert(dirs.length == expected.size)
     // overwrite of a single partition leaves the others intact (dynamic mode)
+    val key = expected.keys.min
+    Ingest.writeCube(df.filter(col("time_key") === key).limit(1)
+      .withColumn("value", lit(-1.0)), tmp)
+    val rewritten = spark.read.parquet(tmp).filter(col("time_key") === key)
+      .select("value").collect().map(_.getDouble(0))
+    assert(rewritten.toSeq == Seq(-1.0))
+    assert(counts() == expected.updated(key, 1L))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 }
