@@ -5,13 +5,15 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Dev-only subset filter (comma-separated name prefixes); the driver
+    // sets no env var and always verifies the full surface. Selected
+    // before the session: a prefix matching no query stops the run by
+    // name instead of writing a partial oracle_sql.json.
+    val names = Bench.select(SparkEntry.queries.keys.toSeq,
+      sys.env.get("SPARK_GRAFT_ONLY")).toSet
     val spark = Session.local()
     new java.io.File(outDir).mkdirs()
-    // Dev-only subset filter (comma-separated name prefixes); the driver
-    // sets no env var and always verifies the full surface.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    def keep(name: String) = only.forall(_.exists(name.startsWith))
-    SparkEntry.queries.filter(q => keep(q._1)).foreach { case (name, fn) =>
+    SparkEntry.queries.filter(q => names(q._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -30,7 +32,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(o => keep(o._1))
+    val json = SparkEntry.oracleSql.filter(o => names(o._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

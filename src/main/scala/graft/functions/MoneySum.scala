@@ -64,9 +64,11 @@ import org.apache.spark.sql.functions._
   *    are structurally bounded (subquantizer count, per-doc tokens,
   *    probe terms), never corpus-global — see the per-site comments.
   *
-  * Corpus-global decimal sums (q42/q77/q140 centroid and dimension
-  * statistics) are deliberately NOT converted — decimal's sum-widening
-  * is real headroom there.
+  * Corpus-global sums of free-precision doubles (the q42/q77/q140/q147
+  * label, centroid and dimension statistics, the q104/q112 trained
+  * centroids and codebooks) are deliberately NOT converted: they use the
+  * decimal-exact sum [[decSum9]], whose sum-widening is real headroom
+  * there.
   */
 object MoneySum {
 
@@ -105,4 +107,16 @@ object MoneySum {
     (sum(term(c, scale).cast("decimal(18,0)"))
       * lit(java.math.BigDecimal.valueOf(1L, s))).cast("double")
   }
+
+  /** THE decimal-exact sum for free-precision doubles: Σ floor(c·1e9)
+    * summed as DECIMAL(28,9) — order-independent exact arithmetic, so
+    * both engines reach the same total in any accumulation order. The
+    * caller divides the double cast by 1e9 (then usually [[trunc6]]). */
+  def decSum9(c: Column): Column = sum(floor(c * 1e9).cast("decimal(28,9)"))
+
+  /** THE 1e-6 output-truncation grid — a cross-engine determinism
+    * contract: every oracle floors computed ratios to 6 dp. Floor, not
+    * round: both engines floor the same IEEE-754 double, while round()
+    * diverges on bare-5 boundaries (see Oracles.scala determinism rules). */
+  def trunc6(c: Column): Column = floor(c * 1e6) / 1e6
 }

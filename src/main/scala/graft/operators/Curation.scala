@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Hashing
+import graft.functions.MoneySum.{decSum9, trunc6}
 import graft.operators.Materialize.Stageable
 import graft.sources.Tables
 
@@ -22,11 +23,6 @@ object Curation {
 
   /** Whitespace tokens, empty strings dropped (mirrors Text/Oracles). */
   private def toks: Column = Dedup.toks
-
-  /** Truncate to 6 decimals — floor, not round: both engines floor the
-    * same IEEE-754 double, while round() diverges on bare-5 boundaries
-    * (see Oracles.scala determinism rules). */
-  private def trunc6(c: Column): Column = floor(c * 1e6) / 1e6
 
   /** q66: Gopher-style heuristic quality gate. Per document: token count,
     * distinct-token count, mean token length, type-token ratio, top-token
@@ -503,30 +499,21 @@ object Curation {
     // tiny); the routed table is k rows and broadcasts
     val fineRouted = fine.crossJoin(broadcast(coarse))
       .withColumn("cos",
-        Similarity.dot(col("cvec"), col("ccvec")) / (col("cnrm") * col("ccnrm")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("cluster_id"))
-          .orderBy(col("cos").desc, col("ccell"))))
-      .filter(col("rn") === 1)
+        Similarity.cosine(col("cvec"), col("ccvec"), col("cnrm"), col("ccnrm")))
+      .transform(Similarity.topPerKey("cluster_id", 1, "rn")(col("cos").desc, col("ccell")))
       .select(col("ccell"), col("cluster_id"), col("cvec"), col("cnrm"))
     // each vector routes to its nprobe nearest coarse cells (n×√k)
     val vecRouted = emb.select(col("vec_id"), col("embedding"), col("nrm"))
       .crossJoin(broadcast(coarse))
       .withColumn("cos",
-        Similarity.dot(col("embedding"), col("ccvec")) / (col("nrm") * col("ccnrm")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("vec_id"))
-          .orderBy(col("cos").desc, col("ccell"))))
-      .filter(col("rn") <= nprobe)
+        Similarity.cosine(col("embedding"), col("ccvec"), col("nrm"), col("ccnrm")))
+      .transform(Similarity.topPerKey("vec_id", nprobe, "rn")(col("cos").desc, col("ccell")))
       .select(col("vec_id"), col("embedding"), col("nrm"), col("ccell"))
     // fine argmax over the routed cells only (n×nprobe×(k/√k))
     vecRouted.join(broadcast(fineRouted), Seq("ccell"))
       .withColumn("cos",
-        Similarity.dot(col("embedding"), col("cvec")) / (col("nrm") * col("cnrm")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("vec_id"))
-          .orderBy(col("cos").desc, col("cluster_id"))))
-      .filter(col("rn") === 1)
+        Similarity.cosine(col("embedding"), col("cvec"), col("nrm"), col("cnrm")))
+      .transform(Similarity.topPerKey("vec_id", 1, "rn")(col("cos").desc, col("cluster_id")))
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cluster_id"),
         col("cos"))
   }
@@ -535,19 +522,14 @@ object Curation {
     * cnrm) — seeded ([[assignmentsK]]) or trained (feed q77's M-step
     * means back in); `emb` must carry a precomputed `nrm`. This is what
     * makes the kmeans loop and IVF cell build centroid-set-agnostic. */
-  def assignmentsWith(emb: DataFrame, cent: DataFrame): DataFrame = {
-    val pairs = emb.select(col("vec_id"), col("embedding"), col("nrm"))
+  def assignmentsWith(emb: DataFrame, cent: DataFrame): DataFrame =
+    emb.select(col("vec_id"), col("embedding"), col("nrm"))
       .crossJoin(broadcast(cent))
       .withColumn("cos",
-        Similarity.dot(col("embedding"), col("cvec")) / (col("nrm") * col("cnrm")))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("cluster_id"))
-    pairs
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+        Similarity.cosine(col("embedding"), col("cvec"), col("nrm"), col("cnrm")))
+      .transform(Similarity.topPerKey("vec_id", 1, "rn")(col("cos").desc, col("cluster_id")))
       // nrm rides along so semDedupK doesn't re-run the O(n×dim) norm pass
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cluster_id"), col("cos"))
-  }
 
   def kmeansAssign(spark: SparkSession, dir: String): DataFrame =
     assignments(spark, dir)
@@ -578,7 +560,7 @@ object Curation {
       .groupBy(col("cluster_id"), col("dim"))
       .agg(
         count(lit(1)).as("n"),
-        sum(floor(col("v").cast("double") * 1e9).cast("decimal(28,9)")).as("s"))
+        decSum9(col("v").cast("double")).as("s"))
       .select(
         col("cluster_id"), col("dim").cast("long").as("dim"), col("n"),
         trunc6(col("s").cast("double") / 1e9 / col("n")).as("centroid_mean"))
@@ -2209,7 +2191,7 @@ object Curation {
       col("embedding").as("e2"), col("nrm").as("n2"))
     val pairs = a.join(b, Seq("cluster_id"))
       .filter(col("v1") < col("v2"))
-      .withColumn("cos", Similarity.dot(col("e1"), col("e2")) / (col("n1") * col("n2")))
+      .withColumn("cos", Similarity.cosine(col("e1"), col("e2"), col("n1"), col("n2")))
       .filter(round(col("cos"), 6) >= SemDedupEps)
     val pruned = pairs.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("n_dup_pairs"),
@@ -2654,13 +2636,13 @@ object Curation {
     * the deployment entry point (real eval-suite vectors go here). */
   def semanticDecontamFrom(emb: DataFrame, evalVecs: DataFrame,
       tau: Double = SemDecontamTau): DataFrame = {
-    import Similarity.{dot, norm}
+    import Similarity.{cosine, norm}
     val ev = evalVecs.select(col("vec_id").as("eval_id"),
       col("embedding").as("e_emb"), norm(col("embedding")).as("e_nrm"))
     emb.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
       .join(broadcast(ev), col("vec_id") =!= col("eval_id"))
       .withColumn("cosine",
-        round(dot(col("embedding"), col("e_emb")) / (col("nrm") * col("e_nrm")), 6))
+        round(cosine(col("embedding"), col("e_emb"), col("nrm"), col("e_nrm")), 6))
       .filter(col("cosine") >= tau)
       .select(col("vec_id"), col("eval_id"), col("cosine"))
       .orderBy(col("vec_id"), col("eval_id"))

@@ -493,7 +493,7 @@ object Dedup {
       .staged
     emb.as("a").join(emb.as("b"), col("a.vec_id") < col("b.vec_id"))
       .withColumn("cosine",
-        Similarity.dot(col("a.embedding"), col("b.embedding")) / (col("a.nrm") * col("b.nrm")))
+        Similarity.cosine(col("a.embedding"), col("b.embedding"), col("a.nrm"), col("b.nrm")))
       .filter(round(col("cosine"), 6) >= 0.35)
       .select(col("a.vec_id").as("v1"), col("b.vec_id").as("v2"),
         round(col("cosine"), 6).as("cosine"))

@@ -27,35 +27,14 @@ object Fetch {
     def ok: Boolean = result.isRight
   }
 
-  /** Staged-bytes validation at the FETCH boundary. The DMI EDR API can
-    * serve NetCDF-4 — an HDF5 container (magic `\x89HDF`) — and R17's
-    * skip semantics say an undecodable parameter must be SKIPPED here
-    * (error recorded, old partitions preserved), exactly like an HTTP
-    * failure, rather than surfacing as a decode throw later in the job.
-    * HDF5 streams inside the [[graft.sources.NetCdf4]] subset (v0-v3
-    * superblocks including the "latest format", nested groups, and
-    * contiguous, compact or chunked layouts with deflate/shuffle/
-    * fletcher32) pass through to decode; the header-only probe rejects
-    * anything beyond the subset (szip and other filters, soft links,
-    * non-leading unlimited extensible-array dims, …) with the probe's
-    * reason in the skip message. Returns the rejection message, or None
-    * when the bytes may proceed to decode. */
-  def containerGuard(bytes: Array[Byte]): Option[String] =
-    if (graft.sources.NetCdf4.isHdf5(bytes))
-      graft.sources.NetCdf4.probe(bytes).left.toOption.map(reason =>
-        s"unsupported NetCDF-4/HDF5 container ($reason); parameter skipped")
-    else None
-
   /** GET every (parameter, url) in the request plan, isolating failures
-    * per parameter — the reference's try/except loop. Staged bytes pass
-    * through [[containerGuard]]: a rejection is a per-parameter failure,
-    * same as an HTTP error. Connect/read timeouts bound every request so
-    * ONE stalled endpoint cannot hang the whole ingest — the timeout
-    * surfaces as that parameter's recorded error and the loop moves on
-    * (the reference inherits the same property from `requests`'
-    * timeout). Non-2xx statuses, redirects (followed by
-    * the URL layer for same-protocol GETs), and connection failures all
-    * resolve through the same Try. Never throws. */
+    * per parameter — the reference's try/except loop. Connect/read
+    * timeouts bound every request so ONE stalled endpoint cannot hang the
+    * whole ingest — the timeout surfaces as that parameter's recorded
+    * error and the loop moves on (the reference inherits the same
+    * property from `requests`' timeout). Non-2xx statuses, redirects
+    * (followed by the URL layer for same-protocol GETs), and connection
+    * failures all resolve through the same Try. Never throws. */
   def fetchAll(plan: Seq[(String, String)],
                connectTimeoutMs: Int = 10000,
                readTimeoutMs: Int = 60000): Seq[FetchOutcome] =
@@ -81,10 +60,7 @@ object Fetch {
         }
         val in = conn.getInputStream
         try in.readAllBytes() finally in.close()
-      } match {
-        case Success(bytes) => containerGuard(bytes).toLeft(bytes)
-        case Failure(e) => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}")
-      }
+      }.toEither.left.map(e => s"${e.getClass.getSimpleName}: ${e.getMessage}")
       FetchOutcome(param, url, result)
     }
 
@@ -93,7 +69,8 @@ object Fetch {
     * NetCDF magic (`CDF\x01|02|05`) routes to
     * [[graft.sources.NetCdf.decodeCube]], HDF5 magic (`\x89HDF`,
     * NetCDF-4) to the [[graft.sources.NetCdf4]] subset codec (whose parse
-    * rejects out-of-subset files explicitly rather than misparsing).
+    * rejects out-of-subset files with a message naming the feature
+    * rather than misparsing).
     * Any other bytes — an HTML error page served with a 200, a truncated
     * or empty body — throw, so [[fetchAndIngest]] records the parameter
     * as skipped instead of publishing nothing for it as a success. */
@@ -113,9 +90,10 @@ object Fetch {
     * output survives, per the reference's ordering guarantee), and return
     * the manifest of what was written plus every outcome for telemetry.
     * Decode failures (bytes of neither container, malformed classic
-    * bytes, an unsupported CF time unit) are isolated exactly like fetch
-    * failures: the outcome records the error and the other parameters
-    * still ingest.
+    * bytes, an HDF5 file outside the NetCdf4 subset, an unsupported CF
+    * time unit) are isolated exactly like fetch failures: the outcome
+    * records the error as `decode <exception>: <reason>` and the other
+    * parameters still ingest.
     * No successes → no write at all, `None` manifest. */
   def fetchAndIngest(
       spark: SparkSession,

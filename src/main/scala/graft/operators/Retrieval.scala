@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
 
 /** Lexical + hybrid retrieval over `documents` — the search side of a
@@ -101,13 +100,6 @@ object Retrieval {
       idxOpt = Some(bm25IndexShared(spark, dir)))
   }
 
-  /** [[bm25Search]] over explicit probe documents: the probe's `nTerms`
-    * top-TF-IDF terms (q65's scoring, q65's tie-break) become the query;
-    * every corpus document sharing a term is scored
-    * Σ_t idf(t) · tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)) with the Lucene
-    * idf ln(1 + (N−df+0.5)/(df+0.5)); top-k per probe. Per-term scores
-    * sum through the repo's decimal-exact rule (floor 1e-9, DECIMAL sum)
-    * so term order can never perturb the ranking across engines. */
   /** The per-term BM25 score, idf(df) · tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl))
     * with the Lucene idf ln(1 + (N−df+0.5)/(df+0.5)) — ONE shared
     * expression used by both the batch scorer and the streaming scorer
@@ -151,16 +143,13 @@ object Retrieval {
       .select(col("doc_id").as("probe_id"), explode(tfPairs).as("p"))
       .select(col("probe_id"), col("p.token").as("token"),
         xxhash64(col("p.token")).as("tok_h"), col("p.tf").as("tf"))
-    val wq = Window.partitionBy(col("probe_id"))
-      .orderBy(col("tfidf").desc, col("token"))
     dfT
       .join(broadcast(probeTf), Seq("tok_h"))
       .crossJoin(broadcast(consts.select(col("n_docs"))))
       .withColumn("tfidf",
         floor(col("tf") * (log((col("n_docs") + 1.0) / (col("df") + 1.0)) + 1.0) * 1e6) / 1e6)
       .select(col("probe_id"), col("token"), col("tok_h"), col("df"), col("tfidf"))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nTerms)
+      .transform(Similarity.topPerKey("probe_id", nTerms, "rn")(col("tfidf").desc, col("token")))
       .select(col("probe_id"), col("token"), col("tok_h"), col("df"))
   }
 
@@ -180,8 +169,14 @@ object Retrieval {
       .crossJoin(consts)
   }
 
+  /** [[bm25Search]] over explicit probe documents: the probe's `nTerms`
+    * top-TF-IDF terms (q65's scoring, q65's tie-break) become the query;
+    * every corpus document sharing a term is scored
+    * Σ_t idf(t) · tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)) with the Lucene
+    * idf ln(1 + (N−df+0.5)/(df+0.5)); top-k per probe. Per-term scores
+    * sum as floored 1e-9 units in a long (at most `nTerms` terms per
+    * pair) so term order can never perturb the ranking across engines. */
   def bm25From(docs: DataFrame, probes: DataFrame, nTerms: Int, k: Int,
-      excludeSelf: Boolean = true,
       idxOpt: Option[DataFrame] = None): DataFrame = {
     // idxOpt: a pre-built [[bm25Index]]-shaped table (the declared
     // queries pass the session-standing one); None builds per-call.
@@ -194,23 +189,19 @@ object Retrieval {
       .withColumnRenamed("doc_id", "cand_id")
       .join(broadcast(qt.select(col("probe_id"), col("tok_h"), col("df"))),
         Seq("tok_h"))
-      .filter(if (excludeSelf) col("probe_id") =!= col("cand_id") else lit(true))
+      .filter(Similarity.notSelf("cand_id"))
       .crossJoin(broadcast(consts))
       .withColumn("term_score", termScore(col("tf"), col("df"), col("dl"),
         col("n_docs"), col("avgdl")))
-    val wr = Window.partitionBy(col("probe_id"))
-      .orderBy(col("score").desc, col("cand_id"))
-    term
+    val scored = term
       .groupBy(col("probe_id"), col("cand_id"))
       .agg(
         count(lit(1)).as("n_terms"),
         (sum(floor(col("term_score") * 1e9).cast("long")).cast("double") / 1e9)
           .as("score"))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank").cast("long").as("rank"),
-        col("cand_id"), col("n_terms"), round(col("score"), 6).as("score"))
-      .orderBy(col("probe_id"), col("rank"))
+    Similarity.probeTopK(scored, k, col("score").desc, col("cand_id"))(
+      col("probe_id"), Similarity.longRank, col("cand_id"), col("n_terms"),
+      round(col("score"), 6).as("score"))
   }
 
   /** q117: hybrid retrieval — reciprocal-rank fusion of the BM25 list
@@ -220,36 +211,28 @@ object Retrieval {
     * reciprocal, so the fused score is exact arithmetic in both engines
     * (no float summation anywhere). A document missing from one list
     * contributes 0 from it (the standard RRF convention); null ranks are
-    * reported as such. Top-k per probe by fused score. */
+    * reported as such. Top-5 per probe by fused score. Both input
+    * rankings are bounded (20 per probe; vec probes are the probe
+    * documents' ids), so the fuse join is probes×20-sized — driver-bench
+    * and 100 TB identical. */
   def rrfFusion(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val emb = Tables.embeddings(spark, dir)
-    rrfFusionFrom(docs, emb, gridDocProbes(docs), kList = 20, k = 5,
-      idxOpt = Some(bm25IndexShared(spark, dir)))
-  }
-
-  /** [[rrfFusion]] over explicit probe documents (vec probes derived by
-    * id). Both input rankings are bounded (kList per probe), so the fuse
-    * join is probes×kList-sized — driver-bench and 100 TB identical. */
-  def rrfFusionFrom(docs: DataFrame, emb: DataFrame, probes: DataFrame,
-      kList: Int, k: Int, idxOpt: Option[DataFrame] = None): DataFrame = {
-    val bm = bm25From(docs, probes, nTerms = 3, k = kList, idxOpt = idxOpt)
+    val probes = gridDocProbes(docs)
+    val bm = bm25From(docs, probes, nTerms = 3, k = 20,
+        idxOpt = Some(bm25IndexShared(spark, dir)))
       .select(col("probe_id"), col("cand_id"), col("rank").as("bm25_rank"))
     val vecProbes = emb.join(
       probes.select(col("doc_id").as("vec_id")), Seq("vec_id"))
-    val cos = Similarity.cosineTopKFrom(emb, vecProbes, k = kList)
+    val cos = Similarity.cosineTopKFrom(emb, vecProbes, k = 20)
       .select(col("probe_id"), col("cand_id"), col("rank").as("cos_rank"))
     val contrib = (r: Column) =>
       coalesce(floor(lit(1e9) / (lit(RrfK) + r)).cast("long"), lit(0L))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("rrf_scaled").desc, col("cand_id"))
-    bm.join(cos, Seq("probe_id", "cand_id"), "full_outer")
+    val fused = bm.join(cos, Seq("probe_id", "cand_id"), "full_outer")
       .withColumn("rrf_scaled",
         contrib(col("bm25_rank")) + contrib(col("cos_rank")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank").cast("long").as("rank"),
-        col("cand_id"), col("bm25_rank"), col("cos_rank"), col("rrf_scaled"))
-      .orderBy(col("probe_id"), col("rank"))
+    Similarity.probeTopK(fused, 5, col("rrf_scaled").desc, col("cand_id"))(
+      col("probe_id"), Similarity.longRank,
+      col("cand_id"), col("bm25_rank"), col("cos_rank"), col("rrf_scaled"))
   }
 }

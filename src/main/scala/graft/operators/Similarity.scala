@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.MoneySum.{decSum9, trunc6}
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (dim 64, float32).
@@ -34,8 +35,47 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
+  /** THE cosine: every vector-search score, E-step and pair check in the
+    * program divides [[dot]] by the two norms here and nowhere else. */
   def cosine(a: Column, b: Column, normA: Column, normB: Column): Column =
     dot(a, b) / (normA * normB)
+
+  /** `df`'s rows ranked per `key` by `order` (which ends in a unique
+    * tie-break) into column `rank` with `row_number`, keeping rank ≤ n —
+    * the refine tail of every top-k search, probe routing and E-step
+    * argmax; chain it with `.transform`. n = 1 filters `rank = 1`: the
+    * same rows (row_number starts at 1), and the argmax form those plans
+    * carry. */
+  private[graft] def topPerKey(key: String, n: Int, rank: String = "rank")(
+      order: Column*)(df: DataFrame): DataFrame =
+    df.withColumn(rank, row_number().over(Window.partitionBy(col(key)).orderBy(order: _*)))
+      .filter(if (n == 1) col(rank) === 1 else col(rank) <= n)
+
+  /** The per-probe top-k output of a vector or lexical search: `pairs`
+    * ranked per probe by `order`, k kept, projected to the site's own
+    * columns `out` ([[longRank]] among them), ordered by (probe, rank). */
+  private[graft] def probeTopK(pairs: DataFrame, k: Int, order: Column*)(
+      out: Column*): DataFrame =
+    topPerKey("probe_id", k)(order: _*)(pairs)
+      .select(out: _*)
+      .orderBy(col("probe_id"), col("rank"))
+
+  /** The `rank` output column of [[probeTopK]]. */
+  private[graft] def longRank: Column = col("rank").cast("long").as("rank")
+
+  /** Probe ids are corpus ids: every candidate join drops the pair of a
+    * probe with its own corpus row, so a probe set from outside the
+    * corpus must take ids outside the corpus id range (a colliding id
+    * would drop a real candidate). */
+  private[graft] def notSelf(cand: String): Column = col("probe_id") =!= col(cand)
+
+  /** The shared exact-cosine candidate join: broadcast probe rows
+    * (probe_id, p_emb, p_nrm, …) against candidate rows (cand_id, c_emb,
+    * c_nrm, …) on the conditions `on` and [[notSelf]], scored `cosine`. */
+  private def cosinePairs(p: DataFrame, cand: DataFrame, on: Column*): DataFrame =
+    broadcast(p)
+      .join(cand, (on :+ notSelf("cand_id")).reduce(_ && _))
+      .withColumn("cosine", cosine(col("p_emb"), col("c_emb"), col("p_nrm"), col("c_nrm")))
 
   /** Declared-surface probe cap (VERDICT r13 #1): the %97 grid alone is
     * a fixed FRACTION of the corpus, so the declared exact baseline's
@@ -75,28 +115,14 @@ object Similarity {
   /** [[cosineTopK]] over an explicit probe set — `emb` and `probes` are
     * plain (vec_id, embedding) tables; cost is |probes| × one corpus
     * scan, so a bounded `probes` keeps the exact baseline linear in the
-    * corpus at any scale. `excludeSelf` assumes probe vec_ids LIVE IN the
-    * corpus id space (the declared queries' probes are corpus rows) —
-    * pass false for an external probe set whose ids are assigned
-    * independently, or a colliding id would silently drop a legitimate
-    * candidate. */
-  def cosineTopKFrom(emb: DataFrame, probes: DataFrame, k: Int,
-      excludeSelf: Boolean = true): DataFrame = {
+    * corpus at any scale. */
+  def cosineTopKFrom(emb: DataFrame, probes: DataFrame, k: Int): DataFrame = {
     val cand = emb.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"),
       norm(col("embedding")).as("c_nrm"))
     val p = probes.select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
       norm(col("embedding")).as("p_nrm"))
-    val pairs = broadcast(p)
-      .join(cand, if (excludeSelf) col("probe_id") =!= col("cand_id") else lit(true))
-      .withColumn("cosine", dot(col("p_emb"), col("c_emb")) / (col("p_nrm") * col("c_nrm")))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc, col("cand_id"))
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank").cast("long").as("rank"),
-        col("cand_id"), round(col("cosine"), 6).as("cosine"))
-      .orderBy(col("probe_id"), col("rank"))
+    probeTopK(cosinePairs(p, cand), k, col("cosine").desc, col("cand_id"))(
+      col("probe_id"), longRank, col("cand_id"), round(col("cosine"), 6).as("cosine"))
   }
 
   /** Sign-bit coarse quantizer: bucket = 4 sign bits of dims 1..4 (an
@@ -116,9 +142,8 @@ object Similarity {
 
   /** [[annBucketed]] over an explicit probe set (plain (vec_id,
     * embedding) tables both sides) — the bounded-probe-budget dual of
-    * [[cosineTopKFrom]]; same `excludeSelf` contract. */
-  def annBucketedFrom(emb: DataFrame, probes: DataFrame, k: Int,
-      excludeSelf: Boolean = true): DataFrame = {
+    * [[cosineTopKFrom]]. */
+  def annBucketedFrom(emb: DataFrame, probes: DataFrame, k: Int): DataFrame = {
     val cand = emb
       .withColumn("nrm", norm(col("embedding")))
       .withColumn("bucket", bucketOf(col("embedding")))
@@ -127,20 +152,13 @@ object Similarity {
       .withColumn("bucket", bucketOf(col("embedding")))
       .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
         col("nrm").as("p_nrm"), col("bucket"))
-    val pairs = broadcast(p)
-      .join(cand.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"),
+    val pairs = cosinePairs(p,
+      cand.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"),
         col("nrm").as("c_nrm"), col("bucket").as("c_bucket")),
-        col("bucket") === col("c_bucket") &&
-          (if (excludeSelf) col("probe_id") =!= col("cand_id") else lit(true)))
-      .withColumn("cosine", dot(col("p_emb"), col("c_emb")) / (col("p_nrm") * col("c_nrm")))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc, col("cand_id"))
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("bucket"), col("rank").cast("long").as("rank"),
-        col("cand_id"), round(col("cosine"), 6).as("cosine"))
-      .orderBy(col("probe_id"), col("rank"))
+      col("bucket") === col("c_bucket"))
+    probeTopK(pairs, k, col("cosine").desc, col("cand_id"))(
+      col("probe_id"), col("bucket"), longRank,
+      col("cand_id"), round(col("cosine"), 6).as("cosine"))
   }
 
   /** q88: ANN recall measurement — per probe: how many of the exact
@@ -188,14 +206,10 @@ object Similarity {
     * routing loss are measured TOGETHER, as deployed — recall stays a
     * measured property of the data shipped as a query, never a prose
     * claim. Same scale contract as q88: the audit join input is
-    * |probes|·k rows; production audits pass a bounded probe budget. */
+    * |probes|·k rows. */
   def pqRecall(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    pqRecallFrom(emb, gridProbes(emb))
-  }
-
-  /** [[pqRecall]] over an explicit probe set. */
-  def pqRecallFrom(emb: DataFrame, probes: DataFrame): DataFrame = {
+    val probes = gridProbes(emb)
     val exact5 = cosineTopKFrom(emb, probes, k = 5)
       .select(col("probe_id"), col("cand_id"))
     val approx5 = ivfPqAnnFrom(emb, probes, nlist = 16, nprobe = 4,
@@ -273,10 +287,8 @@ object Similarity {
   }
 
   /** [[rpLshAnn]] over an explicit probe set — the bounded-probe-budget
-    * dual, same contract (and `excludeSelf` caveat) as
-    * [[cosineTopKFrom]]. */
-  def rpLshAnnFrom(emb: DataFrame, probes: DataFrame, kRank: Int,
-      excludeSelf: Boolean = true): DataFrame = {
+    * dual, same contract as [[cosineTopKFrom]]. */
+  def rpLshAnnFrom(emb: DataFrame, probes: DataFrame, kRank: Int): DataFrame = {
     val cand = emb
       .withColumn("nrm", norm(col("embedding")))
       .withColumn("sig", rpSignature(col("embedding")))
@@ -287,18 +299,10 @@ object Similarity {
       .withColumn("sig", rpSignature(col("embedding")))
       .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
         col("nrm").as("p_nrm"), col("sig"))
-    val pairs = broadcast(p)
-      .join(cand, col("sig") === col("c_sig") &&
-        (if (excludeSelf) col("probe_id") =!= col("cand_id") else lit(true)))
-      .withColumn("cosine", dot(col("p_emb"), col("c_emb")) / (col("p_nrm") * col("c_nrm")))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc, col("cand_id"))
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kRank)
-      .select(col("probe_id"), col("sig"), col("rank").cast("long").as("rank"),
-        col("cand_id"), round(col("cosine"), 6).as("cosine"))
-      .orderBy(col("probe_id"), col("rank"))
+    probeTopK(cosinePairs(p, cand, col("sig") === col("c_sig")), kRank,
+        col("cosine").desc, col("cand_id"))(
+      col("probe_id"), col("sig"), longRank,
+      col("cand_id"), round(col("cosine"), 6).as("cosine"))
   }
 
   /** q119: multi-probe LSH (Lv et al. 2007) over the q58 RP-LSH index —
@@ -324,7 +328,7 @@ object Similarity {
 
   /** [[multiprobeLsh]] over an explicit probe set. */
   def multiprobeLshFrom(emb: DataFrame, probes: DataFrame, nFlip: Int,
-      kRank: Int, excludeSelf: Boolean = true): DataFrame = {
+      kRank: Int): DataFrame = {
     val cand = emb
       .withColumn("nrm", norm(col("embedding")))
       .withColumn("sig", rpSignature(col("embedding")))
@@ -352,20 +356,10 @@ object Similarity {
         transform(col("flips"), f => col("sig").bitwiseXOR(f.getField("bit")))))
       .select(col("probe_id"), col("p_emb"), col("p_nrm"),
         explode(col("pcells")).as("pcell"))
-    val pairs = broadcast(p)
-      .join(cand, col("pcell") === col("c_sig") &&
-        (if (excludeSelf) col("probe_id") =!= col("cand_id") else lit(true)))
-      .withColumn("cosine",
-        dot(col("p_emb"), col("c_emb")) / (col("p_nrm") * col("c_nrm")))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc, col("cand_id"))
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kRank)
-      .select(col("probe_id"), col("rank").cast("long").as("rank"),
-        col("cand_id"), col("c_sig").as("cell"),
-        round(col("cosine"), 6).as("cosine"))
-      .orderBy(col("probe_id"), col("rank"))
+    probeTopK(cosinePairs(p, cand, col("pcell") === col("c_sig")), kRank,
+        col("cosine").desc, col("cand_id"))(
+      col("probe_id"), longRank, col("cand_id"), col("c_sig").as("cell"),
+      round(col("cosine"), 6).as("cosine"))
   }
 
   /** q102: IVF ANN — inverted-file approximate nearest neighbor, the
@@ -395,17 +389,36 @@ object Similarity {
   }
 
   /** [[ivfAnn]] over an explicit probe set — the bounded-probe-budget
-    * dual, same contract (and `excludeSelf` caveat) as
-    * [[cosineTopKFrom]]. Seed centroids = first `nlist` vec_ids; for
-    * trained cells pass your own centroid table to [[ivfAnnWith]]. */
+    * dual, same contract as [[cosineTopKFrom]]. Seed centroids = first
+    * `nlist` vec_ids; for trained cells pass your own centroid table to
+    * [[ivfAnnWith]]. */
   def ivfAnnFrom(emb: DataFrame, probes: DataFrame, nlist: Int, nprobe: Int,
-      k: Int, excludeSelf: Boolean = true): DataFrame = {
-    val cent = emb
-      .withColumn("nrm", norm(col("embedding")))
-      .filter(col("vec_id") < nlist)
-      .select(col("vec_id").as("cell"), col("embedding").as("cvec"),
-        col("nrm").as("cnrm"))
-    ivfAnnWith(emb, probes, cent, nprobe, k, excludeSelf)
+      k: Int): DataFrame =
+    ivfAnnWith(emb, probes, seedCells(emb.withColumn("nrm", norm(col("embedding"))), nlist),
+      nprobe, k)
+
+  /** The seeded IVF quantizer (cell, cvec, cnrm): the first `nlist`
+    * vec_ids of `en` (which carries `nrm`) — the q102 seeding convention. */
+  private def seedCells(en: DataFrame, nlist: Int): DataFrame =
+    en.filter(col("vec_id") < nlist)
+      .select(col("vec_id").as("cell"), col("embedding").as("cvec"), col("nrm").as("cnrm"))
+
+  /** Seeded IVF candidates — the corpus assigned to its nearest seed cell
+    * (the inverted lists), each probe routed to its `nprobe` nearest cells
+    * ([[probeCells]]): (probe_id, vec_id, cell) for every corpus vector
+    * in a probed cell, self-pairs dropped ([[notSelf]]). */
+  private def ivfCandidates(emb: DataFrame, probes: DataFrame, nlist: Int,
+      nprobe: Int): DataFrame = {
+    val en = emb.withColumn("nrm", norm(col("embedding")))
+    val cent = seedCells(en, nlist)
+    val cells = Curation.assignmentsWith(en,
+        cent.select(col("cell").as("cluster_id"), col("cvec"), col("cnrm")))
+      .select(col("vec_id"), col("cluster_id").as("c_cell"))
+    val pcells = probeCells(probes, cent, nprobe)
+      .select(col("probe_id"), col("cell"))
+    cells
+      .join(broadcast(pcells), col("c_cell") === col("cell") && notSelf("vec_id"))
+      .select(col("probe_id"), col("vec_id"), col("cell"))
   }
 
   /** Probe → its top-`nprobe` cells by cosine against the broadcast
@@ -419,18 +432,14 @@ object Similarity {
     * Output keeps p_emb/p_nrm/cvec/cnrm/pcos/prn so callers project
     * what they need. */
   private[graft] def probeCells(probes: DataFrame, cent: DataFrame,
-      nprobe: Int): DataFrame = {
-    val pw = Window.partitionBy(col("probe_id"))
-      .orderBy(col("pcos").desc, col("cell"))
+      nprobe: Int): DataFrame =
     probes
       .withColumn("nrm", norm(col("embedding")))
       .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
         col("nrm").as("p_nrm"))
       .crossJoin(broadcast(cent))
-      .withColumn("pcos", dot(col("p_emb"), col("cvec")) / (col("p_nrm") * col("cnrm")))
-      .withColumn("prn", row_number().over(pw))
-      .filter(col("prn") <= nprobe)
-  }
+      .withColumn("pcos", cosine(col("p_emb"), col("cvec"), col("p_nrm"), col("cnrm")))
+      .transform(topPerKey("probe_id", nprobe, "prn")(col("pcos").desc, col("cell")))
 
   /** IVF over an ARBITRARY centroid table (cell, cvec, cnrm) — the
     * trained-cells entry point: run q77's M-step over the seeded
@@ -440,7 +449,7 @@ object Similarity {
     * partition the corpus) — pinned for trained cells in
     * SimilaritySpec. */
   def ivfAnnWith(emb: DataFrame, probes: DataFrame, cent: DataFrame,
-      nprobe: Int, k: Int, excludeSelf: Boolean = true): DataFrame = {
+      nprobe: Int, k: Int): DataFrame = {
     val cand = Curation.assignmentsWith(
         emb.withColumn("nrm", norm(col("embedding"))),
         cent.select(col("cell").as("cluster_id"), col("cvec"), col("cnrm")))
@@ -448,18 +457,10 @@ object Similarity {
         col("nrm").as("c_nrm"), col("cluster_id").as("c_cell"))
     val pcells = probeCells(probes, cent, nprobe)
       .select(col("probe_id"), col("p_emb"), col("p_nrm"), col("cell"))
-    val pairs = broadcast(pcells)
-      .join(cand, col("cell") === col("c_cell") &&
-        (if (excludeSelf) col("probe_id") =!= col("cand_id") else lit(true)))
-      .withColumn("cosine", dot(col("p_emb"), col("c_emb")) / (col("p_nrm") * col("c_nrm")))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc, col("cand_id"))
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("cell"), col("rank").cast("long").as("rank"),
-        col("cand_id"), round(col("cosine"), 6).as("cosine"))
-      .orderBy(col("probe_id"), col("rank"))
+    probeTopK(cosinePairs(pcells, cand, col("cell") === col("c_cell")), k,
+        col("cosine").desc, col("cand_id"))(
+      col("probe_id"), col("cell"), longRank,
+      col("cand_id"), round(col("cosine"), 6).as("cosine"))
   }
 
   /** One Lloyd step over the seeded cells: E-step assignment against the
@@ -484,8 +485,7 @@ object Similarity {
       .select(col("cluster_id"),
         posexplode(col("embedding")).as(Seq("dim", "v")))
       .groupBy(col("cluster_id"), col("dim"))
-      .agg(count(lit(1)).as("n"),
-        sum(floor(col("v").cast("double") * 1e9).cast("decimal(28,9)")).as("s"))
+      .agg(count(lit(1)).as("n"), decSum9(col("v").cast("double")).as("s"))
       .withColumn("cm",
         floor(col("s").cast("double") / 1e9 / col("n") * 1e6) / 1e6)
       .groupBy(col("cluster_id"))
@@ -616,31 +616,29 @@ object Similarity {
     * full seed vectors) broadcasts to the encode scan — corpus×m explode,
     * per-(vector, subspace) argmin as a partial-aggregated struct-min;
     * ADC is one equality join of the COMPRESSED codes against the
-    * broadcast LUT plus a decimal-exact regroup on (probe, vector) — the
-    * repo's order-independent summation rule, so the m subspace terms add
-    * identically in any engine and at any parallelism. */
+    * broadcast LUT plus an exact regroup on (probe, vector) ([[adcSum]]),
+    * so the m subspace terms add identically in any engine and at any
+    * parallelism. */
   def pqAnnFrom(emb: DataFrame, probes: DataFrame, m: Int, dsub: Int,
-      nCodes: Int, k: Int, excludeSelf: Boolean = true): DataFrame = {
+      nCodes: Int, k: Int): DataFrame = {
     val cb = pqCodebook(emb, nCodes)
     val scored = pqCodes(emb, cb, m, dsub)
       .join(broadcast(pqLut(probes, cb, m, dsub)),
-        col("sub") === col("l_sub") && col("code") === col("l_code") &&
-          (if (excludeSelf) col("probe_id") =!= col("vec_id") else lit(true)))
+        col("sub") === col("l_sub") && col("code") === col("l_code") && notSelf("vec_id"))
       .groupBy(col("probe_id"), col("vec_id"))
-      // 1e9-scaled long accumulator: exactly m subquantizer terms per
-      // group (structurally bounded, never corpus-global) with |d| < ~1e3
-      // — scale·|group sum| ≪ 2^53, so the long sum and its double cast
-      // are exact (the MoneySum headroom rule; ADVICE r21)
-      .agg((sum(floor(col("d") * 1e9).cast("long")).cast("double") / 1e9)
-        .as("adc"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("adc").asc, col("vec_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("cand_id"), round(col("adc"), 6).as("adc"))
-      .orderBy(col("probe_id"), col("rank"))
+      .agg(adcSum(col("d")).as("adc"))
+    probeTopK(scored, k, col("adc").asc, col("vec_id"))(
+      col("probe_id"), longRank,
+      col("vec_id").as("cand_id"), round(col("adc"), 6).as("adc"))
   }
+
+  /** A candidate's ADC: Σ of its m subquantizer distances `d` through a
+    * 1e9-scaled long accumulator. Exactly m terms per group (structurally
+    * bounded, never corpus-global) with |d| < ~1e3 — scale·|group sum|
+    * ≪ 2^53, so the long sum and its double cast are exact (the MoneySum
+    * headroom rule; ADVICE r21). */
+  private def adcSum(d: Column): Column =
+    sum(floor(d * 1e9).cast("long")).cast("double") / 1e9
 
   /** q108: IVF-PQ — the two halves composed exactly as a production
     * vector index runs them (FAISS's IVFPQ architecture, re-expressed as
@@ -665,47 +663,21 @@ object Similarity {
 
   /** [[ivfPqAnn]] over explicit probes. */
   def ivfPqAnnFrom(emb: DataFrame, probes: DataFrame, nlist: Int, nprobe: Int,
-      m: Int, dsub: Int, nCodes: Int, k: Int,
-      excludeSelf: Boolean = true): DataFrame = {
-    val en = emb.withColumn("nrm", norm(col("embedding")))
-    val cent = en.filter(col("vec_id") < nlist)
-      .select(col("vec_id").as("cell"), col("embedding").as("cvec"),
-        col("nrm").as("cnrm"))
-    // corpus → cell (the IVF inverted list), q102's assignment shape
-    val cells = Curation.assignmentsWith(en,
-        cent.select(col("cell").as("cluster_id"), col("cvec"), col("cnrm")))
-      .select(col("vec_id"), col("cluster_id").as("c_cell"))
-    // probe → its top-nprobe cells, by cosine to the broadcast centroids
-    val pcells = probeCells(probes, cent, nprobe)
-      .select(col("probe_id"), col("cell"))
-    // candidate pairs: vectors living in a probed cell
-    val cand = cells
-      .join(broadcast(pcells), col("c_cell") === col("cell") &&
-        (if (excludeSelf) col("probe_id") =!= col("vec_id") else lit(true)))
-      .select(col("probe_id"), col("vec_id"), col("cell"))
+      m: Int, dsub: Int, nCodes: Int, k: Int): DataFrame = {
     // ADC over candidates only: candidate rows pick up their m code rows,
     // each code row its precomputed probe distance
     val cb = pqCodebook(emb, nCodes)
-    val scored = cand
+    val scored = ivfCandidates(emb, probes, nlist, nprobe)
       .join(pqCodes(emb, cb, m, dsub), Seq("vec_id"))
       .join(broadcast(pqLut(probes, cb, m, dsub)
           .withColumnRenamed("probe_id", "l_probe")),
         col("probe_id") === col("l_probe") &&
           col("sub") === col("l_sub") && col("code") === col("l_code"))
       .groupBy(col("probe_id"), col("vec_id"), col("cell"))
-      // 1e9-scaled long accumulator: exactly m subquantizer terms per
-      // group (structurally bounded, never corpus-global) with |d| < ~1e3
-      // — scale·|group sum| ≪ 2^53, so the long sum and its double cast
-      // are exact (the MoneySum headroom rule; ADVICE r21)
-      .agg((sum(floor(col("d") * 1e9).cast("long")).cast("double") / 1e9)
-        .as("adc"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("adc").asc, col("vec_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("cell"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("cand_id"), round(col("adc"), 6).as("adc"))
-      .orderBy(col("probe_id"), col("rank"))
+      .agg(adcSum(col("d")).as("adc"))
+    probeTopK(scored, k, col("adc").asc, col("vec_id"))(
+      col("probe_id"), col("cell"), longRank,
+      col("vec_id").as("cand_id"), round(col("adc"), 6).as("adc"))
   }
 
   /** Per-vector residual against its assigned cell — the FAISS IVF-PQ
@@ -761,8 +733,7 @@ object Similarity {
         posexplode(slice(col("embedding"), col("sub") * dsub + 1, lit(dsub)))
           .as(Seq("i", "v")))
       .groupBy(col("sub"), col("code"), col("i"))
-      .agg(count(lit(1)).as("n"),
-        sum(floor(col("v").cast("double") * 1e9).cast("decimal(28,9)")).as("s"))
+      .agg(count(lit(1)).as("n"), decSum9(col("v").cast("double")).as("s"))
       .withColumn("cm",
         floor(col("s").cast("double") / 1e9 / col("n") * 1e6) / 1e6)
       .groupBy(col("sub"), col("code"))
@@ -851,8 +822,7 @@ object Similarity {
 
   /** [[ivfPqTrained]] over explicit probes. */
   def ivfPqTrainedFrom(emb: DataFrame, probes: DataFrame, nlist: Int,
-      nprobe: Int, m: Int, dsub: Int, nCodes: Int, k: Int,
-      excludeSelf: Boolean = true): DataFrame = {
+      nprobe: Int, m: Int, dsub: Int, nCodes: Int, k: Int): DataFrame = {
     // staged like a deployment's trained index artifacts: quantizer
     // (nlist rows), residual table (corpus-sized — the encode input and
     // inverted-list cell map), trained codebook (m·nCodes rows). Each is
@@ -861,7 +831,7 @@ object Similarity {
     val cent = Materialize.stage(trainedCentroids(emb, nlist))
     val resid = Materialize.stage(residualsWith(emb, cent))
     val tcb = Materialize.stage(trainedSubCodebook(resid, m, dsub, nCodes))
-    ivfPqScoreWith(probes, cent, resid, tcb, m, dsub, nprobe, k, excludeSelf)
+    ivfPqScoreWith(probes, cent, resid, tcb, m, dsub, nprobe, k)
   }
 
   /** The residual-PQ IVF scoring engine over EXPLICIT index artifacts —
@@ -872,10 +842,9 @@ object Similarity {
     * ranking is exactly the deployed one. */
   private[graft] def ivfPqScoreWith(probes: DataFrame, cent: DataFrame,
       resid: DataFrame, tcb: DataFrame, m: Int, dsub: Int, nprobe: Int,
-      k: Int, excludeSelf: Boolean = true): DataFrame = {
+      k: Int): DataFrame = {
     val pcells = pqProbeRouting(probes, cent, nprobe)
-    ivfPqScoreRouted(pcells, pqCellCandidates(pcells, resid, excludeSelf),
-      resid, tcb, m, dsub, k)
+    ivfPqScoreRouted(pcells, pqCellCandidates(pcells, resid), resid, tcb, m, dsub, k)
   }
 
   /** Probe → top-nprobe cells, carrying the CELL-SPECIFIC probe residual
@@ -891,11 +860,10 @@ object Similarity {
 
   /** The (probe_id, vec_id, cell) candidate set from a probe routing —
     * also codebook-independent; only the ADC LUT differs per codebook. */
-  private[graft] def pqCellCandidates(pcells: DataFrame, resid: DataFrame,
-      excludeSelf: Boolean): DataFrame =
+  private[graft] def pqCellCandidates(pcells: DataFrame, resid: DataFrame): DataFrame =
     resid.select(col("vec_id"), col("cell"))
       .join(broadcast(pcells.select(col("probe_id"), col("cell"))), Seq("cell"))
-      .filter(if (excludeSelf) col("probe_id") =!= col("vec_id") else lit(true))
+      .filter(notSelf("vec_id"))
 
   /** The codebook-DEPENDENT half of [[ivfPqScoreWith]]: encode against
     * `tcb`, build the per-(probe, cell) ADC LUT, score the routed
@@ -915,19 +883,10 @@ object Similarity {
         col("probe_id") === col("l_probe") && col("cell") === col("l_cell") &&
           col("sub") === col("l_sub") && col("code") === col("l_code"))
       .groupBy(col("probe_id"), col("vec_id"), col("cell"))
-      // 1e9-scaled long accumulator: exactly m subquantizer terms per
-      // group (structurally bounded, never corpus-global) with |d| < ~1e3
-      // — scale·|group sum| ≪ 2^53, so the long sum and its double cast
-      // are exact (the MoneySum headroom rule; ADVICE r21)
-      .agg((sum(floor(col("d") * 1e9).cast("long")).cast("double") / 1e9)
-        .as("adc"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("adc").asc, col("vec_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("cell"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("cand_id"), round(col("adc"), 6).as("adc"))
-      .orderBy(col("probe_id"), col("rank"))
+      .agg(adcSum(col("d")).as("adc"))
+    probeTopK(scored, k, col("adc").asc, col("vec_id"))(
+      col("probe_id"), col("cell"), longRank,
+      col("vec_id").as("cand_id"), round(col("adc"), 6).as("adc"))
   }
 
   /** BOTH codebooks' [[ivfPqScoreRouted]] rankings in ONE pass — q127's
@@ -993,11 +952,7 @@ object Similarity {
         col("probe_id") === col("b_probe") && col("cell") === col("b_cell") &&
           col("sub") === col("b_sub") && col("code_b") === col("b_code"))
       .groupBy(col("probe_id"), col("vec_id"), col("cell"))
-      // m bounded terms per group — same long-safety bound as pqAnnFrom
-      .agg((sum(floor(col("lda") * 1e9).cast("long"))
-          .cast("double") / 1e9).as("adc_a"),
-        (sum(floor(col("ldb") * 1e9).cast("long"))
-          .cast("double") / 1e9).as("adc_b"))
+      .agg(adcSum(col("lda")).as("adc_a"), adcSum(col("ldb")).as("adc_b"))
     val wa = Window.partitionBy(col("probe_id"))
       .orderBy(col("adc_a").asc, col("vec_id"))
     val wb = Window.partitionBy(col("probe_id"))
@@ -1028,27 +983,19 @@ object Similarity {
 
   /** [[pqRefine]] over explicit probes. */
   def pqRefineFrom(emb: DataFrame, probes: DataFrame, nlist: Int, nprobe: Int,
-      m: Int, dsub: Int, nCodes: Int, kShort: Int, k: Int,
-      excludeSelf: Boolean = true): DataFrame = {
-    val short = ivfPqAnnFrom(emb, probes, nlist, nprobe, m, dsub, nCodes,
-        kShort, excludeSelf)
+      m: Int, dsub: Int, nCodes: Int, kShort: Int, k: Int): DataFrame = {
+    val short = ivfPqAnnFrom(emb, probes, nlist, nprobe, m, dsub, nCodes, kShort)
       .select(col("probe_id"), col("cand_id"))
     val cand = emb.select(col("vec_id").as("cand_id"),
       col("embedding").as("c_emb"), norm(col("embedding")).as("c_nrm"))
     val p = probes.select(col("vec_id").as("probe_id"),
       col("embedding").as("p_emb"), norm(col("embedding")).as("p_nrm"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc, col("cand_id"))
-    broadcast(short)
+    val pairs = broadcast(short)
       .join(cand, Seq("cand_id"))
       .join(broadcast(p), Seq("probe_id"))
-      .withColumn("cosine",
-        dot(col("p_emb"), col("c_emb")) / (col("p_nrm") * col("c_nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank").cast("long").as("rank"),
-        col("cand_id"), round(col("cosine"), 6).as("cosine"))
-      .orderBy(col("probe_id"), col("rank"))
+      .withColumn("cosine", cosine(col("p_emb"), col("c_emb"), col("p_nrm"), col("c_nrm")))
+    probeTopK(pairs, k, col("cosine").desc, col("cand_id"))(
+      col("probe_id"), longRank, col("cand_id"), round(col("cosine"), 6).as("cosine"))
   }
 
   /** q127: PQ codebook drift audit (VERDICT r13 #4) — the
@@ -1108,10 +1055,8 @@ object Similarity {
     // index artifacts — unstaged, each use re-runs its corpus filter
     // scan (review finding r14)
     val probes = standing("probes")(probes0)
-    val en = emb.withColumn("nrm", norm(col("embedding")))
-    val cent = standing("cent")(en.filter(col("vec_id") < nlist)
-      .select(col("vec_id").as("cell"), col("embedding").as("cvec"),
-        col("nrm").as("cnrm")))
+    val cent = standing("cent")(
+      seedCells(emb.withColumn("nrm", norm(col("embedding"))), nlist))
     val resid = standing("resid")(residualsWith(emb, cent))
     val tcbFresh = Materialize.stage(trainedSubCodebook(resid, m, dsub, nCodes))
     // the stale codebook's training set is the even-id half playing
@@ -1125,8 +1070,7 @@ object Similarity {
     // INDEPENDENT — staged once and shared by both chains (only the ADC
     // LUT and encode differ per codebook), VERDICT r14 #1a
     val pcells = Materialize.stage(pqProbeRouting(probes, cent, nprobe))
-    val cand = Materialize.stage(pqCellCandidates(pcells, resid,
-      excludeSelf = true))
+    val cand = Materialize.stage(pqCellCandidates(pcells, resid))
     // ... and the two chains themselves run FUSED: one encode scan, one
     // candidate regroup, one window pass carrying both codebooks' ranks
     // (spec-pinned value-identical to two ivfPqScoreRouted runs). Staged
@@ -1161,26 +1105,18 @@ object Similarity {
     * rides the join condition so same-label rows never materialize. */
   def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    hardNegativesFrom(emb, gridProbes(emb), k = 5)
-  }
-
-  /** [[hardNegatives]] over explicit probes (must carry `label`). */
-  def hardNegativesFrom(emb: DataFrame, probes: DataFrame, k: Int): DataFrame = {
+    val probes = gridProbes(emb)
     val cand = emb.select(col("vec_id").as("cand_id"), col("label").as("cand_label"),
       col("embedding").as("c_emb"), norm(col("embedding")).as("c_nrm"))
     val p = probes.select(col("vec_id").as("probe_id"), col("label").as("probe_label"),
       col("embedding").as("p_emb"), norm(col("embedding")).as("p_nrm"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc, col("cand_id"))
-    broadcast(p)
+    // the label inequality already excludes the self-pair
+    val pairs = broadcast(p)
       .join(cand, col("probe_label") =!= col("cand_label"))
-      .withColumn("cosine",
-        dot(col("p_emb"), col("c_emb")) / (col("p_nrm") * col("c_nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("probe_label"), col("rank").cast("long").as("rank"),
-        col("cand_id"), col("cand_label"), round(col("cosine"), 6).as("cosine"))
-      .orderBy(col("probe_id"), col("rank"))
+      .withColumn("cosine", cosine(col("p_emb"), col("c_emb"), col("p_nrm"), col("c_nrm")))
+    probeTopK(pairs, 5, col("cosine").desc, col("cand_id"))(
+      col("probe_id"), col("probe_label"), longRank,
+      col("cand_id"), col("cand_label"), round(col("cosine"), 6).as("cosine"))
   }
 
   /** q120: scalar-quantization ANN (FAISS IndexScalarQuantizer, SQ8) —
@@ -1272,21 +1208,15 @@ object Similarity {
   }
 
   /** [[sq8Ann]] over explicit probes. */
-  def sq8AnnFrom(emb: DataFrame, probes: DataFrame, k: Int,
-      excludeSelf: Boolean = true): DataFrame = {
+  def sq8AnnFrom(emb: DataFrame, probes: DataFrame, k: Int): DataFrame = {
     val rng = sq8Rng(emb)
     val p = probes.select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("sqdist").asc, col("cand_id"))
-    sq8Codes(emb, rng)
-      .join(broadcast(p),
-        if (excludeSelf) col("probe_id") =!= col("cand_id") else lit(true))
+    val pairs = sq8Codes(emb, rng)
+      .join(broadcast(p), notSelf("cand_id"))
       .crossJoin(broadcast(rng))
       .withColumn("sqdist", sq8Dist)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank").cast("long").as("rank"),
-        col("cand_id"), round(col("sqdist"), 6).as("sqdist"))
-      .orderBy(col("probe_id"), col("rank"))
+    probeTopK(pairs, k, col("sqdist").asc, col("cand_id"))(
+      col("probe_id"), longRank, col("cand_id"), round(col("sqdist"), 6).as("sqdist"))
   }
 
   /** q122: IVF-SQ8 (FAISS IndexIVFScalarQuantizer) — q102's cell routing
@@ -1309,33 +1239,17 @@ object Similarity {
 
   /** [[ivfSq8Ann]] over explicit probes. */
   def ivfSq8AnnFrom(emb: DataFrame, probes: DataFrame, nlist: Int,
-      nprobe: Int, k: Int, excludeSelf: Boolean = true): DataFrame = {
-    val en = emb.withColumn("nrm", norm(col("embedding")))
-    val cent = en.filter(col("vec_id") < nlist)
-      .select(col("vec_id").as("cell"), col("embedding").as("cvec"),
-        col("nrm").as("cnrm"))
-    val cells = Curation.assignmentsWith(en,
-        cent.select(col("cell").as("cluster_id"), col("cvec"), col("cnrm")))
-      .select(col("vec_id"), col("cluster_id").as("c_cell"))
-    val pcells = probeCells(probes, cent, nprobe)
-      .select(col("probe_id"), col("cell"))
-    val cand = cells
-      .join(broadcast(pcells), col("c_cell") === col("cell") &&
-        (if (excludeSelf) col("probe_id") =!= col("vec_id") else lit(true)))
-      .select(col("probe_id"), col("vec_id"), col("cell"))
+      nprobe: Int, k: Int): DataFrame = {
     val rng = sq8Rng(emb)
     val p = probes.select(col("vec_id").as("p_id"), col("embedding").as("p_emb"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("sqdist").asc, col("cand_id"))
-    cand
+    val pairs = ivfCandidates(emb, probes, nlist, nprobe)
       .join(sq8Codes(emb, rng), col("vec_id") === col("cand_id"))
       .join(broadcast(p), col("probe_id") === col("p_id"))
       .crossJoin(broadcast(rng))
       .withColumn("sqdist", sq8Dist)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("cell"), col("rank").cast("long").as("rank"),
-        col("cand_id"), round(col("sqdist"), 6).as("sqdist"))
-      .orderBy(col("probe_id"), col("rank"))
+    probeTopK(pairs, k, col("sqdist").asc, col("cand_id"))(
+      col("probe_id"), col("cell"), longRank,
+      col("cand_id"), round(col("sqdist"), 6).as("sqdist"))
   }
 
   /** q124: contrastive triplet mining — for each anchor, the hardest
@@ -1351,24 +1265,14 @@ object Similarity {
     * argmax windows; everything downstream is probe-budget-sized. */
   def tripletMining(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    tripletMiningFrom(emb, gridProbes(emb))
-  }
-
-  /** [[tripletMining]] over explicit probes (must carry `label`). */
-  def tripletMiningFrom(emb: DataFrame, probes: DataFrame): DataFrame = {
+    val probes = gridProbes(emb)
     val cand = emb.select(col("vec_id").as("cand_id"), col("label").as("cand_label"),
       col("embedding").as("c_emb"), norm(col("embedding")).as("c_nrm"))
     val p = probes.select(col("vec_id").as("probe_id"), col("label").as("probe_label"),
       col("embedding").as("p_emb"), norm(col("embedding")).as("p_nrm"))
-    val pairs = broadcast(p)
-      .join(cand, col("probe_id") =!= col("cand_id"))
-      .withColumn("cosine",
-        dot(col("p_emb"), col("c_emb")) / (col("p_nrm") * col("c_nrm")))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc, col("cand_id"))
+    val pairs = cosinePairs(p, cand)
     def top1(side: DataFrame, idAs: String, cosAs: String): DataFrame =
-      side.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+      side.transform(topPerKey("probe_id", 1, "rn")(col("cosine").desc, col("cand_id")))
         .select(col("probe_id"), col("cand_id").as(idAs), col("cosine").as(cosAs))
     val pos = top1(pairs.filter(col("probe_label") === col("cand_label")),
       "pos_id", "pos_raw")
@@ -1388,25 +1292,22 @@ object Similarity {
     * DECIMAL sum, truncate to 6 dp): a plain `avg` over irrational
     * norms is accumulation-order-dependent and can round differently in
     * each engine when a group mean lands on a 1e-6 boundary. */
-  def embeddingStats(spark: SparkSession, dir: String): DataFrame = {
-    val t6 = trunc6 _
-    val decSum = (c: Column) => sum(floor(c * 1e9).cast("decimal(28,9)"))
+  def embeddingStats(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .withColumn("nrm", norm(col("embedding")))
       .withColumn("c0", element_at(col("embedding"), 1).cast("double"))
       .groupBy(col("label"))
       .agg(
         count(lit(1)).as("n_vectors"),
-        decSum(col("nrm")).as("nrm_s"),
+        decSum9(col("nrm")).as("nrm_s"),
         round(min(col("nrm")), 6).as("min_norm"),
         round(max(col("nrm")), 6).as("max_norm"),
-        decSum(col("c0")).as("c0_s"))
+        decSum9(col("c0")).as("c0_s"))
       .select(col("label"), col("n_vectors"),
-        t6(col("nrm_s").cast("double") / 1e9 / col("n_vectors")).as("avg_norm"),
+        trunc6(col("nrm_s").cast("double") / 1e9 / col("n_vectors")).as("avg_norm"),
         col("min_norm"), col("max_norm"),
-        t6(col("c0_s").cast("double") / 1e9 / col("n_vectors")).as("avg_c0"))
+        trunc6(col("c0_s").cast("double") / 1e9 / col("n_vectors")).as("avg_c0"))
       .orderBy(col("label"))
-  }
 
   /** q147: label-centroid similarity matrix — the cosine between every
     * pair of per-label mean vectors. This is the class-confusability /
@@ -1429,8 +1330,7 @@ object Similarity {
     val cent = emb
       .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
       .groupBy(col("label"), col("dim"))
-      .agg(count(lit(1)).as("n"),
-        sum(floor(col("v").cast("double") * 1e9).cast("decimal(28,9)")).as("s"))
+      .agg(count(lit(1)).as("n"), decSum9(col("v").cast("double")).as("s"))
       .select(col("label"), col("dim"),
         floor(col("s").cast("double") / 1e9 / col("n") * 1e6)
           .cast("long").as("mi"))
@@ -1497,12 +1397,6 @@ object Similarity {
       .orderBy(col("probe_id"))
   }
 
-  /** THE 1e-6 output-truncation grid — a cross-engine determinism
-    * contract (every oracle floors computed ratios to 6 dp), so it has
-    * exactly one definition per file: change it here and nowhere else.
-    * (Curation has its own shared copy for the text families.) */
-  private def trunc6(c: Column): Column = floor(c * 1e6) / 1e6
-
   /** q140: per-DIMENSION embedding health audit — mean, variance and
     * value envelope of every coordinate across the corpus. This is the
     * collapsed-dimension / anisotropy check an embedding pipeline runs
@@ -1524,8 +1418,6 @@ object Similarity {
   /** [[dimensionStats]] over any (embedding) frame — the deployment /
     * fixture entry point. */
   private[graft] def dimensionStatsFrom(emb: DataFrame): DataFrame = {
-    val t6 = trunc6 _
-    val decSum = (c: Column) => sum(floor(c * 1e9).cast("decimal(28,9)"))
     val s1 = col("s1").cast("double") / 1e9 / col("n")
     val s2 = col("s2").cast("double") / 1e9 / col("n")
     emb
@@ -1534,13 +1426,13 @@ object Similarity {
       .groupBy(col("dim"))
       .agg(
         count(lit(1)).as("n"),
-        decSum(col("vd")).as("s1"),
-        decSum(col("vd") * col("vd")).as("s2"),
-        t6(min(col("vd"))).as("min_v"),
-        t6(max(col("vd"))).as("max_v"))
+        decSum9(col("vd")).as("s1"),
+        decSum9(col("vd") * col("vd")).as("s2"),
+        trunc6(min(col("vd"))).as("min_v"),
+        trunc6(max(col("vd"))).as("max_v"))
       .select(col("dim").cast("long").as("dim"), col("n"),
-        t6(s1).as("mean_v"),
-        t6(s2 - s1 * s1).as("var_v"),
+        trunc6(s1).as("mean_v"),
+        trunc6(s2 - s1 * s1).as("var_v"),
         col("min_v"), col("max_v"))
       .orderBy(col("dim"))
   }

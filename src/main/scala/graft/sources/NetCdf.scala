@@ -29,8 +29,8 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType, Timestam
   * different container format: its superblock v0-v3 files — nested
   * groups, and contiguous, compact or chunked layouts under every chunk
   * index — are handled by the [[NetCdf4]] subset codec, and anything
-  * beyond that subset is skipped at the fetch boundary
-  * ([[graft.operators.Fetch.containerGuard]]) with R17 semantics.
+  * beyond that subset fails decode, which
+  * [[graft.operators.Fetch.fetchAndIngest]] records as an R17 skip.
   *
   * Scale note: decode runs at the edge on a single staged response
   * (SURVEY.md §7.3 — a DMI cube response is a few MB); everything after the

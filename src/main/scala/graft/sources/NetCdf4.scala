@@ -78,9 +78,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * parameters — the page-init bitmap lives in the owning super block),
   * and fractal heaps with filtered/huge/tiny objects or indirect child
   * rows are rejected with a message naming the feature;
-  * [[graft.operators.Fetch.containerGuard]] turns that rejection into
-  * R17 skip-parameter semantics at the fetch boundary, so an
-  * out-of-subset file skips cleanly instead of failing a job.
+  * [[graft.operators.Fetch.fetchAndIngest]] records that rejection as
+  * an R17 per-parameter skip, so an out-of-subset file skips cleanly
+  * instead of failing a job.
   *
   * The writer emits the same subset (the container dual of
   * [[NetCdf.encodeCube]]), which is what makes the codec testable
@@ -161,8 +161,8 @@ object NetCdf4 {
 
   // -- reader ---------------------------------------------------------
 
-  /** Header-only parse validity probe (no data is read) — cheap enough
-    * for the fetch boundary. Left = why the stream is out of subset. */
+  /** Header-only parse validity probe (no data is read). Left = why the
+    * stream is out of subset. */
   def probe(bytes: Array[Byte]): Either[String, Unit] =
     Try(parse(bytes)) match {
       case Success(_) => Right(())

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.MoneySum.trunc6
 import graft.operators.Dedup
 import graft.sources.Tables
 
@@ -238,19 +239,6 @@ object StreamOps {
       .drop("toks", "grams", "n_shared")
   }
 
-  /** Streaming quality gate — the streaming dual of Curation.qualityGate:
-    * the same Gopher-style keep rules (≥ 30 tokens, type-token ratio
-    * ≥ 0.45, top-token ratio ≤ 0.15, identical 6-dp floor semantics)
-    * computed STATELESSLY per row, so the gate runs inline on the ingest
-    * stream with no state store and no shuffle.
-    *
-    * The batch gate gets the per-doc token histogram from explode +
-    * groupBy; a streaming groupBy would need state, so here the
-    * histogram max comes from a per-row higher-order-function pass —
-    * O(tokens × distinct) per document, bounded by document length,
-    * embarrassingly parallel, and entirely in codegen. */
-  private def t6(c: Column): Column = floor(c * 1e6) / 1e6
-
   /** The q66 feature set computed STATELESSLY per row — the batch gate
     * gets the token histogram from explode + groupBy; a streaming
     * groupBy would need state, so the histogram max comes from a
@@ -270,12 +258,18 @@ object StreamOps {
         array_max(transform(array_distinct(col("toks")),
           t => size(filter(col("toks"), x => x === t)))).cast("long"))
 
+  /** Streaming quality gate — the streaming dual of Curation.qualityGate:
+    * the same Gopher-style keep rules (≥ 30 tokens, type-token ratio
+    * ≥ 0.45, top-token ratio ≤ 0.15, identical 6-dp floor semantics)
+    * computed STATELESSLY per row ([[perRowGateFeatures]]), so the gate
+    * runs inline on the ingest stream with no state store and no
+    * shuffle. */
   def gateStream(docs: DataFrame): DataFrame =
     perRowGateFeatures(docs)
       .withColumn("keep",
         col("n_tokens") >= 30 &&
-        t6(col("n_distinct") * lit(1.0) / col("n_tokens")) >= 0.45 &&
-        t6(col("max_tok") * lit(1.0) / col("n_tokens")) <= 0.15)
+        trunc6(col("n_distinct") * lit(1.0) / col("n_tokens")) >= 0.45 &&
+        trunc6(col("max_tok") * lit(1.0) / col("n_tokens")) <= 0.15)
       .drop("toks", "n_distinct", "max_tok")
 
   /** Streaming model-based quality scoring — q125's learned filter at
@@ -294,9 +288,9 @@ object StreamOps {
       .withColumn("sum_len", aggregate(
         transform(col("toks"), t => length(t).cast("long")),
         lit(0L), (a, x) => a + x))
-      .withColumn("ttr", t6(col("n_distinct") * lit(1.0) / col("n_tokens")))
-      .withColumn("top_ratio", t6(col("max_tok") * lit(1.0) / col("n_tokens")))
-      .withColumn("mean_tok_len", t6(col("sum_len") * lit(1.0) / col("n_tokens")))
+      .withColumn("ttr", trunc6(col("n_distinct") * lit(1.0) / col("n_tokens")))
+      .withColumn("top_ratio", trunc6(col("max_tok") * lit(1.0) / col("n_tokens")))
+      .withColumn("mean_tok_len", trunc6(col("sum_len") * lit(1.0) / col("n_tokens")))
       .crossJoin(broadcast(weights))
       .withColumn("ml_score", Curation.mlScoreCol)
       .select(col("doc_id"), col("n_tokens"), col("ttr"), col("top_ratio"),
@@ -481,8 +475,8 @@ object StreamOps {
     import graft.operators.Similarity
     val scoredCells = transform(col("cells"), c =>
       struct(
-        (Similarity.dot(col("embedding"), c.getField("cvec")) /
-          (col("p_nrm") * c.getField("cnrm"))).as("pcos"),
+        Similarity.cosine(col("embedding"), c.getField("cvec"), col("p_nrm"),
+          c.getField("cnrm")).as("pcos"),
         c.getField("cell").as("cell")))
     val ranked = array_sort(scoredCells, (l, r) =>
       when(l.getField("pcos") > r.getField("pcos"), lit(-1))
@@ -832,8 +826,8 @@ object StreamOps {
       .withColumn("ev", explode(col("evals")))
       .filter(col("vec_id") =!= col("ev.eval_id"))
       .withColumn("cosine",
-        round(Similarity.dot(col("embedding"), col("ev.e_emb")) /
-          (col("nrm") * col("ev.e_nrm")), 6))
+        round(Similarity.cosine(col("embedding"), col("ev.e_emb"), col("nrm"),
+          col("ev.e_nrm")), 6))
       .filter(col("cosine") >= Curation.SemDecontamTau)
       .select(col("vec_id"), col("ev.eval_id").as("eval_id"), col("cosine"))
   }

@@ -81,4 +81,16 @@ class ContractSpec extends SparkSpec {
       if src.contains("\"scale_factor\"") || src.contains("\"missing_value\"") => p }
     assert(readers.size <= 1, s"CF packing attributes read in several files: $readers")
   }
+
+  test("cosine is written once under src/main/scala and no search takes an excludeSelf option") {
+    // every score divides dot(…) by two norms through Similarity.cosine, so
+    // its body is the one `dot(…) / (… * …)` the walk may find (arguments
+    // and norms nest one call deep, and may wrap across lines)
+    val inlineCosine = """dot\((?:[^()]|\([^()]*\))*\)\s*/\s*\((?:[^()]|\([^()]*\))*\*""".r
+    val copies = mainSources.flatMap { case (p, src) =>
+      Seq.fill(inlineCosine.findAllMatchIn(src).size)(p.getFileName.toString) }
+    assert(copies == Seq("Similarity.scala"), s"dot(…) / (norm * norm) written in: $copies")
+    val options = mainSources.collect { case (p, src) if src.contains("excludeSelf") => p }
+    assert(options.isEmpty, s"excludeSelf still appears in: $options")
+  }
 }

@@ -222,9 +222,9 @@ class IngestSpec extends SparkSpec {
 
   test("NetCDF-4/HDF5 bytes are skipped at the fetch boundary (R17)") {
     // the DMI API can serve NetCDF-4; an HDF5 container outside the
-    // NetCdf4 subset codec (here: a bare superblock magic) is SKIPPED at
-    // the fetch boundary (error recorded, job completes, old partitions
-    // intact) — never a mid-job decode throw.
+    // NetCdf4 subset codec (here: a bare superblock magic) fails decode
+    // and is SKIPPED (error recorded, job completes, old partitions
+    // intact) — never a job failure.
     import graft.operators.Fetch
     val tmp = java.nio.file.Files.createTempDirectory("graft_hdf5")
     val out = tmp.resolve("out").toString
@@ -250,8 +250,9 @@ class IngestSpec extends SparkSpec {
         netcdf(Seq(("2024-01-01 00:00:00", 11.7, 55.7, 9.0))))), out)
     // job completed; the HDF5 parameter is a recorded per-parameter skip
     val sea2 = o2.find(_.parameter == "sea-mean-deviation").get
-    assert(!sea2.ok && sea2.result.left.exists(_.contains("NetCDF-4/HDF5")),
-      s"expected an unsupported-container skip, got $sea2")
+    assert(!sea2.ok && sea2.result.left.exists(r =>
+        r.startsWith("decode ") && r.contains("HDF5 stream")),
+      s"expected an HDF5 decode skip, got $sea2")
     assert(mf2.get.collect().map(_.getString(1)).sameElements(Array("wind-speed")))
     // the skipped parameter's ROUND-1 partitions are untouched
     val back = spark.read.parquet(out)

@@ -1039,12 +1039,16 @@ class NetCdf4Spec extends SparkSpec {
       f.toUri.toString
     }
     val good = NetCdf4.encodeCube(cubeDf(), "sea-mean-deviation")
-    assert(Fetch.containerGuard(good).isEmpty) // in-subset → proceeds
-    val junk = Array[Byte](0x89.toByte, 'H', 'D', 'F') ++ Array.fill[Byte](16)(0)
-    assert(Fetch.containerGuard(junk).exists(_.contains("NetCDF-4/HDF5")))
-    // end-to-end: an HDF5 cube response decodes and publishes
+    assert(NetCdf4.probe(good).isRight) // in-subset → proceeds
     val cfg2 = IngestConfig(bbox = (10.0, 54.0, 14.0, 57.0),
       parameters = Seq("sea-mean-deviation"))
+    // junk behind the HDF5 magic: decode rejects it, recorded as a skip
+    val junk = Array[Byte](0x89.toByte, 'H', 'D', 'F') ++ Array.fill[Byte](16)(0)
+    val (mfJunk, oJunk) = Fetch.fetchAndIngest(spark, cfg2,
+      Seq("sea-mean-deviation" -> fixture("junk.nc4", junk)), tmp.resolve("junk").toString)
+    assert(mfJunk.isEmpty && oJunk.forall(_.result.left.exists(r =>
+      r.startsWith("decode ") && r.contains("HDF5 stream"))), oJunk.mkString(";"))
+    // end-to-end: an HDF5 cube response decodes and publishes
     val (mf, o) = Fetch.fetchAndIngest(spark, cfg2,
       Seq("sea-mean-deviation" -> fixture("cube.nc4", good)), out)
     assert(o.forall(_.ok), o.mkString(";"))
@@ -1066,7 +1070,7 @@ class NetCdf4Spec extends SparkSpec {
       NetCdf4.WriteDs("wind-speed", Seq(2L, 2L, 3L),
         Array.tabulate(12)(_.toDouble),
         chunk = Some(Seq(1, 2, 3)), filters = Seq(2, 1))))
-    assert(Fetch.containerGuard(chunked).isEmpty) // in-subset now
+    assert(NetCdf4.probe(chunked).isRight) // in-subset now
     val fixture = tmp.resolve("cube.nc4")
     java.nio.file.Files.write(fixture, chunked)
     val cfg = IngestConfig(bbox = (10.0, 54.0, 14.0, 57.0),
@@ -1094,7 +1098,7 @@ class NetCdf4Spec extends SparkSpec {
         chunk = Some(Seq(1, 2, 3)), filters = Seq(2, 1))), latest = true)
     assert(NetCdf4.parse(bytes).dataset("wind-speed")
       .exists(_.chunk.exists(_.idxType == 3)), "fixture must use a fixed array")
-    assert(Fetch.containerGuard(bytes).isEmpty) // in-subset since r16
+    assert(NetCdf4.probe(bytes).isRight) // in-subset since r16
     val fixture = tmp.resolve("cube.nc4")
     java.nio.file.Files.write(fixture, bytes)
     val cfg = IngestConfig(bbox = (10.0, 54.0, 14.0, 57.0),
@@ -1124,7 +1128,7 @@ class NetCdf4Spec extends SparkSpec {
       latest = true)
     assert(NetCdf4.parse(bytes).dataset("wind-speed")
       .exists(_.chunk.exists(_.idxType == 4)), "fixture must use an extensible array")
-    assert(Fetch.containerGuard(bytes).isEmpty) // in-subset since r17
+    assert(NetCdf4.probe(bytes).isRight) // in-subset since r17
     val fixture = tmp.resolve("cube.nc4")
     java.nio.file.Files.write(fixture, bytes)
     val cfg = IngestConfig(bbox = (10.0, 54.0, 14.0, 57.0),
@@ -1152,7 +1156,7 @@ class NetCdf4Spec extends SparkSpec {
         Array.tabulate(12)(i => i * 1.5),
         chunk = Some(Seq(1, 2, 2)), filters = Seq(2, 1))),
       latest = true)
-    assert(Fetch.containerGuard(bytes).isEmpty)
+    assert(NetCdf4.probe(bytes).isRight)
     val fixture = tmp.resolve("cube.nc4")
     java.nio.file.Files.write(fixture, bytes)
     val cfg = IngestConfig(bbox = (10.0, 54.0, 14.0, 57.0),
@@ -1188,7 +1192,7 @@ class NetCdf4Spec extends SparkSpec {
       bytes(i) == 'B' && bytes(i + 1) == 'T' &&
       bytes(i + 2) == 'I' && bytes(i + 3) == 'N'),
       "fixture must carry an internal node")
-    assert(Fetch.containerGuard(bytes).isEmpty) // in-subset since r18
+    assert(NetCdf4.probe(bytes).isRight) // in-subset since r18
     val fixture = tmp.resolve("cube.nc4")
     java.nio.file.Files.write(fixture, bytes)
     val cfg = IngestConfig(bbox = (10.0, 53.0, 14.0, 58.0),
@@ -1338,7 +1342,7 @@ class NetCdf4Spec extends SparkSpec {
       NetCdf4.WriteDs("temp", Seq(2L, 3L), Array.tabulate(6)(_.toDouble),
         attrs = Seq("coordinates" -> "lat lon",
           "DIMENSION_LIST" -> NetCdf4.DimList(Seq("yc", "xc"))))))
-    assert(Fetch.containerGuard(bytes).isEmpty) // in-subset at the gate
+    assert(NetCdf4.probe(bytes).isRight) // in-subset at the gate
     val df = NetCdf4.decodeCube(spark, "c", "temp", bytes)
     assert(df.columns.toSeq == Seq("collection", "parameter", "time",
       "x", "y", "value", "lat", "lon"))
@@ -1403,7 +1407,7 @@ class NetCdf4Spec extends SparkSpec {
       NetCdf4.WriteDs("temp", Seq(2L, 3L), Array.tabulate(6)(_.toDouble),
         attrs = Seq("coordinates" -> "lat lon",
           "DIMENSION_LIST" -> NetCdf4.DimList(Seq("yc", "xc"))))), latest = true)
-    assert(Fetch.containerGuard(bytes).isEmpty)
+    assert(NetCdf4.probe(bytes).isRight)
     val fixture = tmp.resolve("cube.nc4")
     java.nio.file.Files.write(fixture, bytes)
     val cfg = IngestConfig(bbox = (10.0, 54.0, 14.0, 57.0),
@@ -1474,7 +1478,7 @@ class NetCdf4Spec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft_nc4dl")
     val out = tmp.resolve("out").toString
     val bytes = renamedCoordCube(withDimList = true, latest = true)
-    assert(Fetch.containerGuard(bytes).isEmpty) // in-subset since r19
+    assert(NetCdf4.probe(bytes).isRight) // in-subset since r19
     val fixture = tmp.resolve("cube.nc4")
     java.nio.file.Files.write(fixture, bytes)
     val cfg = IngestConfig(bbox = (10.0, 54.0, 14.0, 57.0),

@@ -112,15 +112,19 @@ class SimilaritySpec extends SparkSpec {
   test("pq ann: codes in range, ADC self-distance zero for seed vectors") {
     val emb = Tables.embeddings(spark, sfDir)
     // a seed vector (vec_id < 16) quantizes to ITSELF in every subspace
-    // (self-distance 0 wins every argmin), so with excludeSelf off its
-    // own ADC distance must be exactly 0 — the quantizer's fixed points
+    // (self-distance 0 wins every argmin), so its own ADC distance must
+    // be exactly 0 — the quantizer's fixed points. Probe ids are corpus
+    // ids, so the seeds probe under ids shifted past the corpus range:
+    // each probe's rank-1 candidate is then its own seed row
+    val shift = 1000000L
     val seeds = emb.filter(col("vec_id") < 16)
-    val self = Similarity.pqAnnFrom(emb, seeds, m = 8, dsub = 8, nCodes = 16,
-        k = 1, excludeSelf = false)
+    val self = Similarity.pqAnnFrom(emb,
+        seeds.withColumn("vec_id", col("vec_id") + shift),
+        m = 8, dsub = 8, nCodes = 16, k = 1)
       .filter(col("rank") === 1).collect()
     assert(self.length == seeds.count())
     self.foreach { r =>
-      assert(r.getLong(0) == r.getLong(2), s"seed ${r.getLong(0)} not its own NN: $r")
+      assert(r.getLong(0) - shift == r.getLong(2), s"seed ${r.getLong(0) - shift} not its own NN: $r")
       assert(r.getDouble(3) == 0.0, s"seed self-ADC nonzero: $r")
     }
   }
@@ -561,7 +565,7 @@ class SimilaritySpec extends SparkSpec {
     val tcbS = Similarity.trainedSubCodebook(
       resid.filter(col("vec_id") % 2 === 0), 8, 8, 16)
     val pcells = Similarity.pqProbeRouting(probes, cent, nprobe = 4)
-    val cand = Similarity.pqCellCandidates(pcells, resid, excludeSelf = true)
+    val cand = Similarity.pqCellCandidates(pcells, resid)
     val fused = Similarity.ivfPqScoreRoutedPair(pcells, cand, resid,
       tcbF, tcbS, m = 8, dsub = 8)
     for ((tcb, rankCol) <- Seq((tcbF, "rank_a"), (tcbS, "rank_b"))) {
