@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.expressions.{MinhashSigExpr, NgramRepExpr, RpMarginExpr, RpSignatureExpr, Sha256Prefix32Expr, SortedArrayContainsExpr, SortedIntersectCountExpr, Sq8CodesExpr, Sq8L2Expr, SubL2Expr, VecDotExpr, VecRangeAgg}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
+import graft.functions.expressions.{KernelExpr, KernelFn, KernelSig, MinhashSig, NgramRep, RpMargin, RpSignature, Sha256Prefix32, SortedArrayContains, SortedIntersectCount, Sq8, SubL2, VecDot, VecRangeAgg}
 
 /** Session extensions: registers the engine's native expressions.
   * Activate with `.config("spark.sql.extensions", "graft.GraftExtensions")`
@@ -12,64 +13,58 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private type Expr = org.apache.spark.sql.catalyst.expressions.Expression
 
-  /** Arity-checked builder: a wrong argument count must fail analysis
-    * with a real message, not IndexOutOfBounds — and extra arguments
-    * must never be silently dropped. */
-  private def arity(name: String, n: Int)(build: Seq[Expr] => Expr): Seq[Expr] => Expr =
-    children => {
-      require(children.size == n,
-        s"$name expects $n argument(s), got ${children.size}")
-      build(children)
-    }
+  /** Registers `name` with an arity-checked builder: a wrong argument
+    * count must fail analysis with a real message, not IndexOutOfBounds
+    * — and extra arguments must never be silently dropped. */
+  private def register(ext: SparkSessionExtensions, name: String, cls: Class[_], n: Int)(
+      build: Seq[Expr] => Expr): Unit =
+    ext.injectFunction((new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (children: Seq[Expr]) => {
+        require(children.size == n, s"$name expects $n argument(s), got ${children.size}")
+        build(children)
+      }))
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("sha256_prefix32"),
-      new ExpressionInfo(classOf[Sha256Prefix32Expr].getName, "sha256_prefix32"),
-      arity("sha256_prefix32", 1)(c => Sha256Prefix32Expr(c.head))))
-    ext.injectFunction((
-      new FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCountExpr].getName, "sorted_intersect_count"),
-      arity("sorted_intersect_count", 2)(c => SortedIntersectCountExpr(c.head, c(1)))))
-    ext.injectFunction((
-      new FunctionIdentifier("sorted_array_contains"),
-      new ExpressionInfo(classOf[SortedArrayContainsExpr].getName, "sorted_array_contains"),
-      arity("sorted_array_contains", 2)(c => SortedArrayContainsExpr(c.head, c(1)))))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sig16"),
-      new ExpressionInfo(classOf[MinhashSigExpr].getName, "minhash_sig16"),
-      arity("minhash_sig16", 1)(c => MinhashSigExpr(c.head))))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDotExpr].getName, "vec_dot"),
-      arity("vec_dot", 2)(c => VecDotExpr(c.head, c(1)))))
-    ext.injectFunction((
-      new FunctionIdentifier("sub_l2"),
-      new ExpressionInfo(classOf[SubL2Expr].getName, "sub_l2"),
-      arity("sub_l2", 5)(c => SubL2Expr(c))))
-    ext.injectFunction((
-      new FunctionIdentifier("sq8_codes"),
-      new ExpressionInfo(classOf[Sq8CodesExpr].getName, "sq8_codes"),
-      arity("sq8_codes", 3)(c => Sq8CodesExpr(c))))
-    ext.injectFunction((
-      new FunctionIdentifier("sq8_l2"),
-      new ExpressionInfo(classOf[Sq8L2Expr].getName, "sq8_l2"),
-      arity("sq8_l2", 4)(c => Sq8L2Expr(c))))
-    ext.injectFunction((
-      new FunctionIdentifier("ngram_rep"),
-      new ExpressionInfo(classOf[NgramRepExpr].getName, "ngram_rep"),
-      arity("ngram_rep", 2)(c => NgramRepExpr(c))))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_range"),
-      new ExpressionInfo(classOf[VecRangeAgg].getName, "vec_range"),
-      arity("vec_range", 2)(c => VecRangeAgg(c))))
-    ext.injectFunction((
-      new FunctionIdentifier("rp_signature64"),
-      new ExpressionInfo(classOf[RpSignatureExpr].getName, "rp_signature64"),
-      arity("rp_signature64", 1)(c => RpSignatureExpr(c.head))))
-    ext.injectFunction((
-      new FunctionIdentifier("rp_margin64"),
-      new ExpressionInfo(classOf[RpMarginExpr].getName, "rp_margin64"),
-      arity("rp_margin64", 2)(c => RpMarginExpr(c.head, c(1)))))
+    GraftExtensions.kernels.foreach { fn =>
+      fn.sigs.foreach(_.javaMethod)
+      register(ext, fn.name, classOf[KernelExpr], fn.arity)(KernelExpr(fn, _))
+    }
+    register(ext, "vec_range", classOf[VecRangeAgg], 2)(VecRangeAgg(_))
   }
+}
+
+object GraftExtensions {
+  private val floats: DataType = ArrayType(FloatType)
+  private val longs: DataType = ArrayType(LongType)
+
+  /** Every scalar native function, declared once: name, result type,
+    * whether the kernel itself may return null, and each accepted
+    * signature with the kernel method it calls. */
+  private val kernels: Seq[KernelFn] = Seq(
+    KernelFn("sha256_prefix32", LongType, orNull = false,
+      Seq(KernelSig(Sha256Prefix32, "hash", StringType))),
+    KernelFn("sorted_intersect_count", LongType, orNull = false,
+      Seq(KernelSig(SortedIntersectCount, "count", longs, longs))),
+    KernelFn("sorted_array_contains", BooleanType, orNull = false, Seq(
+      KernelSig(SortedArrayContains, "containsStr", ArrayType(StringType), StringType),
+      KernelSig(SortedArrayContains, "containsLong", longs, LongType))),
+    KernelFn("minhash_sig16", ArrayType(LongType, containsNull = false), orNull = false,
+      Seq(KernelSig(MinhashSig, "sig", longs))),
+    KernelFn("vec_dot", DoubleType, orNull = true,
+      Seq(KernelSig(VecDot, "dotOrNull", floats, floats))),
+    KernelFn("sub_l2", DoubleType, orNull = true,
+      Seq(KernelSig(SubL2, "l2OrNull", floats, floats, IntegerType, IntegerType, IntegerType))),
+    KernelFn("sq8_codes", ArrayType(LongType, containsNull = true), orNull = true,
+      Seq(KernelSig(Sq8, "codesOrNull", floats, floats, floats))),
+    KernelFn("sq8_l2", DoubleType, orNull = true,
+      Seq(KernelSig(Sq8, "l2OrNull", floats, longs, floats, floats))),
+    KernelFn("ngram_rep", StructType(Seq(
+        StructField("n_grams", LongType, nullable = false),
+        StructField("top_occ", LongType, nullable = false),
+        StructField("dup_occ", LongType, nullable = false))), orNull = true,
+      Seq(KernelSig(NgramRep, "statsOrNull", longs, IntegerType))),
+    KernelFn("rp_signature64", LongType, orNull = false,
+      Seq(KernelSig(RpSignature, "sign", floats))),
+    KernelFn("rp_margin64", DoubleType, orNull = true,
+      Seq(KernelSig(RpMargin, "margin", floats, IntegerType))))
 }

@@ -37,8 +37,8 @@ object Hashing {
   }
 
   /** H(s): first 32 bits of sha256 as a long in [0, 2^32). Uses the native
-    * codegen'd [[graft.functions.expressions.Sha256Prefix32Expr]]
-    * (registered by [[graft.GraftExtensions]]) — no hex-string round trip
+    * codegen'd [[graft.functions.expressions.Sha256Prefix32]] kernel
+    * (declared in [[graft.GraftExtensions]]) — no hex-string round trip
     * in the MinHash/SimHash inner loop. */
   def h32(c: Column): Column = call_function("sha256_prefix32", c)
 

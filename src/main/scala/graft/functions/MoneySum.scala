@@ -60,9 +60,9 @@ import org.apache.spark.sql.functions._
   *    conversion, no per-row BigDecimal-from-string), exact to the
   *    decimal(28,0)-sum cap ~1e28 — the identical value the replaced
   *    sum(decimal(18,6)) formulation produced at every scale.
-  *  - scale 1e9 long sites (Similarity ADC / Curation surprisal): groups
-  *    are structurally bounded (subquantizer count, per-doc tokens,
-  *    probe terms), never corpus-global — see the per-site comments.
+  *  - scale 1e9 long sites (Similarity ADC, Retrieval BM25, Curation
+  *    surprisal and DSIR): groups are structurally bounded, never
+  *    corpus-global — see [[longSum9]].
   *
   * Corpus-global sums of free-precision doubles (the q42/q77/q140/q147
   * label, centroid and dimension statistics, the q104/q112 trained
@@ -113,6 +113,16 @@ object MoneySum {
     * both engines reach the same total in any accumulation order. The
     * caller divides the double cast by 1e9 (then usually [[trunc6]]). */
   def decSum9(c: Column): Column = sum(floor(c * 1e9).cast("decimal(28,9)"))
+
+  /** [[decSum9]]'s terms summed in a LONG: Σ floor(c·1e9) as bigint, the
+    * cheap accumulator for groups that are structurally bounded — per
+    * document (surprisal, DSIR weights) or per (probe, candidate) pair
+    * (ADC subquantizers, BM25 terms), never corpus-global. Such a group
+    * holds at most a document's tokens or a query's terms, so
+    * scale·|group sum| ≪ 2^53: the long neither wraps nor loses
+    * exactness in its later double cast, and the sum is the same in any
+    * accumulation order. The caller divides the double cast by 1e9. */
+  def longSum9(c: Column): Column = sum(floor(c * 1e9).cast("long"))
 
   /** THE 1e-6 output-truncation grid — a cross-engine determinism
     * contract: every oracle floors computed ratios to 6 dp. Floor, not

@@ -1,9 +1,6 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** K=16 MinHash minima over a pre-hashed shingle array in ONE pass:
   * element k = min over the array of (a_k·h + b_k) mod P, with the same
@@ -63,30 +60,4 @@ object MinhashSig {
     if (nonNull == 0) return new GenericArrayData(Array.emptyLongArray)
     new GenericArrayData(mins)
   }
-}
-
-case class MinhashSigExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"minhash_sig16 requires an array<bigint> argument, got $t")
-    }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig16"
-
-  override protected def nullSafeEval(v: Any): Any =
-    MinhashSig.sig(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, v =>
-      s"graft.functions.expressions.MinhashSig.sig($v)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinhashSigExpr =
-    copy(child = newChild)
 }

@@ -1,12 +1,8 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
 
 /** `ngram_rep(tokh array<long>, n int)` — within-document n-gram
   * repetition statistics over a token-hash array:
@@ -66,49 +62,4 @@ object NgramRep {
     }
     InternalRow(nGrams.toLong, best, dup)
   }
-}
-
-case class NgramRepExpr(children: Seq[Expression]) extends Expression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    children.map(_.dataType) match {
-      case Seq(ArrayType(LongType, _), IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"ngram_rep requires (array<long>, int), got ${other.mkString(", ")}")
-    }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_grams", LongType, nullable = false),
-    StructField("top_occ", LongType, nullable = false),
-    StructField("dup_occ", LongType, nullable = false)))
-  override def prettyName: String = "ngram_rep"
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val vals = children.map(_.eval(input))
-    if (vals.exists(_ == null)) null
-    else NgramRep.statsOrNull(
-      vals(0).asInstanceOf[ArrayData], vals(1).asInstanceOf[Int])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val evals = children.map(_.genCode(ctx))
-    val res = ctx.freshName("ngramRep")
-    val anyNull = evals.map(_.isNull).mkString(" || ")
-    ev.copy(code = code"""
-      ${evals.map(_.code).reduce(_ + _)}
-      boolean ${ev.isNull} = true;
-      InternalRow ${ev.value} = null;
-      if (!($anyNull)) {
-        InternalRow $res = graft.functions.expressions.NgramRep.statsOrNull(
-          ${evals(0).value}, ${evals(1).value});
-        if ($res != null) { ${ev.isNull} = false; ${ev.value} = $res; }
-      }
-    """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): NgramRepExpr =
-    copy(children = newChildren)
 }

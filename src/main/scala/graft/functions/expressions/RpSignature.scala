@@ -1,10 +1,6 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
 /** 8-bit signed-random-projection LSH signature of a float-vector column:
   * bit j = sign(v · h_j) over the fixed seeded hyperplane set
@@ -80,60 +76,4 @@ object RpMargin {
     while (i < 64) { acc += v.getFloat(i).toDouble * h(i); i += 1 }
     java.lang.Double.valueOf(acc)
   }
-}
-
-case class RpMarginExpr(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), org.apache.spark.sql.types.IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"rp_margin64 requires (array<float>, int plane), got $l, $r")
-    }
-
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def prettyName: String = "rp_margin64"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(v: Any, j: Any): Any =
-    RpMargin.margin(v.asInstanceOf[ArrayData], j.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, j) => {
-      val boxed = ctx.freshName("rpMargin")
-      s"""
-         |java.lang.Double $boxed = graft.functions.expressions.RpMargin.margin($v, $j);
-         |if ($boxed == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $boxed.doubleValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): RpMarginExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-case class RpSignatureExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"rp_signature64 requires an array<float> argument, got $t")
-    }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "rp_signature64"
-
-  override protected def nullSafeEval(v: Any): Any =
-    RpSignature.sign(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v =>
-      s"graft.functions.expressions.RpSignature.sign($v)")
-
-  override protected def withNewChildInternal(newChild: Expression): RpSignatureExpr =
-    copy(child = newChild)
 }

@@ -1,15 +1,19 @@
 package graft.functions.expressions
 
 import java.security.MessageDigest
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Thread-local SHA-256 kernel shared by interpreted eval and generated
-  * code (the same pattern Spark's own hash expressions use for their
-  * static helpers). */
+/** Thread-local SHA-256 kernel of the cross-engine document hash
+  * `sha256_prefix32`, shared by interpreted eval and generated code (the
+  * same pattern Spark's own hash expressions use for their static
+  * helpers).
+  *
+  * Why a native expression (SURVEY.md §7.6 "upgrade to a codegen
+  * Expression only if profiling demands" — profiling did): this sits in
+  * the inner loop of MinHash / SimHash / fingerprinting over every
+  * shingle of every document. Semantics are identical to the
+  * builtin-composed version (equivalence-tested in ExpressionSpec), so
+  * the DuckDB oracle is unchanged. */
 object Sha256Prefix32 {
   private val digests: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("SHA-256"))
@@ -24,35 +28,4 @@ object Sha256Prefix32 {
     val d = md.digest(s.getBytes)
     ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
   }
-}
-
-/** Native Catalyst expression for the cross-engine document hash
-  * (SURVEY.md §7.6 "upgrade to a codegen Expression only if profiling
-  * demands" — profiling did: this sits in the inner loop of MinHash /
-  * SimHash / fingerprinting over every shingle of every document).
-  *
-  * Registered as SQL function `sha256_prefix32` via
-  * [[graft.GraftExtensions]]; semantics identical to the builtin-composed
-  * version (equivalence-tested in ExpressionSpec), so the DuckDB oracle
-  * is unchanged.
-  */
-case class Sha256Prefix32Expr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sha256_prefix32 requires a string argument, got ${child.dataType}")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "sha256_prefix32"
-
-  override protected def nullSafeEval(input: Any): Any =
-    Sha256Prefix32.hash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.Sha256Prefix32.hash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Sha256Prefix32Expr =
-    copy(child = newChild)
 }

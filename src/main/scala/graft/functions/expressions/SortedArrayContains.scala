@@ -1,10 +1,6 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Membership test against a SORTED, DISTINCT array via binary search —
@@ -78,38 +74,4 @@ object SortedArrayContains {
     }
     false
   }
-}
-
-case class SortedArrayContainsExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), StringType) => TypeCheckResult.TypeCheckSuccess
-      case (ArrayType(LongType, _), LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        "sorted_array_contains requires (array<string>, string) or " +
-          s"(array<bigint>, bigint), got $l, $r")
-    }
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "sorted_array_contains"
-
-  private def isString: Boolean = right.dataType == StringType
-
-  override protected def nullSafeEval(a: Any, v: Any): Any =
-    if (isString)
-      SortedArrayContains.containsStr(a.asInstanceOf[ArrayData], v.asInstanceOf[UTF8String])
-    else
-      SortedArrayContains.containsLong(a.asInstanceOf[ArrayData], v.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (isString) "containsStr" else "containsLong"
-    defineCodeGen(ctx, ev, (a, v) =>
-      s"graft.functions.expressions.SortedArrayContains.$fn($a, $v)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedArrayContainsExpr =
-    copy(left = newLeft, right = newRight)
 }

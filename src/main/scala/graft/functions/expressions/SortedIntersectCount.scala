@@ -1,10 +1,6 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Count of common elements between two SORTED, DISTINCT long arrays via a
   * linear two-pointer merge — the inner kernel of exact set-similarity
@@ -40,30 +36,4 @@ object SortedIntersectCount {
     }
     c
   }
-}
-
-case class SortedIntersectCountExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"sorted_intersect_count requires two array<bigint> arguments, got $l, $r")
-    }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "sorted_intersect_count"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    SortedIntersectCount.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.expressions.SortedIntersectCount.count($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectCountExpr =
-    copy(left = newLeft, right = newRight)
 }

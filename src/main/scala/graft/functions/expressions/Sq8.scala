@@ -1,12 +1,6 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** Native SQ8 scalar-quantizer kernels — the encode and the asymmetric
   * L2 of a FAISS `IndexScalarQuantizer(QT_8bit)`-style index
@@ -89,96 +83,4 @@ object Sq8 {
     }
     java.lang.Double.valueOf(acc)
   }
-}
-
-/** `sq8_codes(v array<float>, mns array<float>, mxs array<float>)` —
-  * see [[Sq8]]. */
-case class Sq8CodesExpr(children: Seq[Expression]) extends Expression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    children.map(_.dataType) match {
-      case Seq(ArrayType(FloatType, _), ArrayType(FloatType, _),
-        ArrayType(FloatType, _)) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"sq8_codes requires 3 array<float> arguments, got ${other.mkString(", ")}")
-    }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "sq8_codes"
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val vals = children.map(_.eval(input))
-    if (vals.exists(_ == null)) null
-    else Sq8.codesOrNull(vals(0).asInstanceOf[ArrayData],
-      vals(1).asInstanceOf[ArrayData], vals(2).asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val evals = children.map(_.genCode(ctx))
-    val res = ctx.freshName("sq8Codes")
-    val anyNull = evals.map(_.isNull).mkString(" || ")
-    ev.copy(code = code"""
-      ${evals.map(_.code).reduce(_ + _)}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      if (!($anyNull)) {
-        org.apache.spark.sql.catalyst.util.ArrayData $res =
-          graft.functions.expressions.Sq8.codesOrNull(
-            ${evals(0).value}, ${evals(1).value}, ${evals(2).value});
-        if ($res != null) { ${ev.isNull} = false; ${ev.value} = $res; }
-      }
-    """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Sq8CodesExpr =
-    copy(children = newChildren)
-}
-
-/** `sq8_l2(p array<float>, codes array<long>, mns array<float>,
-  * mxs array<float>)` — see [[Sq8]]. */
-case class Sq8L2Expr(children: Seq[Expression]) extends Expression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    children.map(_.dataType) match {
-      case Seq(ArrayType(FloatType, _), ArrayType(LongType, _),
-        ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        "sq8_l2 requires (array<float> p, array<long> codes, array<float> mns, " +
-          s"array<float> mxs), got ${other.mkString(", ")}")
-    }
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "sq8_l2"
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val vals = children.map(_.eval(input))
-    if (vals.exists(_ == null)) null
-    else Sq8.l2OrNull(vals(0).asInstanceOf[ArrayData],
-      vals(1).asInstanceOf[ArrayData], vals(2).asInstanceOf[ArrayData],
-      vals(3).asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val evals = children.map(_.genCode(ctx))
-    val boxed = ctx.freshName("sq8L2")
-    val anyNull = evals.map(_.isNull).mkString(" || ")
-    ev.copy(code = code"""
-      ${evals.map(_.code).reduce(_ + _)}
-      boolean ${ev.isNull} = true;
-      double ${ev.value} = -1.0;
-      if (!($anyNull)) {
-        java.lang.Double $boxed = graft.functions.expressions.Sq8.l2OrNull(
-          ${evals(0).value}, ${evals(1).value}, ${evals(2).value}, ${evals(3).value});
-        if ($boxed != null) { ${ev.isNull} = false; ${ev.value} = $boxed.doubleValue(); }
-      }
-    """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Sq8L2Expr =
-    copy(children = newChildren)
 }

@@ -1,12 +1,6 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
 /** Squared L2 distance between a `len`-dim window of two float vectors —
   * `Σ (a[aOff+i] - b[bOff+i])²` for i in 0..len-1 (offsets 0-based),
@@ -56,54 +50,4 @@ object SubL2 {
     }
     java.lang.Double.valueOf(acc)
   }
-}
-
-case class SubL2Expr(children: Seq[Expression]) extends Expression {
-
-  private def a = children(0)
-  private def b = children(1)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (a.dataType, b.dataType, children.drop(2).map(_.dataType)) match {
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _),
-        Seq(IntegerType, IntegerType, IntegerType)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "sub_l2 requires (array<float>, array<float>, int aOff, int bOff, int len), " +
-          s"got ${children.map(_.dataType).mkString(", ")}")
-    }
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "sub_l2"
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val vals = children.map(_.eval(input))
-    if (vals.exists(_ == null)) null
-    else SubL2.l2OrNull(
-      vals(0).asInstanceOf[ArrayData], vals(1).asInstanceOf[ArrayData],
-      vals(2).asInstanceOf[Int], vals(3).asInstanceOf[Int],
-      vals(4).asInstanceOf[Int])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val evals = children.map(_.genCode(ctx))
-    val boxed = ctx.freshName("subL2")
-    val anyNull = evals.map(_.isNull).mkString(" || ")
-    ev.copy(code = code"""
-      ${evals.map(_.code).reduce(_ + _)}
-      boolean ${ev.isNull} = true;
-      double ${ev.value} = -1.0;
-      if (!($anyNull)) {
-        java.lang.Double $boxed = graft.functions.expressions.SubL2.l2OrNull(
-          ${evals(0).value}, ${evals(1).value},
-          ${evals(2).value}, ${evals(3).value}, ${evals(4).value});
-        if ($boxed != null) { ${ev.isNull} = false; ${ev.value} = $boxed.doubleValue(); }
-      }
-    """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): SubL2Expr =
-    copy(children = newChildren)
 }

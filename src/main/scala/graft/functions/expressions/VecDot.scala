@@ -1,10 +1,6 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Dot product of two float vectors, accumulated left-to-right in double —
   * bit-identical to the builtin-composed fold
@@ -38,37 +34,4 @@ object VecDot {
     }
     java.lang.Double.valueOf(acc)
   }
-}
-
-case class VecDotExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"vec_dot requires two array<float> arguments, got $l, $r")
-    }
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "vec_dot"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecDot.dotOrNull(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val boxed = ctx.freshName("vecDot")
-      s"""
-         |java.lang.Double $boxed = graft.functions.expressions.VecDot.dotOrNull($a, $b);
-         |if ($boxed == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $boxed.doubleValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): VecDotExpr =
-    copy(left = newLeft, right = newRight)
 }

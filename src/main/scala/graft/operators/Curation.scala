@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Hashing
-import graft.functions.MoneySum.{decSum9, trunc6}
+import graft.functions.MoneySum.{decSum9, longSum9, trunc6}
 import graft.operators.Materialize.Stageable
 import graft.sources.Tables
 
@@ -426,11 +426,10 @@ object Curation {
     import Materialize.Stageable
     val feats = dsirFeats(docs).staged
     val (lr, _, _) = dsirLrParts(feats, targetIds)
-    val cost = floor(col("llr") * 1e9).cast("long")
     val u = (Hashing.h32(col("doc_id").cast("string")) + 0.5) / lit(4294967296.0)
     feats.join(broadcast(lr), Seq("b"))
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_feats"), sum(cost).as("s"))
+      .agg(count(lit(1)).as("n_feats"), longSum9(col("llr")).as("s"))
       .select(col("doc_id"), col("n_feats"),
         (col("s").cast("double") / 1e9).as("lw"))
       .withColumn("sel_key", floor((col("lw") - log(-log(u))) * 1e6) / 1e6)
@@ -712,10 +711,9 @@ object Curation {
       .crossJoin(broadcast(total)) // 1-row scalar subquery shape
       .select(col("token"),
         (-log(col("occ") * 1.0 / col("total_toks"))).as("nll"))
-    val cost = floor(col("nll") * 1e9).cast("long")
     tok.join(broadcast(lm), "token")
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"), sum(cost).as("nll_sum"))
+      .agg(count(lit(1)).as("n_tokens"), longSum9(col("nll")).as("nll_sum"))
       .select(
         col("doc_id"), col("n_tokens"),
         trunc6(col("nll_sum").cast("double") / 1e9 / col("n_tokens")).as("mean_nll"),
@@ -779,10 +777,9 @@ object Curation {
       .select(col("ph"), col("wh"),
         (-log(lit(0.75) * (col("c2") * 1.0 / col("cp")) +
           lit(0.25) * (col("c1") * 1.0 / col("ntot")))).as("nll"))
-    val cost = floor(col("nll") * 1e9).cast("long")
     bg.join(lm, Seq("ph", "wh"))
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"), sum(cost).as("s"))
+      .agg(count(lit(1)).as("n_bigrams"), longSum9(col("nll")).as("s"))
       .select(col("doc_id"), col("n_bigrams"),
         trunc6(col("s").cast("double") / 1e9 / col("n_bigrams")).as("mean_nll"),
         trunc6(exp(floor(col("s").cast("double") / 1e9 / col("n_bigrams") * 1e6) / 1e6))
@@ -2391,16 +2388,15 @@ object Curation {
     * is engine-specific (no DuckDB dual), so its contract is the
     * CurationSpec tolerance case against the exact operator — the q19
     * HLL precedent. */
-  def lengthOutliersApprox(spark: SparkSession, dir: String,
-                           accuracy: Int = 10000): DataFrame = {
+  def lengthOutliersApprox(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("source"), col("n_chars"))
     val med = docs.groupBy(col("source"))
-      .agg(expr(s"CAST(approx_percentile(n_chars, 0.5D, $accuracy) AS DOUBLE)")
+      .agg(expr("CAST(approx_percentile(n_chars, 0.5D, 10000) AS DOUBLE)")
         .as("median_len"))
     val mad = docs.join(broadcast(med), "source")
       .groupBy(col("source"))
       .agg(expr(
-        s"CAST(approx_percentile(abs(n_chars - median_len), 0.5D, $accuracy) AS DOUBLE)")
+        "CAST(approx_percentile(abs(n_chars - median_len), 0.5D, 10000) AS DOUBLE)")
         .as("mad"))
     docs
       .join(broadcast(med), "source")
@@ -2634,8 +2630,7 @@ object Curation {
 
   /** [[semanticDecontam]] over explicit corpus/eval embedding tables —
     * the deployment entry point (real eval-suite vectors go here). */
-  def semanticDecontamFrom(emb: DataFrame, evalVecs: DataFrame,
-      tau: Double = SemDecontamTau): DataFrame = {
+  def semanticDecontamFrom(emb: DataFrame, evalVecs: DataFrame): DataFrame = {
     import Similarity.{cosine, norm}
     val ev = evalVecs.select(col("vec_id").as("eval_id"),
       col("embedding").as("e_emb"), norm(col("embedding")).as("e_nrm"))
@@ -2643,7 +2638,7 @@ object Curation {
       .join(broadcast(ev), col("vec_id") =!= col("eval_id"))
       .withColumn("cosine",
         round(cosine(col("embedding"), col("e_emb"), col("nrm"), col("e_nrm")), 6))
-      .filter(col("cosine") >= tau)
+      .filter(col("cosine") >= SemDecontamTau)
       .select(col("vec_id"), col("eval_id"), col("cosine"))
       .orderBy(col("vec_id"), col("eval_id"))
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.MoneySum.longSum9
 import graft.sources.Tables
 
 /** Lexical + hybrid retrieval over `documents` — the search side of a
@@ -197,7 +198,7 @@ object Retrieval {
       .groupBy(col("probe_id"), col("cand_id"))
       .agg(
         count(lit(1)).as("n_terms"),
-        (sum(floor(col("term_score") * 1e9).cast("long")).cast("double") / 1e9)
+        (longSum9(col("term_score")).cast("double") / 1e9)
           .as("score"))
     Similarity.probeTopK(scored, k, col("score").desc, col("cand_id"))(
       col("probe_id"), Similarity.longRank, col("cand_id"), col("n_terms"),

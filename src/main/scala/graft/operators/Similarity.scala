@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.MoneySum.{decSum9, trunc6}
+import graft.functions.MoneySum.{decSum9, longSum9, trunc6}
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (dim 64, float32).
@@ -22,8 +22,9 @@ import graft.sources.Tables
 object Similarity {
 
   /** Exact dot product with deterministic left-fold accumulation. Uses the
-    * native codegen'd [[graft.functions.expressions.VecDotExpr]] (registered
-    * by [[graft.GraftExtensions]]) — zero allocation in pairwise passes. */
+    * native codegen'd [[graft.functions.expressions.VecDot]] kernel
+    * (declared in [[graft.GraftExtensions]]) — zero allocation in pairwise
+    * passes. */
   def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 
   /** Builtin-composed equivalent (slower; kept as the portable fallback and
@@ -187,11 +188,18 @@ object Similarity {
       .select(col("probe_id"), col("cand_id"))
     val approx5 = annBucketedFrom(emb, probes, k = 5)
       .select(col("probe_id"), col("cand_id"))
+    recallAt5(probes, exact5, approx5)
+  }
+
+  /** Per probe, |exact top-5 ∩ approx top-5| and that count / 5 — the
+    * tail of every recall audit. Reported over the PROBE SET, not
+    * exact5's probe ids (the oracle's probes CTE enumerates probes
+    * independently): a probe with zero exact candidates must surface as
+    * recall 0, not vanish (ADVICE r12). */
+  private def recallAt5(probes: DataFrame, exact5: DataFrame,
+      approx5: DataFrame): DataFrame = {
     val hits = exact5.join(approx5, Seq("probe_id", "cand_id"))
       .groupBy(col("probe_id")).agg(count(lit(1)).as("n"))
-    // report over the PROBE SET, not exact5's probe ids (the oracle's
-    // probes CTE enumerates probes independently): a probe with zero
-    // exact candidates must surface as recall 0, not vanish (ADVICE r12)
     probes.select(col("vec_id").as("probe_id")).distinct()
       .join(hits, Seq("probe_id"), "left")
       .select(col("probe_id"),
@@ -215,16 +223,7 @@ object Similarity {
     val approx5 = ivfPqAnnFrom(emb, probes, nlist = 16, nprobe = 4,
         m = 8, dsub = 8, nCodes = 16, k = 5)
       .select(col("probe_id"), col("cand_id"))
-    val hits = exact5.join(approx5, Seq("probe_id", "cand_id"))
-      .groupBy(col("probe_id")).agg(count(lit(1)).as("n"))
-    // probe-set enumeration, same rationale as [[annRecallFrom]]
-    // (ADVICE r12): a probe with zero exact candidates reports recall 0
-    probes.select(col("vec_id").as("probe_id")).distinct()
-      .join(hits, Seq("probe_id"), "left")
-      .select(col("probe_id"),
-        coalesce(col("n"), lit(0L)).as("n_hits"),
-        (coalesce(col("n"), lit(0L)) / lit(5.0)).as("recall_at_5"))
-      .orderBy(col("probe_id"))
+    recallAt5(probes, exact5, approx5)
   }
 
   /** q110: incremental IVF index refresh — the vector-domain dual of the
@@ -638,7 +637,7 @@ object Similarity {
     * ≪ 2^53, so the long sum and its double cast are exact (the MoneySum
     * headroom rule; ADVICE r21). */
   private def adcSum(d: Column): Column =
-    sum(floor(d * 1e9).cast("long")).cast("double") / 1e9
+    longSum9(d).cast("double") / 1e9
 
   /** q108: IVF-PQ — the two halves composed exactly as a production
     * vector index runs them (FAISS's IVFPQ architecture, re-expressed as

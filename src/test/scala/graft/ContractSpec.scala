@@ -93,4 +93,19 @@ class ContractSpec extends SparkSpec {
     val options = mainSources.collect { case (p, src) if src.contains("excludeSelf") => p }
     assert(options.isEmpty, s"excludeSelf still appears in: $options")
   }
+
+  test("one generic kernel node and VecRangeAgg are the only Catalyst expressions under src/main/scala") {
+    // every scalar native function is a kernel method plus one line of the
+    // GraftExtensions table; a class of its own would be a second copy of
+    // the Catalyst null/codegen protocol
+    val genCode = mainSources.collect { case (p, src)
+      if "def\\s+doGenCode\\b".r.findFirstIn(src).isDefined => p.getFileName.toString }
+    assert(genCode == Seq("KernelExpr.scala"), s"doGenCode defined in: $genCode")
+    val exprClass =
+      """class\s+(\w+)[^{}]*?\bextends\s+(?:[\w.]+\.)?\w*(?:Expression|Aggregate)\b""".r
+    val classes = mainSources.flatMap { case (_, src) =>
+      exprClass.findAllMatchIn(src).map(_.group(1)) }
+    assert(classes.sorted == Seq("KernelExpr", "VecRangeAgg"),
+      s"Catalyst expression classes: $classes")
+  }
 }

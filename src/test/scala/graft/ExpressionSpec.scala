@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.Hashing
 import graft.sources.Tables
 
-/** Equivalence + behavior tests for the native Sha256Prefix32 expression. */
+/** Equivalence + behavior tests for the native kernel functions. */
 class ExpressionSpec extends SparkSpec {
 
   test("native sha256_prefix32 is bit-identical to the builtin composition") {
@@ -523,5 +525,149 @@ class ExpressionSpec extends SparkSpec {
       df.selectExpr("vec_dot(a)").collect()
     }
     assert(e2.getMessage.contains("expects 2 argument"), e2.getMessage)
+  }
+
+  test("every kernel function rejects a wrong-typed argument with a message naming it") {
+    import spark.implicits._
+    val df = Seq((1.5, Seq(1.5))).toDF("d", "ds")
+    val calls = Seq(
+      "sha256_prefix32" -> "d",
+      "sorted_intersect_count" -> "ds, ds",
+      "sorted_array_contains" -> "ds, d",
+      "minhash_sig16" -> "ds",
+      "vec_dot" -> "ds, ds",
+      "sub_l2" -> "ds, ds, d, d, d",
+      "sq8_codes" -> "ds, ds, ds",
+      "sq8_l2" -> "ds, ds, ds, ds",
+      "ngram_rep" -> "ds, d",
+      "rp_signature64" -> "ds",
+      "rp_margin64" -> "ds, d")
+    calls.foreach { case (name, args) =>
+      val e = intercept[AnalysisException](df.selectExpr(s"$name($args)").collect())
+      assert(e.getMessage.contains(s"$name accepts ("), e.getMessage)
+      assert(e.getMessage.contains(s"got (${if (args == "d") "double" else "array<double>"}"),
+        e.getMessage)
+    }
+    // both signatures are named when neither matches
+    val two = intercept[AnalysisException](df.selectExpr("sorted_array_contains(ds, d)").collect())
+    assert(two.getMessage.contains(
+      "(array<string>, string) or (array<bigint>, bigint)"), two.getMessage)
+  }
+
+  test("every kernel function keeps its result type and nullability on non-null input") {
+    val floats = "array(1.0F, 2.0F)"
+    val longs = "array(CAST(1 AS BIGINT), CAST(2 AS BIGINT))"
+    val expected = Seq(
+      "sha256_prefix32('a')" -> (LongType, false),
+      s"sorted_intersect_count($longs, $longs)" -> (LongType, false),
+      "sorted_array_contains(array('a'), 'a')" -> (BooleanType, false),
+      s"sorted_array_contains($longs, CAST(1 AS BIGINT))" -> (BooleanType, false),
+      s"minhash_sig16($longs)" -> (ArrayType(LongType, containsNull = false), false),
+      s"vec_dot($floats, $floats)" -> (DoubleType, true),
+      s"sub_l2($floats, $floats, 0, 0, 2)" -> (DoubleType, true),
+      s"sq8_codes($floats, $floats, $floats)" -> (ArrayType(LongType, containsNull = true), true),
+      s"sq8_l2($floats, $longs, $floats, $floats)" -> (DoubleType, true),
+      s"ngram_rep($longs, 2)" -> (StructType(Seq(
+        StructField("n_grams", LongType, nullable = false),
+        StructField("top_occ", LongType, nullable = false),
+        StructField("dup_occ", LongType, nullable = false))), true),
+      s"rp_signature64($floats)" -> (LongType, false),
+      s"rp_margin64($floats, 0)" -> (DoubleType, true))
+    expected.foreach { case (call, (dataType, nullable)) =>
+      val field = spark.range(1).selectExpr(call).schema.head
+      assert(field.dataType == dataType, call)
+      assert(field.nullable == nullable, call)
+    }
+  }
+
+  /** `exprs` over `df`, collected once whole-stage codegen'd and once with
+    * every projection interpreted. ConvertToLocalRelation is excluded in
+    * both runs: it would evaluate a projection over a local Seq once, at
+    * optimization, through the interpreted path. */
+  private def codegenAndInterpreted(df: DataFrame, exprs: String*): (Seq[Row], Seq[Row]) = {
+    def run(wholeStage: Boolean, factoryMode: String): Seq[Row] = {
+      val confs = Seq(
+        "spark.sql.optimizer.excludedRules" ->
+          "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation",
+        "spark.sql.codegen.wholeStage" -> wholeStage.toString,
+        "spark.sql.codegen.factoryMode" -> factoryMode)
+      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val q = df.selectExpr(exprs: _*)
+        val plan = q.queryExecution.executedPlan.toString
+        assert(plan.contains("*(1) Project") == wholeStage, plan)
+        q.collect().toSeq
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    (run(wholeStage = true, "CODEGEN_ONLY"), run(wholeStage = false, "NO_CODEGEN"))
+  }
+
+  test("every kernel function gives the same rows interpreted as codegen'd on the edge-case inputs") {
+    import spark.implicits._
+    def f(xs: Option[Float]*): Seq[Option[Float]] = xs
+    def l(xs: Option[Long]*): Seq[Option[Long]] = xs
+    val cases: Seq[(DataFrame, Seq[String])] = Seq(
+      Seq(Some("a"), Some(""), None).toDF("s") -> Seq("sha256_prefix32(s)"),
+      Seq(
+        (Some(l()), Some(l(Some(1L), Some(2L)))),
+        (Some(l(Some(1L), Some(3L))), Some(l(Some(2L), Some(4L)))),
+        (Some(l(Some(1L), Some(2L), Some(3L))), Some(l(Some(1L), Some(2L), Some(3L)))),
+        (Some(l(Some(0L), Some(5L))), Some(l(None, Some(5L)))),
+        (None, Some(l(Some(1L))))
+      ).toDF("a", "b") -> Seq(
+        "sorted_intersect_count(a, b)", "minhash_sig16(a)", "minhash_sig16(b)",
+        "sorted_array_contains(b, CAST(5 AS BIGINT))", "ngram_rep(a, 2)", "ngram_rep(b, 1)"),
+      Seq(
+        (Some(Seq[Option[String]]()), Some("x")),
+        (Some(Seq(Some("a"), Some("c"), Some("e"))), Some("c")),
+        (Some(Seq(Some("a"), Some("c"), Some("e"))), Some("d")),
+        (Some(Seq(Some("a"), Some("c"), Some("e"))), Some("z")),
+        (Some(Seq(None, Some("b"), Some("d"))), Some("d")),
+        (None, Some("x")),
+        (Some(Seq(Some("a"), Some("b"))), None)
+      ).toDF("a", "v") -> Seq("sorted_array_contains(a, v)"),
+      Seq(
+        (Some(l(Some(7L), Some(7L), Some(7L), Some(7L))), Some(2)),
+        (Some(l(Some(7L), Some(7L), Some(7L), Some(7L))), Some(5)),
+        (Some(l(Some(7L), None, Some(7L))), Some(0)),
+        (Some(l(None, None)), None),
+        (None, Some(2))
+      ).toDF("tokh", "n") -> Seq("ngram_rep(tokh, n)", "minhash_sig16(tokh)"),
+      Seq(
+        (Some(f(Some(1.0f), Some(2.0f))), Some(f(Some(3.0f), Some(5.0f)))),
+        (None, Some(f(Some(1.0f), Some(2.0f)))),
+        (Some(f(Some(1.0f), None)), Some(f(Some(1.0f), Some(2.0f)))),
+        (Some(f(Some(1.0f), Some(2.0f))), Some(f(Some(1.0f), Some(2.0f))))
+      ).toDF("a", "b") -> Seq(
+        "vec_dot(a, b)", "sub_l2(a, b, 0, 0, 2)", "sub_l2(a, b, 1, 0, 2)",
+        "sub_l2(a, b, CAST(NULL AS INT), 0, 2)", "sub_l2(a, b, 2147483640, 0, 100)",
+        "sub_l2(a, b, 2147483647, 2147483647, 2147483647)"),
+      Seq(
+        Some(f(Some(0.5f), Some(2.0f))), None, Some(f(None, Some(2.0f))),
+        Some(f(Some(0.5f), None)), Some(f(Some(0.5f)))
+      ).toDF("embedding")
+        .withColumn("mns", array(lit(1.0f), lit(0.0f)))
+        .withColumn("mxs", array(lit(1.0f), lit(4.0f))) -> Seq(
+        "sq8_codes(embedding, mns, mxs)",
+        "sq8_l2(embedding, array(CAST(0 AS BIGINT), CAST(127 AS BIGINT)), mns, mxs)",
+        "sq8_l2(embedding, array(CAST(0 AS BIGINT), CAST(NULL AS BIGINT)), mns, mxs)",
+        "sq8_l2(embedding, sq8_codes(embedding, mns, mxs), mns, array(1.0F))"),
+      Seq(
+        Some(f(Seq.fill(64)(Some(1.0f)): _*)), None,
+        Some(f(Seq.fill(63)(Some(1.0f)) :+ None: _*)), Some(f(Some(1.0f))),
+        Some(f(Seq.fill(64)(Some(Float.NaN)): _*)),
+        Some(f(None +: Seq.fill(63)(Some(1.0f)): _*))
+      ).toDF("embedding") -> Seq(
+        "rp_signature64(embedding)", "rp_margin64(embedding, 0)",
+        "rp_margin64(embedding, 7)", "rp_margin64(embedding, CAST(NULL AS INT))"))
+    cases.foreach { case (df, exprs) =>
+      val (codegen, interpreted) = codegenAndInterpreted(df, exprs: _*)
+      assert(codegen.nonEmpty)
+      assert(codegen == interpreted, exprs.mkString(", "))
+    }
   }
 }
