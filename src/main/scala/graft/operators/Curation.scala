@@ -37,23 +37,20 @@ object Curation {
   def qualityGate(spark: SparkSession, dir: String): DataFrame =
     qualityGateShared(spark, dir).orderBy(col("doc_id"))
 
-  /** The gate verdict table as a SESSION-STANDING artifact keyed on the
-    * corpus dir ([[Materialize.shared]], the hash/span/pair/bm25-table
-    * precedent, r22): six declared queries consume the same per-doc
-    * verdict row — q66 itself, q78's funnel, q90's calibration, q125's
-    * scorer features, q128's DSIR target, q133's quality stage, q150's
-    * scorecard — and each re-ran the corpus tokenize + the two feature
-    * aggregations per query. The verdict table IS the curation artifact
-    * a deployment refreshes once per corpus snapshot and serves to every
-    * downstream stage, so one build per session is the deployment
-    * cadence; a fresh session (the bench's isolated pass) still pays the
-    * full build. Counts are longs and the ratio columns are already
-    * 1e-6-floored doubles, so the parquet round-trip is bit-identical;
-    * consumers join/aggregate by doc_id with no row-order dependence
-    * (q66 re-applies its orderBy on read, the lshNearDup convention). */
-  private[graft] def qualityGateShared(spark: SparkSession, dir: String): DataFrame =
-    Materialize.shared(spark, s"qualityGate:$dir")(
-      qualityGateFrom(tokenTable(Tables.documents(spark, dir))))
+  /** The gate verdict table as a standing artifact
+    * ([[Materialize.shared]]): six declared queries consume the same
+    * per-doc verdict row — q66 itself, q78's funnel, q90's calibration,
+    * q125's scorer features, q128's DSIR target, q133's quality stage,
+    * q150's scorecard — and each re-ran the corpus tokenize + the two
+    * feature aggregations per query. Counts are longs and the ratio
+    * columns are already 1e-6-floored doubles, so the parquet round-trip
+    * is bit-identical; consumers join/aggregate by doc_id with no
+    * row-order dependence (q66 re-applies its orderBy on read, the
+    * lshNearDup convention). */
+  private[graft] def qualityGateShared(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    Materialize.shared("qualityGate", docs)(qualityGateFrom(tokenTable(docs)))
+  }
 
   /** The exploded (doc_id, token) table the token-level operators share.
     * Callers composing several of them (q90) materialize this ONCE
@@ -215,17 +212,16 @@ object Curation {
       .groupBy(col("gram"))
       .agg(count(lit(1)).as("df"), sum(col("c")).as("occ"))
 
-  /** [[gramStats]] over the corpus as a SESSION-STANDING artifact keyed
-    * on the dir ([[Materialize.shared]], the qualityGate precedent,
-    * r22 second pass): q68 and q97 each re-ran the gram explode + the
-    * two-phase aggregation per query; the vocabulary census is one
-    * refresh per corpus snapshot. (gram, df, occ) = string + two longs —
-    * exact parquet round-trip; both consumers re-aggregate/re-sort, so
-    * row order is immaterial. SharedArtifactsSpec pins standing ≡
-    * direct. */
-  private[graft] def gramStatsShared(spark: SparkSession, dir: String): DataFrame =
-    Materialize.shared(spark, s"gramStats:$dir")(
-      gramStats(gramTable(Tables.documents(spark, dir))))
+  /** [[gramStats]] over the corpus as a standing artifact
+    * ([[Materialize.shared]]): q68 and q97 each re-ran the gram explode +
+    * the two-phase aggregation per query. (gram, df, occ) = string + two
+    * longs — exact parquet round-trip; both consumers re-aggregate/
+    * re-sort, so row order is immaterial. SharedArtifactsSpec pins
+    * standing ≡ direct. */
+  private[graft] def gramStatsShared(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    Materialize.shared("gramStats", docs)(gramStats(gramTable(docs)))
+  }
 
   /** The census ordering + cap over a per-gram stats frame. */
   private def censusTop20(stats: DataFrame): DataFrame =
@@ -607,25 +603,23 @@ object Curation {
   def decontaminate(spark: SparkSession, dir: String): DataFrame =
     decontaminateShared(spark, dir).orderBy(col("doc_id"), col("eval_id"))
 
-  /** The contamination report as a SESSION-STANDING artifact keyed on
-    * the corpus dir ([[Materialize.shared]], the qualityGate precedent,
-    * r22): three declared queries consume the same (doc_id, eval_id,
-    * n_shared) verdict — q73 itself, q78's funnel stage, q133's
-    * decontamination stage — and each re-ran the corpus shingle explode
-    * + eval join per query. The report IS the audit artifact a pipeline
-    * produces once per (corpus, benchmark-suite) pair; all three columns
-    * are longs, so the parquet round-trip is exact, and the funnel/
-    * provenance consumers aggregate by doc_id with no order dependence
-    * (q73 re-applies its orderBy on read). */
-  private[graft] def decontaminateShared(spark: SparkSession, dir: String): DataFrame =
-    Materialize.shared(spark, s"decontam:$dir") {
-      val docs = Tables.documents(spark, dir)
-      // eval slice capped like the ANN probe grids (Similarity.probeFilter
-      // — the shared probe-budget predicate): a benchmark suite is a
-      // fixed-size table, not a corpus share, so the declared eval set is
-      // bounded at any corpus size too
-      decontaminateFrom(docs, docs.filter(Similarity.probeFilter(col("doc_id"))))
-    }
+  /** The contamination report as a standing artifact
+    * ([[Materialize.shared]]): three declared queries consume the same
+    * (doc_id, eval_id, n_shared) verdict — q73 itself, q78's funnel
+    * stage, q133's decontamination stage — and each re-ran the corpus
+    * shingle explode + eval join per query. All three columns are longs,
+    * so the parquet round-trip is exact, and the funnel/provenance
+    * consumers aggregate by doc_id with no order dependence (q73
+    * re-applies its orderBy on read). */
+  private[graft] def decontaminateShared(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    // eval slice capped like the ANN probe grids (Similarity.probeFilter
+    // — the shared probe-budget predicate): a benchmark suite is a
+    // fixed-size table, not a corpus share, so the declared eval set is
+    // bounded at any corpus size too
+    Materialize.shared("decontam", docs)(
+      decontaminateFrom(docs, docs.filter(Similarity.probeFilter(col("doc_id")))))
+  }
 
   /** [[decontaminate]] over explicit corpus/eval tables — the deployment
     * shape (a benchmark suite is its own table, not a corpus slice; the
@@ -1195,17 +1189,14 @@ object Curation {
                             broadcastShards: Boolean = true,
                             broadcastDupVerify: Boolean = true): DataFrame = {
     val (corpusIdx, batch) = incrementSplit(spark, dir)
-    // the sharded corpus sketch is a STANDING artifact (its own scaladoc:
-    // "amortized across every batch of the day") — one refresh per
-    // session serves both gate regimes (q100/q105), the spanShardIdx
-    // precedent. The corpus fingerprint INDEX is standing too, and the
-    // sketch is built FROM it: bloom negatives skip the exact verify
-    // entirely, so gate and verify must agree on what the corpus is —
-    // a standing sketch over a live index would silently admit
-    // duplicates of corpus docs ingested after the sketch snapshot.
-    // One snapshot per session feeds both; a refresh is a new session.
-    val corpusFp = Materialize.shared(spark, s"bloomCorpusFp:$dir")(corpusIdx)
-    val shards = Materialize.shared(spark, s"bloomShardIdx:4:$dir")(
+    // the sharded corpus sketch is a standing artifact (its own scaladoc:
+    // "amortized across every batch of the day") serving both gate
+    // regimes (q100/q105). The corpus fingerprint INDEX is standing too,
+    // and the sketch is built FROM its read: bloom negatives skip the
+    // exact verify entirely, so gate and verify must agree on what the
+    // corpus is.
+    val corpusFp = Materialize.shared("bloomCorpusFp", corpusIdx)(corpusIdx)
+    val shards = Materialize.shared("bloomShardIdx", corpusFp)(
       bloomWordsSharded(corpusFp, 4))
     val candidates =
       bloomHitSharded(batch, shards, 4, broadcastShards)
@@ -1271,16 +1262,13 @@ object Curation {
     * them calls this once and passes the result to the `*From` variants,
     * which CurationSpec asserts equivalent to the isolation results.
     *
-    * SESSION-STANDING since r19 ([[Materialize.shared]], the LSH
-    * hash-table precedent): the deployment-path regimes that start here
-    * — q99's staged marker, q113's sketch-phase marker, q101/q103's
-    * sharded gates (probe side AND the standing shard index's build) —
-    * together re-exploded the same corpus once per query; one refresh
-    * per session now serves all of them, which IS the deployment
-    * cadence the q99/q113 scaladocs describe. The in-query q95/q96/q98
+    * Standing ([[Materialize.shared]]): the deployment-path regimes that
+    * start here — q99's staged marker, q113's sketch-phase marker,
+    * q101/q103's sharded gates (probe side AND the standing shard
+    * index's build) — together re-exploded the same corpus once per
+    * query; one build now serves all of them. The in-query q95/q96/q98
     * baselines keep their own explodes (the declared isolation
-    * regimes), and a fresh session rebuilds, so the bench's isolated
-    * passes still measure the full build. */
+    * regimes). */
   def spanTable(spark: SparkSession, dir: String): DataFrame =
     // hybrid: the EXPLODE is session-standing (shared parquet), but each
     // query re-stages the scan — markers like q113's sketch phase read
@@ -1294,9 +1282,10 @@ object Curation {
     * + a doc_id-pruned eval sliver), where a localCheckpoint of the whole
     * token-volume table per query is pure overhead; the parquet scan
     * prunes columns and pushes the doc_id predicate instead (r22). */
-  private[graft] def spanTableShared(spark: SparkSession, dir: String): DataFrame =
-    Materialize.shared(spark, s"spanTable:$dir")(
-      spanRows(Tables.documents(spark, dir)))
+  private[graft] def spanTableShared(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    Materialize.shared("spanTable", docs)(spanRows(docs))
+  }
 
   /** [[spanTable]], durably: write the span table to a parquet sink and
     * return the re-read frame — the [[persistPairTable]] dual. Unlike the
@@ -1815,14 +1804,13 @@ object Curation {
     * path, pinned batch-equal in StreamingSpec. */
   def spanDedupShardedGate(spark: SparkSession, dir: String,
                            broadcastIndex: Boolean = true): DataFrame = {
-    val st = spanTable(spark, dir)
-    // the shard index is a STANDING artifact — one refresh serves every
-    // gate regime, so q101 and q103 share one build per session via the
-    // parquet-backed shared stage (Materialize.shared): whichever runs
-    // first pays the build + write, the other re-reads; the bench's
-    // fresh-session isolated pass still measures the full build
-    val idx = Materialize.shared(spark, s"spanShardIdx:4:$dir")(
-      spanIndexSharded(dupSpanIndexFrom(st), 4))
+    // the shard index is a standing artifact built from the standing
+    // span table's read, which the gate's probe side stages too: q101
+    // and q103 share one build, over the same corpus state as the probes
+    val spans = spanTableShared(spark, dir)
+    val st = spans.staged
+    val idx = Materialize.shared("spanShardIdx", spans)(
+      spanIndexSharded(dupSpanIndexFrom(spans), 4))
     spanGateShardedFrom(st, idx, 4, broadcastIndex)
       .select(col("doc_id"), col("n").as("n_tokens"),
         col("n_dup_spans"), col("n_covered"), col("keep_ratio"))

@@ -74,24 +74,22 @@ object Retrieval {
     tf.join(dl, Seq("doc_id")).staged
   }
 
-  /** [[bm25Index]] as a SESSION-STANDING artifact keyed on the corpus dir
-    * ([[Materialize.shared]], the hash-table/span-table/pair-table
-    * precedent, r22): the (doc_id, tok_h, tf, dl) index IS the lexical
-    * inverted-index statistics a deployment refreshes with one batch job
-    * and serves to every search query — here two declared queries (q116,
-    * q117's BM25 list) plus the streaming query-index build each re-ran
-    * the corpus tokenize + tf aggregation per query. One build per
-    * session now serves all three; a fresh session (the bench's isolated
-    * pass) still pays the full build. All four columns are exact longs,
-    * so the parquet round-trip is bit-identical and consumers aggregate /
-    * join with no row-order dependence. */
-  private[graft] def bm25IndexShared(spark: SparkSession, dir: String): DataFrame =
+  /** [[bm25Index]] as a standing artifact ([[Materialize.shared]]): the
+    * (doc_id, tok_h, tf, dl) index IS the lexical inverted-index
+    * statistics a deployment serves to every search query — here two
+    * declared queries (q116, q117's BM25 list) plus the streaming
+    * query-index build each re-ran the corpus tokenize + tf aggregation
+    * per query. All four columns are exact longs, so the parquet
+    * round-trip is bit-identical and consumers aggregate / join with no
+    * row-order dependence. */
+  private[graft] def bm25IndexShared(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
     // hybrid, the [[Curation.spanTable]] rationale: the BUILD is
-    // session-standing (shared parquet), but each query re-stages the
-    // scan — bm25From reads the index three times per plan (df agg,
-    // corpus constants, the scoring scan)
-    Materialize.stage(Materialize.shared(spark, s"bm25Index:$dir")(
-      bm25Index(Tables.documents(spark, dir))))
+    // standing (shared parquet), but each query re-stages the scan —
+    // bm25From reads the index three times per plan (df agg, corpus
+    // constants, the scoring scan)
+    Materialize.stage(Materialize.shared("bm25Index", docs)(bm25Index(docs)))
+  }
 
   /** q116: BM25 more-like-this search — rides the session-standing
     * index ([[bm25IndexShared]]). */

@@ -1017,51 +1017,29 @@ object Similarity {
     * Scale shape: q112's exactly — two extra training scans (the stale
     * E/M-step over half the residual table) and a second broadcast
     * codebook; the shared encode/regroup/window pass costs one chain,
-    * not two; the audit join inputs are |probes|·k rows per side. */
+    * not two; the audit join inputs are |probes|·k rows per side.
+    *
+    * The artifacts that EXIST BEFORE the audit runs — the probe panel,
+    * the deployed quantizer, the residual table, and the stale (deployed)
+    * codebook — are standing ([[Materialize.shared]]); the audit's own
+    * work (fresh retrain, exact ground truth, both score chains) stays
+    * per-query. */
   def pqDriftAudit(spark: SparkSession, dir: String): DataFrame = {
+    val (nlist, nprobe, m, dsub, nCodes) = (16, 4, 8, 8, 16)
     val emb = Tables.embeddings(spark, dir)
-    pqDriftAuditFrom(emb, gridProbes(emb), nlist = 16, nprobe = 4,
-      m = 8, dsub = 8, nCodes = 16, standingKey = Some(s"pqDriftIndex:$dir"))
-  }
-
-  /** [[pqDriftAudit]] over explicit probes. With `standingKey`, the
-    * artifacts that EXIST BEFORE the audit runs — the probe panel, the
-    * deployed quantizer, the residual table, and the stale (deployed)
-    * codebook — are session-standing ([[Materialize.shared]], the
-    * q101/q103 deployment cadence: an index refresh is a new session,
-    * not an implicit re-read); the audit's own work (fresh retrain,
-    * exact ground truth, both score chains) stays per-query. */
-  def pqDriftAuditFrom(emb: DataFrame, probes0: DataFrame, nlist: Int,
-      nprobe: Int, m: Int, dsub: Int, nCodes: Int,
-      standingKey: Option[String] = None): DataFrame = {
-    // the NUMERIC build parameters are folded into the cell key: cent
-    // depends on nlist, resid on cent, tcbStale on m/dsub/nCodes — a
-    // caller reusing one standingKey with different numbers gets a
-    // rebuild, not another parameterization's cached artifacts. The
-    // DATA inputs (emb, probes0) are NOT hashable into the key: the
-    // standingKey owner owns their identity — a key must name the
-    // corpus/probe source it was built from (pqDriftAudit derives it
-    // from `dir`, which pins both), and a caller pairing one key with
-    // different frames gets the first call's panel by design (the
-    // Materialize.shared snapshot contract).
-    def standing(sub: String)(df: => DataFrame): DataFrame = standingKey match {
-      case Some(k) => Materialize.shared(emb.sparkSession,
-        s"$k:$sub:$nlist:$m:$dsub:$nCodes")(df)
-      case None => Materialize.stage(df)
-    }
     // probes (4 consumers: exact ground truth, the output spine, both
     // score chains) and the quantizer (3) are staged like the other
     // index artifacts — unstaged, each use re-runs its corpus filter
     // scan (review finding r14)
-    val probes = standing("probes")(probes0)
-    val cent = standing("cent")(
+    val probes = Materialize.shared("pqDriftProbes", emb)(gridProbes(emb))
+    val cent = Materialize.shared("pqDriftCells", emb)(
       seedCells(emb.withColumn("nrm", norm(col("embedding"))), nlist))
-    val resid = standing("resid")(residualsWith(emb, cent))
+    val resid = Materialize.shared("pqDriftResiduals", emb, cent)(residualsWith(emb, cent))
     val tcbFresh = Materialize.stage(trainedSubCodebook(resid, m, dsub, nCodes))
     // the stale codebook's training set is the even-id half playing
     // "yesterday's corpus"; trainedSubCodebook seeds from the first
     // nCodes ids PRESENT in the slice (0,2,…,2·nCodes−2 here)
-    val tcbStale = standing("tcbStale")(trainedSubCodebook(
+    val tcbStale = Materialize.shared("pqDriftStaleCodebook", resid)(trainedSubCodebook(
       resid.filter(col("vec_id") % 2 === 0), m, dsub, nCodes))
     val exact5 = Materialize.stage(cosineTopKFrom(emb, probes, k = 5)
       .select(col("probe_id"), col("cand_id")))

@@ -169,18 +169,16 @@ object Text {
         size(split(trim(col("seg")), " ")).cast("long").as("n_sym"))
   }
 
-  /** [[bpeSymTableFrom]] as a SESSION-STANDING artifact keyed on the
-    * corpus dir ([[Materialize.shared]], the qualityGate/bm25-index
-    * precedent, r22): a trained tokenizer is learned ONCE per corpus and
-    * applied everywhere — yet q32 and q138 each re-ran the vocabulary
-    * build plus the 4-round merge learning (driver-collect round trips
-    * included) per query. (tok, n_sym) round-trips parquet exactly
-    * (string + long) and the consumers join/aggregate — no row-order
-    * dependence. A fresh session (the bench's isolated pass) still pays
-    * the full training loop. */
-  private[graft] def bpeSymShared(spark: SparkSession, dir: String): DataFrame =
-    Materialize.shared(spark, s"bpeSymTable:$dir")(
-      bpeSymTableFrom(Tables.documents(spark, dir)))
+  /** [[bpeSymTableFrom]] as a standing artifact ([[Materialize.shared]]):
+    * a trained tokenizer is learned ONCE per corpus and applied
+    * everywhere — yet q32 and q138 each re-ran the vocabulary build plus
+    * the 4-round merge learning (driver-collect round trips included) per
+    * query. (tok, n_sym) round-trips parquet exactly (string + long) and
+    * the consumers join/aggregate — no row-order dependence. */
+  private[graft] def bpeSymShared(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    Materialize.shared("bpeSymTable", docs)(bpeSymTableFrom(docs))
+  }
 
   /** Per-document BPE token counts under the corpus-learned merge
     * table. Scale shape: the token stream explodes twice (vocabulary

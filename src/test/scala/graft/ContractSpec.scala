@@ -108,4 +108,18 @@ class ContractSpec extends SparkSpec {
     assert(classes.sorted == Seq("KernelExpr", "VecRangeAgg"),
       s"Catalyst expression classes: $classes")
   }
+
+  test("each standing artifact is named by one literal at one Materialize.shared call") {
+    // an artifact is identified by its name plus the files its sources
+    // read; a key formatted by the caller could drop a parameter and
+    // alias two artifacts, and a name used twice would share one cell
+    val calls = mainSources.flatMap { case (_, src) =>
+      "Materialize\\.shared\\(\\s*(\"[^\"]*\"|[^\\s,)]+)".r.findAllMatchIn(src).map(_.group(1)) }
+    val nonLiteral = calls.filterNot(n => n.startsWith("\"") && !n.contains("$"))
+    assert(calls.nonEmpty && nonLiteral.isEmpty, s"shared artifacts not named by a literal: $nonLiteral")
+    val repeated = calls.groupBy(identity).collect { case (n, cs) if cs.size > 1 => n }
+    assert(repeated.isEmpty, s"artifact names used at several call sites: $repeated")
+    val keyed = mainSources.collect { case (p, src) if src.contains("standingKey") => p }
+    assert(keyed.isEmpty, s"standingKey still appears in: $keyed")
+  }
 }

@@ -101,4 +101,65 @@ class SharedArtifactsSpec extends SparkSpec {
     assert(!b.queryExecution.executedPlan.toString.contains("HashAggregate"))
   }
 
+  /** A writable copy of sfDir whose documents table is a directory, so a
+    * spec can add a document file to it mid-session. */
+  private def corpusCopy(): java.nio.file.Path = {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft_corpus")
+    Files.list(java.nio.file.Paths.get(sfDir)).forEach { f =>
+      val name = f.getFileName.toString
+      if (name != "documents.parquet") Files.copy(f, dir.resolve(name))
+      else {
+        Files.createDirectories(dir.resolve(name))
+        Files.copy(f, dir.resolve(name).resolve("part-0.parquet"))
+      }
+    }
+    dir
+  }
+
+  /** Append `docs` to the copy's documents table as one more file. */
+  private def addDocs(dir: java.nio.file.Path, docs: org.apache.spark.sql.DataFrame): Unit =
+    docs.coalesce(1).write.mode("append").parquet(dir.resolve("documents.parquet").toString)
+
+  test("a standing artifact is rebuilt when its source files change, and only then") {
+    val dir = corpusCopy()
+    try {
+      val appId = spark.sparkContext.applicationId
+      val first = rows(Curation.qualityGateShared(spark, dir.toString))
+      val pending = Materialize.pendingStages(appId).size
+      // unchanged files: a re-read, no build
+      assert(rows(Curation.qualityGateShared(spark, dir.toString)) == first)
+      assert(Materialize.pendingStages(appId).size == pending, "rebuilt over unchanged files")
+      // a new document file: the next call builds, and the new doc is in it
+      addDocs(dir, Tables.documents(spark, sfDir).filter(col("doc_id") === 1)
+        .withColumn("doc_id", lit(1000001L)))
+      val after = Curation.qualityGateShared(spark, dir.toString)
+      assert(after.filter(col("doc_id") === 1000001L).count() == 1, "served a stale gate")
+      assert(after.count() == first.size + 1)
+      assert(Materialize.pendingStages(appId).size == pending + 1)
+      // a source with no input files cannot be fingerprinted: rejected by name
+      val inMemory = spark.range(3).toDF("id")
+      val e = intercept[IllegalArgumentException](
+        Materialize.shared("spec-in-memory", inMemory)(inMemory))
+      assert(e.getMessage.contains("spec-in-memory"))
+      val checkpoint = Materialize.stage(Tables.documents(spark, dir.toString))
+      assert(intercept[IllegalArgumentException](
+        Materialize.shared("spec-checkpoint", checkpoint)(checkpoint))
+        .getMessage.contains("spec-checkpoint"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("q100's standing bloom pair follows a new corpus doc: q100 equals q94 row for row") {
+    val dir = corpusCopy()
+    try {
+      val before = Curation.bloomIncrementSharded(spark, dir.toString).collect()
+      // a corpus doc (doc_id % 7 != 0) duplicating the text of an admitted batch doc
+      val dupOf = before.head.getLong(0)
+      addDocs(dir, Tables.documents(spark, dir.toString).filter(col("doc_id") === dupOf)
+        .withColumn("doc_id", lit(1000001L)))
+      val standing = Curation.bloomIncrementSharded(spark, dir.toString).collect().toSeq
+      assert(!standing.map(_.getLong(0)).contains(dupOf), s"q100 still admits doc $dupOf")
+      assert(standing == Curation.bloomIncrement(spark, dir.toString).collect().toSeq)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 }

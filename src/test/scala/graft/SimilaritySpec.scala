@@ -538,8 +538,7 @@ class SimilaritySpec extends SparkSpec {
   test("pq drift audit: one row per probe, hits bounded, drift arithmetic exact") {
     val emb = Tables.embeddings(spark, sfDir)
     val probes = emb.filter(col("vec_id") % 97 === 0)
-    val out = Similarity.pqDriftAuditFrom(emb, probes, nlist = 16,
-      nprobe = 4, m = 8, dsub = 8, nCodes = 16).collect()
+    val out = Similarity.pqDriftAudit(spark, sfDir).collect()
     assert(out.length == probes.count().toInt)
     out.foreach { r =>
       val (nf, ns) = (r.getLong(1), r.getLong(2))

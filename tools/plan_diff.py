@@ -11,6 +11,13 @@ expression ids (`#123`), RDD ids (`[12]`), source positions
 (`File.scala:42`), shared-artifact names (`graft_shared_*`), `plan_id=N`,
 JVM lambda class names and `@hex` object hashes are masked.
 
+Spark's distinct-aggregate rewrite numbers its `Expand` projections in an
+order that varies from JVM to JVM (q99, q113, q114 and q130 carry one),
+and the column order and `gid` literals of every node above the `Expand`
+follow that order. Each such `Expand` is rewritten into one canonical order
+first: its distinct columns sorted by name, its projections re-numbered
+to match, and the same permutation applied to the rest of the plan.
+
 With a second parent directory, a query whose two parent runs differ is
 reported as UNSTABLE, and the change's plan counts as unchanged when it
 equals either parent run. Exits 1 if any query changed or is missing.
@@ -30,7 +37,40 @@ RULES = [
 ]
 
 
+EXPAND = re.compile(r"^Arguments: \[(\[.*\])\], \[([^\[\]]*, (gid#\d+))\]$", re.M)
+ID = re.compile(r"#\d+L?")
+
+
+def canonical_expand(text, gid):
+    """`text` with the distinct-aggregate `Expand` that outputs `gid` put in
+    canonical order; unchanged if its Arguments line does not parse."""
+    m = next(m for m in EXPAND.finditer(text) if m.group(3) == gid)
+    projs = [p.split(", ") for p in m.group(1)[1:-1].split("], [")]
+    out = m.group(2).split(", ")
+    if any(len(p) != len(out) or not p[-1].isdigit() for p in projs):
+        return text
+    cols = [i for i in range(len(out) - 1) if any(p[i] == "null" for p in projs)]
+    names = [ID.sub("", out[i]) for i in cols]
+    if not cols or cols != list(range(cols[0], cols[-1] + 1)) or len(set(names)) < len(names):
+        return text
+    order = [cols[k] for k in sorted(range(len(cols)), key=names.__getitem__)]
+    perm = list(range(cols[0])) + order + list(range(cols[-1] + 1, len(out)))
+    projs = sorted(([p[i] for i in perm] for p in projs),
+                   key=lambda p: ID.sub("", ", ".join(p[:-1])))
+    renumber = dict(zip((p[-1] for p in projs), sorted(p[-1] for p in projs)))
+    line = "Arguments: [%s], [%s]" % (
+        ", ".join("[%s]" % ", ".join(p[:-1] + [renumber[p[-1]]]) for p in projs),
+        ", ".join(out[i] for i in perm))
+    text = text[:m.start()] + line + text[m.end():]
+    run = re.escape(", ".join(out[i] for i in cols)) + r"(?![\dL])"
+    text = re.sub(run, ", ".join(out[i] for i in order), text)
+    return re.sub(re.escape(gid) + r" = (\d+)\b",
+                  lambda g: "%s = %s" % (gid, renumber.get(g.group(1), g.group(1))), text)
+
+
 def normalize(text):
+    for gid in [m.group(3) for m in EXPAND.finditer(text)]:
+        text = canonical_expand(text, gid)
     for pattern, repl in RULES:
         text = pattern.sub(repl, text)
     return text
