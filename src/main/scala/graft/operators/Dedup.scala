@@ -320,18 +320,18 @@ object Dedup {
     * build. Pairs are deterministic, and d1/d2/jaccard round-trip
     * parquet bit-exactly; the orderBy is re-applied on read because a
     * parquet stage does not preserve order. */
-  def lshNearDup(spark: SparkSession, dir: String): DataFrame =
-    Materialize.shared("lshPairTable", hashedDocTable(spark, dir))(
-      lshNearDupBuild(spark, dir)).orderBy("d1", "d2")
-
-  /** The pair-table build pipeline itself, un-staged — the body of the
-    * shared cell, exposed so PlanGuardSpec can keep pinning the BUILD's
-    * join shape (verify sides broadcast) now that the consumer plan is a
-    * parquet read. */
-  private[graft] def lshNearDupBuild(spark: SparkSession, dir: String): DataFrame = {
+  def lshNearDup(spark: SparkSession, dir: String): DataFrame = {
     val docs = hashedDocTable(spark, dir)
-    lshVerify(bandCandidates(docs), docs)
+    Materialize.shared("lshPairTable", docs)(lshNearDupBuild(docs)).orderBy("d1", "d2")
   }
+
+  /** The pair-table build pipeline itself, un-staged, over one
+    * [[hashedDocTable]] read — the body of the shared cell, built from
+    * the same read the cell is keyed on, and exposed so PlanGuardSpec
+    * can keep pinning the BUILD's join shape (verify sides broadcast)
+    * now that the consumer plan is a parquet read. */
+  private[graft] def lshNearDupBuild(docs: DataFrame): DataFrame =
+    lshVerify(bandCandidates(docs), docs)
 
   /** Exact-Jaccard verify of an LSH candidate set against the per-doc
     * hash-array table — shared by [[lshNearDup]] and [[lshNearDupCapped]]. */

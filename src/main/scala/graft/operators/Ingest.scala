@@ -9,13 +9,15 @@ import org.apache.spark.sql.functions._
   * cube URL → HTTP GET → delete old S3 prefix → decode → maybe reproject →
   * per-time-band split → per-file upload → JSON manifest.
   *
-  * Engine shape: the HTTP fetch + NetCDF decode stay at the edge (driver
-  * fetches, stages long-format rows — SURVEY.md §7.3); everything after is
-  * one declarative plan: conditional reproject (pure column math), bbox /
-  * parameter pruning (pushed to the source scan), a time-partitioned
-  * overwrite write (dynamic mode = delete-only-rewritten-partitions, the
-  * scalable version of the reference's delete-prefix), and the manifest as
-  * an O(groups) aggregation. No per-band loop, no driver-side iteration:
+  * Engine shape: the HTTP fetch and the NetCDF container parse stay at the
+  * edge (the driver fetches, parses and holds primitive arrays — SURVEY.md
+  * §7.3), and the executors generate the long-format cells; everything
+  * after is one declarative plan: conditional reproject (pure column
+  * math), bbox / parameter pruning (pushed to the source scan), a
+  * time-partitioned overwrite write (dynamic mode =
+  * delete-only-rewritten-partitions, the scalable version of the
+  * reference's delete-prefix), and the manifest as an O(groups)
+  * aggregation. No per-band loop, no driver-side iteration:
   * Spark's task scheduler is the loop.
   */
 object Ingest {

@@ -32,9 +32,13 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType, Timestam
   * beyond that subset fails decode, which
   * [[graft.operators.Fetch.fetchAndIngest]] records as an R17 skip.
   *
-  * Scale note: decode runs at the edge on a single staged response
-  * (SURVEY.md §7.3 — a DMI cube response is a few MB); everything after the
-  * returned DataFrame is distributed. Values are big-endian per the spec.
+  * Scale note: the container parse and the CF rules run at the edge, on
+  * the driver, over a single staged response (SURVEY.md §7.3 — a DMI cube
+  * response is a few MB), and the driver keeps only primitive arrays:
+  * raw values, coordinates, aux lat/lon and one epoch-millisecond value
+  * per time step. The cells themselves are generated on the executors
+  * (`cubeFrame`), so the returned DataFrame is distributed from its first
+  * row. Values are big-endian per the spec.
   */
 object NetCdf {
 
@@ -500,13 +504,15 @@ object NetCdf {
         case Some(u) if u.contains(" since ") => cfTimeToEpochSeconds(u)
         case _ => identity
       }
+    val timeMs = tPos.map(coordVals).getOrElse(Array(0.0))
+      .map(v => math.round(toEpochSec(v) * 1000.0))
     cubeFrame(spark, collection, parameter,
-      tPos.map(coordVals).getOrElse(Array(0.0)), coordVals(yPos), coordVals(xPos),
+      timeMs, coordVals(yPos), coordVals(xPos),
       src.values(data), tPos.map(strides(_)).getOrElse(0), strides(yPos), strides(xPos),
       src.num(data, "scale_factor").getOrElse(1.0),
       src.num(data, "add_offset").getOrElse(0.0),
       src.num(data, "_FillValue").orElse(src.num(data, "missing_value")),
-      toEpochSec, auxCoords(src, data, axes(yPos).id -> shape(yPos), axes(xPos).id -> shape(xPos)))
+      auxCoords(src, data, axes(yPos).id -> shape(yPos), axes(xPos).id -> shape(xPos)))
   }
 
   private def listedCoords[V](src: CfSource[V], v: V): Seq[String] =
@@ -567,54 +573,59 @@ object NetCdf {
   private case class AuxCoord(name: String, vals: Array[Double],
                               yStride: Int, xStride: Int)
 
-  /** Long-frame builder: walk the raw row-major values with the resolved
-    * axis strides, apply CF packing/fill/time semantics, and return the
-    * pipeline's `(collection, parameter, time, x, y, value)` frame. */
+  /** Long-frame builder. The driver hands over primitive arrays only: the
+    * raw row-major values, the per-axis coordinates, one epoch-millisecond
+    * value per time step and the aux grids. They travel in the task
+    * closure, and each task walks one contiguous range of the output's
+    * (t, y, x) row-major cell order, applying the fill mask, CF packing and
+    * the resolved axis strides as it emits. `min(cells, defaultParallelism)`
+    * equal ranges keep the rows in (t, y, x) order across partitions, and a
+    * range boundary splits at most one time step — the sink's files per
+    * time step follow from that. */
   private def cubeFrame(
       spark: SparkSession, collection: String, parameter: String,
-      timeVals: Array[Double], yVals: Array[Double], xVals: Array[Double],
+      timeMs: Array[Long], yVals: Array[Double], xVals: Array[Double],
       raw: Array[Double], tStride: Int, yStride: Int, xStride: Int,
       scale: Double, offset: Double, fill: Option[Double],
-      toEpochSec: Double => Double, aux: Seq[AuxCoord] = Nil): DataFrame = {
-    val nT = timeVals.length; val nY = yVals.length; val nX = xVals.length
-    val nAux = aux.size
-    val rows = new Array[Row](nT * nY * nX)
-    var k = 0
-    var t = 0
-    while (t < nT) {
-      val ts = new Timestamp(math.round(toEpochSec(timeVals(t)) * 1000.0))
-      var y = 0
-      while (y < nY) {
-        var x = 0
-        while (x < nX) {
+      aux: Seq[AuxCoord] = Nil): DataFrame = {
+    val nT = timeMs.length; val nY = yVals.length; val nX = xVals.length
+    val cells = nT * nY * nX
+    val parts = math.min(cells, spark.sparkContext.defaultParallelism)
+    // NaN never compares equal, so a cube without a fill value masks only NaN
+    val fillValue = fill.getOrElse(Double.NaN)
+    val auxGrids = aux.toArray
+    // an empty cube is one empty partition, which never divides by its axes
+    val rows = spark.sparkContext.parallelize(0 until parts, parts.max(1)).mapPartitions(_.flatMap { p =>
+      val stamps = timeMs.map(new Timestamp(_))
+      val hi = (cells.toLong * (p + 1) / parts).toInt
+      var k = (cells.toLong * p / parts).toInt
+      var t = k / (nY * nX); var y = k / nX % nY; var x = k % nX
+      new Iterator[Row] {
+        def hasNext: Boolean = k < hi
+        def next(): Row = {
           val v = raw(t * tStride + y * yStride + x * xStride)
-          val unpacked: java.lang.Double =
-            if (fill.contains(v) || v.isNaN) null else v * scale + offset
-          val vs = new Array[Any](4 + nAux)
-          vs(0) = ts; vs(1) = xVals(x); vs(2) = yVals(y); vs(3) = unpacked
+          val vs = new Array[Any](4 + auxGrids.length)
+          vs(0) = stamps(t); vs(1) = xVals(x); vs(2) = yVals(y)
+          vs(3) = if (v == fillValue || v.isNaN) null else v * scale + offset
           var a = 0
-          while (a < nAux) {
-            val ac = aux(a)
+          while (a < auxGrids.length) {
+            val ac = auxGrids(a)
             vs(4 + a) = ac.vals(y * ac.yStride + x * ac.xStride)
             a += 1
           }
-          // zero-copy wraps: a large cube (tens of millions of cells)
-          // must not duplicate its row array on the driver
-          rows(k) = Row.fromSeq(
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(vs))
           k += 1; x += 1
+          if (x == nX) { x = 0; y += 1; if (y == nY) { y = 0; t += 1 } }
+          Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(vs))
         }
-        y += 1
       }
-      t += 1
-    }
+    })
     val schema = StructType(
       StructField("time", TimestampType, nullable = false) ::
         StructField("x", DoubleType, nullable = false) ::
         StructField("y", DoubleType, nullable = false) ::
         StructField("value", DoubleType, nullable = true) ::
         aux.map(a => StructField(a.name, DoubleType, nullable = false)).toList)
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    spark.createDataFrame(rows, schema)
       .select(
         lit(collection).as("collection") +: lit(parameter).as("parameter") +:
           col("time") +: col("x") +: col("y") +: col("value") +:

@@ -86,9 +86,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[NetCdf.encodeCube]]), which is what makes the codec testable
   * offline: encode∘decode is pinned as the identity in NetCdf4Spec, and
   * the reader is additionally fuzzed on truncated/corrupted streams.
-  * Scale note: like the classic codec, this runs at the edge on one
-  * staged MB-scale response; everything downstream of the returned
-  * DataFrame is distributed.
+  * Scale note: like the classic codec, the parse runs at the edge, on
+  * the driver, over one staged MB-scale response and hands
+  * [[NetCdf.decodeCf]] primitive arrays; the cells of the returned
+  * DataFrame are generated on the executors.
   */
 object NetCdf4 {
 

@@ -132,7 +132,7 @@ class DedupSpec extends SparkSpec {
 
   test("minhash signature values lie in [0, P)") {
     val sig = Dedup.minhashSignatures(spark, sfDir)
-    val cols = sig.columns.filter(_.startsWith("mh"))
+    val cols = sig.columns.filter(_.startsWith("mh")).toIndexedSeq
     assert(cols.length == graft.functions.Hashing.K)
     val mins = sig.select(cols.map(c => min(col(c))): _*).collect()(0)
     val maxs = sig.select(cols.map(c => max(col(c))): _*).collect()(0)

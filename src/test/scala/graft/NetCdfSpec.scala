@@ -393,4 +393,84 @@ class NetCdfSpec extends SparkSpec {
     assert(manifest.isDefined)
     assert(spark.read.parquet(out).count() == 23)
   }
+
+  /** An `nT × nY × nX` short-packed classic cube inside the default bbox —
+    * the forecast shape (scale 0.001, about 5 % `_FillValue` holes) at any
+    * size; the data variable's stored value at cell k is `k % 20000`. */
+  private def packedCube(nT: Int, nY: Int, nX: Int): Array[Byte] = {
+    val rnd = new scala.util.Random(7)
+    NetCdf.write(
+      dims = Seq("time" -> nT.toLong, "lat" -> nY.toLong, "lon" -> nX.toLong),
+      gattrs = Seq("Conventions" -> "CF-1.6"),
+      vars = Seq(
+        WriteVar("time", Seq("time"), NcDouble,
+          Seq("units" -> "hours since 2024-01-01 00:00:00"), Array.tabulate(nT)(_.toDouble)),
+        WriteVar("lat", Seq("lat"), NcDouble, Seq("units" -> "degrees_north"),
+          Array.tabulate(nY)(j => 55.5 + (j + 0.5) * 0.6 / nY)),
+        WriteVar("lon", Seq("lon"), NcDouble, Seq("units" -> "degrees_east"),
+          Array.tabulate(nX)(i => 11.5 + (i + 0.5) * 0.7 / nX)),
+        WriteVar("sea_mean_deviation", Seq("time", "lat", "lon"), NcShort,
+          Seq("scale_factor" -> 0.001, "add_offset" -> 0.0, "_FillValue" -> (-32767: Short)),
+          Array.tabulate(nT * nY * nX)(k =>
+            if (rnd.nextDouble() < 0.05) -32767.0 else (k % 20000).toDouble))),
+      version = 2)
+  }
+
+  test("decodeCube generates cells on the executors: no driver Row per cell, no LocalRelation") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val bytes = packedCube(24, 112, 112)
+    val cells = 24L * 112 * 112
+    val cfg = IngestConfig(parameters = Seq("sea_mean_deviation"))
+    def decodeAndStage() = {
+      val df = NetCdf.decodeCube(spark, "dkss_if", "sea_mean_deviation", bytes)
+      (df, graft.operators.Materialize.stage(Ingest.cubeToLong(df, cfg)))
+    }
+    decodeAndStage() // class loading and codegen are paid once, not per cell
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val thread = Thread.currentThread.getId
+    val before = mx.getThreadAllocatedBytes(thread)
+    val (df, staged) = decodeAndStage()
+    val perCell = (mx.getThreadAllocatedBytes(thread) - before).toDouble / cells
+    // a driver Row per cell cost about 5 KB here; the parse, the raw and
+    // coordinate arrays and the closure check stay well under 300 B
+    assert(perCell < 300, f"driver thread allocated $perCell%.0f B per cell")
+    val plan = df.queryExecution.optimizedPlan
+    assert(plan.collectFirst { case l: LocalRelation => l }.isEmpty, plan.toString)
+    val f = NetCdf.parse(bytes)
+    val defined = NetCdf.readValues(f, f.variable("sea_mean_deviation").get).count(_ != -32767.0)
+    assert(staged.count() == defined)
+  }
+
+  test("decodeCube partitions are contiguous (t, y, x) ranges, one sink file per step and boundary") {
+    val (nT, nY, nX) = (24, 9, 13)
+    val cells = nT * nY * nX
+    val parts = math.min(cells, spark.sparkContext.defaultParallelism)
+    val bytes = packedCube(nT, nY, nX)
+    val df = NetCdf.decodeCube(spark, "dkss_if", "sea_mean_deviation", bytes)
+    assert(df.rdd.getNumPartitions == parts)
+    val f = NetCdf.parse(bytes)
+    val Seq(lats, lons) = Seq("lat", "lon").map(n => NetCdf.readValues(f, f.variable(n).get))
+    val rows = df.rdd.mapPartitionsWithIndex((p, it) => it.map(r =>
+      (p, r.getTimestamp(2).getTime, r.getDouble(4), r.getDouble(3)))).collect()
+    // rows in partition order are the cube's row-major (t, y, x) order,
+    // split into `parts` near-equal contiguous ranges
+    assert(rows.toSeq.map(r => (r._2, r._3, r._4)) == (0 until cells).map { k =>
+      (1704067200000L + k / (nY * nX) * 3600000L, lats(k / nX % nY), lons(k % nX))
+    })
+    assert(rows.toSeq.map(_._1) == (0 until parts).flatMap(p =>
+      Seq.fill(cells * (p + 1) / parts - cells * p / parts)(p)))
+    // the sink writes one file per (task, time step): a range boundary
+    // splits at most one step, never one file per row or per step per task
+    val out = Files.createTempDirectory("graft-nc-parts").toFile
+    out.deleteOnExit()
+    Ingest.writeCube(Ingest.cubeToLong(df, IngestConfig(parameters = Seq("sea_mean_deviation"))),
+      out.toString)
+    val files = Files.walk(out.toPath).toArray.map(_.toString)
+      .count(p => p.endsWith(".parquet") && p.contains("/part-"))
+    assert(files >= nT && files <= nT + parts - 1, s"$files part files for $nT steps")
+    org.apache.commons.io.FileUtils.deleteDirectory(out)
+    // a record axis with no records decodes to an empty frame
+    assert(NetCdf.decodeCube(spark, "dkss_if", "sea_mean_deviation", packedCube(0, 3, 4)).count() == 0)
+  }
 }

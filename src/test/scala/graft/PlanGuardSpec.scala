@@ -57,7 +57,8 @@ class PlanGuardSpec extends SparkSpec {
     // Since r22 q37's CONSUMER plan is a read of the session-standing
     // pair table, so the join-shape pin moves to the build pipeline.
     assert(plans("q03_broadcast_join").contains("BroadcastHashJoin"))
-    assert(operators.Dedup.lshNearDupBuild(spark, sfDir)
+    val docs = operators.Dedup.hashedDocTable(spark, sfDir)
+    assert(operators.Dedup.lshNearDupBuild(docs)
       .queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
   }
 
