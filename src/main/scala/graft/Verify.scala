@@ -14,7 +14,7 @@ object Verify {
     val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => names(q._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      try LocalFs.write(fn(spark, sfDir).coalesce(1)).mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

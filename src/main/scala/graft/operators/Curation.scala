@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.LocalFs
 import graft.functions.Hashing
 import graft.functions.MoneySum.{decSum9, longSum9, trunc6}
 import graft.operators.Materialize.Stageable
@@ -1293,7 +1294,7 @@ object Curation {
     * shards it by the sink's partitioning; it amortizes across every
     * span-family consumer AND daily increments ([[spanTableIncrement]]). */
   def persistSpanTable(spark: SparkSession, dir: String, sink: String): DataFrame = {
-    spanRows(Tables.documents(spark, dir)).write.mode("overwrite").parquet(sink)
+    LocalFs.write(spanRows(Tables.documents(spark, dir))).mode("overwrite").parquet(sink)
     spark.read.parquet(sink)
   }
 
@@ -1970,7 +1971,7 @@ object Curation {
     * CurationSpec asserts q80/q82/q87 outputs from the re-read table are
     * identical to the recompute-per-query isolation results. */
   def persistPairTable(spark: SparkSession, dir: String, sink: String): DataFrame = {
-    Dedup.lshNearDup(spark, dir).write.mode("overwrite").parquet(sink)
+    LocalFs.write(Dedup.lshNearDup(spark, dir)).mode("overwrite").parquet(sink)
     spark.read.parquet(sink)
   }
 

@@ -9,6 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
   PartitioningAwareFileIndex}
 
+import graft.LocalFs
+
 /** The ONE materialization indirection for "this subtree feeds multiple
   * consumers — compute it once".
   *
@@ -133,7 +135,11 @@ object Materialize {
     * per consumer (broadcast vs shuffle hints still apply). Dirs are
     * deleted when the session's SparkContext ends (JVM exit as backstop);
     * a fresh session (new applicationId) rebuilds, so a cold run always
-    * measures the full build. */
+    * measures the full build. The parquet write starts from
+    * [[LocalFs.write]], so a `file:` materialize dir gets its files' and
+    * dirs' modes through `java.nio`, not one forked `chmod` each; only
+    * the `file:` scheme is remapped, and a host with native Hadoop makes
+    * the same `chmod` syscall. */
   def shared(name: String, sources: DataFrame*)(build: => DataFrame): DataFrame = {
     require(sources.nonEmpty, s"shared artifact '$name' names no source")
     val spark = sources.head.sparkSession
@@ -143,7 +149,7 @@ object Materialize {
       val base = spark.conf.get("graft.materialize.dir", sys.props("java.io.tmpdir"))
       val dir = s"$base/graft_shared_${java.util.UUID.randomUUID}"
       state.dirs.add(new java.io.File(dir))
-      build.write.parquet(dir)
+      LocalFs.write(build).parquet(dir)
       dir
     }))
     spark.read.parquet(cell.dir)

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.LocalFs
 import graft.functions.MoneySum.trunc6
 import graft.operators.Dedup
 import graft.sources.Tables
@@ -945,7 +946,7 @@ object StreamOps {
     * checkpoint locked against any later run); a continuous deployment
     * calls `.start()` itself and manages the query handle. */
   def writeWindowed(df: DataFrame, outPath: String, checkpoint: String): Unit = {
-    val q = df.writeStream
+    val q = LocalFs.writeStream(df)
       .outputMode(OutputMode.Append)
       .format("parquet")
       .option("path", outPath)

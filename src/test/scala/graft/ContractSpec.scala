@@ -122,4 +122,28 @@ class ContractSpec extends SparkSpec {
     val keyed = mainSources.collect { case (p, src) if src.contains("standingKey") => p }
     assert(keyed.isEmpty, s"standingKey still appears in: $keyed")
   }
+
+  test("every file write under src/main/scala starts from LocalFs.write or LocalFs.writeStream") {
+    // a writer opened anywhere else writes file: paths through the stock
+    // file system, which forks chmod for each file and dir; Bench's noop
+    // sink and foreachBatch streams write no files of their own
+    val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val opened = """\.(?:write|writeStream|writeTo)\b(?!\s*\()""".r
+    val writers = mainSources.flatMap { case (p, src) =>
+      val code = comments.replaceAllIn(src, "")
+      opened.findAllMatchIn(code).map(m =>
+        p.getFileName.toString -> code.substring(m.start, (m.start + 160) min code.length))
+    }
+    val (exempt, files) = writers.partition { case (_, chain) =>
+      chain.contains("format(\"noop\")") || chain.contains(".foreachBatch") }
+    assert(exempt.map(_._1).contains("Bench.scala"), s"the walk missed Bench's noop sink: $writers")
+    val stray = files.filterNot(_._1 == "LocalFs.scala")
+    assert(stray.isEmpty, s"file writers opened outside LocalFs: ${stray.mkString("\n")}")
+    val rddSinks = mainSources.collect { case (p, src) if "\\.saveAs\\w*File\\(".r.findFirstIn(src).isDefined => p }
+    assert(rddSinks.isEmpty, s"RDD file sinks: $rddSinks")
+    val routed = mainSources.collect { case (p, src)
+      if "LocalFs\\.write(Stream)?\\(".r.findFirstIn(src).isDefined => p.getFileName.toString }
+    assert(routed.sorted == Seq("Curation.scala", "Ingest.scala", "Materialize.scala",
+      "StreamOps.scala", "Verify.scala"), s"files writing through LocalFs: $routed")
+  }
 }
