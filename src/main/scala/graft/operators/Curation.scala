@@ -290,11 +290,11 @@ object Curation {
         collect_list(col("cnt"))).as("cms"))
     // `est` probes the broadcast sketch via element_at on a map of up to
     // D×W = 262144 entries, and Spark's MapData lookup is a LINEAR scan
-    // (the q94 lesson — see bloomWords' densify comment). Safe ONLY
+    // (the q94 lesson — see bloomWordsSharded's densify comment). Safe ONLY
     // because the probe side here is boilerplateCensus's post-limit
     // 20-row output (8 lookups × 20 rows); reusing `est` against an
     // unlimited gram set would be O(rows × D × W) — densify to an ordered
-    // array + index lookup (the bloomWords shape) before doing that.
+    // array + index lookup (the bloomWordsSharded shape) before doing that.
     val est = (0 until CmsD).map(r =>
       coalesce(element_at(col("cms"),
         lit(r.toLong * CmsW) + cmsBucket(r, col("gram"))), lit(0L)))
@@ -598,9 +598,7 @@ object Curation {
     * grams after the join shuffles only the rows that matched an eval
     * shingle (≈ contamination volume), where dedup-then-join would
     * shuffle every gram in the corpus. At 100 TB the eval shingles fit
-    * an executor easily (benchmarks are MBs); past that,
-    * `broadcastEval = false` runs the identical join shuffled on gram —
-    * still never all-pairs. */
+    * an executor easily (benchmarks are MBs). */
   def decontaminate(spark: SparkSession, dir: String): DataFrame =
     decontaminateShared(spark, dir).orderBy(col("doc_id"), col("eval_id"))
 
@@ -624,12 +622,8 @@ object Curation {
 
   /** [[decontaminate]] over explicit corpus/eval tables — the deployment
     * shape (a benchmark suite is its own table, not a corpus slice; the
-    * declared query passes the every-97th slice for the oracle).
-    * `broadcastEval = false` is the past-broadcast regime AS CODE (not a
-    * prose fallback): the hint is dropped and the same equi-join runs
-    * shuffled on gram — output-identical, pinned in CurationSpec. */
-  def decontaminateFrom(docs: DataFrame, evalDocs: DataFrame,
-                        broadcastEval: Boolean = true): DataFrame = {
+    * declared query passes the every-97th slice for the oracle). */
+  def decontaminateFrom(docs: DataFrame, evalDocs: DataFrame): DataFrame = {
     val grams = docs.withColumn("toks", toks)
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), explode(Dedup.shingleCol).as("gram"))
@@ -637,7 +631,7 @@ object Curation {
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id").as("eval_id"), explode(Dedup.shingleCol).as("gram"))
       .distinct()
-    grams.join(if (broadcastEval) broadcast(ev) else ev, "gram")
+    grams.join(broadcast(ev), "gram")
       .filter(col("doc_id") =!= col("eval_id"))
       .groupBy(col("doc_id"), col("eval_id"))
       // distinct-count because the corpus side is NOT pre-deduped: a
@@ -952,54 +946,17 @@ object Curation {
       .orderBy(col("doc_id"))
   }
 
-  // Bloom parameters for q94: k hashes, and m bits SIZED FROM THE CORPUS
-  // — the next power of two >= BloomBitsPerKey × |index| (floor 2^14) —
-  // so fpp stays ≈ 3e-4 at any scale instead of degrading as the index
-  // outgrows a fixed sketch. The sketch stays KB-to-MB while the index
-  // it summarizes is GB-to-TB; that asymmetry is the whole point, and it
-  // holds while m fits a broadcast (~2^30 bits / ~10^7-row indexes per
-  // 28-bits-per-key). Beyond that ceiling the sharded variant
-  // (bloomWordsSharded/bloomHitSharded below) splits the key space into
-  // independently-sized shard arrays behind the same membership
-  // contract — PropertySpec pins its no-false-negative guarantee and
-  // bit-for-bit degenerate parity with this single sketch.
+  // Bloom parameters: k hashes, and m bits SIZED FROM THE KEYS — the
+  // next power of two >= BloomBitsPerKey × |keys| (floor 2^14), per
+  // shard — so fpp stays ≈ 3e-4 at any scale instead of degrading as the
+  // index outgrows a fixed sketch. The sketch stays KB-to-MB while the
+  // index it summarizes is GB-to-TB; that asymmetry is the whole point.
+  // One shard holds while m fits a broadcast (~2^30 bits / ~10^7-row
+  // indexes at 28 bits per key); past that, more shards split the key
+  // space into independently-sized arrays behind the same membership
+  // test (bloomWordsSharded/bloomHitSharded below).
   private val BloomBitsPerKey = 28
   private val BloomK = 4
-
-  /** The m-bit Bloom filter over a fingerprint column as ONE dense
-    * `array<bigint>` row, built distributively: m comes from a 1-row
-    * count aggregate broadcast back (q23's scalar shape — no driver
-    * action), each fp explodes to its k bit positions mod m, `bit_or`
-    * collapses per-word masks, and the final global aggregate densifies
-    * the sparse words into one ordered array. */
-  private[graft] def bloomWords(fps: DataFrame): DataFrame = {
-    // two passes over the index are inherent (m must precede hashing),
-    // but the caller's upstream pipeline must not run twice — materialize
-    // once here (a second checkpoint of an already-materialized index is
-    // a cheap copy, so pre-checkpointed callers lose nothing)
-    val mat = fps.staged
-    val mRow = mat.agg(
-      pow(lit(2.0), ceil(log2(greatest(
-        count(lit(1)) * BloomBitsPerKey, lit(16384L))))).cast("long").as("m"))
-    val posCols = (0 until BloomK).map(i =>
-      pmod(xxhash64(col("fp"), lit(i)), col("m")))
-    val wordRows = mat
-      .crossJoin(broadcast(mRow))
-      .select(explode(array(posCols: _*)).as("pos"))
-      .groupBy(expr("pos DIV 64").as("w"))
-      .agg(expr("bit_or(shiftleft(1L, CAST(pos % 64 AS INT)))").as("bits"))
-    // densify by exploding the full word range FROM THE m SCALAR (so the
-    // width never touches the driver) and sorting once — NOT by per-word
-    // map lookups: element_at on Spark's array-backed MapData is a linear
-    // scan, which made the old formulation O(W²) and measurably slow the
-    // moment the corpus sized W up
-    mRow
-      .select(explode(expr("sequence(0L, m DIV 64 - 1)")).as("w"))
-      .join(wordRows, Seq("w"), "left")
-      .select(col("w"), coalesce(col("bits"), lit(0L)).as("bits"))
-      .agg(expr("transform(array_sort(collect_list(struct(w, bits))), s -> s.bits)")
-        .as("bloom"))
-  }
 
   /** SQL for "all k bloom bits set for expression `e` against the
     * `bloom` array column" — pure column math (variable-distance shifts
@@ -1007,8 +964,9 @@ object Curation {
     * codegen with no UDF, and usable INSIDE a higher-order-function
     * lambda (the streaming span gate tests every span hash of a row this
     * way). m is recovered from the array length (64 bits per word), so
-    * build and test agree at every corpus size; the hashing must
-    * otherwise match [[bloomWords]]' build side exactly. */
+    * build and test agree at every corpus size and shard count; the
+    * hashing must otherwise match [[bloomWordsSharded]]' build side
+    * exactly. */
   private[graft] def bloomHitSql(e: String): String = {
     val m = "CAST(size(bloom) AS BIGINT) * 64"
     (0 until BloomK).map { i =>
@@ -1033,15 +991,15 @@ object Curation {
   private[graft] def bloomShardCol(nShards: Int): Column =
     bloomShardColOf(col("fp"), nShards)
 
-  /** The SHARDED Bloom sketch — [[bloomWords]] past the single-array
-    * broadcast ceiling (~2^30 bits / ~10^7 keys, documented above): the
-    * key space splits into `nShards` by an independent routing hash, each
-    * shard builds its own dense word array sized from ITS key count (the
-    * same power-of-two formula, so per-key fpp is unchanged), and the
-    * result is `nShards` rows of (shard, bloom). Build is exactly the
-    * single-sketch plan with a shard dimension added to every
-    * aggregation — still zero driver collects — and each shard's
-    * collect_list is bounded by its own width, which is what removes the
+  /** The m-bit Bloom filter over a fingerprint column, split into
+    * `nShards` by an independent routing hash: `nShards` rows of (shard,
+    * bloom), each `bloom` ONE dense `array<bigint>` sized from that
+    * shard's key count. Built distributively with no driver collect: the
+    * per-shard m comes from a count aggregate broadcast back, each fp
+    * explodes to its k bit positions mod m, `bit_or` collapses per-word
+    * masks, and a per-shard aggregate densifies the sparse words into
+    * one ordered array. One shard is the single-array sketch; more
+    * shards bound each collect_list by its own width, which removes the
     * single-aggregation ceiling. Membership ([[bloomHitSharded]]) routes
     * each probe to its owning shard; with KB-to-MB shards the shard
     * table broadcasts, and past broadcast entirely the same contract
@@ -1049,6 +1007,10 @@ object Curation {
     * (`broadcastShards = false`). */
   private[graft] def bloomWordsSharded(fps: DataFrame, nShards: Int): DataFrame = {
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
+    // two passes over the keys are inherent (m must precede hashing), but
+    // the caller's upstream pipeline must not run twice — materialize once
+    // here (a second checkpoint of an already-materialized index is a
+    // cheap copy, so pre-checkpointed callers lose nothing)
     val mat = fps.withColumn("shard", bloomShardCol(nShards)).staged
     // EVERY shard id gets a row — a shard no corpus key routed to still
     // emits its (floor-width, all-zero) sketch, so consumers joining on
@@ -1069,6 +1031,11 @@ object Curation {
       .select(col("shard"), explode(array(posCols: _*)).as("pos"))
       .groupBy(col("shard"), expr("pos DIV 64").as("w"))
       .agg(expr("bit_or(shiftleft(1L, CAST(pos % 64 AS INT)))").as("bits"))
+    // densify by exploding the full word range FROM THE m SCALAR (so the
+    // width never touches the driver) and sorting once — NOT by per-word
+    // map lookups: element_at on Spark's array-backed MapData is a linear
+    // scan, which made that formulation O(W²) and measurably slow the
+    // moment the corpus sized W up
     mRows
       .select(col("shard"), explode(expr("sequence(0L, m DIV 64 - 1)")).as("w"))
       .join(wordRows, Seq("shard", "w"), "left")
@@ -1078,9 +1045,8 @@ object Curation {
         .as("bloom"))
   }
 
-  /** Membership against a sharded sketch, behind the same contract as
-    * `crossJoin(broadcast(bloom)) + bloomHit`: route each probe row to
-    * its owning shard, join that shard's array in, and run the SAME
+  /** Membership against a [[bloomWordsSharded]] sketch: route each probe
+    * row to its owning shard, join that shard's array in, and run the
     * [[bloomHit]] bit test (m recovers from the shard's array length, so
     * per-shard sizing needs no side channel). Returns the rows the
     * sketch cannot rule out, `bloom`/routing columns dropped.
@@ -1113,18 +1079,18 @@ object Curation {
         .select(col("doc_id"), col("source"), col("fp")))
   }
 
-  /** The batch rows the corpus sketch cannot rule out. */
+  /** The batch rows the one-shard corpus sketch cannot rule out. */
   private def candidateSlice(batch: DataFrame, corpusFp: DataFrame): DataFrame =
-    batch.crossJoin(broadcast(bloomWords(corpusFp))).filter(bloomHit)
+    bloomHitSharded(batch, bloomWordsSharded(corpusFp, 1), 1)
 
   /** q94: Bloom-prefiltered incremental admit list — q79's daily-ingest
     * shape with the piece that makes it work at 100 TB: the corpus
-    * fingerprint index is summarized into a corpus-sized Bloom sketch
-    * ([[bloomWords]]) that ships to every executor as one array literal
-    * (KBs vs the index's GBs), the arriving batch tests membership with
-    * pure column math, and ONLY the docs the filter cannot rule out
-    * (true dups + ~fpp false positives) reach the exact semi-join
-    * against the index. Bloom negatives are definitive, so the admitted
+    * fingerprint index is summarized into a corpus-sized one-shard
+    * Bloom sketch ([[bloomWordsSharded]]) that ships to every executor
+    * as one array (KBs vs the index's GBs), the arriving batch tests
+    * membership with pure column math, and ONLY the docs the filter
+    * cannot rule out (true dups + ~fpp false positives) reach the exact
+    * semi-join against the index. Bloom negatives are definitive, so the admitted
     * output is EXACT — which is what keeps the operator oracle-checkable;
     * the sketch only decides how little of the batch the verify join has
     * to touch.
@@ -1180,15 +1146,15 @@ object Curation {
       .orderBy(col("doc_id"))
   }
 
-  /** q100: q94's admit list computed through the SHARDED sketch path
-    * ([[bloomWordsSharded]]/[[bloomHitSharded]], 4 shards at test scale
-    * so real multi-shard routing is exercised) — identical output by
-    * construction (any bloom only decides how little reaches the exact
-    * verify), and declared as its own query so the sharded machinery is
-    * held to the same DuckDB hash gate as the single-sketch path. */
+  /** q100: q94's admit list computed through a standing 4-shard sketch
+    * ([[bloomWordsSharded]]/[[bloomHitSharded]], so real multi-shard
+    * routing is exercised) — identical output by construction (any bloom
+    * only decides how little reaches the exact verify), and declared as
+    * its own query so multi-shard routing is held to the same DuckDB
+    * hash gate as q94's one-shard sketch. `broadcastJoins = false` (q105)
+    * runs the shard join and both verify joins shuffled. */
   def bloomIncrementSharded(spark: SparkSession, dir: String,
-                            broadcastShards: Boolean = true,
-                            broadcastDupVerify: Boolean = true): DataFrame = {
+                            broadcastJoins: Boolean = true): DataFrame = {
     val (corpusIdx, batch) = incrementSplit(spark, dir)
     // the sharded corpus sketch is a standing artifact (its own scaladoc:
     // "amortized across every batch of the day") serving both gate
@@ -1200,10 +1166,10 @@ object Curation {
     val shards = Materialize.shared("bloomShardIdx", corpusFp)(
       bloomWordsSharded(corpusFp, 4))
     val candidates =
-      bloomHitSharded(batch, shards, 4, broadcastShards)
+      bloomHitSharded(batch, shards, 4, broadcastJoins)
         .select(col("doc_id"), col("fp"))
         .staged // the same reorder barrier bloomIncrement documents
-    admitList(batch, corpusFp, candidates, broadcastDupVerify)
+    admitList(batch, corpusFp, candidates, broadcastJoins)
   }
 
   /** Span window width for the q95/q96/q98 family (tokens). 8 is small
@@ -1302,9 +1268,10 @@ object Curation {
     * about one document, so an arriving batch extends the corpus span
     * table by UNION — the whole corpus is never re-exploded (the q79
     * daily-ingest philosophy at span granularity). Occurrence counts are
-    * additive under union, so every downstream marker ([[dupHits]]'
-    * formulations, [[dupSpanIndex]]) is correct over the merged table by
-    * construction; CurationSpec pins merged == from-scratch. On a
+    * additive under union, so every downstream marker (the
+    * [[dupHitsTwoPhase]] family, [[dupSpanIndex]]) is correct over the
+    * merged table by construction; CurationSpec pins merged ==
+    * from-scratch. On a
     * parquet-staged table this is a partition append, not a rewrite.
     * The increment half is STAGED here in the helper (not at call
     * sites): the merged table feeds multiple consumers (markers, doc
@@ -1353,11 +1320,12 @@ object Curation {
   /** [[dupHitsTwoPhase]] past the broadcast ceiling — the q94 split
     * applied to spans, promoted from the regime note to code: the
     * ≥2-occurrence hash set is summarized into a corpus-sized Bloom
-    * sketch ([[bloomWords]] — KBs–MBs however large the dup set is),
-    * every span row tests the sketch in pure column math, and only the
-    * candidate sliver (true dup rows + ≈ 3e-4 false positives) pays the
-    * exact semi-join against the full dup set — which now SHUFFLES
-    * instead of broadcasting, but with a sliver-sized probe side.
+    * sketch (one-shard [[bloomWordsSharded]] — KBs–MBs however large the
+    * dup set is), every span row tests the sketch in pure column math,
+    * and only the candidate sliver (true dup rows + ≈ 3e-4 false
+    * positives) pays the exact semi-join against the full dup set —
+    * which now SHUFFLES instead of broadcasting, but with a sliver-sized
+    * probe side.
     * Output exactly equal to both other formulations (sketch negatives
     * are definitive; the exact join removes the false positives) —
     * CurationSpec pins three-way equality including the viral-span
@@ -1371,10 +1339,9 @@ object Curation {
       .filter(col("occ") >= 2)
       .select(col("h"))
       .staged // feeds the sketch build and the exact verify
-    val candidates = spans
-      .select(col("doc_id"), col("i"), col("h").as("fp"))
-      .crossJoin(broadcast(bloomWords(dup.select(col("h").as("fp")))))
-      .filter(bloomHit)
+    val candidates = bloomHitSharded(
+        spans.select(col("doc_id"), col("i"), col("h").as("fp")),
+        bloomWordsSharded(dup.select(col("h").as("fp")), 1), 1)
       .select(col("doc_id"), col("i"), col("fp").as("h"))
     candidates.join(dup, Seq("h"), "left_semi")
       .select(col("doc_id"), col("i"))
@@ -1650,8 +1617,8 @@ object Curation {
   }
 
   /** The corpus's duplicated-span index (distinct h with occ ≥ 2) — the
-    * static side the streaming span gate summarizes into a Bloom sketch
-    * ([[graft.streaming.StreamOps.corpusSpanBloom]]). */
+    * static side the streaming span gates index by shard
+    * ([[graft.streaming.StreamOps.corpusSpanIndex]]). */
   private[graft] def dupSpanIndex(spark: SparkSession, dir: String): DataFrame =
     dupSpanIndexFrom(spanRows(Tables.documents(spark, dir)))
 
@@ -1664,17 +1631,17 @@ object Curation {
       .filter(col("occ") >= 2)
       .select(col("h"))
 
-  /** The duplicated-span index SHARDED — [[dupSpanIndex]] past the
-    * one-row broadcast ceiling, the [[bloomWordsSharded]] pattern
-    * applied to the span gate's static side: each dup-span hash routes
-    * to its owning shard by an independent hash, and every shard row
-    * carries its own Bloom sketch AND its own exact sorted hash array.
-    * Per-shard collect_list bounds each exact array by the shard's
-    * share of the index (removing the single-aggregation/single-value
-    * ceiling the one-row index has), and EVERY shard id emits a row —
-    * an unpopulated shard gets the floor-width zero sketch and an empty
-    * array, so gate joins on the shard id never drop a probe (the q100
-    * empty-shard lesson, pinned in CurationSpec). */
+  /** The duplicated-span index ([[dupSpanIndex]]) by shard, the
+    * [[bloomWordsSharded]] pattern applied to the span gate's static
+    * side: each dup-span hash routes to its owning shard by an
+    * independent hash, and every shard row carries its own Bloom sketch
+    * AND its own exact sorted hash array. One shard is the one-row index
+    * the per-row streaming gate broadcasts; more shards bound each
+    * collect_list by the shard's share of the index (removing the
+    * single-aggregation/single-value ceiling), and EVERY shard id emits
+    * a row — an unpopulated shard gets the floor-width zero sketch and an
+    * empty array, so gate joins on the shard id never drop a probe (the
+    * q100 empty-shard lesson, pinned in CurationSpec). */
   private[graft] def spanIndexSharded(idx: DataFrame, nShards: Int): DataFrame = {
     val fps = idx.select(col("h").as("fp"))
     val arrays = fps
@@ -1728,17 +1695,15 @@ object Curation {
     * hash, flag (bloom short-circuit, then binary-search the shard's
     * exact array via `sorted_array_contains`), and densify back to the
     * per-doc flag array via explode + join + sort — no per-row copy of
-    * the full index; shard rows broadcast while they fit and, past
-    * that, `broadcastIndex = false` runs the identical equi-join as a
-    * shuffle join on the shard id. Requires a unique `doc_id` column: the
-    * verdict computes on a (doc_id, n, span) SLIVER and joins back by
-    * doc_id, so text and other payload columns never enter the explode
-    * or regroup shuffles — the only full-width movement is the final
+    * the full index; shard rows broadcast (the span-table formulation,
+    * [[spanGateShardedFrom]], also runs the join shuffled). Requires a
+    * unique `doc_id` column: the verdict computes on a (doc_id, n, span)
+    * SLIVER and joins back by doc_id, so text and other payload columns
+    * never enter the explode or regroup shuffles — the only full-width movement is the final
     * doc-aligned join, and even that prunes away when the caller selects
     * only verdict columns (as q101 does). Output is EXACT q95 semantics
     * (the sketch only short-circuits; flagged spans verify exactly). */
-  def spanGateSharded(docs: DataFrame, shardIdx: DataFrame, nShards: Int,
-                      broadcastIndex: Boolean = true): DataFrame = {
+  def spanGateSharded(docs: DataFrame, shardIdx: DataFrame, nShards: Int): DataFrame = {
     val slim = docs
       .withColumn("toks", toks)
       .withColumn("n", size(col("toks")).cast("long"))
@@ -1751,11 +1716,7 @@ object Curation {
       .selectExpr("doc_id", "n", "posexplode_outer(span_hashes) AS (i, sh)")
       .withColumn("shard",
         when(col("sh").isNotNull, bloomShardColOf(col("sh"), nShards)))
-      // past-broadcast: shuffle_hash with the index as build side (see
-      // bloomHitSharded — an un-hinted small-stats plan re-broadcasts)
-      .join(if (broadcastIndex) broadcast(shardIdx)
-            else shardIdx.hint("shuffle_hash"),
-        Seq("shard"), "left")
+      .join(broadcast(shardIdx), Seq("shard"), "left")
       .withColumn("flag",
         expr(s"(${bloomHitSql("sh")}) AND sorted_array_contains(span_idx, sh)"))
     val verdict = spanVerdict(flagged
@@ -1829,15 +1790,16 @@ object Curation {
   def spanDedupShardedGateShuffled(spark: SparkSession, dir: String): DataFrame =
     spanDedupShardedGate(spark, dir, broadcastIndex = false)
 
-  /** q105: q100's sharded bloom admit list in the PAST-BROADCAST regime —
-    * BOTH broadcast hints off (`broadcastShards = false`: the shard
-    * sketch join shuffles on the shard id; `broadcastDupVerify = false`:
-    * the dup-heavy-batch fallback lets the optimizer plan the verify
-    * anti-join). Same oracle as q94/q100 by construction — any bloom
-    * regime only decides how little reaches the exact verify. */
+  /** q105: q100's sharded bloom admit list in the PAST-BROADCAST regime
+    * (`broadcastJoins = false`): the shard sketch join shuffles on the
+    * shard id ([[bloomHitSharded]]'s `broadcastShards = false`) and the
+    * exact verify takes the dup-heavy-batch fallback, sort-merge joins
+    * for both the dup list and the corpus index ([[admitList]]'s
+    * `broadcastDupVerify = false`). Same oracle as q94/q100 by
+    * construction — any bloom regime only decides how little reaches the
+    * exact verify. */
   def bloomIncrementShardedShuffled(spark: SparkSession, dir: String): DataFrame =
-    bloomIncrementSharded(spark, dir,
-      broadcastShards = false, broadcastDupVerify = false)
+    bloomIncrementSharded(spark, dir, broadcastJoins = false)
 
   /** The bloom candidate set (spec hook): every true corpus dup must hit,
     * and the overshoot beyond true dups is the measured false-positive
@@ -1975,12 +1937,9 @@ object Curation {
     spark.read.parquet(sink)
   }
 
-  /** [[nearDupClusters]] over an existing pair table ([[pairTable]]).
-    * `coalesceEdges = false` is the huge-dup-graph regime (see
-    * [[componentLabels]]). */
-  def nearDupClustersFrom(pairs: DataFrame,
-                          coalesceEdges: Boolean = true): DataFrame =
-    componentLabels(pairs, coalesceEdges)
+  /** [[nearDupClusters]] over an existing pair table ([[pairTable]]). */
+  def nearDupClustersFrom(pairs: DataFrame): DataFrame =
+    componentLabels(pairs)
       .groupBy(col("label").as("cluster_rep"))
       .agg(
         count(lit(1)).as("size"),
@@ -1992,27 +1951,23 @@ object Curation {
   /** Min-label propagation to fixpoint over the LSH-verified pair graph:
     * (id, label) where label = min doc_id reachable — the shared
     * component core behind q80 (cluster report) and q82 (rep selection). */
-  private[graft] def componentLabels(pairTable: DataFrame,
-                                     coalesceEdges: Boolean = true): DataFrame = {
+  private[graft] def componentLabels(pairTable: DataFrame): DataFrame = {
     val pairs = pairTable.select(col("d1"), col("d2"))
     // The dup graph ≈ duplicate count — orders of magnitude smaller than
     // the corpus — so after the one expensive LSH pass it collapses to a
     // handful of partitions; every fixpoint iteration then runs single-task
     // joins instead of 32-way shuffles of a 25-row table (measured: the
     // uncoalesced loop spent ~10× its runtime on empty-task scheduling).
-    // `coalesceEdges = false` is the huge-dup-graph regime AS CODE: the
-    // coalesce is dropped and AQE sizes the iteration shuffles instead —
-    // identical fixpoint, pinned in CurationSpec.
     // Checkpoint FIRST, then coalesce: coalesce(1) before the checkpoint
     // would pull the whole upstream LSH verify scan into a single task
     // (the verify join broadcasts the candidate side, so there is no
     // shuffle boundary to stop the collapse from propagating). This way
     // materialization runs fully parallel and only the per-iteration
     // reads of the tiny edge table are 1-partition.
-    val edges0 = pairs.select(col("d1").as("src"), col("d2").as("dst"))
+    val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
       .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
       .localCheckpoint() // cut the LSH lineage; re-read each iteration
-    val edges = if (coalesceEdges) edges0.coalesce(1) else edges0
+      .coalesce(1)
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
       .localCheckpoint()
@@ -2056,12 +2011,9 @@ object Curation {
   def clusterReps(spark: SparkSession, dir: String): DataFrame =
     clusterRepsFrom(Dedup.lshNearDup(spark, dir), Tables.documents(spark, dir))
 
-  /** [[clusterReps]] over an existing pair table ([[pairTable]]).
-    * `coalesceEdges = false` is the huge-dup-graph regime (see
-    * [[componentLabels]]). */
-  def clusterRepsFrom(pairs: DataFrame, documents: DataFrame,
-                      coalesceEdges: Boolean = true): DataFrame = {
-    val labels = componentLabels(pairs, coalesceEdges)
+  /** [[clusterReps]] over an existing pair table ([[pairTable]]). */
+  def clusterRepsFrom(pairs: DataFrame, documents: DataFrame): DataFrame = {
+    val labels = componentLabels(pairs)
     val docs = documents
       .select(col("doc_id"), col("n_chars"), col("source"))
     val w = Window.partitionBy(col("label"))

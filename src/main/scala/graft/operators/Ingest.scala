@@ -32,26 +32,20 @@ object Ingest {
       bucket: String = "bucket.example",
       prefix: String = "forecasts")
 
-  /** R2 request planning: one row per (collection, parameter) request with
-    * the EDR cube URL — the fan-out the reference does sequentially
-    * (ingestor.py:157) becomes a DataFrame a parallel fetcher maps over.
-    * CRS switches on the harmonie prefix (ingestor.py:170-173). */
-  def requestPlan(spark: SparkSession, cfg: IngestConfig): DataFrame = {
-    import spark.implicits._
+  /** R2 request planning: one (parameter, EDR cube URL) request per
+    * parameter, the plan [[Fetch.fetchAndIngest]] fetches — the fan-out
+    * the reference does sequentially (ingestor.py:157). CRS switches on
+    * the harmonie prefix (ingestor.py:170-173). */
+  def requestPlan(cfg: IngestConfig): Seq[(String, String)] = {
+    val crs = if (cfg.collection.startsWith("harmonie")) "native" else "crs84"
+    // full precision, like the reference's verbatim BBOX env string
+    // (ingestor.py:146): rendering at fixed 1 dp would request a
+    // DIFFERENT box than cubeToLong later filters on, silently dropping
+    // the edge cells between the two
     val (x0, y0, x1, y1) = cfg.bbox
-    cfg.parameters.toDF("parameter")
-      .withColumn("collection", lit(cfg.collection))
-      .withColumn("crs",
-        when(col("collection").startsWith("harmonie"), lit("native"))
-          .otherwise(lit("crs84")))
-      .withColumn("url", format_string(
-        "https://dmigw.govcloud.dk/v1/forecastedr/collections/%s/cube?crs=%s&parameter-name=%s&bbox=%s&f=NetCDF",
-        col("collection"), col("crs"), col("parameter"),
-        // full precision, like the reference's verbatim BBOX env string
-        // (ingestor.py:146): rendering at fixed 1 dp would request a
-        // DIFFERENT box than cubeToLong later filters on, silently
-        // dropping the edge cells between the two
-        lit(s"$x0,$y0,$x1,$y1")))
+    cfg.parameters.map(p => p ->
+      (s"https://dmigw.govcloud.dk/v1/forecastedr/collections/${cfg.collection}/cube" +
+        s"?crs=$crs&parameter-name=$p&bbox=$x0,$y0,$x1,$y1&f=NetCDF"))
   }
 
   /** Decode boundary: a staged long-format cube (collection, parameter,

@@ -384,53 +384,34 @@ object StreamOps {
       .join(broadcast(bandIndex), Seq("band", "band_sig"), "left_semi")
   }
 
-  /** The corpus fingerprint Bloom sketch as a one-row frame for
-    * stream-static use — one batch pass over the corpus's distinct
-    * fingerprints ([[graft.operators.Curation.bloomWords]]), refreshed
-    * like [[corpusBandIndex]]. */
-  def corpusBloom(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Curation.bloomWords(
-      Tables.documents(spark, dir).select(Dedup.textFp.as("fp")).distinct())
-
-  /** [[corpusBloom]] sharded — for [[bloomGateStreamSharded]] when the
-    * corpus index outgrows the single-array sketch. */
-  def corpusBloomSharded(spark: SparkSession, dir: String, nShards: Int): DataFrame =
+  /** The corpus fingerprint Bloom sketch as `nShards` (shard, bloom)
+    * rows for stream-static use — one batch pass over the corpus's
+    * distinct fingerprints
+    * ([[graft.operators.Curation.bloomWordsSharded]]), refreshed like
+    * [[corpusBandIndex]]. One shard is one array; more shards lift the
+    * single-array ceiling when the corpus index outgrows it. */
+  def corpusBloom(spark: SparkSession, dir: String, nShards: Int): DataFrame =
     graft.operators.Curation.bloomWordsSharded(
       Tables.documents(spark, dir).select(Dedup.textFp.as("fp")).distinct(), nShards)
 
   /** Streaming exact-dup screening against the CORPUS — the stream-side
     * half of q94's lambda split (dedupStream handles the stream's OWN
     * horizon; this asks "have we ever ingested this document before?").
-    * Each in-flight document tests its fingerprint against the broadcast
-    * corpus-sized sketch (KBs–MBs, ~28 bits per indexed fingerprint) in
-    * pure column math: STATELESS, no shuffle, no
-    * state store, which is what lets it run inline on a 100 TB/day
-    * stream where the real corpus index could never be joined per
-    * microbatch. `maybe_dup = false` is DEFINITIVE (bloom negatives
-    * never lie) — those docs are admitted immediately; `true` rows are
-    * candidates the batch layer verifies exactly, same split as
-    * [[nearDupCandidatesStream]]. */
-  def bloomGateStream(docs: DataFrame, bloom: DataFrame): DataFrame =
-    docs
-      .withColumn("fp", Dedup.textFp)
-      .crossJoin(broadcast(bloom))
-      .withColumn("maybe_dup", graft.operators.Curation.bloomHit)
-      .drop("bloom")
-
-  /** [[bloomGateStream]] past the single-array ceiling: the corpus
-    * sketch arrives SHARDED ([[graft.operators.Curation.bloomWordsSharded]])
-    * and each in-flight document joins exactly its owning shard's array
-    * via a stream-static broadcast join on the routing hash — still
-    * stateless, still one KB–MB array per row, but the total sketch is
-    * no longer bounded by one value's size. Same contract: `maybe_dup =
-    * false` is definitive, `true` rows go to the batch verify. */
-  def bloomGateStreamSharded(docs: DataFrame, shards: DataFrame,
-                             nShards: Int,
-                             broadcastShards: Boolean = true): DataFrame =
+    * Each in-flight document joins its owning shard's corpus-sized sketch
+    * ([[corpusBloom]] built with the same `nShards`; KBs–MBs, ~28 bits
+    * per indexed fingerprint) by a stream-static broadcast join on the
+    * routing hash and tests its fingerprint in pure column math:
+    * STATELESS, no shuffle, no state store, which is what lets it run
+    * inline on a 100 TB/day stream where the real corpus index could
+    * never be joined per microbatch. `maybe_dup = false` is DEFINITIVE
+    * (bloom negatives never lie) — those docs are admitted immediately;
+    * `true` rows are candidates the batch layer verifies exactly, same
+    * split as [[nearDupCandidatesStream]]. */
+  def bloomGateStream(docs: DataFrame, shards: DataFrame, nShards: Int): DataFrame =
     docs
       .withColumn("fp", Dedup.textFp)
       .withColumn("shard", graft.operators.Curation.bloomShardCol(nShards))
-      .join(if (broadcastShards) broadcast(shards) else shards, Seq("shard"))
+      .join(broadcast(shards), Seq("shard"))
       .withColumn("maybe_dup", graft.operators.Curation.bloomHit)
       .drop("shard", "bloom")
 
@@ -494,33 +475,31 @@ object StreamOps {
         col("rc.cell").as("cell"), col("rc.pcos").as("pcos"))
   }
 
-  /** The corpus's duplicated-span index as ONE broadcastable row: its
-    * Bloom sketch (`bloom`) plus the exact sorted hash array
-    * (`span_idx`) — the static side of [[spanGateStream]], refreshed by a
-    * batch job like [[corpusBandIndex]]/[[corpusBloom]]. Indexing the
-    * ≥2-occurrence spans (not all spans) keeps the gate's semantics
-    * aligned with batch q95: a corpus document replayed through the gate
+  /** The corpus's duplicated-span index as `nShards` (shard, bloom,
+    * span_idx) rows ([[graft.operators.Curation.spanIndexSharded]]): each
+    * shard's Bloom sketch plus its exact sorted hash array, refreshed by
+    * a batch job like [[corpusBandIndex]]/[[corpusBloom]]. Indexing the
+    * ≥2-occurrence spans (not all spans) keeps the gates' semantics
+    * aligned with batch q95: a corpus document replayed through a gate
     * reports exactly its batch keep_ratio (its own occ-1 spans don't
-    * self-flag). Regime: the dup-span index must fit a broadcast (the
-    * same bound as the two-phase marker's broadcast set); beyond that,
-    * [[corpusSpanIndexSharded]] + [[spanGateStreamSharded]] route each
-    * span to its owning shard's (bloom, sorted array) row — same exact
-    * semantics, no one-row ceiling. */
-  def corpusSpanIndex(spark: SparkSession, dir: String): DataFrame = {
-    val idx = graft.operators.Curation.dupSpanIndex(spark, dir)
-    graft.operators.Curation.bloomWords(idx.select(col("h").as("fp")))
-      .crossJoin(idx.agg(sort_array(collect_list(col("h"))).as("span_idx")))
-  }
+    * self-flag). [[spanGateStream]] broadcasts the whole index into every
+    * row, so it takes `nShards = 1` and the dup-span index must fit a
+    * broadcast (the same bound as the two-phase marker's broadcast set);
+    * beyond that, [[spanGateStreamSharded]] routes each span to its
+    * owning shard's row — same exact semantics, no one-row ceiling. */
+  def corpusSpanIndex(spark: SparkSession, dir: String, nShards: Int): DataFrame =
+    graft.operators.Curation.spanIndexSharded(
+      graft.operators.Curation.dupSpanIndex(spark, dir), nShards)
 
   /** Streaming span-contamination gate — the stream-side q95
     * (spanDedup): each in-flight document fingerprints its sliding
     * [[graft.operators.Curation.SpanW]]-token spans with the SAME shared
     * definition the batch family uses, tests every span hash against the
-    * broadcast duplicated-span index in pure column math (inside a
-    * `transform` lambda — no UDF, no shuffle, no state store), and
-    * reports the batch q95 row: n_dup_spans, n_covered, keep_ratio. A
-    * deployment drops rows under a keep_ratio threshold at ingest rate
-    * and routes the rest on.
+    * broadcast one-shard duplicated-span index ([[corpusSpanIndex]] with
+    * `nShards = 1`) in pure column math (inside a `transform` lambda —
+    * no UDF, no shuffle, no state store), and reports the batch q95
+    * row: n_dup_spans, n_covered, keep_ratio. A deployment drops rows
+    * under a keep_ratio threshold at ingest rate and routes the rest on.
     *
     * The membership test is q94's bloom-then-verify split applied PER
     * ROW: the sketch test runs first and `AND` short-circuits, so the
@@ -548,20 +527,11 @@ object StreamOps {
       .withColumn("dup_flags",
         expr("transform(span_hashes, sh -> " +
           s"(${bloomHitSql("sh")}) AND sorted_array_contains(span_idx, sh))"))
-      .drop("toks", "tokh", "bloom", "span_idx", "span_hashes"))
+      .drop("toks", "tokh", "shard", "bloom", "span_idx", "span_hashes"))
   }
 
-  /** [[corpusSpanIndex]] SHARDED — the static side of
-    * [[spanGateStreamSharded]] when the dup-span index outgrows one
-    * broadcastable row ([[graft.operators.Curation.spanIndexSharded]]):
-    * one row per shard, each with its own Bloom sketch and exact sorted
-    * array, every shard id present even when unpopulated. */
-  def corpusSpanIndexSharded(spark: SparkSession, dir: String, nShards: Int): DataFrame =
-    graft.operators.Curation.spanIndexSharded(
-      graft.operators.Curation.dupSpanIndex(spark, dir), nShards)
-
-  /** [[spanGateStream]] past the one-row index ceiling: runs the
-    * SHARDED batch core
+  /** [[spanGateStream]] past the one-row index ceiling: against a
+    * [[corpusSpanIndex]] of `nShards` rows, runs the SHARDED batch core
     * ([[graft.operators.Curation.spanGateSharded]]) on each microbatch
     * via foreachBatch. A per-row formulation can't shard — one document's
     * spans route to MANY shards, so attaching every shard's arrays to

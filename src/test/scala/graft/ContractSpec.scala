@@ -146,4 +146,30 @@ class ContractSpec extends SparkSpec {
     assert(routed.sorted == Seq("Curation.scala", "Ingest.scala", "Materialize.scala",
       "StreamOps.scala", "Verify.scala"), s"files writing through LocalFs: $routed")
   }
+
+  test("every scaladoc [[link]] under src/main/scala names a definition under src/main/scala") {
+    // a link to a deleted or renamed member still compiles; this walk is
+    // what notices it
+    val defined = mainSources.flatMap { case (_, src) =>
+      """\b(?:def|val|class|object|trait|type)\s+(\w+)""".r.findAllMatchIn(src).map(_.group(1))
+    }.toSet
+    val links = mainSources.flatMap { case (p, src) =>
+      """\[\[([^\]]+)\]\]""".r.findAllMatchIn(src).map(m => p.getFileName.toString -> m.group(1)) }
+    assert(links.size > 100, s"the walk found only ${links.size} links")
+    val dangling = links.filterNot { case (_, l) => defined(l.split('.').last) }
+    assert(dangling.isEmpty, s"links to no definition: $dangling")
+  }
+
+  test("the Bloom word build is written once and the deleted regime options stay gone") {
+    // one builder serves every sketch (one shard is the single array), and
+    // no query runs decontamination shuffled or component labels uncoalesced
+    val builds = mainSources.flatMap { case (p, src) =>
+      Seq.fill(scala.util.matching.Regex.quote("bit_or(shiftleft(").r.findAllMatchIn(src).size)(
+        p.getFileName.toString) }
+    assert(builds == Seq("Curation.scala"), s"Bloom word builds in: $builds")
+    for (gone <- Seq("bloomWords(", "broadcastEval", "coalesceEdges")) {
+      val still = mainSources.collect { case (p, src) if src.contains(gone) => p }
+      assert(still.isEmpty, s"$gone still appears in: $still")
+    }
+  }
 }

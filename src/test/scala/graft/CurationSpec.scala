@@ -226,13 +226,12 @@ class CurationSpec extends SparkSpec {
     // pre-first-ingest deployment: no index yet → all-zero floor-sized
     // sketch → zero candidates → the whole batch is admitted novel
     import spark.implicits._
-    val bloom = Curation.bloomWords(Seq.empty[String].toDF("fp"))
-    val arr = bloom.head().getSeq[Long](0)
+    val bloom = Curation.bloomWordsSharded(Seq.empty[String].toDF("fp"), 1)
+    val arr = bloom.head().getSeq[Long](1)
     assert(arr.length == 16384 / 64 && arr.forall(_ == 0L),
       s"expected the all-zero floor sketch, got len=${arr.length}")
     val batch = Seq("a", "b", "c").toDF("fp")
-    assert(batch.crossJoin(broadcast(bloom))
-      .filter(Curation.bloomHit).count() == 0L)
+    assert(Curation.bloomHitSharded(batch, bloom, 1).count() == 0L)
   }
 
   test("sharded sketch with empty shards: every shard emits a row, no probe is dropped") {
@@ -340,40 +339,23 @@ class CurationSpec extends SparkSpec {
       "shuffle-join span gate diverged from the broadcast path")
   }
 
-  test("decontaminate fallback regime: shuffle-on-gram matches the broadcast path") {
+  test("decontaminateFrom over the every-97th eval slice matches the declared q73") {
     val docs = Tables.documents(spark, sfDir)
     val ev = docs.filter(col("doc_id") % 97 === 0)
     val declared = Curation.decontaminate(spark, sfDir).collect().map(_.toSeq).toSeq
     val base = Curation.decontaminateFrom(docs, ev).collect().map(_.toSeq).toSeq
     assert(base == declared, "From variant diverged from the declared query")
-    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val shuffled = Curation.decontaminateFrom(docs, ev, broadcastEval = false)
-      assert(shuffled.collect().map(_.toSeq).toSeq == base,
-        "shuffle-on-gram regime diverged from the broadcast path")
-      val p = shuffled.queryExecution.executedPlan.toString
-      assert("SortMergeJoin \\[gram#\\d+\\], \\[gram#\\d+\\], Inner"
-        .r.findFirstIn(p).nonEmpty, p.take(400))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
   }
 
-  test("component labels: uncoalesced (AQE) regime reaches the same fixpoint") {
+  test("component labels: a chain and a disjoint pair reach the min-label fixpoint") {
     import spark.implicits._
     // a 4-node chain (merges across iterations) plus a disjoint pair
     val pairs = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("d1", "d2")
-    def labelsOf(c: Boolean) = Curation.componentLabels(pairs, coalesceEdges = c)
+    val labels = Curation.componentLabels(pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    assert(labelsOf(true) == labelsOf(false))
-    assert(labelsOf(false).forall { case (id, l) =>
+    assert(labels.map(_._1) == Seq(1L, 2L, 3L, 4L, 10L, 11L))
+    assert(labels.forall { case (id, l) =>
       if (id <= 4L) l == 1L else l == 10L })
-    // and end-to-end over the real LSH pair table
-    val real = Dedup.lshNearDup(spark, sfDir)
-    assert(
-      Curation.nearDupClustersFrom(real, coalesceEdges = false)
-        .collect().map(_.toSeq).toSeq ==
-      Curation.nearDupClustersFrom(real).collect().map(_.toSeq).toSeq,
-      "uncoalesced cluster report diverged")
   }
 
   test("cms census: estimates never undercount and are near-exact at this load") {

@@ -374,7 +374,7 @@ class StreamingSpec extends SparkSpec {
     // short-circuits; flagged spans verify against the exact array, so
     // sketch false positives cannot leak into the output (the first cut
     // of this test, sketch-only, diverged on exactly 5 docs = the fpp)
-    val bloom = StreamOps.corpusSpanIndex(spark, sfDir)
+    val bloom = StreamOps.corpusSpanIndex(spark, sfDir, 1)
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text")).collect()
       .map(r => Doc(r.getLong(0), ts(1), r.getString(1)))
@@ -416,7 +416,7 @@ class StreamingSpec extends SparkSpec {
     // all four curation stages compose into ONE streaming plan: three
     // stateless stages (gate, span gate, decontaminate) + the single
     // watermark-bounded dedup state store
-    val spanIdx = StreamOps.corpusSpanIndex(spark, sfDir)
+    val spanIdx = StreamOps.corpusSpanIndex(spark, sfDir, 1)
     val funnel = StreamOps.dedupStream(
       StreamOps.decontaminateStream(
         StreamOps.spanGateStream(
@@ -472,12 +472,12 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.streaming.StreamOps.Doc
-    val bloom = StreamOps.corpusBloom(spark, sfDir)
+    val bloom = StreamOps.corpusBloom(spark, sfDir, 1)
     val corpusText = graft.sources.Tables.documents(spark, sfDir)
       .filter(org.apache.spark.sql.functions.col("doc_id") === 0)
       .select("text").collect()(0).getString(0)
     val input = MemoryStream[Doc]
-    val q = StreamOps.bloomGateStream(input.toDF(), bloom)
+    val q = StreamOps.bloomGateStream(input.toDF(), bloom, 1)
       .writeStream.format("memory").queryName("bloom_gate_out")
       .outputMode(OutputMode.Append).start()
     try {
@@ -498,12 +498,12 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.streaming.StreamOps.Doc
-    val shards = StreamOps.corpusBloomSharded(spark, sfDir, 4)
+    val shards = StreamOps.corpusBloom(spark, sfDir, 4)
     val corpusText = graft.sources.Tables.documents(spark, sfDir)
       .filter(org.apache.spark.sql.functions.col("doc_id") === 1)
       .select("text").collect()(0).getString(0)
     val input = MemoryStream[Doc]
-    val q = StreamOps.bloomGateStreamSharded(input.toDF(), shards, 4)
+    val q = StreamOps.bloomGateStream(input.toDF(), shards, 4)
       .writeStream.format("memory").queryName("bloom_gate_sharded_out")
       .outputMode(OutputMode.Append).start()
     try {
@@ -548,7 +548,7 @@ class StreamingSpec extends SparkSpec {
     assert(novelShards.exists(!populated(_)),
       "scenario vacuous: no probe routed to an empty shard")
     val input = MemoryStream[Doc]
-    val q = StreamOps.bloomGateStreamSharded(input.toDF(), shards, nShards)
+    val q = StreamOps.bloomGateStream(input.toDF(), shards, nShards)
       .writeStream.format("memory").queryName("bloom_gate_empty_shard_out")
       .outputMode(OutputMode.Append).start()
     try {
@@ -576,7 +576,7 @@ class StreamingSpec extends SparkSpec {
     // core) against its own sharded dup-span index: per-doc verdicts
     // must match batch spanDedup EXACTLY, across two microbatches, with
     // zero cross-batch state
-    val idx = StreamOps.corpusSpanIndexSharded(spark, sfDir, 4)
+    val idx = StreamOps.corpusSpanIndex(spark, sfDir, 4)
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text")).collect()
       .map(r => Doc(r.getLong(0), ts(1), r.getString(1)))
