@@ -31,8 +31,8 @@ object Analytic {
         // floor-truncation, not round: both engines derive the identical
         // (rank-1)/(n-1) double, and floor of identical doubles always
         // agrees (OPERATORS.md determinism rules)
-        (floor(percent_rank().over(w) * 1e6) / 1e6).as("pct_rank"),
-        (floor(cume_dist().over(w) * 1e6) / 1e6).as("cume"),
+        MoneySum.trunc6(percent_rank().over(w)).as("pct_rank"),
+        MoneySum.trunc6(cume_dist().over(w)).as("cume"),
         first(col("o_orderkey")).over(wAll).as("cheapest_order"),
         last(col("o_orderkey")).over(wAll).as("priciest_order"))
       .orderBy(col("o_custkey"), col("o_orderkey"))

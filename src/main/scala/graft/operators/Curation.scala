@@ -135,7 +135,7 @@ object Curation {
       col("w_ttr") * col("ttr") +
       col("w_top") * col("top_ratio") +
       col("w_len") * abs(col("mean_tok_len") - 5.0)
-    floor(lit(1.0) / (lit(1.0) + exp(-z)) * 1e6) / 1e6
+    trunc6(lit(1.0) / (lit(1.0) + exp(-z)))
   }
 
   /** [[qualityScorer]] over an explicit feature table ([[qualityGateFrom]]'s
@@ -429,9 +429,9 @@ object Curation {
       .agg(count(lit(1)).as("n_feats"), longSum9(col("llr")).as("s"))
       .select(col("doc_id"), col("n_feats"),
         (col("s").cast("double") / 1e9).as("lw"))
-      .withColumn("sel_key", floor((col("lw") - log(-log(u))) * 1e6) / 1e6)
+      .withColumn("sel_key", trunc6(col("lw") - log(-log(u))))
       .select(col("doc_id"), col("n_feats"),
-        (floor(col("lw") * 1e6) / 1e6).as("log_w"), col("sel_key"))
+        trunc6(col("lw")).as("log_w"), col("sel_key"))
       .orderBy(col("sel_key").desc, col("doc_id"))
       .limit(k)
   }
@@ -706,7 +706,7 @@ object Curation {
       .select(
         col("doc_id"), col("n_tokens"),
         trunc6(col("nll_sum").cast("double") / 1e9 / col("n_tokens")).as("mean_nll"),
-        trunc6(exp(floor(col("nll_sum").cast("double") / 1e9 / col("n_tokens") * 1e6) / 1e6))
+        trunc6(exp(trunc6(col("nll_sum").cast("double") / 1e9 / col("n_tokens"))))
           .as("perplexity"))
       .orderBy(col("doc_id"))
   }
@@ -771,7 +771,7 @@ object Curation {
       .agg(count(lit(1)).as("n_bigrams"), longSum9(col("nll")).as("s"))
       .select(col("doc_id"), col("n_bigrams"),
         trunc6(col("s").cast("double") / 1e9 / col("n_bigrams")).as("mean_nll"),
-        trunc6(exp(floor(col("s").cast("double") / 1e9 / col("n_bigrams") * 1e6) / 1e6))
+        trunc6(exp(trunc6(col("s").cast("double") / 1e9 / col("n_bigrams"))))
           .as("perplexity"))
       .orderBy(col("doc_id"))
   }
@@ -955,8 +955,8 @@ object Curation {
   // indexes at 28 bits per key); past that, more shards split the key
   // space into independently-sized arrays behind the same membership
   // test (bloomWordsSharded/bloomHitSharded below).
-  private val BloomBitsPerKey = 28
-  private val BloomK = 4
+  private[graft] val BloomBitsPerKey = 28
+  private[graft] val BloomK = 4
 
   /** SQL for "all k bloom bits set for expression `e` against the
     * `bloom` array column" — pure column math (variable-distance shifts
@@ -997,14 +997,14 @@ object Curation {
     * shard's key count. Built distributively with no driver collect: the
     * per-shard m comes from a count aggregate broadcast back, each fp
     * explodes to its k bit positions mod m, `bit_or` collapses per-word
-    * masks, and a per-shard aggregate densifies the sparse words into
-    * one ordered array. One shard is the single-array sketch; more
-    * shards bound each collect_list by its own width, which removes the
-    * single-aggregation ceiling. Membership ([[bloomHitSharded]]) routes
-    * each probe to its owning shard; with KB-to-MB shards the shard
-    * table broadcasts, and past broadcast entirely the same contract
-    * runs as a shuffle join on the shard id
-    * (`broadcastShards = false`). */
+    * masks together with one zero word per word of the shard's range, and
+    * a per-shard aggregate orders the now dense words into one array.
+    * One shard is the single-array sketch; more shards bound each
+    * collect_list by its own width, which removes the single-aggregation
+    * ceiling. Membership ([[bloomHitSharded]]) routes each probe to its
+    * owning shard; with KB-to-MB shards the shard table broadcasts, and
+    * past broadcast entirely the same contract runs as a shuffle join on
+    * the shard id (`broadcastShards = false`). */
   private[graft] def bloomWordsSharded(fps: DataFrame, nShards: Int): DataFrame = {
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
     // two passes over the keys are inherent (m must precede hashing), but
@@ -1026,20 +1026,23 @@ object Curation {
           .cast("long").as("m"))
     val posCols = (0 until BloomK).map(i =>
       pmod(xxhash64(col("fp"), lit(i)), col("m")))
-    val wordRows = mat
-      .join(broadcast(mRows), Seq("shard"))
-      .select(col("shard"), explode(array(posCols: _*)).as("pos"))
+    // each key's k positions set their bit (hit = 1); one hit = 0 row at
+    // the first position of every word in the shard's range, exploded
+    // FROM THE m SCALAR (so the width never touches the driver), gives
+    // every word a row with no densifying join; one sort per shard then
+    // orders the words — NOT per-word map lookups: element_at on Spark's
+    // array-backed MapData is a linear scan, which made that formulation
+    // O(W²) and measurably slow the moment the corpus sized W up. The
+    // sketch keeps the schema its shared artifacts are written with:
+    // mRows' shard (non-null, unlike pmod's) keys the join, and bit_or,
+    // typed nullable though no group is empty, is coalesced
+    broadcast(mRows)
+      .join(mat, Seq("shard"))
+      .select(col("shard"), explode(array(posCols: _*)).as("pos"), lit(1L).as("hit"))
+      .union(mRows.select(col("shard"),
+        explode(expr("sequence(0L, m - 64, 64L)")).as("pos"), lit(0L).as("hit")))
       .groupBy(col("shard"), expr("pos DIV 64").as("w"))
-      .agg(expr("bit_or(shiftleft(1L, CAST(pos % 64 AS INT)))").as("bits"))
-    // densify by exploding the full word range FROM THE m SCALAR (so the
-    // width never touches the driver) and sorting once — NOT by per-word
-    // map lookups: element_at on Spark's array-backed MapData is a linear
-    // scan, which made that formulation O(W²) and measurably slow the
-    // moment the corpus sized W up
-    mRows
-      .select(col("shard"), explode(expr("sequence(0L, m DIV 64 - 1)")).as("w"))
-      .join(wordRows, Seq("shard", "w"), "left")
-      .select(col("shard"), col("w"), coalesce(col("bits"), lit(0L)).as("bits"))
+      .agg(expr("coalesce(bit_or(shiftleft(hit, CAST(pos % 64 AS INT))), 0L)").as("bits"))
       .groupBy(col("shard"))
       .agg(expr("transform(array_sort(collect_list(struct(w, bits))), s -> s.bits)")
         .as("bloom"))
@@ -1362,7 +1365,7 @@ object Curation {
         col("doc_id"), col("n").as("n_tokens"),
         coalesce(col("n_dup_spans"), lit(0L)).as("n_dup_spans"),
         coalesce(col("n_covered"), lit(0L)).as("n_covered"),
-        (floor((lit(1.0) - coalesce(col("n_covered"), lit(0L)) / col("n")) * 1e6) / 1e6)
+        trunc6(lit(1.0) - coalesce(col("n_covered"), lit(0L)) / col("n"))
           .as("keep_ratio"))
       .orderBy(col("doc_id"))
   }
@@ -1490,7 +1493,7 @@ object Curation {
         col("doc_id"), col("n").as("n_tokens"),
         coalesce(col("n_self_spans"), lit(0L)).as("n_self_spans"),
         coalesce(col("n_covered"), lit(0L)).as("n_covered"),
-        (floor(coalesce(col("n_covered"), lit(0L)) / col("n") * 1e6) / 1e6)
+        trunc6(coalesce(col("n_covered"), lit(0L)) / col("n"))
           .as("self_ratio"))
       .orderBy(col("doc_id"))
   }
@@ -1680,7 +1683,7 @@ object Curation {
       // nothing covered) pass with keep_ratio 1
       .withColumn("keep_ratio",
         when(col("n") > 0,
-          floor((lit(1.0) - col("n_covered") / col("n")) * 1e6) / 1e6)
+          trunc6(lit(1.0) - col("n_covered") / col("n")))
           .otherwise(lit(1.0)))
       .drop("dup_flags")
   }

@@ -54,7 +54,7 @@ object Events {
       .groupBy(col("window_start"))
       .agg(
         count(lit(1)).as("n_events"),
-        (floor(MoneySum.sumAsDouble(col("value"), 1e2) / count(lit(1)) * 1e6) / 1e6).as("avg_value"))
+        MoneySum.trunc6(MoneySum.sumAsDouble(col("value"), 1e2) / count(lit(1))).as("avg_value"))
       .orderBy(col("window_start"))
 
   /** Gap-based sessionization (30-minute inactivity gap): the classic

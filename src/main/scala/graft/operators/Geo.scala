@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Lcc
+import graft.functions.MoneySum.trunc6
 import graft.sources.Tables
 
 /** Reference-parity geospatial operators (SURVEY.md §2 R6, §3.3, §7.5).
@@ -115,10 +116,8 @@ object Geo {
   }
 
   /** Cell-bucketed proximity-join core over (pid, x, y) points, guarded
-    * against density skew exactly like [[Temporal.rangeJoinOn]] — the
-    * overfull-cell table is tiny by construction (only cells > saltCap)
-    * and broadcasts to both sides; a uniform corpus pays one
-    * column-pruned histogram scan and an empty broadcast.
+    * against density skew exactly like [[Temporal.rangeJoinOn]], by
+    * [[Skew.saltOverfull]] over (cx, cy) cells.
     *
     * The bucketed point table is [[Materialize.stage]]d (VERDICT r16
     * stretch #8 / r17 task #2): three consumers read it — the overfull
@@ -134,22 +133,13 @@ object Geo {
       .withColumn("cx", floor(col("x") / r).cast("long"))
       .withColumn("cy", floor(col("y") / r).cast("long"))
       .staged
-    val overfull = pts.groupBy(col("cx"), col("cy"))
-      .agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > saltCap)
-      .withColumn("nsalt", ceil(col("bn") / saltCap).cast("int"))
-      .select(col("cx"), col("cy"), col("nsalt"))
-    val left = pts
-      .select(col("pid").as("p1"), col("x").as("x1"), col("y").as("y1"),
-        col("cx"), col("cy"))
-      .join(broadcast(overfull), Seq("cx", "cy"), "left_outer")
-      .withColumn("salt", coalesce(pmod(hash(col("p1")), col("nsalt")), lit(0)).cast("int"))
-      .drop("nsalt")
-    val right = pts
-      .withColumn("cx", explode(array(col("cx") - 1, col("cx"), col("cx") + 1)))
-      .withColumn("cy", explode(array(col("cy") - 1, col("cy"), col("cy") + 1)))
-      .join(broadcast(overfull), Seq("cx", "cy"), "left_outer")
-      .withColumn("salt", explode(sequence(lit(0), coalesce(col("nsalt"), lit(1)) - 1)))
+    val (left, probe) = Skew.saltOverfull(pts, Seq("cx", "cy"), saltCap)(
+      pts.select(col("pid").as("p1"), col("x").as("x1"), col("y").as("y1"),
+        col("cx"), col("cy")), "p1",
+      pts
+        .withColumn("cx", explode(array(col("cx") - 1, col("cx"), col("cx") + 1)))
+        .withColumn("cy", explode(array(col("cy") - 1, col("cy"), col("cy") + 1))))
+    val right = probe
       .select(col("pid").as("p2"), col("x").as("x2"), col("y").as("y2"),
         col("cx"), col("cy"), col("salt").cast("int").as("salt"))
     val pairs = left.join(right, Seq("cx", "cy", "salt"))
@@ -194,7 +184,7 @@ object Geo {
       .groupBy(col("lat_bin"), col("lon_bin"))
       .agg(
         count(lit(1)).as("n_cells"),
-        (floor(avg(col("value")) * 1e6) / 1e6).as("avg_value"),
+        trunc6(avg(col("value"))).as("avg_value"),
         round(min(col("value")), 2).as("min_value"),
         round(max(col("value")), 2).as("max_value"))
       .orderBy(col("lat_bin"), col("lon_bin"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing
+import graft.functions.MoneySum.trunc6
 import graft.sources.Tables
 
 /** Multimodal-column plumbing (SURVEY.md §2 Table B ★ multimodal).
@@ -117,7 +118,7 @@ object Multimodal {
       .join(hits, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_frames"),
         coalesce(col("n_dup_frames"), lit(0L)).as("n_dup_frames"),
-        (floor(coalesce(col("n_dup_frames"), lit(0L)) / col("n_frames") * 1e6) / 1e6)
+        trunc6(coalesce(col("n_dup_frames"), lit(0L)) / col("n_frames"))
           .as("dup_ratio"))
       .orderBy(col("doc_id"))
   }

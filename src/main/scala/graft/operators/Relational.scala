@@ -43,7 +43,7 @@ object Relational {
         // at sf≈170 — decimal-accumulated exact variant (r21 verdict #1)
         (floor(MoneySum.sumAsDoubleExact(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 1e6) * 100) / 100).as("sum_disc_price"),
         round(avg(col("l_quantity")), 6).as("avg_qty"),
-        (floor(MoneySum.sumAsDouble(col("l_extendedprice"), 1e2) / count(lit(1)) * 1e6) / 1e6).as("avg_price"),
+        MoneySum.trunc6(MoneySum.sumAsDouble(col("l_extendedprice"), 1e2) / count(lit(1))).as("avg_price"),
         count(lit(1)).as("count_order"))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
 

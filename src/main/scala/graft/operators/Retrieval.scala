@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.MoneySum.longSum9
+import graft.functions.MoneySum.{longSum9, trunc6}
 import graft.sources.Tables
 
 /** Lexical + hybrid retrieval over `documents` — the search side of a
@@ -146,7 +146,7 @@ object Retrieval {
       .join(broadcast(probeTf), Seq("tok_h"))
       .crossJoin(broadcast(consts.select(col("n_docs"))))
       .withColumn("tfidf",
-        floor(col("tf") * (log((col("n_docs") + 1.0) / (col("df") + 1.0)) + 1.0) * 1e6) / 1e6)
+        trunc6(col("tf") * (log((col("n_docs") + 1.0) / (col("df") + 1.0)) + 1.0)))
       .select(col("probe_id"), col("token"), col("tok_h"), col("df"), col("tfidf"))
       .transform(Similarity.topPerKey("probe_id", nTerms, "rn")(col("tfidf").desc, col("token")))
       .select(col("probe_id"), col("token"), col("tok_h"), col("df"))

@@ -256,8 +256,7 @@ object Similarity {
         sum(lit(1L) - col("is_batch")).as("n_corpus"),
         sum(col("is_batch")).as("n_batch"))
       .withColumn("frac_new",
-        floor(col("n_batch").cast("double") /
-          (col("n_corpus") + col("n_batch")) * 1e6) / 1e6)
+        trunc6(col("n_batch").cast("double") / (col("n_corpus") + col("n_batch"))))
       .orderBy(col("cell"))
   }
 
@@ -485,8 +484,7 @@ object Similarity {
         posexplode(col("embedding")).as(Seq("dim", "v")))
       .groupBy(col("cluster_id"), col("dim"))
       .agg(count(lit(1)).as("n"), decSum9(col("v").cast("double")).as("s"))
-      .withColumn("cm",
-        floor(col("s").cast("double") / 1e9 / col("n") * 1e6) / 1e6)
+      .withColumn("cm", trunc6(col("s").cast("double") / 1e9 / col("n")))
       .groupBy(col("cluster_id"))
       .agg(expr(
         "transform(array_sort(collect_list(struct(dim, cm)))," +
@@ -733,8 +731,7 @@ object Similarity {
           .as(Seq("i", "v")))
       .groupBy(col("sub"), col("code"), col("i"))
       .agg(count(lit(1)).as("n"), decSum9(col("v").cast("double")).as("s"))
-      .withColumn("cm",
-        floor(col("s").cast("double") / 1e9 / col("n") * 1e6) / 1e6)
+      .withColumn("cm", trunc6(col("s").cast("double") / 1e9 / col("n")))
       .groupBy(col("sub"), col("code"))
       .agg(expr(
         "transform(array_sort(collect_list(struct(i, cm)))," +

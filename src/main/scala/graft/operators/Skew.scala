@@ -40,6 +40,30 @@ object Skew {
       .drop("__salt")
   }
 
+  /** The overfull-bucket salt guard of a bucketed band self-join on
+    * `keys`: a bucket holding more than `saltCap` rows of `rows` splits
+    * into ceil(n/saltCap) salts. Each `build` row lands in exactly one of
+    * its bucket's salts by the hash of its `id` column; each `probe` row
+    * is replicated to every salt of its bucket, so every in-band pair
+    * still meets exactly once on (keys, salt), and no join cell holds
+    * more than ~saltCap build rows. The overfull table is tiny by
+    * construction (only buckets past the cap) and is broadcast to both
+    * sides; uniform data pays one column-pruned histogram scan and an
+    * empty broadcast. Returns (build, probe), each with an int `salt`. */
+  private[graft] def saltOverfull(rows: DataFrame, keys: Seq[String], saltCap: Int)(
+      build: DataFrame, id: String, probe: DataFrame): (DataFrame, DataFrame) = {
+    val overfull = rows.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("bn"))
+      .filter(col("bn") > saltCap)
+      .withColumn("nsalt", ceil(col("bn") / saltCap).cast("int"))
+      .select((keys :+ "nsalt").map(col): _*)
+    (build.join(broadcast(overfull), keys, "left_outer")
+      .withColumn("salt", coalesce(pmod(hash(col(id)), col("nsalt")), lit(0)).cast("int"))
+      .drop("nsalt"),
+      probe.join(broadcast(overfull), keys, "left_outer")
+        .withColumn("salt", explode(sequence(lit(0), coalesce(col("nsalt"), lit(1)) - 1))))
+  }
+
   /** q92: the salted join as a declared query — lineitem⋈supplier salted
     * 8 ways, aggregated per nation. The oracle is the PLAIN join SQL:
     * salting is a physical rewrite, so the result must be row-identical

@@ -109,29 +109,17 @@ object Temporal {
     * failure: a 1000×-collapsed time axis put ~2300 events per bucket and
     * the suite spent 34–57 s in a handful of near-cartesian tasks — any
     * bursty real corpus (outage replays, batch backfills) does the same at
-    * 100 TB. The overfull-bucket table is tiny by construction (only
-    * buckets > saltCap) and is broadcast to both sides; uniform data pays
-    * one extra column-pruned scan for the histogram and an empty broadcast.
-    */
+    * 100 TB. The guard is [[Skew.saltOverfull]]. */
   private[graft] def rangeJoinOn(ev: DataFrame, saltCap: Int = 256): DataFrame = {
     val bucketed = ev.withColumn("bucket", floor(col("t") / 60).cast("long"))
-    val overfull = bucketed.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > saltCap)
-      .withColumn("nsalt", ceil(col("bn") / saltCap).cast("int"))
-      .select(col("bucket"), col("nsalt"))
-    val left = bucketed
-      .select(col("event_id").as("e1"), col("event_type").as("type1"),
-        col("t").as("t1"), col("bucket"))
-      .join(broadcast(overfull), Seq("bucket"), "left_outer")
-      .withColumn("salt", coalesce(pmod(hash(col("e1")), col("nsalt")), lit(0)).cast("int"))
-      .drop("nsalt")
     // probe side explodes to its own bucket ± 1 so every in-band pair
     // shares a bucket with the build side, then to that bucket's salts
-    val right = bucketed
-      .withColumn("bucket", explode(array(col("bucket") - 1, col("bucket"), col("bucket") + 1)))
-      .join(broadcast(overfull), Seq("bucket"), "left_outer")
-      .withColumn("salt", explode(sequence(lit(0), coalesce(col("nsalt"), lit(1)) - 1)))
+    val (left, probe) = Skew.saltOverfull(bucketed, Seq("bucket"), saltCap)(
+      bucketed.select(col("event_id").as("e1"), col("event_type").as("type1"),
+        col("t").as("t1"), col("bucket")), "e1",
+      bucketed.withColumn("bucket",
+        explode(array(col("bucket") - 1, col("bucket"), col("bucket") + 1))))
+    val right = probe
       .select(col("event_id").as("e2"), col("event_type").as("type2"),
         col("t").as("t2"), col("bucket"), col("salt").cast("int").as("salt"))
     // each qualifying pair matches on exactly one (bucket, salt): the left

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Hashing
+import graft.functions.MoneySum.trunc6
 import graft.operators.Materialize.Stageable
 import graft.sources.Tables
 
@@ -281,8 +282,8 @@ object Text {
         sum(col("x")).as("sx"), sum(col("y")).as("sy"),
         sum(col("xy")).as("sxy"), sum(col("xx")).as("sxx"))
       .withColumn("slope",
-        floor((col("n") * d("sxy") - d("sx") * d("sy")) /
-          (col("n") * d("sxx") - d("sx") * d("sx")) * 1e6) / 1e6)
+        trunc6((col("n") * d("sxy") - d("sx") * d("sy")) /
+          (col("n") * d("sxx") - d("sx") * d("sx"))))
       .select(col("lang"), col("slope").as("zipf_slope"))
     vocab.join(fit, Seq("lang"))
       .select(col("lang"), col("vocab_size"), col("n_tokens"), col("zipf_slope"))
@@ -314,7 +315,7 @@ object Text {
       // DuckDB the binary value — they diverge on bare-5 boundaries
       // (Oracles.scala determinism rules)
       .withColumn("tfidf",
-        floor(col("tf") * (log((col("n_docs") + 1.0) / (col("df") + 1.0)) + 1.0) * 1e6) / 1e6)
+        trunc6(col("tf") * (log((col("n_docs") + 1.0) / (col("df") + 1.0)) + 1.0)))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("tfidf").desc, col("token"))
     scored

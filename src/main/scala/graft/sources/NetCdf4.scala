@@ -1839,8 +1839,8 @@ object NetCdf4 {
   case class DimList(dims: Seq[String])
 
   // internal resolved form: (global heap collection address, first heap
-  // object index, axis count) — size-stable w.r.t. the address, so ohdr
-  // measurement passes encode it with a placeholder address
+  // object index, axis count); its encoded length does not depend on
+  // the address
   private case class DimListEnc(gheapAt: Long, firstIdx: Int, n: Int)
 
   /** A dataset to write. `values` are row-major doubles, narrowed to
@@ -1871,14 +1871,57 @@ object NetCdf4 {
       // the file stays spec-conformant, paging just engages earlier
       eaPageBits: Int = 10)
 
+  /** One block of a written file: the key other blocks find it by, the
+    * alignment of its first byte, and its bytes given where every block
+    * landed. What a block holds never changes its length: the superblock
+    * declares 8-byte offsets and lengths, so an address is 8 bytes
+    * whatever its value. */
+  private final case class Block(key: Any, align: Int, emit: Placed => Array[Byte])
+
+  /** Where each block of a file landed and how many bytes it holds; while
+    * lengths are measured ([[Placed.measuring]]) every one reads 0. */
+  private final class Placed(ats: Map[Any, Long], lens: Map[Any, Long]) {
+    def at(key: Any): Long = ats(key)
+    def len(key: Any): Long = lens(key)
+  }
+  private object Placed {
+    val measuring = new Placed(Map.empty[Any, Long].withDefaultValue(0L),
+      Map.empty[Any, Long].withDefaultValue(0L))
+  }
+
+  /** The file the blocks make, in order: each block is emitted at
+    * placeholder addresses to learn its length, one scan assigns every
+    * address, and each block is emitted again into its place. */
+  private def layout(blocks: Seq[Block]): Array[Byte] = {
+    val lens = blocks.map(_.emit(Placed.measuring).length.toLong)
+    var end = 0L
+    val ats = blocks.zip(lens).map { case (b, n) =>
+      val at = (end + b.align - 1) / b.align * b.align
+      end = at + n
+      at
+    }
+    val keys = blocks.map(_.key)
+    val atOf = keys.zip(ats).toMap
+    require(atOf.size == blocks.size, "two blocks share a key")
+    val placed = new Placed(atOf, keys.zip(lens).toMap)
+    val out = new Array[Byte](end.toInt)
+    blocks.lazyZip(ats).lazyZip(lens).foreach { (b, at, n) =>
+      val bytes = b.emit(placed)
+      require(bytes.length == n, s"block ${b.key} changed length once placed")
+      System.arraycopy(bytes, 0, out, at.toInt, bytes.length)
+    }
+    out
+  }
+
   /** Serialize the subset: superblock v0, one flat symbol-table root
-    * group, v1 object headers, contiguous little-endian data. Layout is
-    * computed in one forward pass (every block's size is known before
-    * its address is needed). With `latest = true`, the same datasets are
-    * framed the "latest format" way instead — superblock v3, version-2
-    * (OHDR) object headers with lookup3 checksums, and link messages in
-    * place of the symbol-table b-tree/heap/SNOD — which is the writer
-    * dual of [[readHeaderV2]] and what pins the v2 decode path offline. */
+    * group, v1 object headers, contiguous little-endian data. With
+    * `latest = true`, the same datasets are framed the "latest format" way
+    * instead — superblock v3, version-2 (OHDR) object headers with lookup3
+    * checksums, and link messages in place of the symbol-table
+    * b-tree/heap/SNOD — which is the writer dual of [[readHeaderV2]] and
+    * what pins the v2 decode path offline. The file is one ordered list of
+    * blocks laid out by [[layout]], so every address comes from the
+    * lengths the blocks emit. */
   def write(datasets: Seq[WriteDs], latest: Boolean = false): Array[Byte] = {
     require(datasets.nonEmpty, "empty HDF5 file")
     // the V1 superblock declares group-leaf K=4, which caps one symbol
@@ -1904,8 +1947,6 @@ object NetCdf4 {
       o.toByteArray
     }
 
-    val sbSize = if (latest) 48L else 96L
-    val rootOhdrAt = sbSize
     // NESTED GROUPS (latest only): a '/' in a dataset name places it
     // under intermediate groups, each its own v2 header of a link-info
     // message (compact storage, no fractal heap — what libhdf5 writes
@@ -1925,13 +1966,14 @@ object NetCdf4 {
       (groupPaths.filter(parentOf(_) == g).map(p => (shortOf(p), p)) ++
         sorted.map(_.name).filter(parentOf(_) == g).map(n => (shortOf(n), n)))
         .sortBy(_._1)
+    // the object header of a group ("" = root) or dataset
+    def ohdrKey(path: String): Any = ("ohdr", path)
     // link info: version 0, flags 0, fractal heap + name btree addresses
     def linkInfoBodyAt(fheap: Long, bt2: Long): Array[Byte] = {
       val o = ByteBuffer.allocate(18).order(ByteOrder.LITTLE_ENDIAN)
       o.put(0.toByte).put(0.toByte).putLong(fheap).putLong(bt2)
       o.array()
     }
-    val linkInfoBody = linkInfoBodyAt(Undef, Undef)
     // DENSE link storage (r18): past MaxCompact links a latest-format
     // group's link messages move into a fractal heap + name-index v2
     // B-tree, mirroring libhdf5's dense-link creation parameters
@@ -1954,10 +1996,6 @@ object NetCdf4 {
       // blocks: (row, heap offset, size), enumerated row-major — heap
       // offsets are contiguous in that order by construction
       def allocated: Long = blocks.map(_._3).sum
-      def fhibSize: Long =
-        if (rootRows == 0) 0L else 13L + HeapOffSize + rootRows.toLong * HeapW * 8 + 4
-      def heapSize: Long = 146L + fhibSize + allocated
-      def bt2Size: Long = 38L + 6 + offsets.size * recSize + 4
     }
     def densePack(sizes: Seq[Int], recSize: Int): DensePlan = {
       require(sizes.size <= (LinkBt2NodeSize - 10) / recSize,
@@ -1986,12 +2024,114 @@ object NetCdf4 {
       DensePlan(offsets, blocks,
         if (blocks.size == 1) 0 else blocks.last._1 + 1, free, recSize)
     }
-    def densePlan(g: String): DensePlan =
-      densePack(childrenOf(g).map { case (sn, _) => linkBody(sn, 0L).length },
-        LinkBt2RecSize)
-    val denseOrder: Seq[String] = ("" +: groupPaths).filter(isDense)
-    val densePlans: Map[String, DensePlan] =
-      denseOrder.map(g => g -> densePlan(g)).toMap
+    // a dense store `store`: fractal heap (FRHP, an FHIB when the root
+    // block is indirect, FHDBs holding the link or attribute messages as
+    // managed objects) + name-index v2 B-tree (BTHD + one BTLF of (lookup3
+    // name hash, heap id) records in unsigned-hash order); putRec writes
+    // one record given (buf, name hash, heap offset, object length,
+    // original index)
+    def denseStore(store: Any, plan: DensePlan, idLen: Int, names: Seq[String],
+        bodies: Placed => Seq[Array[Byte]], recType: Int,
+        putRec: (ByteBuffer, Long, Long, Int, Int) => Unit): Seq[Block] = {
+      val (frhp, fhib, bthd, btlf) =
+        ((store, "FRHP"), (store, "FHIB"), (store, "BTHD"), (store, "BTLF"))
+      val fhdbs = plan.blocks.indices.map(k => (store, "FHDB", k))
+      val header = Block(frhp, 1, p => {
+        val o = ByteBuffer.allocate(146).order(ByteOrder.LITTLE_ENDIAN)
+        o.put("FRHP".getBytes(US_ASCII)).put(0.toByte)
+        o.putShort(idLen.toShort).putShort(0.toShort).put(0x2.toByte)
+        o.putInt(4096) // max managed object size
+        o.putLong(0L).putLong(Undef) // next huge id, huge-object bt2
+        o.putLong(plan.freeSpace).putLong(Undef) // free space, fs manager
+        o.putLong(plan.allocated).putLong(plan.allocated) // managed, allocated
+        o.putLong(plan.allocated) // direct block iterator offset
+        o.putLong(names.size.toLong) // managed object count
+        o.putLong(0L).putLong(0L).putLong(0L).putLong(0L) // huge/tiny stats
+        o.putShort(HeapW.toShort).putLong(HeapStart).putLong(HeapMaxDirect)
+        o.putShort(32.toShort) // max heap size (bits)
+        o.putShort(1.toShort)  // starting rows in a root indirect block
+        o.putLong(p.at(if (plan.rootRows > 0) fhib else fhdbs.head)) // root block
+        o.putShort(plan.rootRows.toShort)
+        o.putInt(lookup3(o.array(), 0, 142))
+        o.array()
+      })
+      val indirect = Option.when(plan.rootRows > 0)(Block(fhib, 1, p => {
+        val o = ByteBuffer.allocate(13 + HeapOffSize + plan.rootRows * HeapW * 8)
+          .order(ByteOrder.LITTLE_ENDIAN)
+        o.put("FHIB".getBytes(US_ASCII)).put(0.toByte).putLong(p.at(frhp))
+        o.putInt(0) // root block heap offset
+        (0 until plan.rootRows * HeapW).foreach { k =>
+          o.putLong(if (k < fhdbs.size) p.at(fhdbs(k)) else Undef)
+        }
+        checksummed(o.array())
+      }))
+      // direct blocks: objects land at (heap offset − block offset); the
+      // checksum covers the WHOLE block with its field zeroed (H5HF's
+      // rule), so compute over the zero placeholder
+      val direct = plan.blocks.zip(fhdbs).map { case ((_, blkOff, sz), key) =>
+        Block(key, 1, p => {
+          val o = ByteBuffer.allocate(sz.toInt).order(ByteOrder.LITTLE_ENDIAN)
+          o.put("FHDB".getBytes(US_ASCII)).put(0.toByte).putLong(p.at(frhp))
+          o.putInt(blkOff.toInt).putInt(0)
+          bodies(p).zip(plan.offsets).foreach { case (body, off) =>
+            if (off >= blkOff && off < blkOff + sz) {
+              o.position((off - blkOff).toInt); o.put(body)
+            }
+          }
+          o.putInt(13 + HeapOffSize, lookup3(o.array(), 0, sz.toInt))
+          o.array()
+        })
+      }
+      val index = Block(bthd, 1, p => {
+        val o = ByteBuffer.allocate(38).order(ByteOrder.LITTLE_ENDIAN)
+        o.put("BTHD".getBytes(US_ASCII)).put(0.toByte).put(recType.toByte)
+        o.putInt(LinkBt2NodeSize)
+        o.putShort(plan.recSize.toShort).putShort(0.toShort)
+        o.put(100.toByte).put(40.toByte) // split/merge percents
+        o.putLong(p.at(btlf))
+        o.putShort(names.size.toShort)
+        o.putLong(names.size.toLong)
+        o.putInt(lookup3(o.array(), 0, 34))
+        o.array()
+      })
+      val leaf = Block(btlf, 1, p => {
+        val lens = bodies(p).map(_.length)
+        val o = ByteBuffer.allocate(6 + names.size * plan.recSize)
+          .order(ByteOrder.LITTLE_ENDIAN)
+        o.put("BTLF".getBytes(US_ASCII)).put(0.toByte).put(recType.toByte)
+        names.indices.map { i =>
+          val nb = names(i).getBytes(US_ASCII)
+          (lookup3(nb, 0, nb.length) & 0xffffffffL, plan.offsets(i), lens(i), i)
+        }.sortBy(_._1).foreach { case (hash, off, len, i) => putRec(o, hash, off, len, i) }
+        checksummed(o.array())
+      })
+      (header +: indirect.toSeq) ++ direct ++ Seq(index, leaf)
+    }
+    def denseInfo(p: Placed, store: Any): Array[Byte] =
+      linkInfoBodyAt(p.at((store, "FRHP")), p.at((store, "BTHD")))
+    // hard-link messages of group `g`'s children
+    def links(g: String, p: Placed): Seq[(Int, Array[Byte])] =
+      childrenOf(g).map { case (s, path) => (0x0006, linkBody(s, p.at(ohdrKey(path)))) }
+    val linkStores = ("" +: groupPaths).filter(isDense).flatMap { g =>
+      val ch = childrenOf(g)
+      denseStore(("links", g),
+        densePack(ch.map { case (sn, _) => linkBody(sn, 0L).length }, LinkBt2RecSize),
+        HeapIdLen, ch.map(_._1), links(g, _).map(_._2), 5,
+        // record type 5: name hash, then the 7-byte managed heap id
+        (o, hash, off, len, _) => {
+          o.putInt(hash.toInt)
+          o.put(0.toByte)         // managed heap id, version 0
+          o.putInt(off.toInt)     // 4-byte heap offset
+          o.putShort(len.toShort) // 2-byte length
+          ()
+        })
+    }
+    // latest-format groups: the dense link info alone, or link info (the
+    // root omits it) plus one hard-link message per child
+    def groupMsgs(g: String, p: Placed): Seq[(Int, Array[Byte])] =
+      if (isDense(g)) Seq((0x0002, denseInfo(p, ("links", g))))
+      else if (g.isEmpty) links(g, p)
+      else (0x0002, linkInfoBodyAt(Undef, Undef)) +: links(g, p)
     // dense ATTRIBUTE stores: a latest-format dataset past MaxCompact
     // attributes moves its 0x000C messages into a fractal heap too
     // (netCDF-4 tracks attribute creation order, so libhdf5's attribute
@@ -2002,10 +2142,7 @@ object NetCdf4 {
     val AttrBt2RecSize = AttrIdLen + 1 + 4 + 4
     // DIMENSION_LIST attrs: one global-heap object per (dataset, axis)
     // in declaration order, holding that axis' dimension-scale object
-    // reference; the GCOL collection itself lands after the data blobs,
-    // so its address reaches the encoder through `gcolAddr`, set before
-    // final emission (attr bodies are size-stable w.r.t. it — the ohdr
-    // measurement passes encode a placeholder address)
+    // reference, in the GCOL block after the data
     val dimRefNames: Seq[String] = sorted.flatMap(_.attrs.collect {
       case (_, DimList(dims)) => dims
     }).flatten
@@ -2013,74 +2150,94 @@ object NetCdf4 {
       s"DIMENSION_LIST references unknown dataset '$dn'"))
     require(sorted.forall(_.attrs.count(_._2.isInstanceOf[DimList]) <= 1),
       "at most one DIMENSION_LIST attribute per dataset")
-    val nDimRefs = dimRefNames.size
     val dimListBase: Map[String, Int] = {
       var next = 1
       sorted.flatMap(d => d.attrs.collectFirst { case (_, DimList(dims)) =>
         val base = next; next += dims.size; d.name -> base
       }).toMap
     }
-    var gcolAddr = 0L
-    def resolveAttr(dsName: String)(a: (String, Any)): (String, Any) = a match {
+    def attrBodies(d: WriteDs, p: Placed): Seq[Array[Byte]] = d.attrs.map {
       case (an, DimList(dims)) =>
-        (an, DimListEnc(gcolAddr, dimListBase(dsName), dims.size))
-      case other => other
+        attrBody(an, DimListEnc(p.at("GCOL"), dimListBase(d.name), dims.size))
+      case (an, av) => attrBody(an, av)
     }
-    def attrBodies(d: WriteDs): Seq[Array[Byte]] =
-      d.attrs.map(resolveAttr(d.name)).map { case (an, av) => attrBody(an, av) }
     def isDenseAttr(d: WriteDs): Boolean = latest && d.attrs.size > MaxCompact
-    val denseAttrOrder: Seq[WriteDs] = sorted.filter(isDenseAttr)
-    val denseAttrPlans: Map[String, DensePlan] = denseAttrOrder.map(d =>
-      d.name -> densePack(attrBodies(d).map(_.length), AttrBt2RecSize)).toMap
-    def groupMsgs(g: String, addrs: Map[String, Long],
-                  dense: Map[String, (Long, Long)]): Seq[(Int, Array[Byte])] =
-      if (isDense(g)) {
-        val (fh, bt) = dense.getOrElse(g, (0L, 0L))
-        Seq((0x0002, linkInfoBodyAt(fh, bt)))
-      } else (0x0002, linkInfoBody) +: childrenOf(g).map { case (s, p) =>
-        (0x0006, linkBody(s, addrs.getOrElse(p, 0L)))
-      }
-    def groupV2(g: String, addrs: Map[String, Long],
-                dense: Map[String, (Long, Long)]): Array[Byte] =
-      ohdrV2(groupMsgs(g, addrs, dense))
-    // latest-format root: hard-link messages per root-level child (or
-    // the dense link-info alone); sizes are address-independent, so a
-    // placeholder measures them
-    def rootV2(addrs: Map[String, Long],
-               dense: Map[String, (Long, Long)]): Array[Byte] =
-      if (isDense("")) ohdrV2(groupMsgs("", addrs, dense))
-      else ohdrV2(childrenOf("").map { case (s, p) =>
-        (0x0006, linkBody(s, addrs.getOrElse(p, 0L)))
-      })
-    val rootOhdr =
-      if (latest) rootV2(Map.empty, Map.empty)
-      else ohdrBytes(Seq(msg(0x0011, new Array[Byte](16)))) // patched later
-    val groupSizes = groupPaths.map(g => groupV2(g, Map.empty, Map.empty).length.toLong)
-    val groupAts = groupSizes.scanLeft(rootOhdrAt + rootOhdr.length)(_ + _).init
-    val denseSizes = denseOrder.map(g =>
-      densePlans(g).heapSize + densePlans(g).bt2Size)
-    val denseAts = denseSizes
-      .scanLeft(rootOhdrAt + rootOhdr.length + groupSizes.sum)(_ + _).init
-    val denseAddrs: Map[String, (Long, Long)] =
-      denseOrder.zip(denseAts).map { case (g, at) =>
-        g -> ((at, at + densePlans(g).heapSize))
-      }.toMap
-    val denseAttrSizes = denseAttrOrder.map(d =>
-      denseAttrPlans(d.name).heapSize + denseAttrPlans(d.name).bt2Size)
-    val denseAttrAts = denseAttrSizes
-      .scanLeft(rootOhdrAt + rootOhdr.length + groupSizes.sum + denseSizes.sum)(_ + _).init
-    val denseAttrAddrs: Map[String, (Long, Long)] =
-      denseAttrOrder.zip(denseAttrAts).map { case (d, at) =>
-        d.name -> ((at, at + denseAttrPlans(d.name).heapSize))
-      }.toMap
-    val btreeAt = rootOhdrAt + rootOhdr.length + groupSizes.sum +
-      denseSizes.sum + denseAttrSizes.sum
-    val btreeSize = if (latest) 0L else 24L + 8 + 16 // header + key0 + (child0, key1)
-    val heapAt = btreeAt + btreeSize
-    val heapHdrSize = if (latest) 0L else 32L
-    val heapDataAt = heapAt + heapHdrSize
-    val snodAt = heapDataAt + (if (latest) 0L else heapData.length.toLong)
-    val snodSize = if (latest) 0L else 8L + 40L * sorted.size
+    val attrStores = sorted.filter(isDenseAttr).flatMap { d =>
+      denseStore(("attrs", d.name),
+        densePack(attrBodies(d, Placed.measuring).map(_.length), AttrBt2RecSize),
+        AttrIdLen, d.attrs.map(_._1), attrBodies(d, _), 8,
+        // record type 8: 8-byte managed heap id (offset 4 + length 3),
+        // message flags, creation order, name hash
+        (o, hash, off, len, i) => {
+          o.put(0.toByte)     // managed heap id, version 0
+          o.putInt(off.toInt) // 4-byte heap offset
+          o.put((len & 0xff).toByte).put(((len >> 8) & 0xff).toByte)
+            .put(((len >> 16) & 0xff).toByte) // 3-byte length
+          o.put(0.toByte)     // message flags: not shared
+          o.putInt(i)         // creation order
+          o.putInt(hash.toInt)
+          ()
+        })
+    }
+
+    val superblock = Block("superblock", 1, p => if (latest) {
+      // superblock v3: fixed 48 bytes, lookup3-checksummed
+      val o = ByteBuffer.allocate(48).order(ByteOrder.LITTLE_ENDIAN)
+      o.put(Magic)
+      o.put(3.toByte).put(8.toByte).put(8.toByte).put(0.toByte)
+      o.putLong(0L).putLong(Undef).putLong(p.at("EOF")).putLong(p.at(ohdrKey("")))
+      o.putInt(lookup3(o.array(), 0, 44))
+      o.array()
+    } else {
+      // superblock v0
+      val o = ByteBuffer.allocate(96).order(ByteOrder.LITTLE_ENDIAN)
+      o.put(Magic)
+      o.put(Array[Byte](0, 0, 0, 0, 0, 8, 8, 0)) // versions, offset/length sizes
+      o.putShort(4.toShort).putShort(16.toShort) // group leaf / internal k
+      o.putInt(0) // consistency flags
+      o.putLong(0L).putLong(Undef).putLong(p.at("EOF")).putLong(Undef)
+      o.putLong(0L) // root STE: link name offset ("" at heap 0)
+      o.putLong(p.at(ohdrKey("")))
+      o.putInt(0).putInt(0) // cache type, reserved
+      o.putLong(0L).putLong(0L) // scratch
+      o.array()
+    })
+    // root object header: the latest-format group messages, or the v1
+    // symbol-table message → group b-tree + local heap
+    val root = Block(ohdrKey(""), 1, p =>
+      if (latest) ohdrV2(groupMsgs("", p))
+      else ohdrBytes(Seq(msg(0x0011, ByteBuffer.allocate(16).order(ByteOrder.LITTLE_ENDIAN)
+        .putLong(p.at("TREE")).putLong(p.at("HEAP")).array()))))
+    val symbolTable = if (latest) Nil else Seq(
+      // group b-tree: one leaf with one SNOD child
+      Block("TREE", 1, p => {
+        val o = ByteBuffer.allocate(48).order(ByteOrder.LITTLE_ENDIAN)
+        o.put("TREE".getBytes(US_ASCII)).put(0.toByte).put(0.toByte)
+        o.putShort(1.toShort).putLong(Undef).putLong(Undef)
+        o.putLong(0L) // key0: lowest name offset
+        o.putLong(p.at("SNOD")) // child0
+        o.putLong(nameOffsets(sorted.last.name)) // key1: highest name offset
+        o.array()
+      }),
+      // local heap header, then its data segment
+      Block("HEAP", 1, p => {
+        val o = ByteBuffer.allocate(32).order(ByteOrder.LITTLE_ENDIAN)
+        o.put("HEAP".getBytes(US_ASCII)).put(0.toByte)
+          .put(0.toByte).put(0.toByte).put(0.toByte)
+        o.putLong(heapData.length.toLong).putLong(Undef).putLong(p.at("heap data"))
+        o.array()
+      }),
+      Block("heap data", 1, _ => heapData),
+      Block("SNOD", 1, p => {
+        val o = ByteBuffer.allocate(8 + 40 * sorted.size).order(ByteOrder.LITTLE_ENDIAN)
+        o.put("SNOD".getBytes(US_ASCII)).put(1.toByte).put(0.toByte)
+        o.putShort(sorted.size.toShort)
+        sorted.foreach { d =>
+          o.putLong(nameOffsets(d.name)).putLong(p.at(ohdrKey(d.name)))
+          o.putInt(0).putInt(0).putLong(0L).putLong(0L)
+        }
+        o.array()
+      }))
 
     // latest-format chunk index selection — mirrors libhdf5's fixed-
     // maxdim choices: one-cell grid → single chunk; unfiltered →
@@ -2089,15 +2246,49 @@ object NetCdf4 {
       d.idx4.getOrElse(
         if (nChunks == 1) 1 else if (d.filters.isEmpty) 2 else 3)
     def faEntrySize(d: WriteDs): Int = if (d.filters.isEmpty) 8 else 20
-    def faSize(d: WriteDs, nChunks: Int): Long =
-      28L + faDbSize(faEntrySize(d), nChunks)
-    // dataset object headers: size-stable w.r.t. the data/btree address,
-    // so measure with a placeholder then re-emit with the real address
-    def dsMsgs(d: WriteDs, plan: Option[Seq[(Seq[Long], Array[Byte])]],
-               dataAddr: Long,
-               denseAttr: Option[(Long, Long)]): Seq[(Int, Array[Byte])] = {
-      val n = d.shape.product.max(1L)
+    // chunked datasets: every chunk gathered and filtered once, as the
+    // bytes its block emits
+    val plans: Seq[Option[Seq[(Seq[Long], Array[Byte])]]] =
+      sorted.map(d => d.chunk.map(_ => chunkBlobs(d, latestCap = latest)))
+    // each dataset's data, 8-aligned: one contiguous blob, or its chunk
+    // index (a v1 chunk b-tree, or a latest-format index — none for a
+    // single or implicit one) then its chunks, each 8-aligned except an
+    // implicit index's, which sit tight at addr + i × chunk bytes
+    val data: Seq[Seq[Block]] = sorted.zip(plans).map {
+      case (d, None) =>
+        val o = ByteBuffer.allocate((d.shape.product.max(1L) * (if (d.f32) 4 else 8)).toInt)
+          .order(ByteOrder.LITTLE_ENDIAN)
+        d.values.foreach(v => if (d.f32) o.putFloat(v.toFloat) else o.putDouble(v))
+        val bytes = o.array()
+        Seq(Block(("data", d.name), 8, _ => bytes))
+      case (d, Some(blobs)) =>
+        val key = ("data", d.name)
+        val chunkKeys = blobs.indices.map(i => (key, i))
+        val client = if (d.filters.isEmpty) 0 else 1
+        val idxType = chunkIndexType(d, blobs.size)
+        val tight = latest && idxType == 2
+        val index =
+          if (!latest) Seq(Block(key, 8, p => chunkBtree(d, blobs, chunkKeys.map(p.at))))
+          else idxType match {
+            case 1 | 2 => Nil
+            case 4 => extensibleArrayIndex(key, faEntrySize(d), client, blobs, chunkKeys,
+              d.eaPageBits)
+            case 5 => btree2Index(key, d.shape.size, d.filters.nonEmpty, d.chunk.get,
+              blobs, chunkKeys)
+            case _ => fixedArrayIndex(key, faEntrySize(d), client, blobs, chunkKeys)
+          }
+        index ++ blobs.zip(chunkKeys).zipWithIndex.map { case ((blob, k), i) =>
+          Block(k, if (tight && i > 0) 1 else 8, _ => blob._2)
+        }
+    }
+    // dataset object headers: layout at the dataset's first data block;
+    // past MaxCompact attributes (latest), ONE attribute-info message
+    // pointing at the dense store instead of the 0x000C messages — the
+    // body layout matches link info at flags 0, so it is reused
+    def dsOhdr(d: WriteDs, plan: Option[Seq[(Seq[Long], Array[Byte])]],
+               dataKey: Any, p: Placed): Array[Byte] = {
       val elem = if (d.f32) 4 else 8
+      val dataAt = p.at(dataKey)
       val layoutMsg = (d.chunk, plan) match {
         case (Some(cd), Some(blobs)) if latest =>
           val idxType = chunkIndexType(d, blobs.size)
@@ -2105,326 +2296,51 @@ object NetCdf4 {
             if (idxType == 1 && d.filters.nonEmpty)
               Some((blobs.head._2.length.toLong, 0L))
             else None
-          (0x0008, chunkedLayoutBodyV4(idxType, dataAddr, cd, elem, single))
-        case (Some(cd), _) => (0x0008, chunkedLayoutBody(dataAddr, cd, elem))
-        case _ => (0x0008, layoutBody(dataAddr, n * elem))
+          (0x0008, chunkedLayoutBodyV4(idxType, dataAt, cd, elem, single))
+        case (Some(cd), _) => (0x0008, chunkedLayoutBody(dataAt, cd, elem))
+        case _ => (0x0008, layoutBody(dataAt, d.shape.product.max(1L) * elem))
       }
       val filterMsgs =
         if (d.chunk.isDefined && d.filters.nonEmpty)
           Seq((0x000B, filterPipelineBody(d.filters, elem)))
         else Nil
-      // past MaxCompact attributes (latest): ONE attribute-info message
-      // pointing at the dense store instead of the 0x000C messages —
-      // the body layout matches link info at flags 0, so it is reused
-      val attrMsgs = denseAttr match {
-        case Some((fh, bt)) => Seq((0x0015, linkInfoBodyAt(fh, bt)))
-        case None => d.attrs.map(resolveAttr(d.name))
-          .map { case (an, av) => (0x000C, attrBody(an, av)) }
-      }
-      Seq(
+      val attrMsgs =
+        if (isDenseAttr(d)) Seq((0x0015, denseInfo(p, ("attrs", d.name))))
+        else attrBodies(d, p).map((0x000C, _))
+      val ms = Seq(
         (0x0001, dataspaceBody(d.shape, d.maxDims)),
         (0x0003, datatypeBody(d.f32)),
         layoutMsg) ++ filterMsgs ++ attrMsgs
-    }
-    def dsOhdr(d: WriteDs, plan: Option[Seq[(Seq[Long], Array[Byte])]],
-               dataAddr: Long,
-               denseAttr: Option[(Long, Long)]): Array[Byte] = {
-      val ms = dsMsgs(d, plan, dataAddr, denseAttr)
       if (latest) ohdrV2(ms)
       else ohdrBytes(ms.map { case (t, body) => msg(t, body) })
     }
-    def chunkBtreeSize(d: WriteDs, nChunks: Int): Long = {
-      val keySize = 8 + 8 * (d.shape.size + 1)
-      24L + nChunks * (keySize + 8) + keySize
-    }
-    // chunked datasets: pre-filter every chunk so its on-disk size is
-    // known before addresses are assigned (the one-forward-pass rule)
-    val plans: Seq[Option[Seq[(Seq[Long], Array[Byte])]]] =
-      sorted.map(d => d.chunk.map(_ => chunkBlobs(d, latestCap = latest)))
-    val ohdrSizes = sorted.zip(plans).map { case (d, pl) =>
-      dsOhdr(d, pl, 0L,
-        if (isDenseAttr(d)) Some((0L, 0L)) else None).length.toLong
-    }
-    val ohdrAts = ohdrSizes.scanLeft(snodAt + snodSize)(_ + _).init
-    var dataAt = align8(snodAt + snodSize + ohdrSizes.sum)
-    val dataAts = sorted.zip(plans).map { case (d, plan) =>
-      val at = dataAt
-      plan match {
-        case Some(blobs) if latest =>
-          chunkIndexType(d, blobs.size) match {
-            case 1 => dataAt += align8(blobs.head._2.length.toLong)
-            case 2 => // implicit: chunks TIGHT (addr + i*chunkBytes)
-              dataAt += align8(blobs.map(_._2.length.toLong).sum)
-            case 4 => dataAt += eaSize(faEntrySize(d), blobs.size, d.eaPageBits) +
-              blobs.map(b => align8(b._2.length.toLong)).sum
-            case 5 => dataAt += bt2Size(d.shape.size, d.filters.nonEmpty, blobs.size) +
-              blobs.map(b => align8(b._2.length.toLong)).sum
-            case _ => dataAt += align8(faSize(d, blobs.size)) +
-              blobs.map(b => align8(b._2.length.toLong)).sum
-          }
-        case Some(blobs) =>
-          dataAt += align8(chunkBtreeSize(d, blobs.size)) +
-            blobs.map(b => align8(b._2.length.toLong)).sum
-        case None =>
-          dataAt += align8(d.shape.product.max(1L) * (if (d.f32) 4 else 8))
-      }
-      at
-    }
     // global heap collection (GCOL) for DIMENSION_LIST references: one
     // 24-byte object (16-byte header + one padded 8-byte object
-    // reference) per (dataset, axis) + a 16-byte free-space terminator
-    val gcolAt = dataAt
-    val gcolSize = if (nDimRefs == 0) 0L else 16L + 24L * nDimRefs + 16L
-    gcolAddr = if (nDimRefs == 0) 0L else gcolAt
-    val eof = gcolAt + gcolSize
-
-    val out = ByteBuffer.allocate(eof.toInt).order(ByteOrder.LITTLE_ENDIAN)
-    if (latest) {
-      // superblock v3: fixed 48 bytes, lookup3-checksummed
-      out.put(Magic)
-      out.put(3.toByte).put(8.toByte).put(8.toByte).put(0.toByte)
-      out.putLong(0L).putLong(Undef).putLong(eof).putLong(rootOhdrAt)
-      out.putInt(lookup3(out.array(), 0, 44))
-      // root + group object headers: link messages with the real addresses
-      val addrs = sorted.map(_.name).zip(ohdrAts).toMap ++
-        groupPaths.zip(groupAts).toMap
-      out.position(rootOhdrAt.toInt)
-      out.put(rootV2(addrs, denseAddrs))
-      groupPaths.zip(groupAts).foreach { case (g, at) =>
-        out.position(at.toInt)
-        out.put(groupV2(g, addrs, denseAddrs))
-      }
-      // dense stores: fractal heap (FRHP + FHIB/FHDBs with the link or
-      // attribute messages as managed objects) + name-index v2 B-tree;
-      // putRec writes one (hash-sorted) index record given
-      // (buf, name hash, heap offset, object length, original index)
-      def denseStoreBytes(plan: DensePlan, heapAt: Long, idLen: Int,
-          names: Seq[String], bodies: Seq[Array[Byte]], recType: Int,
-          putRec: (ByteBuffer, Long, Long, Int, Int) => Unit): Array[Byte] = {
-        val o = ByteBuffer.allocate((plan.heapSize + plan.bt2Size).toInt)
-          .order(ByteOrder.LITTLE_ENDIAN)
-        o.put("FRHP".getBytes(US_ASCII)).put(0.toByte)
-        o.putShort(idLen.toShort).putShort(0.toShort).put(0x2.toByte)
-        o.putInt(4096) // max managed object size
-        o.putLong(0L).putLong(Undef) // next huge id, huge-object bt2
-        o.putLong(plan.freeSpace).putLong(Undef) // free space, fs manager
-        o.putLong(plan.allocated).putLong(plan.allocated) // managed, allocated
-        o.putLong(plan.allocated) // direct block iterator offset
-        o.putLong(bodies.size.toLong) // managed object count
-        o.putLong(0L).putLong(0L).putLong(0L).putLong(0L) // huge/tiny stats
-        o.putShort(HeapW.toShort).putLong(HeapStart).putLong(HeapMaxDirect)
-        o.putShort(32.toShort) // max heap size (bits)
-        o.putShort(1.toShort)  // starting rows in a root indirect block
-        o.putLong(heapAt + 146) // root block address
-        o.putShort(plan.rootRows.toShort)
-        o.putInt(lookup3(o.array(), 0, 142))
-        val blocksFileAt = plan.blocks.scanLeft(146L + plan.fhibSize) {
-          case (at, (_, _, sz)) => at + sz
-        }.init
-        if (plan.rootRows > 0) {
-          o.position(146)
-          o.put("FHIB".getBytes(US_ASCII)).put(0.toByte).putLong(heapAt)
-          o.putInt(0) // root block heap offset
-          (0 until plan.rootRows * HeapW).foreach { k =>
-            o.putLong(if (k < plan.blocks.size) heapAt + blocksFileAt(k) else Undef)
-          }
-          o.putInt(lookup3(o.array(), 146, (plan.fhibSize - 4).toInt))
-        }
-        // direct blocks: objects land at (heap offset − block offset);
-        // the checksum covers the WHOLE block with its field zeroed
-        // (H5HF's rule), so compute over the zero placeholder
-        plan.blocks.zipWithIndex.foreach { case ((_, blkOff, sz), k) =>
-          val at = blocksFileAt(k).toInt
-          o.position(at)
-          o.put("FHDB".getBytes(US_ASCII)).put(0.toByte).putLong(heapAt)
-          o.putInt(blkOff.toInt).putInt(0)
-          bodies.zip(plan.offsets).foreach { case (body, off) =>
-            if (off >= blkOff && off < blkOff + sz) {
-              o.position(at + (off - blkOff).toInt); o.put(body)
-            }
-          }
-          val cs = lookup3(o.array(), at, sz.toInt)
-          o.position(at + 13 + HeapOffSize); o.putInt(cs)
-        }
-        // name index: BTHD + one BTLF of (lookup3 name hash, heap id)
-        // records in unsigned-hash order
-        val bthdAt = plan.heapSize.toInt
-        o.position(bthdAt)
-        o.put("BTHD".getBytes(US_ASCII)).put(0.toByte).put(recType.toByte)
-        o.putInt(LinkBt2NodeSize)
-        o.putShort(plan.recSize.toShort).putShort(0.toShort)
-        o.put(100.toByte).put(40.toByte) // split/merge percents
-        o.putLong(heapAt + plan.heapSize + 38)
-        o.putShort(bodies.size.toShort)
-        o.putLong(bodies.size.toLong)
-        o.putInt(lookup3(o.array(), bthdAt, 34))
-        val lfAt = bthdAt + 38
-        o.position(lfAt)
-        o.put("BTLF".getBytes(US_ASCII)).put(0.toByte).put(recType.toByte)
-        val recs = names.indices.map { i =>
-          val nb = names(i).getBytes(US_ASCII)
-          (lookup3(nb, 0, nb.length) & 0xffffffffL,
-            plan.offsets(i), bodies(i).length, i)
-        }.sortBy(_._1)
-        recs.foreach { case (hash, off, len, i) => putRec(o, hash, off, len, i) }
-        o.putInt(lookup3(o.array(), lfAt, 6 + recs.size * plan.recSize))
-        o.array()
-      }
-      denseOrder.foreach { g =>
-        val at = denseAddrs(g)._1
-        val ch = childrenOf(g)
-        out.position(at.toInt)
-        out.put(denseStoreBytes(densePlans(g), at, HeapIdLen,
-          ch.map(_._1), ch.map { case (sn, p) => linkBody(sn, addrs(p)) }, 5,
-          // record type 5: name hash, then the 7-byte managed heap id
-          (o, hash, off, len, _) => {
-            o.putInt(hash.toInt)
-            o.put(0.toByte)         // managed heap id, version 0
-            o.putInt(off.toInt)     // 4-byte heap offset
-            o.putShort(len.toShort) // 2-byte length
-            ()
-          }))
-      }
-      denseAttrOrder.foreach { d =>
-        val at = denseAttrAddrs(d.name)._1
-        out.position(at.toInt)
-        out.put(denseStoreBytes(denseAttrPlans(d.name), at, AttrIdLen,
-          d.attrs.map(_._1), attrBodies(d), 8,
-          // record type 8: 8-byte managed heap id (offset 4 + length 3),
-          // message flags, creation order, name hash
-          (o, hash, off, len, i) => {
-            o.put(0.toByte)     // managed heap id, version 0
-            o.putInt(off.toInt) // 4-byte heap offset
-            o.put((len & 0xff).toByte).put(((len >> 8) & 0xff).toByte)
-              .put(((len >> 16) & 0xff).toByte) // 3-byte length
-            o.put(0.toByte)     // message flags: not shared
-            o.putInt(i)         // creation order
-            o.putInt(hash.toInt)
-            ()
-          }))
-      }
-    } else {
-      // superblock v0
-      out.put(Magic)
-      out.put(Array[Byte](0, 0, 0, 0, 0, 8, 8, 0)) // versions, offset/length sizes
-      out.putShort(4.toShort).putShort(16.toShort) // group leaf / internal k
-      out.putInt(0) // consistency flags
-      out.putLong(0L).putLong(Undef).putLong(eof).putLong(Undef)
-      out.putLong(0L) // root STE: link name offset ("" at heap 0)
-      out.putLong(rootOhdrAt)
-      out.putInt(0).putInt(0) // cache type, reserved
-      out.putLong(0L).putLong(0L) // scratch
-      // root object header (symbol-table message → btree + heap)
-      out.position(rootOhdrAt.toInt)
-      val stabBody = ByteBuffer.allocate(16).order(ByteOrder.LITTLE_ENDIAN)
-        .putLong(btreeAt).putLong(heapAt).array()
-      out.put(ohdrBytes(Seq(msg(0x0011, stabBody))))
-      // group b-tree: one leaf with one SNOD child
-      out.position(btreeAt.toInt)
-      out.put("TREE".getBytes(US_ASCII)).put(0.toByte).put(0.toByte)
-      out.putShort(1.toShort).putLong(Undef).putLong(Undef)
-      out.putLong(0L) // key0: lowest name offset
-      out.putLong(snodAt) // child0
-      out.putLong(nameOffsets(sorted.last.name)) // key1: highest name offset
-      // local heap
-      out.position(heapAt.toInt)
-      out.put("HEAP".getBytes(US_ASCII)).put(0.toByte)
+    // reference) per (dataset, axis), then the free-space object
+    val gcol = Option.when(dimRefNames.nonEmpty)(Block("GCOL", 8, p => {
+      val o = ByteBuffer.allocate(16 + 24 * dimRefNames.size + 16)
+        .order(ByteOrder.LITTLE_ENDIAN)
+      o.put("GCOL".getBytes(US_ASCII)).put(1.toByte)
         .put(0.toByte).put(0.toByte).put(0.toByte)
-      out.putLong(heapData.length.toLong).putLong(Undef).putLong(heapDataAt)
-      out.put(heapData)
-      // SNOD
-      out.position(snodAt.toInt)
-      out.put("SNOD".getBytes(US_ASCII)).put(1.toByte).put(0.toByte)
-      out.putShort(sorted.size.toShort)
-      sorted.zip(ohdrAts).foreach { case (d, at) =>
-        out.putLong(nameOffsets(d.name)).putLong(at)
-        out.putInt(0).putInt(0).putLong(0L).putLong(0L)
+      o.putLong(0L) // collection size: the emitted length, set below
+      dimRefNames.zipWithIndex.foreach { case (dn, i) =>
+        o.putShort((i + 1).toShort).putShort(0.toShort).putInt(0)
+        o.putLong(8L) // object size: one object reference
+        o.putLong(p.at(ohdrKey(dn)))
       }
-    }
-    // dataset headers + data (contiguous blob, chunk btree + blobs, or a
-    // latest-format chunk index + blobs)
-    sorted.lazyZip(ohdrAts).lazyZip(dataAts).lazyZip(plans).foreach { (d, hdrAt, dAt, plan) =>
-      out.position(hdrAt.toInt)
-      out.put(dsOhdr(d, plan, dAt, denseAttrAddrs.get(d.name)))
-      plan match {
-        case Some(blobs) if latest =>
-          chunkIndexType(d, blobs.size) match {
-            case 1 => // single chunk: the layout's address IS the blob
-              out.position(dAt.toInt)
-              out.put(blobs.head._2)
-            case 2 => // implicit: unfiltered chunks tight, row-major
-              out.position(dAt.toInt)
-              blobs.foreach(bl => out.put(bl._2))
-            case 4 => // extensible array: EAHD + EAIB + EASB/EADBs, blobs after
-              var cAt = dAt + eaSize(faEntrySize(d), blobs.size, d.eaPageBits)
-              val childAts = blobs.map { case (_, blob) =>
-                val a = cAt; cAt += align8(blob.length.toLong); a
-              }
-              out.position(dAt.toInt)
-              out.put(extensibleArrayIndex(dAt, faEntrySize(d),
-                if (d.filters.isEmpty) 0 else 1, blobs, childAts, d.eaPageBits))
-              blobs.zip(childAts).foreach { case ((_, blob), a) =>
-                out.position(a.toInt); out.put(blob)
-              }
-            case 5 => // v2 B-tree: BTHD + BTIN/BTLF node tree, blobs after
-              var cAt = dAt + bt2Size(d.shape.size, d.filters.nonEmpty, blobs.size)
-              val childAts = blobs.map { case (_, blob) =>
-                val a = cAt; cAt += align8(blob.length.toLong); a
-              }
-              out.position(dAt.toInt)
-              out.put(btree2Index(dAt, d.shape.size, d.filters.nonEmpty,
-                d.chunk.get, blobs, childAts))
-              blobs.zip(childAts).foreach { case ((_, blob), a) =>
-                out.position(a.toInt); out.put(blob)
-              }
-            case _ => // fixed array: FAHD + FADB, blobs after
-              var cAt = dAt + align8(faSize(d, blobs.size))
-              val childAts = blobs.map { case (_, blob) =>
-                val a = cAt; cAt += align8(blob.length.toLong); a
-              }
-              out.position(dAt.toInt)
-              out.put(fixedArrayIndex(dAt, faEntrySize(d),
-                if (d.filters.isEmpty) 0 else 1, blobs, childAts))
-              blobs.zip(childAts).foreach { case ((_, blob), a) =>
-                out.position(a.toInt); out.put(blob)
-              }
-          }
-        case Some(blobs) =>
-          var cAt = dAt + align8(chunkBtreeSize(d, blobs.size))
-          val childAts = blobs.map { case (_, blob) =>
-            val a = cAt; cAt += align8(blob.length.toLong); a
-          }
-          out.position(dAt.toInt)
-          out.put(chunkBtree(d, blobs, childAts))
-          blobs.zip(childAts).foreach { case ((_, blob), a) =>
-            out.position(a.toInt); out.put(blob)
-          }
-        case None =>
-          out.position(dAt.toInt)
-          d.values.foreach(v => if (d.f32) out.putFloat(v.toFloat) else out.putDouble(v))
-      }
-    }
-    if (nDimRefs > 0) {
-      val dsAddr = sorted.map(_.name).zip(ohdrAts).toMap
-      out.position(gcolAt.toInt)
-      out.put("GCOL".getBytes(US_ASCII)).put(1.toByte)
-        .put(0.toByte).put(0.toByte).put(0.toByte)
-      out.putLong(gcolSize)
-      var idx = 1
-      sorted.foreach(_.attrs.foreach {
-        case (_, DimList(dims)) => dims.foreach { dn =>
-          out.putShort(idx.toShort).putShort(0.toShort).putInt(0)
-          out.putLong(8L) // object size: one object reference
-          out.putLong(dsAddr(dn))
-          idx += 1
-        }
-        case _ => ()
-      })
       // free-space terminator: index 0, size covers the rest (16 bytes
       // including its own header — the spec's object-0 convention)
-      out.putShort(0.toShort).putShort(0.toShort).putInt(0).putLong(16L)
-    }
-    out.array()
+      o.putShort(0.toShort).putShort(0.toShort).putInt(0).putLong(16L)
+      o.putLong(8, o.position().toLong)
+      o.array()
+    }))
+
+    layout(Seq(superblock, root) ++
+      groupPaths.map(g => Block(ohdrKey(g), 1, p => ohdrV2(groupMsgs(g, p)))) ++
+      linkStores ++ attrStores ++ symbolTable ++
+      sorted.lazyZip(plans).lazyZip(data).map { (d, plan, blocks) =>
+        Block(ohdrKey(d.name), 1, dsOhdr(d, plan, blocks.head.key, _))
+      } ++ data.flatten ++ gcol :+ Block("EOF", 8, _ => Array.emptyByteArray))
   }
 
   /** Row-major enumeration of all index combinations under `dims`. */
@@ -2556,67 +2472,58 @@ object NetCdf4 {
     o.array()
   }
 
-  /** FADB footprint for n entries at libhdf5's 2^10 page geometry:
-    * non-paged = header + elements + checksum; paged (n > 1024) =
-    * header + page-init bitmap + checksum, then one page per 1024
-    * elements (last partial), each with its own checksum. */
-  private def faDbSize(entrySize: Int, n: Int): Long = {
-    val pageN = 1 << 10
-    if (n <= pageN) 14L + n.toLong * entrySize + 4L
-    else {
-      val nPages = (n.toLong + pageN - 1) / pageN
-      14L + (nPages + 7) / 8 + 4L + n.toLong * entrySize + nPages * 4L
-    }
-  }
-
-  /** Fixed-array chunk index: FAHD header + its FADB data block laid out
-    * contiguously, lookup3-checksummed like every latest-format
-    * structure; client 1 elements carry (address, size, mask). Past
-    * 2^10 entries the data block goes PAGED — a page-initialization
-    * bitmap in the FADB (all-ones: the writer allocates densely) and
-    * per-checksummed 1024-element pages following it — the large-cube
-    * shape [[readChunked]]'s paged path pins offline. */
-  private def fixedArrayIndex(headerAt: Long, entrySize: Int, client: Int,
-      blobs: Seq[(Seq[Long], Array[Byte])], childAts: Seq[Long]): Array[Byte] = {
+  /** Fixed-array chunk index: an FAHD header block, then its FADB data
+    * block, lookup3-checksummed like every latest-format structure;
+    * client 1 elements carry (address, size, mask). Past 2^10 entries
+    * the data block goes PAGED — a page-initialization bitmap in the FADB
+    * (all-ones: the writer allocates densely) and per-checksummed
+    * 1024-element pages following it — the large-cube shape
+    * [[readChunked]]'s paged path pins offline. */
+  private def fixedArrayIndex(key: Any, entrySize: Int, client: Int,
+      blobs: Seq[(Seq[Long], Array[Byte])], chunkKeys: Seq[Any]): Seq[Block] = {
     val n = blobs.size
-    val dbAt = headerAt + 28
     val pageN = 1 << 10
-    val o = ByteBuffer.allocate((28 + faDbSize(entrySize, n)).toInt)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    o.put("FAHD".getBytes(US_ASCII)).put(0.toByte).put(client.toByte)
-      .put(entrySize.toByte).put(10.toByte) // page bits
-    o.putLong(n.toLong).putLong(dbAt)
-    o.putInt(lookup3(o.array(), 0, 24))
-    o.put("FADB".getBytes(US_ASCII)).put(0.toByte).put(client.toByte)
-    o.putLong(headerAt)
-    def putElement(i: Int): Unit = {
-      o.putLong(childAts(i))
-      if (client == 1) { o.putLong(blobs(i)._2.length.toLong); o.putInt(0) } // size, mask
-    }
-    if (n <= pageN) {
-      (0 until n).foreach(putElement)
-      o.putInt(lookup3(o.array(), 28, (14 + n * entrySize + 4) - 4))
-    } else {
-      val nPages = (n + pageN - 1) / pageN
-      val bitmapBytes = (nPages + 7) / 8
-      val bitmap = new Array[Byte](bitmapBytes)
-      // MSB-first within each byte (libhdf5's H5VM_bit_set convention —
-      // the reader documents why; NetCdf4Spec pins the byte value)
-      (0 until nPages).foreach(p => bitmap(p / 8) = (bitmap(p / 8) | (0x80 >> (p % 8))).toByte)
-      o.put(bitmap)
-      o.putInt(lookup3(o.array(), 28, 14 + bitmapBytes))
-      var pAt = 28 + 14 + bitmapBytes + 4
-      (0 until nPages).foreach { p =>
-        val cnt = math.min(pageN, n - p * pageN)
-        (0 until cnt).foreach(k => putElement(p * pageN + k))
-        o.putInt(lookup3(o.array(), pAt, cnt * entrySize))
-        pAt += cnt * entrySize + 4
-      }
-    }
-    o.array()
+    val (hd, db) = ((key, "FAHD"), (key, "FADB"))
+    Seq(
+      Block(hd, 8, p => {
+        val o = ByteBuffer.allocate(28).order(ByteOrder.LITTLE_ENDIAN)
+        o.put("FAHD".getBytes(US_ASCII)).put(0.toByte).put(client.toByte)
+          .put(entrySize.toByte).put(10.toByte) // page bits
+        o.putLong(n.toLong).putLong(p.at(db))
+        o.putInt(lookup3(o.array(), 0, 24))
+        o.array()
+      }),
+      Block(db, 1, p => {
+        // elements [from, until), then their lookup3 checksum
+        def elements(from: Int, until: Int): Array[Byte] = {
+          val o = ByteBuffer.allocate((until - from) * entrySize).order(ByteOrder.LITTLE_ENDIAN)
+          (from until until).foreach { i =>
+            o.putLong(p.at(chunkKeys(i)))
+            if (client == 1) { o.putLong(blobs(i)._2.length.toLong); o.putInt(0) } // size, mask
+          }
+          o.array()
+        }
+        val prefix = ByteBuffer.allocate(14).order(ByteOrder.LITTLE_ENDIAN)
+          .put("FADB".getBytes(US_ASCII)).put(0.toByte).put(client.toByte)
+          .putLong(p.at(hd)).array()
+        if (n <= pageN) checksummed(prefix ++ elements(0, n))
+        else {
+          val nPages = (n + pageN - 1) / pageN
+          val bitmap = new Array[Byte]((nPages + 7) / 8)
+          // MSB-first within each byte (libhdf5's H5VM_bit_set convention —
+          // the reader documents why; NetCdf4Spec pins the byte value)
+          (0 until nPages).foreach(pg => bitmap(pg / 8) = (bitmap(pg / 8) | (0x80 >> (pg % 8))).toByte)
+          checksummed(prefix ++ bitmap) ++ (0 until nPages).flatMap { pg =>
+            checksummed(elements(pg * pageN, math.min(n, (pg + 1) * pageN)))
+          }
+        }
+      }))
   }
 
-  private def align8(x: Long): Long = (x + 7) / 8 * 8
+  /** `bytes` followed by their lookup3 checksum. */
+  private def checksummed(bytes: Array[Byte]): Array[Byte] =
+    ByteBuffer.allocate(bytes.length + 4).order(ByteOrder.LITTLE_ENDIAN)
+      .put(bytes).putInt(lookup3(bytes, 0, bytes.length)).array()
 
   /** libhdf5's extensible-array creation defaults: max nelmts bits 32,
     * 4 index-block elements, data blocks of ≥16 elements, super blocks
@@ -2650,143 +2557,110 @@ object NetCdf4 {
     val nel = eaDefaults.dblkNelmts(u)
     if (nel > (1L << pageBits)) nel / (1L << pageBits) else 0L
   }
-  private def eaSblkSize(u: Int, pageBits: Int): Long = {
-    val np = eaNpages(u, pageBits)
-    val bitmap = if (np == 0) 0L else eaDefaults.ndblks(u) * ((np + 7) / 8)
-    14L + 4 + bitmap + eaDefaults.ndblks(u) * 8L + 4L
-  }
-  private def eaDblkSize(u: Int, entrySize: Int, pageBits: Int): Long = {
-    val np = eaNpages(u, pageBits)
-    if (np == 0) 14L + 4 + eaDefaults.dblkNelmts(u) * entrySize + 4L
-    // paged: prefix (+ its own checksum), then npages pages of
-    // pageNelmts elements + a per-page checksum each
-    else 14L + 4 + 4 + np * ((1L << pageBits) * entrySize + 4)
-  }
 
-  /** Total on-disk size of a dense n-chunk extensible-array index
-    * (header + index block + super/data blocks, each 8-aligned). */
-  private def eaSize(entrySize: Int, n: Int, pageBits: Int): Long = {
-    val ea = eaDefaults
-    val ib = 14L + ea.idxBlkElmts.toLong * entrySize +
-      (ea.ndblkAddrs + ea.nsblkAddrs) * 8L + 4L
-    val (dblks, sblks) = eaBlocks(n)
-    72L + align8(ib) + sblks.map(u => align8(eaSblkSize(u, pageBits))).sum +
-      dblks.map { case (u, _) => align8(eaDblkSize(u, entrySize, pageBits)) }.sum
-  }
-
-  /** Extensible-array chunk index: EAHD header, EAIB index block
-    * (inline elements, direct data-block addresses, super-block
+  /** Extensible-array chunk index: an EAHD header block, the EAIB index
+    * block (inline elements, direct data-block addresses, super-block
     * addresses), and the EASB/EADB blocks a dense chunk range needs,
-    * laid out contiguously and lookup3-checksummed like every
-    * latest-format structure; client 1 elements carry (address, size,
-    * mask) — the fixed-array encode. Unused slots hold the undefined
-    * address. The writer dual of [[readChunked]]'s case 4, which is
-    * what pins that decode path offline (libhdf5 emits this index for
-    * an UNLIMITED-maxdim dataset — a growing forecast archive's time
-    * axis). */
-  private def extensibleArrayIndex(headerAt: Long, entrySize: Int, client: Int,
-      blobs: Seq[(Seq[Long], Array[Byte])], childAts: Seq[Long],
-      pageBits: Int = 10): Array[Byte] = {
+    * each 8-aligned and lookup3-checksummed like every latest-format
+    * structure; the header's block totals are those blocks' emitted
+    * lengths. Client 1 elements carry (address, size, mask) — the
+    * fixed-array encode. Unused slots hold the undefined address. The
+    * writer dual of [[readChunked]]'s case 4, which is what pins that
+    * decode path offline (libhdf5 emits this index for an
+    * UNLIMITED-maxdim dataset — a growing forecast archive's time axis). */
+  private def extensibleArrayIndex(key: Any, entrySize: Int, client: Int,
+      blobs: Seq[(Seq[Long], Array[Byte])], chunkKeys: Seq[Any],
+      pageBits: Int): Seq[Block] = {
     val ea = eaDefaults
     val n = blobs.size
-    val ibSize = (14L + ea.idxBlkElmts.toLong * entrySize +
-      (ea.ndblkAddrs + ea.nsblkAddrs) * 8L + 4L).toInt
     val (dblks, sblks) = eaBlocks(n)
-    val ibAt = headerAt + 72
-    var at = ibAt + align8(ibSize)
-    val sblkAts = sblks.map { u =>
-      val a = at; at += align8(eaSblkSize(u, pageBits)); u -> a
-    }.toMap
-    val dblkAts = dblks.map { case (u, j) =>
-      val a = at; at += align8(eaDblkSize(u, entrySize, pageBits)); (u, j) -> a
-    }.toMap
-    val o = ByteBuffer.allocate((at - headerAt).toInt).order(ByteOrder.LITTLE_ENDIAN)
-    // EAHD: creation params, stats, index block address
-    o.put("EAHD".getBytes(US_ASCII)).put(0.toByte).put(client.toByte)
-      .put(entrySize.toByte).put(32.toByte).put(4.toByte).put(16.toByte)
-      .put(4.toByte).put(pageBits.toByte)
-    o.putLong(sblks.size.toLong)
-    o.putLong(sblks.map(eaSblkSize(_, pageBits)).sum)
-    o.putLong(dblks.size.toLong)
-    o.putLong(dblks.map { case (u, _) => eaDblkSize(u, entrySize, pageBits) }.sum)
-    o.putLong(n.toLong) // max index set
-    o.putLong(n.toLong) // nelements
-    o.putLong(ibAt)
-    o.putInt(lookup3(o.array(), 0, 68))
-    def putElement(buf: ByteBuffer, i: Long): Unit =
+    val (hd, ib) = ((key, "EAHD"), (key, "EAIB"))
+    def sb(u: Int): Any = (key, "EASB", u)
+    def db(u: Int, j: Long): Any = (key, "EADB", u, j)
+    val allocated = dblks.toSet
+    def dblkAt(p: Placed, u: Int, j: Long): Long =
+      if (allocated((u, j))) p.at(db(u, j)) else Undef
+    def putElement(p: Placed, buf: ByteBuffer, i: Long): Unit =
       if (i < n) {
-        buf.putLong(childAts(i.toInt))
+        buf.putLong(p.at(chunkKeys(i.toInt)))
         if (client == 1) { buf.putLong(blobs(i.toInt)._2.length.toLong); buf.putInt(0) }
       } else {
         buf.putLong(Undef)
         if (client == 1) { buf.putLong(0L); buf.putInt(0) }
       }
-    // EAIB
-    val ib = ByteBuffer.allocate(ibSize).order(ByteOrder.LITTLE_ENDIAN)
-    ib.put("EAIB".getBytes(US_ASCII)).put(0.toByte).put(client.toByte)
-    ib.putLong(headerAt)
-    (0L until ea.idxBlkElmts.toLong).foreach(putElement(ib, _))
-    (0 until ea.s0).foreach { u =>
-      (0L until ea.ndblks(u)).foreach(j => ib.putLong(dblkAts.getOrElse((u, j), Undef)))
-    }
-    (ea.s0 until ea.nsblks).foreach(u => ib.putLong(sblkAts.getOrElse(u, Undef)))
-    ib.putInt(lookup3(ib.array(), 0, ibSize - 4))
-    o.position((ibAt - headerAt).toInt); o.put(ib.array())
+    // EAHD: creation params, stats, index block address
+    val header = Block(hd, 8, p => {
+      val o = ByteBuffer.allocate(72).order(ByteOrder.LITTLE_ENDIAN)
+      o.put("EAHD".getBytes(US_ASCII)).put(0.toByte).put(client.toByte)
+        .put(entrySize.toByte).put(32.toByte).put(4.toByte).put(16.toByte)
+        .put(4.toByte).put(pageBits.toByte)
+      o.putLong(sblks.size.toLong)
+      o.putLong(sblks.map(u => p.len(sb(u))).sum)
+      o.putLong(dblks.size.toLong)
+      o.putLong(dblks.map { case (u, j) => p.len(db(u, j)) }.sum)
+      o.putLong(n.toLong) // max index set
+      o.putLong(n.toLong) // nelements
+      o.putLong(p.at(ib))
+      o.putInt(lookup3(o.array(), 0, 68))
+      o.array()
+    })
+    val index = Block(ib, 8, p => {
+      val o = ByteBuffer.allocate(14 + ea.idxBlkElmts * entrySize +
+        (ea.ndblkAddrs + ea.nsblkAddrs) * 8).order(ByteOrder.LITTLE_ENDIAN)
+      o.put("EAIB".getBytes(US_ASCII)).put(0.toByte).put(client.toByte)
+      o.putLong(p.at(hd))
+      (0L until ea.idxBlkElmts.toLong).foreach(putElement(p, o, _))
+      (0 until ea.s0).foreach { u =>
+        (0L until ea.ndblks(u)).foreach(j => o.putLong(dblkAt(p, u, j)))
+      }
+      (ea.s0 until ea.nsblks).foreach(u => o.putLong(if (sblks.contains(u)) p.at(sb(u)) else Undef))
+      checksummed(o.array())
+    })
     // EASBs (block offset = first element index the super block serves;
     // when this super block's data blocks page, the page-init buffer —
     // ndblks × ceil(npages/8) bytes, bits CONTINUOUS at dblk·npages +
     // page, MSB-first (H5VM convention) — sits between the offset and
     // the data block addresses; dense fixtures initialize every page of
     // every allocated data block)
-    sblks.foreach { u =>
-      val sz = eaSblkSize(u, pageBits).toInt
+    val supers = sblks.map { u => Block(sb(u), 8, p => {
       val np = eaNpages(u, pageBits)
-      val sb = ByteBuffer.allocate(sz).order(ByteOrder.LITTLE_ENDIAN)
-      sb.put("EASB".getBytes(US_ASCII)).put(0.toByte).put(client.toByte)
-      sb.putLong(headerAt)
-      sb.putInt((ea.idxBlkElmts + ea.startIdx(u)).toInt)
-      if (np > 0) {
-        val bm = new Array[Byte]((ea.ndblks(u) * ((np + 7) / 8)).toInt)
-        for {
-          j <- 0L until ea.ndblks(u)
-          if dblkAts.contains((u, j))
-          p <- 0L until np
-        } {
-          val bit = j * np + p
-          bm((bit / 8).toInt) =
-            (bm((bit / 8).toInt) | (0x80 >> (bit % 8).toInt)).toByte
-        }
-        sb.put(bm)
+      val bm = new Array[Byte](if (np == 0) 0 else (ea.ndblks(u) * ((np + 7) / 8)).toInt)
+      for {
+        j <- 0L until ea.ndblks(u)
+        if allocated((u, j))
+        pg <- 0L until np
+      } {
+        val bit = j * np + pg
+        bm((bit / 8).toInt) = (bm((bit / 8).toInt) | (0x80 >> (bit % 8).toInt)).toByte
       }
-      (0L until ea.ndblks(u)).foreach(j => sb.putLong(dblkAts.getOrElse((u, j), Undef)))
-      sb.putInt(lookup3(sb.array(), 0, sz - 4))
-      o.position((sblkAts(u) - headerAt).toInt); o.put(sb.array())
-    }
+      val o = ByteBuffer.allocate((18 + bm.length + ea.ndblks(u) * 8).toInt)
+        .order(ByteOrder.LITTLE_ENDIAN)
+      o.put("EASB".getBytes(US_ASCII)).put(0.toByte).put(client.toByte)
+      o.putLong(p.at(hd))
+      o.putInt((ea.idxBlkElmts + ea.startIdx(u)).toInt)
+      o.put(bm)
+      (0L until ea.ndblks(u)).foreach(j => o.putLong(dblkAt(p, u, j)))
+      checksummed(o.array())
+    })}
     // EADBs — paged blocks carry only the checksummed prefix, then each
     // page's elements + per-page checksum (H5EA__cache_dblk_page)
-    dblks.foreach { case (u, j) =>
-      val sz = eaDblkSize(u, entrySize, pageBits).toInt
-      val np = eaNpages(u, pageBits)
-      val db = ByteBuffer.allocate(sz).order(ByteOrder.LITTLE_ENDIAN)
-      db.put("EADB".getBytes(US_ASCII)).put(0.toByte).put(client.toByte)
-      db.putLong(headerAt)
+    val datas = dblks.map { case (u, j) => Block(db(u, j), 8, p => {
       val start = ea.idxBlkElmts + ea.startIdx(u) + j * ea.dblkNelmts(u)
-      db.putInt(start.toInt)
-      if (np == 0) {
-        (0L until ea.dblkNelmts(u)).foreach(k => putElement(db, start + k))
-        db.putInt(lookup3(db.array(), 0, sz - 4))
-      } else {
-        db.putInt(lookup3(db.array(), 0, 18)) // prefix checksum
-        val pageNel = 1L << pageBits
-        (0L until np).foreach { p =>
-          val pStart = db.position()
-          (0L until pageNel).foreach(k => putElement(db, start + p * pageNel + k))
-          db.putInt(lookup3(db.array(), pStart, (pageNel * entrySize).toInt))
-        }
+      def elements(from: Long, count: Long): Array[Byte] = {
+        val o = ByteBuffer.allocate((count * entrySize).toInt).order(ByteOrder.LITTLE_ENDIAN)
+        (from until from + count).foreach(putElement(p, o, _))
+        o.array()
       }
-      o.position((dblkAts((u, j)) - headerAt).toInt); o.put(db.array())
-    }
-    o.array()
+      val prefix = ByteBuffer.allocate(18).order(ByteOrder.LITTLE_ENDIAN)
+        .put("EADB".getBytes(US_ASCII)).put(0.toByte).put(client.toByte)
+        .putLong(p.at(hd)).putInt(start.toInt).array()
+      val np = eaNpages(u, pageBits)
+      if (np == 0) checksummed(prefix ++ elements(start, ea.dblkNelmts(u)))
+      else checksummed(prefix) ++ (0L until np).flatMap { pg =>
+        checksummed(elements(start + (pg << pageBits), 1L << pageBits))
+      }
+    })}
+    (header +: index +: supers) ++ datas
   }
 
   private def bt2RecSize(rank: Int, filtered: Boolean): Int =
@@ -2859,90 +2733,67 @@ object NetCdf4 {
     (build(0, n, depth), maxNrecSize, cumSize)
   }
 
-  private def bt2NodeBytes(nd: Bt2Node, recSize: Int, maxNrecSize: Int,
-      cumSize: Array[Int]): Long =
-    if (nd.depth == 0) 6L + nd.recs.size.toLong * recSize + 4
-    else {
-      val ptr = 8 + maxNrecSize + (if (nd.depth > 1) cumSize(nd.depth - 1) else 0)
-      6L + nd.recs.size.toLong * recSize + (nd.recs.size + 1).toLong * ptr + 4
-    }
-
   private def bt2Nodes(root: Bt2Node): Seq[Bt2Node] = {
     def go(nd: Bt2Node): Seq[Bt2Node] = nd +: nd.children.flatMap(go)
     go(root)
   }
 
-  /** BTHD (38) + every planned BTIN/BTLF node, each 8-aligned. */
-  private def bt2Size(rank: Int, filtered: Boolean, n: Int): Long = {
-    val recSize = bt2RecSize(rank, filtered)
-    val (root, maxNrecSize, cumSize) = bt2Plan(n, recSize)
-    align8(38L) + bt2Nodes(root)
-      .map(nd => align8(bt2NodeBytes(nd, recSize, maxNrecSize, cumSize))).sum
-  }
-
-  /** v2 B-tree chunk index — BTHD header plus a SPEC-CONFORMANT tree at
-    * the declared 2048-byte node size: records beyond one leaf's
-    * capacity split across BTLF leaves under BTIN internal nodes whose
-    * records interleave with child pointers (type 10 unfiltered:
-    * address + per-rank scaled offsets; type 11 filtered: + 8-byte
-    * chunk size + mask) — the several-unlimited-maxdims index
-    * [[readChunked]]'s case 5 pins offline, now including the
-    * multi-level form a >~46-chunk archive grows (the old single-leaf
-    * writer crammed every record into one leaf past the declared node
-    * capacity — ADVICE r17). */
-  private def btree2Index(headerAt: Long, rank: Int, filtered: Boolean,
+  /** v2 B-tree chunk index — a BTHD header block plus one 8-aligned block
+    * per node (pre-order) of a SPEC-CONFORMANT tree at the declared
+    * 2048-byte node size: records beyond one leaf's capacity split across
+    * BTLF leaves under BTIN internal nodes whose records interleave with
+    * child pointers (type 10 unfiltered: address + per-rank scaled
+    * offsets; type 11 filtered: + 8-byte chunk size + mask) — the
+    * several-unlimited-maxdims index [[readChunked]]'s case 5 pins
+    * offline, now including the multi-level form a >~46-chunk archive
+    * grows (the old single-leaf writer crammed every record into one leaf
+    * past the declared node capacity — ADVICE r17). */
+  private def btree2Index(key: Any, rank: Int, filtered: Boolean,
       chunkDims: Seq[Int], blobs: Seq[(Seq[Long], Array[Byte])],
-      childAts: Seq[Long]): Array[Byte] = {
+      chunkKeys: Seq[Any]): Seq[Block] = {
     val n = blobs.size
     val recSize = bt2RecSize(rank, filtered)
     val recType = if (filtered) 11 else 10
     val (root, maxNrecSize, cumSize) = bt2Plan(n, recSize)
-    val nodes = bt2Nodes(root)
-    // pre-order addresses, header first
-    val nodeAt = scala.collection.mutable.Map.empty[Bt2Node, Long]
-    var at = headerAt + align8(38L)
-    nodes.foreach { nd =>
-      nodeAt(nd) = at
-      at += align8(bt2NodeBytes(nd, recSize, maxNrecSize, cumSize))
-    }
-    val o = ByteBuffer.allocate((at - headerAt).toInt).order(ByteOrder.LITTLE_ENDIAN)
-    o.put("BTHD".getBytes(US_ASCII)).put(0.toByte).put(recType.toByte)
-    o.putInt(Bt2NodeSize)
-    o.putShort(recSize.toShort).putShort(root.depth.toShort)
-    o.put(100.toByte).put(40.toByte) // split/merge percents (defaults)
-    o.putLong(nodeAt(root))
-    o.putShort(root.recs.size.toShort)
-    o.putLong(n.toLong)
-    o.putInt(lookup3(o.array(), 0, 34))
-    def putUvar(v: Long, bytes: Int): Unit = {
-      var x = v; var i = 0
-      while (i < bytes) { o.put((x & 0xff).toByte); x >>>= 8; i += 1 }
-    }
-    def putRec(i: Int): Unit = {
-      val (offs, blob) = blobs(i)
-      o.putLong(childAts(i))
-      if (filtered) { o.putLong(blob.length.toLong); o.putInt(0) } // size, mask
-      offs.zip(chunkDims).foreach { case (off, cd) => o.putLong(off / cd) }
-    }
-    nodes.foreach { nd =>
-      val nAt = (nodeAt(nd) - headerAt).toInt
-      o.position(nAt)
-      if (nd.depth == 0) {
-        o.put("BTLF".getBytes(US_ASCII)).put(0.toByte).put(recType.toByte)
-        nd.recs.foreach(putRec)
-      } else {
-        o.put("BTIN".getBytes(US_ASCII)).put(0.toByte).put(recType.toByte)
-        nd.recs.foreach(putRec)
-        nd.children.foreach { ch =>
-          o.putLong(nodeAt(ch))
-          putUvar(ch.recs.size.toLong, maxNrecSize)
-          if (nd.depth > 1) putUvar(ch.total.toLong, cumSize(nd.depth - 1))
-        }
+    def nodeKey(nd: Bt2Node): Any = (key, nd)
+    val header = Block((key, "BTHD"), 8, p => {
+      val o = ByteBuffer.allocate(38).order(ByteOrder.LITTLE_ENDIAN)
+      o.put("BTHD".getBytes(US_ASCII)).put(0.toByte).put(recType.toByte)
+      o.putInt(Bt2NodeSize)
+      o.putShort(recSize.toShort).putShort(root.depth.toShort)
+      o.put(100.toByte).put(40.toByte) // split/merge percents (defaults)
+      o.putLong(p.at(nodeKey(root)))
+      o.putShort(root.recs.size.toShort)
+      o.putLong(n.toLong)
+      o.putInt(lookup3(o.array(), 0, 34))
+      o.array()
+    })
+    header +: bt2Nodes(root).map { nd => Block(nodeKey(nd), 8, p => {
+      // a child pointer: address, record count, and (below depth 1) the
+      // subtree's total record count
+      val ptr = if (nd.depth == 0) 0
+        else 8 + maxNrecSize + (if (nd.depth > 1) cumSize(nd.depth - 1) else 0)
+      val o = ByteBuffer.allocate(6 + nd.recs.size * recSize + nd.children.size * ptr)
+        .order(ByteOrder.LITTLE_ENDIAN)
+      def putUvar(v: Long, bytes: Int): Unit = {
+        var x = v; var i = 0
+        while (i < bytes) { o.put((x & 0xff).toByte); x >>>= 8; i += 1 }
       }
-      val sz = bt2NodeBytes(nd, recSize, maxNrecSize, cumSize).toInt
-      o.putInt(lookup3(o.array(), nAt, sz - 4))
-    }
-    o.array()
+      o.put((if (nd.depth == 0) "BTLF" else "BTIN").getBytes(US_ASCII))
+        .put(0.toByte).put(recType.toByte)
+      nd.recs.foreach { i =>
+        val (offs, blob) = blobs(i)
+        o.putLong(p.at(chunkKeys(i)))
+        if (filtered) { o.putLong(blob.length.toLong); o.putInt(0) } // size, mask
+        offs.zip(chunkDims).foreach { case (off, cd) => o.putLong(off / cd) }
+      }
+      nd.children.foreach { ch =>
+        o.putLong(p.at(nodeKey(ch)))
+        putUvar(ch.recs.size.toLong, maxNrecSize)
+        if (nd.depth > 1) putUvar(ch.total.toLong, cumSize(nd.depth - 1))
+      }
+      checksummed(o.array())
+    })}
   }
 
   /** Data layout v3 class 2 (chunked): dimensionality (rank+1), chunk

@@ -327,7 +327,7 @@ object StreamOps {
         col("doc_id"), col("n").as("n_tokens"),
         size(col("flagged")).cast("long").as("n_self_spans"),
         size(col("covered")).cast("long").as("n_covered"),
-        (floor(size(col("covered")) / col("n") * 1e6) / 1e6).as("self_ratio"))
+        trunc6(size(col("covered")) / col("n")).as("self_ratio"))
   }
 
   /** Streaming within-document n-gram repetition — q143 at ingest rate,
@@ -710,7 +710,7 @@ object StreamOps {
         lit(0L), (acc, v) => acc + v))
       .select(col("doc_id"),
         size(col("grams")).cast("long").as("n_feats"),
-        (floor(col("s9").cast("double") / 1e9 * 1e6) / 1e6).as("log_w"))
+        trunc6(col("s9").cast("double") / 1e9).as("log_w"))
   }
 
   /** The corpus's duplicated-frame index as ONE broadcastable row: the
@@ -764,7 +764,7 @@ object StreamOps {
           h => call_function("sorted_array_contains", col("frame_idx"), h)))
           .cast("long"))
       .select(col("doc_id"), col("n_frames"), col("n_dup_frames"),
-        (floor(col("n_dup_frames") / col("n_frames") * 1e6) / 1e6).as("dup_ratio"))
+        trunc6(col("n_dup_frames") / col("n_frames")).as("dup_ratio"))
   }
 
   /** The semantic-decontamination gate's static side as ONE

@@ -172,4 +172,23 @@ class ContractSpec extends SparkSpec {
       assert(still.isEmpty, s"$gone still appears in: $still")
     }
   }
+
+  test("the HDF5 writer keeps no block-size formulas; one 1e-6 floor and one salt guard") {
+    // each block's length comes from the bytes its emitter puts; a
+    // separate size formula for address planning is a second copy
+    for (gone <- Seq("faSize", "faDbSize", "chunkBtreeSize", "eaSize", "eaSblkSize",
+        "eaDblkSize", "bt2Size", "bt2NodeBytes", "fhibSize", "snodSize", "heapHdrSize",
+        "ohdrSizes")) {
+      val still = mainSources.collect { case (p, src) if s"\\b$gone\\b".r.findFirstIn(src).isDefined => p }
+      assert(still.isEmpty, s"$gone still appears in: $still")
+    }
+    // the oracles' DuckDB SQL floors on its own; Spark code calls MoneySum.trunc6
+    def sites(text: String, skip: String*): Seq[String] = mainSources.flatMap { case (p, src) =>
+      val name = p.getFileName.toString
+      if (skip.contains(name)) Nil
+      else Seq.fill(scala.util.matching.Regex.quote(text).r.findAllMatchIn(src).size)(name)
+    }
+    assert(sites("* 1e6) / 1e6", "Oracles.scala") == Seq("MoneySum.scala"))
+    assert(sites("pmod(hash(") == Seq("Skew.scala"))
+  }
 }

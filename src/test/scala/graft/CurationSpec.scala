@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 import graft.operators.{Curation, Dedup}
 import graft.sources.Tables
 
@@ -232,6 +233,38 @@ class CurationSpec extends SparkSpec {
       s"expected the all-zero floor sketch, got len=${arr.length}")
     val batch = Seq("a", "b", "c").toDF("fp")
     assert(Curation.bloomHitSharded(batch, bloom, 1).count() == 0L)
+  }
+
+  test("sharded Bloom words equal a driver-built reference at 1 and 4 shards") {
+    // the reference sets each key's pmod(xxhash64(fp, i), m) bits into
+    // one Long array per shard on the driver, with m the next power of two
+    // >= BloomBitsPerKey × the shard's key count (floor 2^14)
+    import spark.implicits._
+    val fps = (0 until 3000).map(i => s"doc-$i").toDF("fp")
+    for (nShards <- Seq(1, 4)) {
+      val words = Curation.bloomWordsSharded(fps, nShards)
+      // the schema the shared sketch artifacts are written with
+      assert(words.schema == StructType(Seq(StructField("shard", LongType, nullable = false),
+        StructField("bloom", ArrayType(LongType, containsNull = false), nullable = false))))
+      val got = words.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+      val keyed = fps.withColumn("shard", Curation.bloomShardCol(nShards))
+      val counts = keyed.groupBy("shard").count().as[(Long, Long)].collect().toMap
+      val want = (0L until nShards).map { s =>
+        var m = 1L
+        while (m < math.max(counts.getOrElse(s, 0L) * Curation.BloomBitsPerKey, 16384L)) m <<= 1
+        val words = new Array[Long]((m / 64).toInt)
+        keyed.filter(col("shard") === s)
+          .select(explode(array((0 until Curation.BloomK).map(i =>
+            pmod(xxhash64(col("fp"), lit(i)), lit(m))): _*)))
+          .as[Long].collect()
+          .foreach(p => words((p / 64).toInt) |= 1L << (p % 64))
+        s -> words.toSeq
+      }.toMap
+      assert(got.keySet == want.keySet, s"nShards=$nShards")
+      want.foreach { case (s, words) =>
+        assert(got(s) == words, s"nShards=$nShards shard $s: ${got(s).size} vs ${words.size} words")
+      }
+    }
   }
 
   test("sharded sketch with empty shards: every shard emits a row, no probe is dropped") {
