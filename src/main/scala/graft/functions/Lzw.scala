@@ -11,9 +11,9 @@ package graft.functions
   *    off-by-one every TIFF reader implements);
   *  - at entry id 4094 the encoder emits Clear and resets the table.
   *
-  * Pure JVM, zero dependencies; tiles are ≤ a few hundred KB so the
-  * byte-array dictionary is plenty fast for the band sizes a bbox cube
-  * produces.
+  * Pure JVM, zero dependencies. The encoder's dictionary is a primitive
+  * `Int` hash table cleared at each Clear code, so encoding allocates
+  * nothing per input byte.
   */
 object Lzw {
 
@@ -21,6 +21,8 @@ object Lzw {
   private val Eoi = 257
   private val First = 258
   private val ResetAt = 4094
+  private val SlotBits = 13
+  private val Slots = 1 << SlotBits
 
   def encode(data: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(data.length / 2 + 16)
@@ -35,10 +37,13 @@ object Lzw {
         nBits -= 8
       }
     }
-    // dictionary: (prefix code, next byte) -> code
-    val dict = new java.util.HashMap[Integer, Integer](8192)
+    // dictionary: (prefix code << 8 | next byte) -> code, in a primitive
+    // open-addressing table (linear probing; at most 3,836 entries in 8,192
+    // slots between resets); a free slot's key is -1
+    val keys = new Array[Int](Slots)
+    val codes = new Array[Int](Slots)
+    java.util.Arrays.fill(keys, -1)
     var next = First
-    def key(prefix: Int, b: Int): Integer = Integer.valueOf((prefix << 8) | b)
 
     put(Clear)
     var prefix = -1
@@ -47,16 +52,19 @@ object Lzw {
       val b = data(i) & 0xff
       if (prefix < 0) prefix = b
       else {
-        val found = dict.get(key(prefix, b))
-        if (found != null) prefix = found.intValue()
+        val key = (prefix << 8) | b
+        var s = (key * 0x9e3779b1) >>> (32 - SlotBits)
+        while (keys(s) != -1 && keys(s) != key) s = (s + 1) & (Slots - 1)
+        if (keys(s) == key) prefix = codes(s)
         else {
           put(prefix)
-          dict.put(key(prefix, b), Integer.valueOf(next))
+          keys(s) = key
+          codes(s) = next
           next += 1
           if (next == (1 << width) - 1 && width < 12) width += 1
           if (next == ResetAt) {
             put(Clear)
-            dict.clear(); next = First; width = 9
+            java.util.Arrays.fill(keys, -1); next = First; width = 9
           }
           prefix = b
         }

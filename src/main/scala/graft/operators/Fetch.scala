@@ -4,6 +4,8 @@ import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.{NetCdf, NetCdf4}
+
 /** R2 fetch stage + R17 per-parameter error isolation.
   *
   * Reference behavior (dmi_ingestor/ingestor.py:192-198): GET the cube for
@@ -67,22 +69,26 @@ object Fetch {
   /** Format-sniffing decode — the engine dual of the reference's
     * `xarray.open_dataset(BytesIO(...))` (ingestor.py:200): classic
     * NetCDF magic (`CDF\x01|02|05`) routes to
-    * [[graft.sources.NetCdf.decodeCube]], HDF5 magic (`\x89HDF`,
-    * NetCDF-4) to the [[graft.sources.NetCdf4]] subset codec (whose parse
-    * rejects out-of-subset files with a message naming the feature
-    * rather than misparsing).
-    * Any other bytes — an HTML error page served with a 200, a truncated
-    * or empty body — throw, so [[fetchAndIngest]] records the parameter
-    * as skipped instead of publishing nothing for it as a success. */
+    * [[graft.sources.NetCdf.cubeOf]], HDF5 magic (`\x89HDF`, NetCDF-4) to
+    * the [[graft.sources.NetCdf4]] subset codec (whose parse rejects
+    * out-of-subset files with a message naming the feature rather than
+    * misparsing). Any other bytes — an HTML error page served with a 200,
+    * a truncated or empty body — throw, so [[fetchAndIngest]] records the
+    * parameter as skipped instead of publishing nothing for it as a
+    * success. */
+  def cubeOf(parameter: String, bytes: Array[Byte]): NetCdf.Cube =
+    if (bytes.length >= 4 && bytes(0) == 'C' && bytes(1) == 'D' && bytes(2) == 'F')
+      NetCdf.cubeOf(parameter, bytes)
+    else if (NetCdf4.isHdf5(bytes))
+      NetCdf4.cubeOf(parameter, bytes)
+    else throw new IllegalArgumentException(
+      "not a NetCDF stream: neither classic (CDF) nor NetCDF-4/HDF5 magic")
+
+  /** One parameter's bytes decoded ([[cubeOf]]) to its long frame. */
   def decodeAuto(
       spark: SparkSession, collection: String, parameter: String,
       bytes: Array[Byte]): DataFrame =
-    if (bytes.length >= 4 && bytes(0) == 'C' && bytes(1) == 'D' && bytes(2) == 'F')
-      graft.sources.NetCdf.decodeCube(spark, collection, parameter, bytes)
-    else if (graft.sources.NetCdf4.isHdf5(bytes))
-      graft.sources.NetCdf4.decodeCube(spark, collection, parameter, bytes)
-    else throw new IllegalArgumentException(
-      "not a NetCDF stream: neither classic (CDF) nor NetCDF-4/HDF5 magic")
+    NetCdf.cubeFrame(spark, collection, Seq(cubeOf(parameter, bytes)))
 
   /** Full fetch → ingest pipeline with R17 isolation: fetch every planned
     * parameter, decode and ingest ONLY the successes (their partitions are
@@ -93,7 +99,9 @@ object Fetch {
     * bytes, an HDF5 file outside the NetCdf4 subset, an unsupported CF
     * time unit) are isolated exactly like fetch failures: the outcome
     * records the error as `decode <exception>: <reason>` and the other
-    * parameters still ingest.
+    * parameters still ingest. The decoded cubes, whatever their number,
+    * are one frame ([[graft.sources.NetCdf.cubeFrame]]): one set of
+    * tasks, each reading only the cubes its cell range touches.
     * No successes → no write at all, `None` manifest. */
   def fetchAndIngest(
       spark: SparkSession,
@@ -102,25 +110,17 @@ object Fetch {
       outPath: String): (Option[DataFrame], Seq[FetchOutcome]) = {
     val decoded = fetchAll(plan).map {
       case o @ FetchOutcome(param, url, Right(bytes)) =>
-        Try(decodeAuto(spark, cfg.collection, param, bytes)) match {
-          case Success(df) => (o, Some(df))
+        Try(cubeOf(param, bytes)) match {
+          case Success(cube) => (o, Some(cube))
           case Failure(e) => (FetchOutcome(param, url,
             Left(s"decode ${e.getClass.getSimpleName}: ${e.getMessage}")), None)
         }
       case o => (o, None)
     }
     val outcomes = decoded.map(_._1)
-    val staged = decoded.flatMap(_._2)
-    if (staged.isEmpty) (None, outcomes)
+    val cubes = decoded.flatMap(_._2)
+    if (cubes.isEmpty) (None, outcomes)
     else (Some(Ingest.ingest(
-      // by NAME with missing-column fill, not positional: cube schemas
-      // vary since r20 (CF aux lat/lon columns appear only when the file
-      // carries them), so a positional union of a curvilinear and a
-      // regular cube would crash — or, with two aux cubes whose
-      // `coordinates` lists order lat/lon differently, silently swap
-      // them. Missing aux fills null; cubeToLong's per-row coalesce
-      // falls back to the derived mapping exactly for those rows.
-      staged.reduce(_.unionByName(_, allowMissingColumns = true)),
-      cfg, outPath)), outcomes)
+      NetCdf.cubeFrame(spark, cfg.collection, cubes), cfg, outPath)), outcomes)
   }
 }

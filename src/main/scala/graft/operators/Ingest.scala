@@ -70,9 +70,9 @@ object Ingest {
     // `withColumn` below would otherwise clobber it with projection
     // meters and bbox-filter degrees against meters (r20). PER COLUMN
     // and PER ROW (coalesce): a cube may resolve only one aux coordinate
-    // (the other keeps the derived mapping), and a multi-parameter union
+    // (the other keeps the derived mapping), and a multi-parameter frame
     // of aux and non-aux cubes carries nulls in the aux columns for the
-    // non-aux rows (Fetch unions by name with missing-column fill).
+    // non-aux rows (NetCdf.cubeFrame).
     val derivedLon =
       when(col("collection").startsWith("harmonie"), lonInv).otherwise(col("x"))
     val derivedLat =

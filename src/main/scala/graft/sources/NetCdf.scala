@@ -6,9 +6,10 @@ import java.sql.Timestamp
 import java.time.{LocalDate, LocalDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType, TimestampType}
 
 /** Pure-JVM classic NetCDF codec (CDF-1 / CDF-2 / CDF-5), written against
   * the public NetCDF classic-format specification — the engine-side dual of
@@ -34,11 +35,14 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType, Timestam
   *
   * Scale note: the container parse and the CF rules run at the edge, on
   * the driver, over a single staged response (SURVEY.md §7.3 — a DMI cube
-  * response is a few MB), and the driver keeps only primitive arrays:
-  * raw values, coordinates, aux lat/lon and one epoch-millisecond value
-  * per time step. The cells themselves are generated on the executors
-  * (`cubeFrame`), so the returned DataFrame is distributed from its first
-  * row. Values are big-endian per the spec.
+  * response is a few MB), and yield a [[Cube]] of primitive arrays: raw
+  * values, coordinates, aux lat/lon and one epoch-millisecond value per
+  * time step. [[cubeFrame]] turns any number of cubes into ONE frame: each
+  * cube's arrays reach the executors as one broadcast, the task binary
+  * carries only the handles, and the cells are generated on the executors,
+  * so the frame is distributed from its first row and a fetch of P
+  * parameters runs one set of tasks, not P. Values are big-endian per the
+  * spec.
   */
 object NetCdf {
 
@@ -368,9 +372,13 @@ object NetCdf {
     * [[decodeCf]]'s. */
   def decodeCube(
       spark: SparkSession, collection: String, parameter: String,
-      bytes: Array[Byte]): DataFrame = {
+      bytes: Array[Byte]): DataFrame =
+    cubeFrame(spark, collection, Seq(cubeOf(parameter, bytes)))
+
+  /** [[decodeCube]]'s driver half: the classic bytes decoded to a [[Cube]]. */
+  def cubeOf(parameter: String, bytes: Array[Byte]): Cube = {
     val f = parse(bytes)
-    decodeCf(spark, collection, parameter, new CfSource[NcVar] {
+    decodeCf(parameter, new CfSource[NcVar] {
       def variables: Seq[NcVar] = f.vars.filter(_.ncType != NcChar)
       def name(v: NcVar): String = v.name
       def shape(v: NcVar): Seq[Int] = f.shape(v).map(_.toInt)
@@ -438,9 +446,7 @@ object NetCdf {
     *  - applies `scale_factor`/`add_offset` packing, masks
     *    `_FillValue`/`missing_value` to null, and converts CF time units
     *    (bare time values are epoch seconds). */
-  private[sources] def decodeCf[V](
-      spark: SparkSession, collection: String, parameter: String,
-      src: CfSource[V]): DataFrame = {
+  private[sources] def decodeCf[V](parameter: String, src: CfSource[V]): Cube = {
     def leaf(v: V): String = leafName(src.name(v))
     def rank(v: V): Int = src.shape(v).size
     // variables listed in any CF `coordinates` attribute are coordinates,
@@ -506,8 +512,7 @@ object NetCdf {
       }
     val timeMs = tPos.map(coordVals).getOrElse(Array(0.0))
       .map(v => math.round(toEpochSec(v) * 1000.0))
-    cubeFrame(spark, collection, parameter,
-      timeMs, coordVals(yPos), coordVals(xPos),
+    Cube(parameter, timeMs, coordVals(yPos), coordVals(xPos),
       src.values(data), tPos.map(strides(_)).getOrElse(0), strides(yPos), strides(xPos),
       src.num(data, "scale_factor").getOrElse(1.0),
       src.num(data, "add_offset").getOrElse(0.0),
@@ -570,66 +575,101 @@ object NetCdf {
     * column `name` whose value at output cell (y, x) is
     * `vals(y*yStride + x*xStride)` — the caller resolves the aux
     * variable's own axis order into the strides. */
-  private case class AuxCoord(name: String, vals: Array[Double],
-                              yStride: Int, xStride: Int)
+  case class AuxCoord(name: String, vals: Array[Double], yStride: Int, xStride: Int)
 
-  /** Long-frame builder. The driver hands over primitive arrays only: the
-    * raw row-major values, the per-axis coordinates, one epoch-millisecond
-    * value per time step and the aux grids. They travel in the task
-    * closure, and each task walks one contiguous range of the output's
-    * (t, y, x) row-major cell order, applying the fill mask, CF packing and
-    * the resolved axis strides as it emits. `min(cells, defaultParallelism)`
-    * equal ranges keep the rows in (t, y, x) order across partitions, and a
-    * range boundary splits at most one time step — the sink's files per
-    * time step follow from that. */
-  private def cubeFrame(
-      spark: SparkSession, collection: String, parameter: String,
-      timeMs: Array[Long], yVals: Array[Double], xVals: Array[Double],
+  /** One decoded cube as the driver holds it — what [[decodeCf]] returns
+    * and [[cubeFrame]] consumes: one epoch-millisecond value per time step,
+    * the y and x coordinates, the raw row-major values with the resolved
+    * stride of each output axis (0 for the time axis of a rank-2 cube),
+    * the CF packing and fill value, and the aux grids. Its output cells
+    * are the (t, y, x) row-major order over `timeMs × yVals × xVals`. */
+  case class Cube(
+      parameter: String, timeMs: Array[Long], yVals: Array[Double], xVals: Array[Double],
       raw: Array[Double], tStride: Int, yStride: Int, xStride: Int,
       scale: Double, offset: Double, fill: Option[Double],
-      aux: Seq[AuxCoord] = Nil): DataFrame = {
-    val nT = timeMs.length; val nY = yVals.length; val nX = xVals.length
-    val cells = nT * nY * nX
-    val parts = math.min(cells, spark.sparkContext.defaultParallelism)
-    // NaN never compares equal, so a cube without a fill value masks only NaN
-    val fillValue = fill.getOrElse(Double.NaN)
-    val auxGrids = aux.toArray
-    // an empty cube is one empty partition, which never divides by its axes
-    val rows = spark.sparkContext.parallelize(0 until parts, parts.max(1)).mapPartitions(_.flatMap { p =>
-      val stamps = timeMs.map(new Timestamp(_))
-      val hi = (cells.toLong * (p + 1) / parts).toInt
-      var k = (cells.toLong * p / parts).toInt
-      var t = k / (nY * nX); var y = k / nX % nY; var x = k % nX
-      new Iterator[Row] {
-        def hasNext: Boolean = k < hi
-        def next(): Row = {
-          val v = raw(t * tStride + y * yStride + x * xStride)
-          val vs = new Array[Any](4 + auxGrids.length)
-          vs(0) = stamps(t); vs(1) = xVals(x); vs(2) = yVals(y)
-          vs(3) = if (v == fillValue || v.isNaN) null else v * scale + offset
-          var a = 0
-          while (a < auxGrids.length) {
-            val ac = auxGrids(a)
-            vs(4 + a) = ac.vals(y * ac.yStride + x * ac.xStride)
-            a += 1
-          }
-          k += 1; x += 1
-          if (x == nX) { x = 0; y += 1; if (y == nY) { y = 0; t += 1 } }
-          Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(vs))
-        }
+      aux: Seq[AuxCoord]) {
+    def cells: Long = timeMs.length.toLong * yVals.length * xVals.length
+  }
+
+  /** The one long-frame builder: the cubes of one `collection` laid end to
+    * end as rows `(collection, parameter, time, x, y, value)` plus the
+    * sorted union of their aux columns (`lat`, `lon`), null in the rows of
+    * a cube that lacks one — the aux semantics of a by-name union with
+    * missing-column fill, without one plan per cube. Each cube's arrays
+    * reach the tasks as one broadcast, so the task binary holds only the
+    * handles and its size does not grow with the cells.
+    * `min(cells, defaultParallelism)` equal contiguous ranges over the
+    * concatenated (cube, t, y, x) order keep every cube's rows in its
+    * row-major order across partitions; a task reads only the cubes its
+    * range touches and applies the fill mask, CF packing and axis strides
+    * as it emits. A range boundary splits at most one time step, which
+    * bounds the sink's files per step. */
+  def cubeFrame(spark: SparkSession, collection: String, cubes: Seq[Cube]): DataFrame = {
+    val sc = spark.sparkContext
+    // first cell of each cube in the concatenated order, then the total
+    val starts = cubes.scanLeft(0L)(_ + _.cells).toArray
+    val total = starts.last
+    val parts = math.min(total, sc.defaultParallelism.toLong).toInt
+    val auxNames = cubes.flatMap(_.aux.map(_.name)).distinct.sorted.toArray
+    val shared = cubes.map(sc.broadcast(_)).toArray
+    // no cells is one empty partition, which never divides by its axes
+    val rows = sc.parallelize(0 until parts, parts.max(1)).mapPartitions(_.flatMap { p =>
+      val (lo, hi) = (total * p / parts, total * (p + 1) / parts)
+      shared.indices.iterator.flatMap { c =>
+        // this range's cells of cube c, in the cube's own numbering
+        val from = math.max(lo, starts(c)) - starts(c)
+        val until = math.min(hi, starts(c + 1)) - starts(c)
+        if (from < until) cubeRows(shared(c), auxNames, from.toInt, until.toInt) else Iterator.empty
       }
     })
     val schema = StructType(
-      StructField("time", TimestampType, nullable = false) ::
+      StructField("parameter", StringType, nullable = false) ::
+        StructField("time", TimestampType, nullable = false) ::
         StructField("x", DoubleType, nullable = false) ::
         StructField("y", DoubleType, nullable = false) ::
         StructField("value", DoubleType, nullable = true) ::
-        aux.map(a => StructField(a.name, DoubleType, nullable = false)).toList)
+        auxNames.map(n => StructField(n, DoubleType,
+          nullable = !cubes.forall(_.aux.exists(_.name == n)))).toList)
+    // the collection is one literal, so the optimizer folds the rules
+    // that test it (Ingest.cubeToLong's harmonie reprojection) per plan,
+    // not per row
     spark.createDataFrame(rows, schema)
-      .select(
-        lit(collection).as("collection") +: lit(parameter).as("parameter") +:
-          col("time") +: col("x") +: col("y") +: col("value") +:
-          aux.map(a => col(a.name)): _*)
+      .select(lit(collection).as("collection") +: schema.fieldNames.toSeq.map(col): _*)
+  }
+
+  /** The rows of cells `[from, until)` of one broadcast cube, in its
+    * (t, y, x) row-major order; output aux column `a` reads the cube's
+    * grid named `auxNames(a)`, or is null where the cube has none. */
+  private def cubeRows(shared: Broadcast[Cube], auxNames: Array[String],
+                       from: Int, until: Int): Iterator[Row] = {
+    val cube = shared.value
+    import cube._
+    val nY = yVals.length; val nX = xVals.length
+    val stamps = timeMs.map(new Timestamp(_))
+    // NaN never compares equal, so a cube without a fill value masks only NaN
+    val fillValue = fill.getOrElse(Double.NaN)
+    val auxAt = auxNames.map(n => aux.find(_.name == n).orNull)
+    var k = from
+    var t = k / (nY * nX); var y = k / nX % nY; var x = k % nX
+    new Iterator[Row] {
+      def hasNext: Boolean = k < until
+      def next(): Row = {
+        val v = raw(t * tStride + y * yStride + x * xStride)
+        val vs = new Array[Any](5 + auxAt.length)
+        vs(0) = parameter
+        vs(1) = stamps(t); vs(2) = xVals(x); vs(3) = yVals(y)
+        vs(4) = if (v == fillValue || v.isNaN) null else v * scale + offset
+        var a = 0
+        while (a < auxAt.length) {
+          val ac = auxAt(a)
+          vs(5 + a) = if (ac == null) null else ac.vals(y * ac.yStride + x * ac.xStride)
+          a += 1
+        }
+        k += 1; x += 1
+        if (x == nX) { x = 0; y += 1; if (y == nY) { y = 0; t += 1 } }
+        Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(vs))
+      }
+    }
   }
 
   /** Encode a long-format cube back to classic NetCDF bytes — the engine

@@ -88,8 +88,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the reader is additionally fuzzed on truncated/corrupted streams.
   * Scale note: like the classic codec, the parse runs at the edge, on
   * the driver, over one staged MB-scale response and hands
-  * [[NetCdf.decodeCf]] primitive arrays; the cells of the returned
-  * DataFrame are generated on the executors.
+  * [[NetCdf.decodeCf]] primitive arrays; [[NetCdf.cubeFrame]] generates
+  * the cells on the executors.
   */
 object NetCdf4 {
 
@@ -1753,7 +1753,12 @@ object NetCdf4 {
     * data shape (conventional (time, y, x) order on ties). */
   def decodeCube(
       spark: SparkSession, collection: String, parameter: String,
-      bytes: Array[Byte]): DataFrame = {
+      bytes: Array[Byte]): DataFrame =
+    NetCdf.cubeFrame(spark, collection, Seq(cubeOf(parameter, bytes)))
+
+  /** [[decodeCube]]'s driver half: the HDF5 bytes decoded to a
+    * [[NetCdf.Cube]]. */
+  def cubeOf(parameter: String, bytes: Array[Byte]): NetCdf.Cube = {
     val f = parse(bytes)
     val byAddr = f.datasets.map(d => d.headerAddr -> d).toMap
     def groupPrefix(v: H5Dataset): String = v.name.substring(0, v.name.lastIndexOf('/') + 1)
@@ -1768,7 +1773,7 @@ object NetCdf4 {
       d.attr("NAME").exists(_.text.startsWith(
         "This is a netCDF dimension but not a netCDF variable"))
 
-    NetCdf.decodeCf(spark, collection, parameter, new NetCdf.CfSource[H5Dataset] {
+    NetCdf.decodeCf(parameter, new NetCdf.CfSource[H5Dataset] {
       def variables: Seq[H5Dataset] = f.datasets
       def name(v: H5Dataset): String = v.name
       def shape(v: H5Dataset): Seq[Int] = v.shape.map(_.toInt)

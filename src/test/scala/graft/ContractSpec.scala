@@ -191,4 +191,24 @@ class ContractSpec extends SparkSpec {
     assert(sites("* 1e6) / 1e6", "Oracles.scala") == Seq("MoneySum.scala"))
     assert(sites("pmod(hash(") == Seq("Skew.scala"))
   }
+
+  test("one cell frame per fetch: no union in Fetch, one parallelize in the NetCDF sources") {
+    // every parameter's cube of a fetch is one NetCdf.cubeFrame; a union of
+    // per-parameter frames, or a second place that builds cells, is a
+    // second plan per cube
+    val bySource = mainSources.map { case (p, src) => p.toString -> src }
+    val fetch = bySource.collect { case (p, src) if p.endsWith("/operators/Fetch.scala") => src }
+    assert(fetch.size == 1 && !fetch.head.contains("unionByName"))
+    val sites = bySource.collect { case (p, src) if p.contains("/sources/NetCdf") =>
+      (p, src, scala.util.matching.Regex.quote("parallelize(").r.findAllMatchIn(src).map(_.start).toSeq)
+    }.filter(_._3.nonEmpty)
+    assert(sites.map(_._3.size) == Seq(1), s"parallelize( in: ${sites.map(_._1)}")
+    val (_, netCdf, Seq(at)) = sites.head
+    assert(netCdf.lastIndexOf("def ", at) == netCdf.indexOf("def cubeFrame("),
+      "the one parallelize( is not inside cubeFrame")
+    // the CF decode is driver arrays only: it neither takes a session nor
+    // builds a frame
+    val decl = netCdf.indexOf("def decodeCf[")
+    assert(decl >= 0 && !netCdf.substring(decl, netCdf.indexOf("{", decl)).contains("SparkSession"))
+  }
 }

@@ -91,6 +91,32 @@ class GeoTiffSpec extends SparkSpec {
     assert(Lzw.encode(Array.fill(100000)(42.toByte)).length < 2000)
   }
 
+  test("LZW encoder output is pinned byte for byte on tiles and table resets") {
+    import graft.functions.Lzw
+    def tile(f: (Int, Int) => Float): Array[Byte] = {
+      val b = ByteBuffer.allocate(256 * 256 * 4).order(ByteOrder.LITTLE_ENDIAN)
+      for (y <- 0 until 256; x <- 0 until 256) b.putFloat(f(x, y))
+      b.array()
+    }
+    val random = new Array[Byte](1 << 20) // crosses the 4094-entry reset ~370 times
+    new java.util.Random(2024).nextBytes(random)
+    // digests of the encoder's output before its dictionary became a
+    // primitive table: the table changed, the bytes must not
+    Seq(
+      tile((_, _) => 273.15f) ->
+        "e27c7dc969c8329c24ce9ac420609b5f668f04f6076075f00425beade5034dd4",
+      tile((x, y) => if (x < 112 && y < 112) 10f + ((x * 31 + y * 17) % 997) * 0.001f else Float.NaN) ->
+        "6bcc6f741aad1d4ea72ed5916b490371c7b42f4e964983622f73e921dc1c4d48",
+      random -> "40d78541cd92e0d8f74c469c2acc5e20e82fdd7f381c679900b07ba9b5185685"
+    ).foreach { case (data, digest) =>
+      val enc = Lzw.encode(data)
+      val sha = java.security.MessageDigest.getInstance("SHA-256").digest(enc)
+        .map("%02x".format(_)).mkString
+      assert(sha == digest, s"LZW output of ${data.length} bytes changed")
+      assert(java.util.Arrays.equals(Lzw.decode(enc, data.length), data))
+    }
+  }
+
   test("compressed + pyramid encode round-trips; overviews downsample correctly") {
     val r = sampleRaster(64, 40)
     val bytes = GeoTiff.encode(r, tileSize = 16) // defaults: LZW + overviews
