@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.LocalFs
+import graft.sources.GeoTiff
 
 /** The reference pipeline re-expressed Spark-first (SURVEY.md §3.1, §7.3).
   *
@@ -123,7 +124,7 @@ object Ingest {
       .select(col("collection"), col("parameter"), col("time_key"))
       .distinct()
       .withColumn("url", format_string(
-        "https://%s/%s/%s/%s/%s.tif",
+        "https://%s/%s/" + GeoTiff.BandKey,
         lit(cfg.bucket), lit(cfg.prefix), col("collection"), col("parameter"), col("time_key")))
       .groupBy(col("collection"), col("parameter"))
       .agg(to_json(map_from_entries(

@@ -523,7 +523,7 @@ object Similarity {
     * replaces the former m-branch CASE (one unrolled chain per branch) —
     * same values including the CASE's null-on-out-of-range `sub`, via
     * the kernel's null-on-out-of-window rule. */
-  private def pqDist(a: Column, b: Column, sub: Column, m: Int, dsub: Int): Column =
+  private def pqDist(a: Column, b: Column, sub: Column, dsub: Int): Column =
     call_function("sub_l2", a, b,
       (sub * dsub).cast("int"), (sub * dsub).cast("int"), lit(dsub))
 
@@ -606,7 +606,7 @@ object Similarity {
       .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
         explode(sequence(lit(0), lit(m - 1))).as("l_sub"))
       .crossJoin(broadcast(cb))
-      .withColumn("d", pqDist(col("p_emb"), col("cvec"), col("l_sub"), m, dsub))
+      .withColumn("d", pqDist(col("p_emb"), col("cvec"), col("l_sub"), dsub))
       .select(col("probe_id"), col("l_sub"), col("code").as("l_code"), col("d"))
 
   /** [[pqAnn]] over explicit probes. Scale shape: the codebook (m·nCodes
@@ -746,7 +746,7 @@ object Similarity {
 
   /** Subspace-dispatched [[subL2Seg]] — [[pqDist]]'s trained-codebook
     * counterpart (runtime `sub·dsub` window on `a`, window 0 on `b`). */
-  private def pqDistSeg(a: Column, b: Column, sub: Column, m: Int, dsub: Int): Column =
+  private def pqDistSeg(a: Column, b: Column, sub: Column, dsub: Int): Column =
     call_function("sub_l2", a, b, (sub * dsub).cast("int"), lit(0), lit(dsub))
 
   /** Encode against a per-subspace codebook (sub, code, scvec): argmin
@@ -870,7 +870,7 @@ object Similarity {
     val codes = pqCodesSeg(resid, tcb, m, dsub)
     val lut = pcells
       .crossJoin(broadcast(tcb))
-      .withColumn("d", pqDistSeg(col("p_resid"), col("scvec"), col("sub"), m, dsub))
+      .withColumn("d", pqDistSeg(col("p_resid"), col("scvec"), col("sub"), dsub))
       .select(col("probe_id").as("l_probe"), col("cell").as("l_cell"),
         col("sub").as("l_sub"), col("code").as("l_code"), col("d"))
     val scored = cand
@@ -936,7 +936,7 @@ object Similarity {
     def lutOf(tcb: DataFrame, p: String) = pcells
       .crossJoin(broadcast(tcb))
       .withColumn(s"ld$p",
-        pqDistSeg(col("p_resid"), col("scvec"), col("sub"), m, dsub))
+        pqDistSeg(col("p_resid"), col("scvec"), col("sub"), dsub))
       .select(col("probe_id").as(s"${p}_probe"), col("cell").as(s"${p}_cell"),
         col("sub").as(s"${p}_sub"), col("code").as(s"${p}_code"), col(s"ld$p"))
     val scored = cand

@@ -211,4 +211,44 @@ class ContractSpec extends SparkSpec {
     val decl = netCdf.indexOf("def decodeCf[")
     assert(decl >= 0 && !netCdf.substring(decl, netCdf.indexOf("{", decl)).contains("SparkSession"))
   }
+
+  private def geoTiffSource: String = {
+    val src = mainSources.collect { case (p, src) if p.endsWith("sources/GeoTiff.scala") => src }
+    assert(src.size == 1)
+    src.head
+  }
+
+  test("the COG band sink carries a band as arrays and has no encoder option no caller sets") {
+    // a band is lon/lat/value arrays from the shuffle to the encoder; every
+    // band is LZW with the overview pyramid at the default tile size
+    val geoTiff = geoTiffSource
+    assert(!geoTiff.contains("Seq[(Double, Double, Double)]"))
+    for (gone <- Seq("compress", "overviews")) {
+      assert(s"\\b$gone\\s*:".r.findFirstIn(geoTiff).isEmpty, s"$gone is still a parameter")
+    }
+    val writeBands = geoTiff.substring(geoTiff.indexOf("def writeBands("))
+    assert(!writeBands.substring(0, writeBands.indexOf("): DataFrame")).contains("tileSize"))
+  }
+
+  test("the classic/BigTIFF widths are chosen only inside the one width table") {
+    // encode and decodeAll read every width from the Format rows; a branch
+    // on the layout flag outside the one selection is a second table
+    val geoTiff = geoTiffSource
+    val branches = "if \\(big".r.findAllMatchIn(geoTiff).map(m =>
+      geoTiff.substring(m.start, geoTiff.indexOf("\n", m.start))).toSeq
+    assert(branches == Seq("if (bigTiff) BigTiff else Classic"), s"layout branches: $branches")
+    for (row <- Seq("header = 8, count = 2, entry = 12, word = 4, next = 4",
+        "header = 16, count = 8, entry = 20, word = 8, next = 8")) {
+      assert(scala.util.matching.Regex.quote(row).r.findAllMatchIn(geoTiff).size == 1, row)
+    }
+  }
+
+  test("the band-key format literal appears once under src/main") {
+    // the sink's paths, the source's path parse and forecasts.json's URLs
+    // all read GeoTiff.BandKey
+    val sites = mainSources.flatMap { case (p, src) =>
+      Seq.fill(scala.util.matching.Regex.quote("%s.tif").r.findAllMatchIn(src).size)(p.getFileName.toString)
+    }
+    assert(sites == Seq("GeoTiff.scala"), s"%s.tif in: $sites")
+  }
 }

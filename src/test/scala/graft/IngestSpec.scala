@@ -331,7 +331,7 @@ class IngestSpec extends SparkSpec {
     val longDf = spark.read.parquet(out)
       .select("collection", "parameter", "time_key", "lon", "lat", "value")
     val tifDir = tmp.resolve("cog").toString
-    val bands = GeoTiff.writeBands(spark, longDf, tifDir, tileSize = 16).collect()
+    val bands = GeoTiff.writeBands(spark, longDf, tifDir).collect()
     assert(bands.length == 4 && bands.forall(r => r.getAs[Int]("width") == 2))
     // read one band back and check a pixel against the fixture value
     val sea0 = GeoTiff.readBands(spark, tifDir)
